@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{Analytics, Cleaning, Dedup, Enrichment, Ner, TextOps}
 import graft.sources.Sinks
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batch orchestration of the full medallion pipeline — what the
@@ -27,6 +27,22 @@ object Pipeline {
   def runBatch(spark: SparkSession, sourceDir: String, outDir: String): Summary = {
     val raw = Tables.documents(spark, sourceDir)
 
+    // Each write returns the rows it committed, counted by an
+    // observed aggregate on the write's own tasks: no re-read of the
+    // layer and no extra job.
+    def write(df: DataFrame, layer: String, partitionCols: Seq[String]): Long = {
+      val rows = Observation()
+      Sinks.writeParquet(df.observe(rows, count(lit(1)).as("rows")),
+        s"$outDir/$layer", partitionCols)
+      rows.get("rows").asInstanceOf[Long]
+    }
+    // A layer read back as written, under the schema its frame already
+    // has: no schema-inference job, and an EMPTY layer (no part files
+    // to infer from — an empty corpus, or every doc below the gold
+    // gate) reads back as empty instead of throwing.
+    def readBack(df: DataFrame, layer: String): DataFrame =
+      spark.read.schema(df.schema).parquet(s"$outDir/$layer")
+
     // bronze: append-only raw + exact keep-first dedup on content hash.
     // NULL-text docs get a per-doc surrogate key: md5(NULL) is NULL and
     // Window.partitionBy groups all NULL keys together, which would
@@ -36,46 +52,28 @@ object Pipeline {
     val bronze = Cleaning.dedupKeepFirst(raw,
       coalesce(md5(col("text")), concat(lit("__null__"), col("doc_id").cast("string"))),
       col("doc_id"))
-    Sinks.writeParquet(bronze, s"$outDir/bronze", Seq("lang"))
+    val bronzeN = write(bronze, "bronze", Seq("lang"))
 
-    // silver: cleaned projection over the deduped bronze
-    val silver = Cleaning.silver(spark.read.parquet(s"$outDir/bronze"))
-    Sinks.writeParquet(silver, s"$outDir/silver", Seq("lang"))
+    // silver (cleaned projection) and entities (NER) both read bronze
+    // as written and nothing else, so they write concurrently
+    val bronzeRead = readBack(bronze, "bronze")
+    val silver = Cleaning.silver(bronzeRead)
+    val Seq(silverN, entitiesN) = runConcurrently(spark, Seq(
+      () => write(silver, "silver", Seq("lang")),
+      () => write(Ner.extract(spark, bronzeRead), "entities", Seq.empty)))
 
-    // gold: enrichment + quality gate over silver-as-written
-    val gold = Enrichment.gold(spark.read.parquet(s"$outDir/silver"))
-    Sinks.writeParquet(gold, s"$outDir/gold", Seq("lang"))
+    // gold: enrichment + quality gate over silver-as-written. The
+    // rollup views (the reference's refresh_gold_views step) derive
+    // from the same gold frame, not from gold on disk, so all three
+    // write concurrently.
+    val gold = Enrichment.gold(readBack(silver, "silver"))
+    val Seq(goldN, gaN, gtN) = runConcurrently(spark, Seq(
+      () => write(gold, "gold", Seq("lang")),
+      () => write(Analytics.goldAnalytics(gold), "views/gold_analytics", Seq.empty),
+      () => write(Analytics.goldTrends(gold), "views/gold_trends", Seq.empty)))
 
-    // entities: NER over the deduped bronze corpus
-    val entities = Ner.extract(spark, spark.read.parquet(s"$outDir/bronze"))
-    Sinks.writeParquet(entities, s"$outDir/entities", Seq.empty)
-
-    // rollup views (the reference's refresh_gold_views step). Derived
-    // from the in-memory gold frame, not a read-back: an EMPTY layer
-    // writes no part files and cannot be schema-inferred again — a
-    // legal state (e.g. every doc below the quality gate) that must
-    // not crash the run.
-    val ga = Analytics.goldAnalytics(gold)
-    val gt = Analytics.goldTrends(gold)
-    Sinks.writeParquet(ga, s"$outDir/views/gold_analytics", Seq.empty)
-    Sinks.writeParquet(gt, s"$outDir/views/gold_trends", Seq.empty)
-
-    // Count what was WRITTEN — a parquet-footer metadata scan per
-    // layer — instead of re-running the derivations (`entities.count()`
-    // would re-execute the whole NER extraction, roughly doubling the
-    // most expensive stages just to report row counts). The explicit
-    // schema keeps EMPTY layers countable: they write no part files,
-    // so schema inference would throw.
-    def written(path: String, schema: org.apache.spark.sql.types.StructType): Long =
-      spark.read.schema(schema).parquet(path).count()
-
-    Map(
-      "bronze" -> written(s"$outDir/bronze", bronze.schema),
-      "silver" -> written(s"$outDir/silver", silver.schema),
-      "gold" -> written(s"$outDir/gold", gold.schema),
-      "entities" -> written(s"$outDir/entities", entities.schema),
-      "gold_analytics" -> written(s"$outDir/views/gold_analytics", ga.schema),
-      "gold_trends" -> written(s"$outDir/views/gold_trends", gt.schema))
+    Map("bronze" -> bronzeN, "silver" -> silverN, "gold" -> goldN,
+      "entities" -> entitiesN, "gold_analytics" -> gaN, "gold_trends" -> gtN)
   }
 
   /** End-to-end TRAINING-DATA preparation — what a pre-training corpus
@@ -453,11 +451,13 @@ object Pipeline {
     }
   }
 
-  /** Run independent probe constructions + materializations as
-    * concurrent Spark jobs from daemon threads — each task builds its
-    * frame AND forces its localCheckpoint, so the caller's wall pays
-    * the slowest task, not the sum. Spark schedules jobs from
-    * multiple threads of one session fairly. The ACTIVE session is
+  /** Run independent tasks as concurrent Spark jobs from daemon
+    * threads — the pipeline's one concurrency mechanism: decideDelta's
+    * probe materializations, runBatch's independent layer writes and
+    * runIncremental's index-append groups. Each task forces its own
+    * jobs, so the caller's wall pays the slowest task, not the sum.
+    * Spark schedules jobs from multiple threads of one session
+    * fairly. The ACTIVE session is
     * pinned per thread (it is thread-local and a fresh thread starts
     * without one); the DEFAULT session is deliberately NOT touched —
     * it is a JVM-wide global, and writing it here would race between
@@ -477,7 +477,7 @@ object Pipeline {
         val th = new Thread(() => {
           SparkSession.setActiveSession(spark)
           out(i) = try Right(t()) catch { case e: Throwable => Left(e) }
-        }, s"graft-probe-$i")
+        }, s"graft-task-$i")
         th.setDaemon(true)
         th.start()
         th
@@ -1400,10 +1400,7 @@ object Pipeline {
     // each group's writes are idempotently re-repairable, and ALL
     // groups settle before the first failure rethrows — a failed day
     // never drops its manifest.
-    val appendPool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    implicit val appendEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(appendPool)
-    val bandGroup = scala.concurrent.Future {
+    val bandGroup = () => {
       if (spark.catalog.tableExists(postingsTable + "__sigs")) {
         Sinks.appendBucketed(daySigs, postingsTable + "__sigs", Seq("doc_id"))
         Sinks.appendBucketed(
@@ -1413,12 +1410,12 @@ object Pipeline {
         Sinks.appendBucketed(dayBands, postingsTable, Seq("band", "band_hash"))
       (false, false)
     }
-    val hashGroup = scala.concurrent.Future {
+    val hashGroup = () => {
       Sinks.appendBucketed(dayHashes, hashTable, Seq("content_md5"))
       (false, false)
     }
     val chunkGroups = chunkTable.zip(deltaChunks).map { case (t, c) =>
-      scala.concurrent.Future {
+      () => {
         Sinks.appendBucketed(c, t, Seq("chunk_hash"))
         (false, false)
       }
@@ -1439,7 +1436,7 @@ object Pipeline {
     // auto-triggered, and a crash mid-rewrite only loses the PQ
     // table, which downgrades the probe to the exact one-tier arm,
     // never to wrong answers.
-    val semGroups = semArm.map { case (t, embs) => scala.concurrent.Future {
+    val semGroups = semArm.map { case (t, embs) => () => {
       val dayVecs = embs.join(broadcast(accepted.select(col("doc_id"))),
         Seq("doc_id"), "left_semi")
       Sinks.appendBucketed(
@@ -1502,7 +1499,7 @@ object Pipeline {
     // |alphabet|^3-bounded row set per ingest; tomorrow's gate sums
     // the grown model without re-reading any corpus document
     val charlmGroups = (if (acceptedN > 0) charlmTable.toSeq else Seq.empty).map {
-      t => scala.concurrent.Future {
+      t => () => {
         Sinks.appendBucketed(
           TextOps.charlmCounts(acceptedText).withColumn("append_id", lit(outDir)),
           t, Seq("tri"))
@@ -1512,11 +1509,8 @@ object Pipeline {
     // settle EVERY group before the first failure rethrows: a crash
     // report must never race still-running writes, and a failed day
     // keeps its manifest for the next run's repair
-    val settled = (Seq(bandGroup, hashGroup) ++ chunkGroups ++ semGroups ++
-      charlmGroups).map(f => scala.util.Try(
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-    appendPool.shutdown()
-    val (pqRetrained, pqRepaired) = settled.map(_.get)
+    val (pqRetrained, pqRepaired) = runConcurrently(spark,
+        Seq(bandGroup, hashGroup) ++ chunkGroups ++ semGroups ++ charlmGroups)
       .foldLeft((false, false)) { case ((rt, rp), (t2, p2)) => (rt || t2, rp || p2) }
     if (acceptedN > 0) spark.sql(s"DROP TABLE IF EXISTS ${postingsTable}__pending")
     // Df-cap maintenance, AUTO-TRIGGERED: appends never re-check the

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.{Cleaning, Enrichment, Ner}
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** End-to-end batch pipeline (the reference's Airflow DAG as one
@@ -26,10 +28,71 @@ class PipelineSpec extends SparkSpec {
     assert(summary("entities") > 0)
     assert(summary("gold_analytics") > 0 && summary("gold_trends") > 0)
 
+    // every count is what the write committed: a parquet-footer count
+    // of the layer's directory agrees
+    val layers = Map("bronze" -> "bronze", "silver" -> "silver", "gold" -> "gold",
+      "entities" -> "entities", "gold_analytics" -> "views/gold_analytics",
+      "gold_trends" -> "views/gold_trends")
+    layers.foreach { case (name, path) =>
+      assert(summary(name) === spark.read.parquet(s"$out/$path").count(), name)
+    }
+    // a second pass overwrites the same layout and reports the same counts
+    assert(Pipeline.runBatch(spark, dir, out) === summary)
+
     // lang partitioning must prune at planning time on the written layout
     val pruned = spark.read.parquet(s"$out/gold").filter(col("lang") === "en")
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(lang"), plan)
+  }
+
+  test("runBatch stays within its job budget: no count or schema-inference jobs") {
+    val out = Files.createTempDirectory("graft_pipeline_jobs").toString
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobBudget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      // only jobs submitted under the key: runBatch's own threads
+      // inherit the caller's local properties
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) != null)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "runBatch")
+      try Pipeline.runBatch(spark, "/root/testdata/sf0.001", out)
+      finally sc.setLocalProperty(key, null)
+      BusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    // 28 jobs before the counts came from the writes and the
+    // read-backs were schema-pinned: 12 parquet-footer count jobs and
+    // 3 schema-inference jobs are gone
+    assert(jobs.get() > 0 && jobs.get() <= 13, s"${jobs.get()} jobs")
+  }
+
+  test("runBatch over an empty corpus writes every layer empty and counts zero") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("graft_pipe_empty").toString
+    val out = Files.createTempDirectory("graft_pipe_empty_out").toString
+    Seq.empty[(Long, String, String, String, Long)]
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$src/documents.parquet")
+    val summary = Pipeline.runBatch(spark, src, out)
+    assert(summary === Map("bronze" -> 0L, "silver" -> 0L, "gold" -> 0L,
+      "entities" -> 0L, "gold_analytics" -> 0L, "gold_trends" -> 0L))
+  }
+
+  test("runBatch with every doc below the gold gate writes empty gold and views") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("graft_pipe_gate").toString
+    val out = Files.createTempDirectory("graft_pipe_gate_out").toString
+    Seq((1L, "short text one"), (2L, "short text two")) // content_length <= 50
+      .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$src/documents.parquet")
+    val summary = Pipeline.runBatch(spark, src, out)
+    assert(summary("bronze") === 2L && summary("silver") === 2L)
+    assert(summary("gold") === 0L)
+    assert(summary("gold_analytics") === 0L && summary("gold_trends") === 0L)
   }
 
   test("runTrainingPrep: the curation funnel drops, redacts and splits as composed") {
