@@ -76,39 +76,6 @@ object Pipeline {
       "entities" -> entitiesN, "gold_analytics" -> gaN, "gold_trends" -> gtN)
   }
 
-  /** End-to-end TRAINING-DATA preparation — what a pre-training corpus
-    * actually runs over raw documents, composed entirely from the
-    * operators the registry verifies one by one:
-    *
-    *   clean → quality gate → exact dedup → near-dup + substring-dup
-    *   clustering → keep-the-longest-per-cluster → PII redaction →
-    *   deterministic train/holdout split → HOLDOUT DECONTAMINATION →
-    *   partitioned writes.
-    *
-    * Stage order is the scale order: the cheap row-local gates (clean,
-    * quality) shrink the corpus before anything that shuffles; exact
-    * dedup (one hash shuffle) runs before the costlier pair passes;
-    * PII redaction is a zero-shuffle projection so it rides the final
-    * write; the split adds a column, not a shuffle. The cluster stage
-    * unions BOTH pair generators — whole-document near-dups
-    * ([[graft.operators.Dedup.ngramJaccardPairs]]) and HEAVY
-    * passage-level copies ([[graft.operators.Dedup.substringDupPairs]]
-    * at a high 64-shared-token bar) — each bounded by its
-    * doc-frequency cap. The thresholds are deliberately ASYMMETRIC:
-    * clustering DELETES a document, so it demands substantial
-    * duplication; the post-split decontamination only protects the
-    * eval boundary, so it fires aggressively (8 shared tokens) — train
-    * docs sharing whole CDC chunks with the eval side are DROPPED from
-    * train (never from test). Light passage sharing inside train is
-    * tolerated; the same passage across the split is contamination.
-    * The returned counts give per-stage survivor numbers — the
-    * curation funnel every training-data run reports. */
-  /** Bootstrap the cross-run dedup state from an ACCEPTED corpus —
-    * the two bucketed probe tables [[runIncremental]] consumes: the
-    * banded MinHash postings index (near-dup, keyed on the LSH join
-    * key) and the exact content-hash set (exact-dup, keyed on the
-    * hash). Call once from the initial full prep; every incremental
-    * run appends to both. `corpus` carries (doc_id, text). */
   /** Drop the ENTIRE incremental-state table set for a bootstrap
     * harness — catalog entries AND their (possibly orphaned)
     * warehouse locations, covering every name the state can own:
@@ -147,6 +114,12 @@ object Pipeline {
     }
   }
 
+  /** Bootstrap the cross-run dedup state from an ACCEPTED corpus —
+    * the two bucketed probe tables [[runIncremental]] consumes: the
+    * banded MinHash postings index (near-dup, keyed on the LSH join
+    * key) and the exact content-hash set (exact-dup, keyed on the
+    * hash). Call once from the initial full prep; every incremental
+    * run appends to both. `corpus` carries (doc_id, text). */
   def bootstrapIncremental(corpus: org.apache.spark.sql.DataFrame,
                            postingsTable: String, hashTable: String,
                            chunkTable: Option[String] = None,
@@ -693,6 +666,25 @@ object Pipeline {
       survivors, deduped, contaminated, accepted, broadcastIdFrames)
   }
 
+  /** [[acceptPreviewAudit]]'s per-(session, stateKey) steady-caller
+    * state — everything that is a pure function of the input and NOT
+    * part of the decision being priced: the planted delta frames
+    * (checkpointed — the synthetic slice construction is audit
+    * scaffolding, not decision work), the four bloom probes and the
+    * collected charlm model bytes (the streaming preview sink's
+    * re-read-only-on-change discipline, applied here because the
+    * audit's tables are immutable for a given key). Values are
+    * identical with or without a hit. Bounded retention:
+    * [[SessionCache]], capped at 4 entries. */
+  private final case class AuditState(
+      delta: org.apache.spark.sql.DataFrame,
+      deltaVecs: org.apache.spark.sql.DataFrame,
+      holdout: org.apache.spark.sql.DataFrame,
+      probes: Map[String, Option[org.apache.spark.sql.Column =>
+        org.apache.spark.sql.Column]],
+      charlmBytes: Option[Array[Byte]])
+  private val auditStateCache = new SessionCache[String, AuditState](cap = 4)
+
   /** The daily accept decision as a GATE ROW (SURVEY §2 row 37m):
     * split the documents table into a standing corpus and a delta by
     * a deterministic md5 rule, bootstrap the REAL probe tables
@@ -738,48 +730,6 @@ object Pipeline {
     * counts, Lloyd training) is REUSED and the row prices the
     * decision — the r18-asked trim. Values are identical either way;
     * the first call of any session still builds. */
-  /** [[acceptPreviewAudit]]'s per-(session, stateKey) steady-caller
-    * state — everything that is a pure function of the input and NOT
-    * part of the decision being priced: the planted delta frames
-    * (checkpointed — the synthetic slice construction is audit
-    * scaffolding, not decision work), the four bloom probes and the
-    * collected charlm model bytes (the streaming preview sink's
-    * re-read-only-on-change discipline, applied here because the
-    * audit's tables are immutable for a given key). Values are
-    * identical with or without a hit. Retention is BOUNDED, not
-    * session-scoped: the map is process-global, so entries for a
-    * STOPPED session are swept at every put and the map is capped at
-    * [[auditCacheMax]] entries (oldest first) — a long-lived JVM
-    * cycling sessions retains at most that many stale states, never
-    * an unbounded tail (r20 review). */
-  private final case class AuditState(
-      delta: org.apache.spark.sql.DataFrame,
-      deltaVecs: org.apache.spark.sql.DataFrame,
-      holdout: org.apache.spark.sql.DataFrame,
-      probes: Map[String, Option[org.apache.spark.sql.Column =>
-        org.apache.spark.sql.Column]],
-      charlmBytes: Option[Array[Byte]])
-  private val auditCacheMax = 4
-  private val auditStateCache =
-    new java.util.LinkedHashMap[(SparkSession, String), AuditState]()
-
-  private def auditCacheGet(spark: SparkSession, key: String): Option[AuditState] =
-    auditStateCache.synchronized(Option(auditStateCache.get((spark, key))))
-
-  private def auditCachePut(spark: SparkSession, key: String, st: AuditState): Unit =
-    auditStateCache.synchronized {
-      val it = auditStateCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1.sparkContext.isStopped) it.remove()
-      }
-      auditStateCache.put((spark, key), st)
-      val it2 = auditStateCache.entrySet().iterator()
-      while (auditStateCache.size() > auditCacheMax && it2.hasNext) {
-        it2.next(); it2.remove()
-      }
-    }
-
   def acceptPreviewAudit(documents: org.apache.spark.sql.DataFrame,
                          embeddings: org.apache.spark.sql.DataFrame,
                          stateKey: Option[String] = None): org.apache.spark.sql.DataFrame = {
@@ -819,7 +769,7 @@ object Pipeline {
     // stamp-after-complete-build rule; local-mode blocks can't die,
     // so the probe costs two ~ms jobs there)
     val st = stateKey.flatMap(k =>
-        if (reuse) auditCacheGet(spark, k) else None)
+        if (reuse) auditStateCache.get(spark, k) else None)
       .filter(s =>
         try { s.delta.take(1); s.deltaVecs.take(1); true }
         catch { case _: Exception => false })
@@ -957,7 +907,7 @@ object Pipeline {
       spark.table(charlm).groupBy(col("tri")).agg(sum(col("n")).as("c3")))
     val built = AuditState(delta.localCheckpoint(), deltaVecs.localCheckpoint(),
       holdoutSrc.select(col("doc_id"), col("text")), probes, modelBytes)
-    stateKey.foreach(k => auditCachePut(spark, k, built))
+    stateKey.foreach(k => auditStateCache.put(spark, k, built))
     built
       }
     decideDelta(spark, st.delta, post, hash,
@@ -1622,7 +1572,35 @@ object Pipeline {
       "accepted" -> acceptedN) ++ summaryCounts
   }
 
-  /** `postingsTable` / `hashTable`: when set, the run also persists
+  /** End-to-end TRAINING-DATA preparation — what a pre-training corpus
+    * actually runs over raw documents, composed entirely from the
+    * operators the registry verifies one by one:
+    *
+    *   clean → quality gate → exact dedup → near-dup + substring-dup
+    *   clustering → keep-the-longest-per-cluster → PII redaction →
+    *   deterministic train/holdout split → HOLDOUT DECONTAMINATION →
+    *   partitioned writes.
+    *
+    * Stage order is the scale order: the cheap row-local gates (clean,
+    * quality) shrink the corpus before anything that shuffles; exact
+    * dedup (one hash shuffle) runs before the costlier pair passes;
+    * PII redaction is a zero-shuffle projection so it rides the final
+    * write; the split adds a column, not a shuffle. The cluster stage
+    * unions BOTH pair generators — whole-document near-dups
+    * ([[graft.operators.Dedup.ngramJaccardPairs]]) and HEAVY
+    * passage-level copies ([[graft.operators.Dedup.substringDupPairs]]
+    * at a high 64-shared-token bar) — each bounded by its
+    * doc-frequency cap. The thresholds are deliberately ASYMMETRIC:
+    * clustering DELETES a document, so it demands substantial
+    * duplication; the post-split decontamination only protects the
+    * eval boundary, so it fires aggressively (8 shared tokens) — train
+    * docs sharing whole CDC chunks with the eval side are DROPPED from
+    * train (never from test). Light passage sharing inside train is
+    * tolerated; the same passage across the split is contamination.
+    * The returned counts give per-stage survivor numbers — the
+    * curation funnel every training-data run reports.
+    *
+    * `postingsTable` / `hashTable`: when set, the run also persists
     * the cross-run dedup state [[runIncremental]] probes — the banded
     * MinHash postings index and the exact content-hash set, BOTH over
     * the PRE-redact cleaned content (the text this run's own pair

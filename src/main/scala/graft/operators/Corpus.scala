@@ -284,6 +284,11 @@ object Corpus {
           .as("fp_ok"))
   }
 
+  /** [[bloomFilterAuditMergeBatched]]'s per-(session, stateKey) day
+    * frames (checkpointed — audit scaffolding, not merge work).
+    * Bounded retention: [[graft.SessionCache]], capped at 4 entries. */
+  private val bmbCache = new graft.SessionCache[String, (DataFrame, DataFrame)](cap = 4)
+
   /** The BATCHED daily bloom merge as a gate row, completing the
     * bloom contract family ([[bloomFilterAudit]]: single-filter
     * build+probe; [[bloomFilterAuditSharded]]: distributed sharded
@@ -305,32 +310,6 @@ object Corpus {
     * Exact-side pinnable: `n_keys` is the distinct key count of the
     * whole corpus (both splits), replayed by the oracle from the
     * same md5-derived chunking/hashing. */
-  /** [[bloomFilterAuditMergeBatched]]'s per-(session, stateKey) day
-    * frames (checkpointed — audit scaffolding, not merge work).
-    * Bounded retention: stopped-session sweep at every put, capped at
-    * 4 entries oldest-first — the [[graft.Pipeline]] audit-cache
-    * discipline. */
-  private val bmbCache = new java.util.LinkedHashMap[
-    (org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]()
-
-  private def bmbCacheGet(spark: org.apache.spark.sql.SparkSession,
-                          key: String): Option[(DataFrame, DataFrame)] =
-    bmbCache.synchronized(Option(bmbCache.get((spark, key))))
-
-  private def bmbCachePut(spark: org.apache.spark.sql.SparkSession,
-                          key: String, v: (DataFrame, DataFrame)): Unit =
-    bmbCache.synchronized {
-      val it = bmbCache.entrySet().iterator()
-      while (it.hasNext) {
-        if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-      }
-      bmbCache.put((spark, key), v)
-      val it2 = bmbCache.entrySet().iterator()
-      while (bmbCache.size() > 4 && it2.hasNext) {
-        it2.next(); it2.remove()
-      }
-    }
-
   def bloomFilterAuditMergeBatched(documents: DataFrame,
                                    shards: Int = 8,
                                    fpp: Double = 0.03,
@@ -359,7 +338,7 @@ object Corpus {
           .properties.get("graft.audit_state").contains(k)
         catch { case _: Exception => false })
     }
-    val st = stateKey.flatMap(k => if (reuse) bmbCacheGet(spark, k) else None)
+    val st = stateKey.flatMap(k => if (reuse) bmbCache.get(spark, k) else None)
       .filter(s =>
         try { s._1.take(1); s._2.take(1); true }
         catch { case _: Exception => false })
@@ -404,7 +383,7 @@ object Corpus {
     stateKey.foreach { k =>
       spark.sql(s"ALTER TABLE $hashT SET TBLPROPERTIES " +
         s"('graft.audit_state' = '${k.replace("'", "''")}')")
-      bmbCachePut(spark, k, (dayHashes, dayChunks))
+      bmbCache.put(spark, k, (dayHashes, dayChunks))
     }
     (dayHashes, dayChunks)
       }

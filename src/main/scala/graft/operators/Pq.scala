@@ -776,40 +776,13 @@ object Pq {
 
   /** [[opqGain]]'s per-(session, stateKey, hyperparams) trained-state
     * cache: the balanced-variance permutation + both checkpointed
-    * codebook sets. The map is process-global, so retention is
-    * BOUNDED rather than session-scoped: stopped-session entries are
-    * swept at every put and the map caps at 8 entries, oldest first
-    * (r20 review — the acceptPreviewAudit cache discipline); a hit
-    * is validated with one tiny read of each m-row codebook frame
-    * (non-reliable checkpoints — a lost executor invalidates them)
-    * and rebuilds on failure. */
-  private val opqCbCacheMax = 8
-  private val opqCbCache = new java.util.LinkedHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int, Int, Int, Int, Boolean),
-    (Array[Int], DataFrame, DataFrame)]()
-
-  private def opqCacheGet(
-      key: (org.apache.spark.sql.SparkSession, String, Int, Int, Int, Int, Boolean))
-    : Option[(Array[Int], DataFrame, DataFrame)] =
-    opqCbCache.synchronized(Option(opqCbCache.get(key)))
-      .filter { case (_, ci, cp) =>
-        try { ci.take(1); cp.take(1); true } catch { case _: Exception => false }
-      }
-
-  private def opqCachePut(
-      key: (org.apache.spark.sql.SparkSession, String, Int, Int, Int, Int, Boolean),
-      v: (Array[Int], DataFrame, DataFrame)): Unit =
-    opqCbCache.synchronized {
-      val it = opqCbCache.entrySet().iterator()
-      while (it.hasNext) {
-        if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-      }
-      opqCbCache.put(key, v)
-      val it2 = opqCbCache.entrySet().iterator()
-      while (opqCbCache.size() > opqCbCacheMax && it2.hasNext) {
-        it2.next(); it2.remove()
-      }
-    }
+    * codebook sets, in a [[graft.SessionCache]] capped at 8 entries.
+    * A hit is validated with one tiny read of each m-row codebook
+    * frame (non-reliable checkpoints — a lost executor invalidates
+    * them) and rebuilds on failure. */
+  private val opqCbCache =
+    new graft.SessionCache[(String, Int, Int, Int, Int, Boolean),
+      (Array[Int], DataFrame, DataFrame)](cap = 8)
 
   /** The OPQ GAIN REPORT — does the balanced-variance permutation
     * actually encode THIS corpus better? Train codebooks twice
@@ -842,16 +815,20 @@ object Pq {
     // returns a localCheckpointed m-row frame, safely reusable;
     // values identical either way (training is deterministic given
     // the flag, and the oracle replays both chains in full).
-    val key = stateKey.map(k =>
-      (embeddings.sparkSession, k, m, subDims, ksub, iters, deterministic))
-    val (posToDim, cbIdent, cbPerm) = key.flatMap(opqCacheGet).getOrElse {
-      val p2d = opqPosToDim(embeddings, m, subDims)
-      val trained = (p2d,
-        trainCodebooks(e, m, subDims, ksub, iters, deterministic),
-        trainCodebooks(permute(p2d), m, subDims, ksub, iters, deterministic))
-      key.foreach(opqCachePut(_, trained))
-      trained
-    }
+    val spark = embeddings.sparkSession
+    val key = stateKey.map(k => (k, m, subDims, ksub, iters, deterministic))
+    val (posToDim, cbIdent, cbPerm) = key.flatMap(opqCbCache.get(spark, _))
+      .filter { case (_, ci, cp) =>
+        try { ci.take(1); cp.take(1); true } catch { case _: Exception => false }
+      }
+      .getOrElse {
+        val p2d = opqPosToDim(embeddings, m, subDims)
+        val trained = (p2d,
+          trainCodebooks(e, m, subDims, ksub, iters, deterministic),
+          trainCodebooks(permute(p2d), m, subDims, ksub, iters, deterministic))
+        key.foreach(opqCbCache.put(spark, _, trained))
+        trained
+      }
     val pe = permute(posToDim)
     def cbRows(cb: DataFrame) = cb.select(col("sub"), explode(col("cents")).as("c"))
       .select(col("sub"), col("c.cell").as("cell"), col("c.cemb").as("cemb"))

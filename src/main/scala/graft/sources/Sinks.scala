@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, max, sum}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Sinks (SURVEY §2 #43) — the analogs of the reference's PG upsert
@@ -622,55 +624,9 @@ object Sinks {
     numFiles
   }
 
-  /** Streaming keyed upsert into a parquet layer — the reference's
-    * continuous `ON CONFLICT DO UPDATE` consumer re-expressed for
-    * immutable files: each micro-batch runs [[mergeUpsert]] against
-    * the current layer and atomically swaps the result in (write to a
-    * staging dir, then rename — never overwrite the directory being
-    * read, which would race the lazy scan of the existing layer).
-    *
-    * Replay-safe where at-least-once delivery needs it: re-merging an
-    * already-applied batch replaces the same keys with the same rows,
-    * so foreachBatch re-execution after a crash converges to the same
-    * layer. In-batch duplicate keys are resolved keep-one BEFORE the
-    * merge (`dropDuplicates` — last-writer-wins needs an explicit
-    * version column upstream, same as any upsert bus).
-    *
-    * The full-layer rewrite per batch is the no-table-format ceiling:
-    * with a transactional format the same [[mergeUpsert]] plan becomes
-    * a partition-scoped MERGE. Returned unstarted — callers
-    * `.start()`. */
-  /** Streaming exact-dup guard against the STANDING corpus — the
-    * stream face of `graft.Pipeline.exactNewVsCorpus`'s union-bypass,
-    * the one incremental arm that had no continuous form (the
-    * in-stream dedup is [[graft.streaming.Streams.dedupStream]]'s
-    * job; THIS answers "does the corpus already have it" at ingest).
-    * Each micro-batch runs the BATCH arm itself — one definition, so
-    * the stream and the daily ingest can never disagree on who is
-    * novel — which re-reads the persisted bloom and the bucketed hash
-    * table fresh per trigger: a doc accepted into the corpus between
-    * triggers is visible to the next batch's probe. That freshness is
-    * WHY this is a foreachBatch sink and not a stream-static
-    * transform — a transform would bake the bloom into the unbounded
-    * plan once, and a definitely-new verdict from a stale bloom is a
-    * duplicate leak against the grown table. Against a CONCURRENT
-    * `runIncremental`, the no-leak guarantee rests on the ingest's
-    * merge-before-append ordering (r15 ADVICE): the daily run folds
-    * a day's keys into the bloom BEFORE appending them to the hash
-    * table, so at every instant bloom ⊇ table — a trigger landing
-    * mid-ingest can see extra maybes (they take the exact anti-join
-    * branch and resolve correctly) but never a table member the
-    * bloom lacks, which is the ordering that would have minted a
-    * false definitely-new.
-    *
-    * Novel rows land under `path/batch_id=N/`, OVERWRITTEN per batch:
-    * at-least-once replay rewrites the same directory — with the
-    * corpus possibly grown, fewer rows, never appended duplicates —
-    * the same directory-grain idempotence as [[backfillParquet]].
-    * READ-ONLY against the corpus: indexing accepted docs stays
-    * `runIncremental`'s job with its crash manifest. Input must carry
-    * the `content` column the batch arm hashes. Returned unstarted —
-    * callers `.start()`. */
+  /** The retry window of every guard sink's [[retryAcrossTableSwap]]. */
+  private val GuardSwapBudgetMs = 10000L
+
   /** Run a guard trigger's body, healing the one benign race a
     * concurrent maintenance job can cause (self-review r16): the
     * bucketed-index compaction and the chunk recap swap tables via
@@ -728,12 +684,21 @@ object Sinks {
     * concurrent guards can race each other's promotion
     * (recoverTableSwap's RENAME throws for the loser) — a lost heal
     * race means someone else healed, so the retry proceeds
-    * regardless. foreachBatch bodies are re-run whole; every sink
-    * here writes its batch directory idempotently, so a re-run
-    * converges. */
-  private[graft] def retryAcrossTableSwap(spark: org.apache.spark.sql.SparkSession,
+    * regardless.
+    *
+    * The bracket OWNS refresh and listing: `body` receives the
+    * `before` listing (watched table -> its sorted file set, or
+    * `absent`), taken right after refreshing each table's relation
+    * cache. The body needs no refresh of its own, and whatever it
+    * derives from a table's contents keys on that listing
+    * ([[FileSetMemo]]) — a change after the listing reads as an
+    * unstable bracket and re-runs the body against the new one.
+    * Bodies re-run whole; every guard writes its batch directory
+    * idempotently, so a re-run converges. */
+  private[graft] def retryAcrossTableSwap(spark: SparkSession,
                                    tables: Seq[String],
-                                   budgetMs: Long = 10000L)(body: => Unit): Unit = {
+                                   budgetMs: Long = GuardSwapBudgetMs)(
+                                   body: Map[String, String] => Unit): Unit = {
     // the budget bounds the RETRY phase, armed at the FIRST detected
     // race/instability — never the first body run itself (r17
     // self-review: a fixed start-anchored deadline was consumed by
@@ -752,11 +717,10 @@ object Sinks {
         deadline = System.nanoTime() + budgetMs * 1000000L
       seenUnstable ++= unstable
     }
+    // the retry's listSig refreshes the relation caches after a heal
     def heal(): Unit = tables.foreach { t =>
-      try {
-        recoverTableSwap(spark, t)
-        if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
-      } catch { case _: Exception => () } // lost a heal race — retry decides
+      try recoverTableSwap(spark, t)
+      catch { case _: Exception => () } // lost a heal race — retry decides
     }
     def listSig(): Map[String, String] = tables.map { t =>
       if (!spark.catalog.tableExists(t)) t -> "absent"
@@ -769,7 +733,7 @@ object Sinks {
       val unstable: Set[String] =
         try {
           val before = listSig()
-          body
+          body(before)
           val after = listSig()
           tables.filter(t => before.get(t) != after.get(t)).toSet
         } catch {
@@ -846,196 +810,165 @@ object Sinks {
   private def racedTables(tables: Seq[String], e: Throwable): Set[String] =
     tables.filter(t => swapRaceSignature(Seq(t), e)).toSet
 
-  def streamingCorpusGuardSink(stream: DataFrame, hashTable: String,
-                               path: String, checkpoint: String,
-                               swapBudgetMs: Long = 10000L): DataStreamWriter[Row] = {
-    // per-QUERY probe cache: the bloom changes at most once per daily
-    // ingest, while triggers can be seconds apart — rebuilding the
-    // probe per batch would collect the full filter byte set to the
-    // driver and (sharded form) re-broadcast gigabytes per trigger
-    // for an unchanged filter. Keyed on the bloom table's file set:
-    // any merge/rebuild/recount lands new files, so the key changes
-    // exactly when the filter content can. The rare superseded
-    // broadcast is reclaimed by the ContextCleaner — one per corpus
-    // maintenance event, not one per trigger.
-    var probeSig: String = null
-    var probe: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None
+  /** A bloom probe as the dedup arms take it; `None` = no bloom kept. */
+  private type BloomProbe = Option[Column => Column]
+
+  /** A per-query memo of values derived from watched tables: the
+    * value for a table is rebuilt only when that table's file set in
+    * the bracket's listing differs from the one it was built against.
+    * Any merge, rebuild or append lands new files, so the key changes
+    * exactly when the value can. A query's triggers run one at a
+    * time, so the memo takes no lock. */
+  private final class FileSetMemo[V] {
+    private var built = Map.empty[String, (String, V)]
+    def apply(listing: Map[String, String], table: String)(build: => V): V =
+      built.get(table).collect { case (sig, v) if sig == listing(table) => v }
+        .getOrElse {
+          val v = build
+          built += table -> (listing(table) -> v)
+          v
+        }
+  }
+
+  /** `table`'s bloom probe, rebuilt only when its `__bloom` table's
+    * file set changed. */
+  private def memoProbe(probes: FileSetMemo[BloomProbe], spark: SparkSession,
+                        listing: Map[String, String], table: String): BloomProbe =
+    probes(listing, table + "__bloom")(graft.operators.Dedup.bloomProbeFor(spark, table))
+
+  /** The one body of every streaming guard sink: per micro-batch,
+    * inside [[retryAcrossTableSwap]] over the `watched` tables, run
+    * the guard's `arm` — the BATCH operator `runIncremental` calls,
+    * extracted rather than replicated, so the stream and the daily
+    * ingest can never disagree on a verdict — and overwrite
+    * `path/batch_id=N/` with its rows. The rules every guard shares:
+    *
+    *  - FRESH PER TRIGGER. The arm re-reads its index tables each
+    *    trigger, which is why a guard is a foreachBatch sink and not a
+    *    stream-static transform: a transform would bake the index and
+    *    its bloom into the unbounded plan once, and a verdict from that
+    *    stale snapshot leaks every duplicate the corpus gained since
+    *    the stream started. The micro-batch runs on the stream's
+    *    CLONED session, whose relation cache can still hold the
+    *    previous trigger's file listing (an OVERWRITTEN bloom then
+    *    fails with FAILED_READ_FILE, an APPENDED index silently misses
+    *    its newest rows); the bracket refreshes each watched table
+    *    before listing it, so the clone reads what maintenance wrote.
+    *  - BLOOM ⊇ TABLE. The daily ingest merges a day's keys into each
+    *    bloom BEFORE appending them to the table (r15 ADVICE), so a
+    *    trigger landing mid-ingest can see extra maybes — anti-join
+    *    work on the exact arm, fpp extra rows on the inner-join arms —
+    *    but never a table key the bloom lacks, which would mint a false
+    *    definitely-new (exact) or drop a true candidate (inner joins).
+    *  - SWAPS. A maintenance DROP + RENAME (index compaction, chunk
+    *    recap, PQ retrain) overlapping a trigger heals and re-runs the
+    *    arm, neither terminating the query nor certifying a verdict
+    *    read across two table states ([[retryAcrossTableSwap]], with
+    *    [[GuardSwapBudgetMs]]).
+    *  - PROBES MEMOIZED PER FILE SET. A bloom changes at most once per
+    *    daily ingest while triggers can be seconds apart; rebuilding a
+    *    probe per trigger would collect every filter byte off the
+    *    executors and (sharded form) re-broadcast gigabytes for an
+    *    unchanged filter. The text guards and the accept-preview hold a
+    *    [[FileSetMemo]] keyed on the bracket's listing, so a probe
+    *    rebuilds exactly when its bloom's files change; the superseded
+    *    broadcast is reclaimed by the ContextCleaner, one per
+    *    maintenance event.
+    *  - IDEMPOTENT, READ-ONLY. `batch_id=N/` is overwritten, so an
+    *    at-least-once replay rewrites the same directory — against a
+    *    possibly grown corpus: fewer rows, never appended duplicates —
+    *    the directory-grain idempotence of [[backfillParquet]]. Guards
+    *    never write the corpus: indexing accepted docs stays
+    *    `runIncremental`'s job with its crash manifest.
+    *
+    * `watched` is evaluated per trigger, so a table that is read only
+    * when present (a split layout's `__sigs`) joins the set when it
+    * exists. Returned unstarted — callers `.start()`. */
+  private def guardSink(stream: DataFrame, path: String, checkpoint: String)(
+      watched: SparkSession => Seq[String])(
+      arm: (DataFrame, Map[String, String]) => DataFrame): DataStreamWriter[Row] =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // heal/retry + consistency bracket: a concurrent
-        // compaction's DROP+RENAME swap (or its file deletions racing
-        // a pre-swap listing) must neither terminate the guard query
-        // nor silently read an emptied table — see
-        // [[retryAcrossTableSwap]]
-        retryAcrossTableSwap(spark, Seq(hashTable, hashTable + "__bloom"),
-            budgetMs = swapBudgetMs) {
-          // the micro-batch runs on the stream's CLONED session, whose
-          // relation cache can still hold the previous trigger's file
-          // listing for tables the daily ingest maintains — the bloom
-          // is OVERWRITTEN per merge, so a stale listing is not just
-          // old data but FAILED_READ_FILE on vanished files. Refresh
-          // both (metadata-only) so "fresh per trigger" holds in the
-          // clone, not just in the session that did the maintenance.
-          Seq(hashTable, hashTable + "__bloom")
-            .filter(spark.catalog.tableExists)
-            .foreach(spark.catalog.refreshTable)
-          val sig =
-            if (spark.catalog.tableExists(hashTable + "__bloom"))
-              spark.table(hashTable + "__bloom").inputFiles.sorted.mkString("\n")
-            else ""
-          if (sig != probeSig) {
-            probe = graft.operators.Dedup.bloomProbeFor(spark, hashTable)
-            probeSig = sig
-          }
-          graft.Pipeline.exactNewVsCorpus(spark, batch, hashTable,
-              probeOverride = Some(probe))
-            .write.mode("overwrite")
+        retryAcrossTableSwap(batch.sparkSession, watched(batch.sparkSession)) { listing =>
+          arm(batch, listing).write.mode("overwrite")
             .option("compression", "zstd")
             .parquet(s"$path/batch_id=$id")
         }
       }
+
+  /** Streaming EXACT-dup guard against the standing corpus — the
+    * stream face of `graft.Pipeline.exactNewVsCorpus`'s union-bypass
+    * (the in-stream dedup is [[graft.streaming.Streams.dedupStream]]'s
+    * job; this answers "does the corpus already have it" at ingest).
+    * Watches the hash table and its bloom. Novel rows land under
+    * `path/batch_id=N/`. Input must carry the `content` column the
+    * batch arm hashes. Shared rules: [[guardSink]]. */
+  def streamingCorpusGuardSink(stream: DataFrame, hashTable: String,
+                               path: String, checkpoint: String): DataStreamWriter[Row] = {
+    val probes = new FileSetMemo[BloomProbe]
+    guardSink(stream, path, checkpoint)(_ => Seq(hashTable, hashTable + "__bloom")) {
+      (batch, listing) =>
+        graft.Pipeline.exactNewVsCorpus(batch.sparkSession, batch, hashTable,
+          probeOverride = Some(memoProbe(probes, batch.sparkSession, listing, hashTable)))
+    }
   }
 
-  /** Streaming NEAR-dup guard against the STANDING corpus — the
-    * minhash twin of [[streamingCorpusGuardSink]], closing the r15
-    * round's last batch-only verdict: "is this doc a near-duplicate
-    * of something the corpus already holds (or of this batch)" at
-    * stream latency instead of at the daily run. Each micro-batch
-    * runs the BATCH arm itself —
-    * `graft.operators.Dedup.incrementalMinhashCandidates`, the exact
-    * function `runIncremental`'s near-dup probe calls — against the
-    * bucketed band-postings index re-read fresh per trigger, with
-    * the SAME band-key bloom prefilter the daily arm uses (corpus×
-    * delta side only; the in-batch self-join sees every row). One
-    * definition, so stream and daily ingest can never disagree on a
-    * candidate pair.
-    *
-    * The same two concurrency rules as the exact guard, inherited
-    * not re-proven: freshness per trigger (foreachBatch, never a
-    * stream-static transform — a baked postings/bloom snapshot would
-    * miss every doc the corpus gained since the stream started), and
-    * the ingest's merge-before-append ordering making the bloom a
-    * SUPERSET of the postings table at every instant — here the
-    * prefilter guards an INNER join, so the fatal skew is a table
-    * band key the bloom lacks (the corpus arm would silently drop a
-    * true candidate); superset-always makes that unreachable, at
-    * worst letting fpp extra rows shuffle into the probe.
-    *
-    * Candidate pairs (doc_id_1, doc_id_2, est_jaccard — batch doc
-    * ids paired with corpus ids or with each other) land under
-    * `path/batch_id=N/`, OVERWRITTEN per batch: at-least-once replay
-    * rewrites the same directory against the possibly-grown corpus —
-    * same directory-grain idempotence as the exact guard. READ-ONLY
-    * against the index: posting accepted docs stays `runIncremental`'s
-    * job. Input must carry `doc_id` and `text` (the banding
-    * functions' input contract). Returned unstarted — callers
-    * `.start()`. */
+  /** Streaming NEAR-dup guard against the standing corpus: per
+    * micro-batch `graft.operators.Dedup.incrementalMinhashCandidates`
+    * — the function `runIncremental`'s near-dup probe calls — against
+    * the bucketed band-postings index, with the same band-key bloom
+    * prefilter (corpus × delta side only; the in-batch self-join sees
+    * every row). Watches the postings table, its bloom and, in the
+    * split layout, its forward `__sigs` table. Candidate pairs
+    * (doc_id_1, doc_id_2, est_jaccard — batch doc ids paired with
+    * corpus ids or with each other) land under `path/batch_id=N/`.
+    * Input must carry `doc_id` and `text` (the banding functions'
+    * input contract). Shared rules: [[guardSink]]. */
   def streamingNearDupGuardSink(stream: DataFrame, postingsTable: String,
                                 path: String, checkpoint: String,
                                 threshold: Double = 0.5,
-                                bands: Int = 16, rowsPerBand: Int = 4,
-                                swapBudgetMs: Long = 10000L): DataStreamWriter[Row] = {
-    // per-QUERY probe cache keyed on the bloom table's file set —
-    // identical rationale to the exact guard's: the band bloom
-    // changes once per daily ingest, triggers can be seconds apart,
-    // and the sharded form re-broadcasts gigabytes if rebuilt per
-    // trigger. Any merge/rebuild/recount lands new files, so the key
-    // changes exactly when the filter content can.
-    var probeSig: String = null
-    var probe: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+                                bands: Int = 16, rowsPerBand: Int = 4): DataStreamWriter[Row] = {
+    val probes = new FileSetMemo[BloomProbe]
+    guardSink(stream, path, checkpoint)(spark =>
+        Seq(postingsTable, postingsTable + "__bloom") ++
+          Seq(postingsTable + "__sigs").filter(spark.catalog.tableExists)) {
+      (batch, listing) =>
         val spark = batch.sparkSession
-        // heal/retry + consistency bracket across a concurrent
-        // compaction swap — same availability rule as the exact
-        // guard; the split layout's forward sig table is read in the
-        // same trigger, so it joins the watched set when present
-        retryAcrossTableSwap(spark,
-            Seq(postingsTable, postingsTable + "__bloom") ++
-              (if (spark.catalog.tableExists(postingsTable + "__sigs"))
-                Seq(postingsTable + "__sigs") else Nil),
-            budgetMs = swapBudgetMs) {
-          // cloned-session relation caches: the postings + sig tables
-          // are APPENDED daily (stale listing = silently missing the
-          // newest corpus bands) and the bloom OVERWRITTEN (stale
-          // listing = FAILED_READ_FILE) — refresh all, metadata-only
-          Seq(postingsTable, postingsTable + "__bloom", postingsTable + "__sigs")
-            .filter(spark.catalog.tableExists)
-            .foreach(spark.catalog.refreshTable)
-          val sig =
-            if (spark.catalog.tableExists(postingsTable + "__bloom"))
-              spark.table(postingsTable + "__bloom").inputFiles.sorted.mkString("\n")
-            else ""
-          if (sig != probeSig) {
-            probe = graft.operators.Dedup.bloomProbeFor(spark, postingsTable)
-            probeSig = sig
-          }
-          val (postDf, sigsOpt) =
-            graft.operators.Dedup.postingsFrames(spark, postingsTable)
-          graft.operators.Dedup.incrementalMinhashCandidates(
-              batch, postDf, threshold, bands, rowsPerBand,
-              bandPrefilter = probe, sigs = sigsOpt)
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(s"$path/batch_id=$id")
-        }
-      }
+        val (postDf, sigsOpt) = graft.operators.Dedup.postingsFrames(spark, postingsTable)
+        graft.operators.Dedup.incrementalMinhashCandidates(
+          batch, postDf, threshold, bands, rowsPerBand,
+          bandPrefilter = memoProbe(probes, spark, listing, postingsTable), sigs = sigsOpt)
+    }
   }
 
-  /** Streaming SUBSTRING guard against the STANDING corpus — the CDC
-    * chunk arm's continuous face, next to the exact (40g) and
-    * near-dup (40h) guards: "does this doc share a long passage with
-    * something the corpus already holds" at stream latency. Each
-    * micro-batch runs `graft.operators.Dedup
-    * .incrementalSubstringMatches` — the LITERAL function
-    * `runIncremental`'s chunk probe calls, chunk-bloom prefilter
-    * included (sound on this INNER join exactly as in the daily arm:
-    * a pruned chunk cannot match, over-approximation after a df-cap
-    * recap just finds no postings) — against the bucketed chunk
-    * index re-read fresh per trigger. The same inherited concurrency
-    * rules as the other guards: freshness per trigger, the ingest's
-    * merge-before-append bloom ⊇ table invariant, and the
-    * swap healing + consistency bracket.
-    *
-    * `minSharedTokens` defaults to the daily arm's destructive bar
-    * (64). Match rows (delta_doc, corpus_doc, shared_chunks,
-    * shared_tokens) land under `path/batch_id=N/`, overwritten per
-    * batch. Input must carry `doc_id` and `text`. Returned
-    * unstarted — callers `.start()`. */
+  /** Streaming SUBSTRING guard against the standing corpus: per
+    * micro-batch `graft.operators.Dedup.incrementalSubstringMatches`
+    * — the CDC chunk probe `runIncremental` calls — with the
+    * chunk-bloom prefilter (sound on this inner join exactly as in the
+    * daily arm: a pruned chunk cannot match, and an over-approximating
+    * bloom after a df-cap recap just finds no postings). Watches the
+    * chunk table and its bloom. `minSharedTokens` defaults to the
+    * daily arm's destructive bar (64). Match rows (delta_doc,
+    * corpus_doc, shared_chunks, shared_tokens) land under
+    * `path/batch_id=N/`. Input must carry `doc_id` and `text`.
+    * Shared rules: [[guardSink]]. */
   def streamingSubstringGuardSink(stream: DataFrame, chunkTable: String,
                                   path: String, checkpoint: String,
-                                  minSharedTokens: Long = 64L,
-                                  swapBudgetMs: Long = 10000L): DataStreamWriter[Row] = {
-    var probeSig: String = null
-    var probe: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        retryAcrossTableSwap(spark, Seq(chunkTable, chunkTable + "__bloom"),
-            budgetMs = swapBudgetMs) {
-          Seq(chunkTable, chunkTable + "__bloom")
-            .filter(spark.catalog.tableExists)
-            .foreach(spark.catalog.refreshTable)
-          val sig =
-            if (spark.catalog.tableExists(chunkTable + "__bloom"))
-              spark.table(chunkTable + "__bloom").inputFiles.sorted.mkString("\n")
-            else ""
-          if (sig != probeSig) {
-            probe = graft.operators.Dedup.bloomProbeFor(spark, chunkTable)
-            probeSig = sig
-          }
-          graft.operators.Dedup.incrementalSubstringMatches(
-              batch, spark.table(chunkTable), minSharedTokens, bloomProbe = probe)
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(s"$path/batch_id=$id")
-        }
-      }
+                                  minSharedTokens: Long = 64L): DataStreamWriter[Row] = {
+    val probes = new FileSetMemo[BloomProbe]
+    guardSink(stream, path, checkpoint)(_ => Seq(chunkTable, chunkTable + "__bloom")) {
+      (batch, listing) =>
+        graft.operators.Dedup.incrementalSubstringMatches(
+          batch, batch.sparkSession.table(chunkTable), minSharedTokens,
+          bloomProbe = memoProbe(probes, batch.sparkSession, listing, chunkTable))
+    }
   }
+
+  /** The four tables of a semantic index: cell index, centroids, PQ
+    * codes, codebooks. */
+  private def semanticIndexTables(t: String): Seq[String] =
+    Seq(t, t + "__centroids", t + "__pq", t + "__pq__codebooks")
 
   /** Streaming SEMANTIC guard against the STANDING corpus — the
     * paraphrase arm's continuous face, completing the guard family
@@ -1059,16 +992,16 @@ object Sinks {
     * are broadcast-scale tables, so per-trigger re-reads cost
     * metadata + a small broadcast, not a corpus pass; the
     * candidate-cell collect is bounded by the quantizer's k per
-    * trigger. Same swap healing + consistency bracket as the other
-    * guards (the PQ retrain rewrites tables mid-flight).
+    * trigger. The PQ retrain rewrites tables mid-flight, so all four
+    * are watched.
     *
     * Per-trigger cost, measured (r16 VERDICT #6): the bench's
     * steady-state `semantic_probe_pq_daily` — the LITERAL probe this
     * sink runs per trigger, day-sized delta against the sf0.1 index —
     * is ~0.25 s, of which the centroid/codebook re-read + broadcast
     * rebuild is the fixed sub-100 ms slice; the probe's own join
-    * dominates. A per-file-set probe cache (as the three text guards
-    * carry) would save only that fixed slice while adding the cache's
+    * dominates. A per-file-set probe memo (as the three text guards
+    * keep) would save only that fixed slice while adding the cache's
     * staleness surface across PQ retrains — the one maintenance event
     * that MUST invalidate it — so it deliberately does not exist
     * until a deployment needs sub-100 ms triggers.
@@ -1076,28 +1009,14 @@ object Sinks {
     * Input must carry `doc_id` and `embedding` (the daily arm's
     * delta-vector contract — the embedder runs at the stream edge).
     * DISTINCT hit pairs (delta_doc, corpus_doc) land under
-    * `path/batch_id=N/`, overwritten per batch. Returned unstarted —
-    * callers `.start()`. */
+    * `path/batch_id=N/`. Shared rules: [[guardSink]]. */
   def streamingSemanticGuardSink(stream: DataFrame, semanticTable: String,
                                  path: String, checkpoint: String,
-                                 threshold: Double = 0.35,
-                                 swapBudgetMs: Long = 10000L): DataStreamWriter[Row] = {
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val tables = Seq(semanticTable, semanticTable + "__centroids",
-          semanticTable + "__pq", semanticTable + "__pq__codebooks")
-        retryAcrossTableSwap(spark, tables, budgetMs = swapBudgetMs) {
-          tables.filter(spark.catalog.tableExists)
-            .foreach(spark.catalog.refreshTable)
-          graft.Pipeline.semanticCorpusHits(spark, batch, semanticTable, threshold)
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(s"$path/batch_id=$id")
-        }
-      }
-  }
+                                 threshold: Double = 0.35): DataStreamWriter[Row] =
+    guardSink(stream, path, checkpoint)(_ => semanticIndexTables(semanticTable)) {
+      (batch, _) =>
+        graft.Pipeline.semanticCorpusHits(batch.sparkSession, batch, semanticTable, threshold)
+    }
 
   /** Streaming ACCEPT-PREVIEW — the composition of the whole guard
     * family into the ONE question an ingest operator actually asks:
@@ -1124,16 +1043,13 @@ object Sinks {
     * as the daily run compares docs inside one delta — a preview
     * trigger IS a candidate delta, not a rolling window.
     *
-    * Concurrency rules inherited from the single-arm guards: every
-    * index table re-read fresh per trigger, bloom probes cached per
-    * bloom-file-set, the ingest's merge-before-append bloom ⊇ table
-    * invariant, and [[retryAcrossTableSwap]]'s heal + consistency
-    * bracket across maintenance swaps. Input must carry the raw
+    * The four bloom probes and the collected charlm model are
+    * memoized per file set; the rest of the shared rules are
+    * [[guardSink]]'s. Input must carry the raw
     * documents columns (`doc_id`, `text`, `lang`, `source`, ...);
     * when `semanticTable` is set and the stream carries an
     * `embedding` column, the semantic arm probes with it (the
-    * embedder runs at the stream edge, as in the daily run).
-    * Returned unstarted — callers `.start()`. */
+    * embedder runs at the stream edge, as in the daily run). */
   def streamingAcceptPreviewSink(stream: DataFrame,
                                  postingsTable: String, hashTable: String,
                                  path: String, checkpoint: String,
@@ -1142,82 +1058,42 @@ object Sinks {
                                  semanticTable: Option[String] = None,
                                  charlmTable: Option[String] = None,
                                  charlmRareFracMax: Option[Double] = None,
-                                 charlmRareBelow: Double = 0.001,
-                                 swapBudgetMs: Long = 10000L): DataStreamWriter[Row] = {
+                                 charlmRareBelow: Double = 0.001): DataStreamWriter[Row] = {
     val bloomed = Seq(postingsTable, hashTable) ++ chunkTable
     // the doc-id key space (a VIEW over the postings table + its own
-    // bloom — operators.Dedup.writeIdsBloom): probe-cached like the
+    // bloom — operators.Dedup.writeIdsBloom): probe-memoized like the
     // other three, watched by its BLOOM only (the view's file set IS
     // the postings table's, already watched)
     val idsSpace = graft.operators.Dedup.idsSpaceOf(postingsTable)
-    val cached = bloomed :+ idsSpace
-    var probeSigs = Map.empty[String, String]
-    var probes = Map.empty[String, Option[org.apache.spark.sql.Column =>
-      org.apache.spark.sql.Column]]
-    // charlm model cache: collected once per model-table file set
-    // (the bloom-probe discipline) so a micro-batch pays only the
-    // map-side scoring, not the table aggregate + collect. None
-    // inside the cache = model over the row cap -> decideDelta's
-    // join-path fallback each batch.
-    var charlmSig: Option[String] = None
-    var charlmModel: Option[Array[Byte]] = None
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    // watch ONLY the tables this trigger's decision will read
+    // (mirrors decideDelta's own arm gating, r17 self-review): an
+    // embedding-less stream never touches the semantic tables, so a
+    // concurrent PQ retrain must not read as instability; the charlm
+    // model table is read only when the gate is armed
+    val semantic = semanticTable.filter(_ => stream.columns.contains("embedding"))
+    val charlm = charlmTable.filter(_ => charlmRareFracMax.isDefined)
+    val probes = new FileSetMemo[BloomProbe]
+    // the collected charlm model, so a micro-batch pays only the
+    // map-side scoring, not the table aggregate + collect; None inside
+    // = model over the row cap -> decideDelta's join-path fallback
+    val charlmModels = new FileSetMemo[Option[Array[Byte]]]
+    guardSink(stream, path, checkpoint)(spark =>
+        bloomed.flatMap(t => Seq(t, t + "__bloom")) ++ Seq(idsSpace + "__bloom") ++
+          Seq(postingsTable + "__sigs").filter(spark.catalog.tableExists) ++
+          semantic.toSeq.flatMap(semanticIndexTables) ++ charlm) {
+      (batch, listing) =>
         val spark = batch.sparkSession
-        val embeddings =
-          if (semanticTable.isDefined && batch.columns.contains("embedding"))
-            Some(batch.select(org.apache.spark.sql.functions.col("doc_id"),
-              org.apache.spark.sql.functions.col("embedding")))
-          else None
-        // watch ONLY the tables this trigger's decision will read
-        // (mirrors decideDelta's own arm gating, r17 self-review): an
-        // embedding-less stream never touches the semantic tables, so
-        // a concurrent PQ retrain must not read as instability; the
-        // charlm model table is read only when the gate is armed
-        val watched = bloomed.flatMap(t => Seq(t, t + "__bloom")) ++
-          Seq(idsSpace + "__bloom") ++
-          // split-layout forward sig table: read by the minhash arm
-          // every trigger when present
-          (if (spark.catalog.tableExists(postingsTable + "__sigs"))
-            Seq(postingsTable + "__sigs") else Nil) ++
-          semanticTable.filter(_ => embeddings.isDefined).toSeq.flatMap(t =>
-            Seq(t, t + "__centroids", t + "__pq", t + "__pq__codebooks")) ++
-          charlmTable.filter(_ => charlmRareFracMax.isDefined)
-        retryAcrossTableSwap(spark, watched, budgetMs = swapBudgetMs) {
-          watched.filter(spark.catalog.tableExists)
-            .foreach(spark.catalog.refreshTable)
-          cached.foreach { t =>
-            val sig =
-              if (spark.catalog.tableExists(t + "__bloom"))
-                spark.table(t + "__bloom").inputFiles.sorted.mkString("\n")
-              else ""
-            if (!probeSigs.get(t).contains(sig)) {
-              probes += t -> graft.operators.Dedup.bloomProbeFor(spark, t)
-              probeSigs += t -> sig
-            }
-          }
-          charlmTable.filter(_ => charlmRareFracMax.isDefined).foreach { t =>
-            val sig = spark.table(t).inputFiles.sorted.mkString("\n")
-            if (!charlmSig.contains(sig)) {
-              charlmModel = graft.operators.TextOps.charlmCollectModel(
-                spark.table(t)
-                  .groupBy(org.apache.spark.sql.functions.col("tri"))
-                  .agg(org.apache.spark.sql.functions.sum(
-                    org.apache.spark.sql.functions.col("n")).as("c3")))
-              charlmSig = Some(sig)
-            }
-          }
-          graft.Pipeline.decideDelta(spark, batch, postingsTable, hashTable,
-              holdout, chunkTable, semanticTable, embeddings, charlmTable,
-              charlmRareFracMax, charlmRareBelow, probeOverrides = probes,
-              charlmModelOverride = charlmSig.map(_ => charlmModel))
-            .verdicts
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(s"$path/batch_id=$id")
-        }
-      }
+        graft.Pipeline.decideDelta(spark, batch, postingsTable, hashTable,
+            holdout, chunkTable, semanticTable,
+            semantic.map(_ => batch.select(col("doc_id"), col("embedding"))),
+            charlmTable, charlmRareFracMax, charlmRareBelow,
+            probeOverrides = (bloomed :+ idsSpace)
+              .map(t => t -> memoProbe(probes, spark, listing, t)).toMap,
+            charlmModelOverride = charlm.map(t => charlmModels(listing, t)(
+              graft.operators.TextOps.charlmCollectModel(
+                spark.table(t).groupBy(col("tri")).agg(sum(col("n")).as("c3"))))))
+          .verdicts
+    }
   }
 
   /** Streaming GROUP-replace upsert — the snapshot-table sink for
@@ -1246,6 +1122,48 @@ object Sinks {
                                 groupKeys: Seq[String],
                                 versionCol: Option[String] = None): DataStreamWriter[Row] = {
     require(groupKeys.nonEmpty, "streamingGroupReplaceSink needs at least one group column")
+    snapshotSink(stream, path, checkpoint, groupKeys, "streamingGroupReplaceSink") { batch =>
+      versionCol.fold(batch) { v =>
+        batch.withColumn("__maxv",
+            max(col(v)).over(Window.partitionBy(groupKeys.map(col): _*)))
+          .filter(col(v) === col("__maxv"))
+          .drop("__maxv")
+      }
+    }
+  }
+
+  /** Streaming keyed upsert into a parquet layer — the reference's
+    * continuous `ON CONFLICT DO UPDATE` consumer re-expressed for
+    * immutable files: each micro-batch runs the [[mergeUpsert]] merge
+    * against the current layer — the [[streamingGroupReplaceSink]]
+    * body with one-row groups — and atomically swaps the result in.
+    *
+    * Replay-safe where at-least-once delivery needs it: re-merging an
+    * already-applied batch replaces the same keys with the same rows,
+    * so foreachBatch re-execution after a crash converges to the same
+    * layer. In-batch duplicate keys are resolved keep-one BEFORE the
+    * merge (`dropDuplicates` — last-writer-wins needs an explicit
+    * version column upstream, same as any upsert bus).
+    *
+    * The full-layer rewrite per batch is the no-table-format ceiling:
+    * with a transactional format the same [[mergeUpsert]] plan becomes
+    * a partition-scoped MERGE. Returned unstarted — callers
+    * `.start()`. */
+  def streamingUpsertSink(stream: DataFrame, path: String, checkpoint: String,
+                          keys: Seq[String]): DataStreamWriter[Row] = {
+    require(keys.nonEmpty, "streamingUpsertSink needs at least one key column")
+    snapshotSink(stream, path, checkpoint, keys, "streamingUpsertSink")(_.dropDuplicates(keys))
+  }
+
+  /** The one body of both snapshot sinks: per micro-batch, `rows`
+    * picks the batch's rows to land, every persisted row whose `keys`
+    * the batch touches is replaced by them, and the result swaps in
+    * atomically (write to a staging dir, then rename — never overwrite
+    * the directory being read, which would race the lazy scan of the
+    * existing layer). */
+  private def snapshotSink(stream: DataFrame, path: String, checkpoint: String,
+                           keys: Seq[String], sink: String)(
+                           rows: DataFrame => DataFrame): DataStreamWriter[Row] =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1253,25 +1171,20 @@ object Sinks {
         val target = new org.apache.hadoop.fs.Path(path)
         val staging = new org.apache.hadoop.fs.Path(path + "__staging")
         val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverHalfSwap(fs, target) // same crash-window rule as the keyed sink
-        val keyCols = groupKeys.map(org.apache.spark.sql.functions.col)
-        val latest = versionCol.fold(batch) { v =>
-          val w = org.apache.spark.sql.expressions.Window.partitionBy(keyCols: _*)
-          batch.withColumn("__maxv",
-            org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col(v)).over(w))
-            .filter(org.apache.spark.sql.functions.col(v) === org.apache.spark.sql.functions.col("__maxv"))
-            .drop("__maxv")
-        }
+        // MUST precede the exists/read below: after a crash between
+        // swapInto's renames the layer lives under __old, and merging
+        // against a missing target would lose it (ADVICE r8, medium).
+        recoverHalfSwap(fs, target)
+        val latest = rows(batch)
         val merged =
           if (fs.exists(target))
-            readSnapshotValidated(spark, path, batch.schema, "streamingGroupReplaceSink")
-              .join(latest.select(keyCols: _*).distinct(), groupKeys, "left_anti")
+            readSnapshotValidated(spark, path, batch.schema, sink)
+              .join(latest.select(keys.map(col): _*).distinct(), keys, "left_anti")
               .unionByName(latest)
           else latest
         merged.write.mode("overwrite").parquet(staging.toString)
         swapInto(fs, staging, target)
       }
-  }
 
   /** Read a snapshot layer for a merge, FAILING LOUDLY on schema
     * drift instead of force-pinning the stream's schema over it.
@@ -1308,32 +1221,5 @@ object Sinks {
           "with the change backfilled (or start a fresh path + checkpoint), " +
           "don't let a forced read schema null-fill or drop it silently")
     spark.read.schema(expected).parquet(path)
-  }
-
-  def streamingUpsertSink(stream: DataFrame, path: String, checkpoint: String,
-                          keys: Seq[String]): DataStreamWriter[Row] = {
-    require(keys.nonEmpty, "streamingUpsertSink needs at least one key column")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val target = new org.apache.hadoop.fs.Path(path)
-        val staging = new org.apache.hadoop.fs.Path(path + "__staging")
-        val fs = target.getFileSystem(hconf)
-        // MUST precede the exists/read below: after a crash between
-        // swapInto's renames the layer lives under __old, and merging
-        // against a missing target would lose it (ADVICE r8, medium).
-        recoverHalfSwap(fs, target)
-        val updates = batch.dropDuplicates(keys)
-        val merged =
-          if (fs.exists(target))
-            mergeUpsert(
-              readSnapshotValidated(spark, path, batch.schema, "streamingUpsertSink"),
-              updates, keys)
-          else updates
-        merged.write.mode("overwrite").parquet(staging.toString)
-        swapInto(fs, staging, target)
-      }
   }
 }

@@ -10,6 +10,28 @@ class CorpusSpec extends SparkSpec {
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
 
+  test("bloomFilterAuditMergeBatched stateKey: a cache hit returns the rows of a miss and of an unkeyed call") {
+    // a keyed repeat reuses the built tables and the day key frames
+    // (a hit keeps the first build's files and only appends); the
+    // rows must not tell a hit from a rebuild
+    val documents = (1L to 300L).map(i =>
+        (i, (1 to 80).map(j => s"w${(i * 7 + j * j) % 211}").mkString(" ")))
+      .toDF("doc_id", "text")
+    def run(key: Option[String]) = Corpus.bloomFilterAuditMergeBatched(documents, stateKey = key)
+      .orderBy("arm").collect().toSeq
+    def hashFiles = spark.table("graft_audit_bmb_hash").inputFiles.toSet
+    val miss = run(Some("bmb-spec-key"))
+    val built = hashFiles
+    val hit = run(Some("bmb-spec-key"))
+    assert(built.subsetOf(hashFiles), "the keyed repeat rebuilt instead of hitting")
+    val afterHit = hashFiles
+    val plain = run(None)
+    assert(!afterHit.subsetOf(hashFiles), "the unkeyed call must rebuild")
+    assert(miss.nonEmpty)
+    assert(hit === miss, "a cache hit changed the rows")
+    assert(plain === miss, "stateKey changed the rows")
+  }
+
   test("bpeTrain: hand-computed merge sequence, greedy non-overlap, early stop") {
     // corpus "aaab aaab ab": words aaab (freq 2), ab (freq 1)
     // round 0: (a,a) = 4 occurrences (2 per aaab), (a,b) = 3 -> merge aa

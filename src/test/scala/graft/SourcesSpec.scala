@@ -656,7 +656,7 @@ class SourcesSpec extends SparkSpec {
     // attempt 3 is clean. Without the re-arm, attempt 2 exhausts the
     // budget and the bracket throws.
     var attempts = 0
-    Sinks.retryAcrossTableSwap(spark, Seq(t1, t2), budgetMs = 1000L) {
+    Sinks.retryAcrossTableSwap(spark, Seq(t1, t2), budgetMs = 1000L) { _ =>
       attempts += 1
       if (attempts == 1) touch(t1)
       if (attempts == 2) { Thread.sleep(2200L); touch(t2) }
@@ -666,7 +666,7 @@ class SourcesSpec extends SparkSpec {
     // expires within one window and the bracket refuses loudly
     var tries = 0
     val e = intercept[IllegalStateException] {
-      Sinks.retryAcrossTableSwap(spark, Seq(t1, t2), budgetMs = 300L) {
+      Sinks.retryAcrossTableSwap(spark, Seq(t1, t2), budgetMs = 300L) { _ =>
         tries += 1
         Thread.sleep(120L)
         touch(t1)

@@ -623,6 +623,80 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("corpus guard probe memo: an unchanged bloom is read once, a hit lands a fresh query's rows") {
+    // the probe is memoized on the bloom's file set as the swap
+    // bracket lists it: a second trigger against the same bloom
+    // builds no probe (no job reads the bloom table), yet lands
+    // exactly the rows a fresh query, building its own probe, lands;
+    // a merged bloom (new files) rebuilds on the next trigger
+    implicit val sqlCtx = spark.sqlContext
+    val hash = "graft_guard_memo_hash"
+    val bloom = hash + "__bloom"
+    def hashesOf(texts: String*) = texts.toDF("content")
+      .select(md5(col("content")).as("content_md5")).distinct()
+    graft.sources.Sinks.writeBucketed(hashesOf("memo corpus doc"), hash, Seq("content_md5"))
+    graft.operators.Dedup.writeHashBloom(spark, hash)
+    // jobs of SQL executions whose plan scans the bloom table
+    val sc = spark.sparkContext
+    val bloomExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val bloomJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case st: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if st.physicalPlanDescription.contains(bloom) => bloomExecs.add(st.executionId)
+        case _ => ()
+      }
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .filter(id => bloomExecs.contains(id.toLong))
+          .foreach(_ => bloomJobs.incrementAndGet())
+    }
+    def bloomReadsDuring(run: => Unit): Int = {
+      org.apache.spark.graft.BusDrain(sc)
+      val before = bloomJobs.get()
+      run
+      org.apache.spark.graft.BusDrain(sc)
+      bloomJobs.get() - before
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_guard_memo").toString
+    def start(input: MemoryStream[(Long, String)], name: String) =
+      graft.sources.Sinks.streamingCorpusGuardSink(
+        input.toDF().toDF("doc_id", "content"), hash, s"$dir/$name", s"$dir/${name}_chk").start()
+    def landed(name: String, batch: Long) =
+      spark.read.parquet(s"$dir/$name/batch_id=$batch").as[(Long, String)].collect().toSet
+    val input = MemoryStream[(Long, String)]
+    val fresh = MemoryStream[(Long, String)]
+    val q = start(input, "out")
+    val q2 = start(fresh, "fresh")
+    sc.addSparkListener(listener)
+    try {
+      val first = bloomReadsDuring {
+        input.addData((1L, "memo corpus doc"), (2L, "novel one"))
+        q.processAllAvailable()
+      }
+      assert(first > 0, "the first trigger must build its probe from the bloom table")
+      val trigger2 = Seq((3L, "memo corpus doc"), (4L, "novel two"), (5L, "novel three"))
+      val second = bloomReadsDuring {
+        input.addData(trigger2: _*)
+        q.processAllAvailable()
+      }
+      assert(second === 0, "an unchanged bloom must not be re-read")
+      fresh.addData(trigger2: _*)
+      q2.processAllAvailable()
+      assert(landed("out", 1L) === Set((4L, "novel two"), (5L, "novel three")))
+      assert(landed("out", 1L) === landed("fresh", 0L),
+        "the memoized probe landed other rows than a fresh query")
+      graft.operators.Dedup.mergeHashBloom(spark, hash, hashesOf("indexed later"))
+      graft.sources.Sinks.appendBucketed(hashesOf("indexed later"), hash, Seq("content_md5"))
+      val third = bloomReadsDuring {
+        input.addData((6L, "indexed later"), (7L, "novel four"))
+        q.processAllAvailable()
+      }
+      assert(third > 0, "a merged bloom must rebuild the probe")
+      assert(landed("out", 2L) === Set((7L, "novel four")))
+    } finally { sc.removeSparkListener(listener); q.stop(); q2.stop() }
+  }
+
   test("streamingNearDupGuardSink: pairs == batch arm; corpus grown between triggers is pairable") {
     implicit val sqlCtx = spark.sqlContext
     val post = "graft_guard_post"
