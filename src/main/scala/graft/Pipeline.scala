@@ -1645,8 +1645,7 @@ object Pipeline {
     // pair graphs, so a doc that is a near-dup of A and shares a
     // passage with B lands in one cluster; the star-rounds CC is the
     // production default (O(log^2 n) rounds for any component shape,
-    // same min-id labeling) and persists the pair projection
-    // internally for its fixpoint rounds
+    // same min-id labeling), reading the pairs once in its first round
     val textOnly = exact.select(col("doc_id"), col("content").as("text"))
     val pairCols = Seq("doc_id_1", "doc_id_2")
     val clusters = Dedup.clusterPairsStar(

@@ -93,11 +93,11 @@ object PlanDump {
       "pq_codes" -> "PQ encoding: all m subspaces in ONE fused native scan expression (graft_pq_encode vs a 1-row packed-codebook broadcast, r20), zero corpus shuffles; training re-centers whole subvectors through one exchange per round",
       "ann_pq" -> "ADC scan: per-query m x ksub distance table broadcast onto fused-encode code arrays (no reassembly shuffle, r20), native graft_adc_dist per candidate, exact-cosine re-rank only for the top-64 survivors",
       "ann_ivf_pq" -> "two-level serving shape: trained cosine cells prune to nprobe cells, ADC ranks in-cell codes (fused native encode + native ADC fold, r20), full vectors fetched for the re-rank only",
-      "entity_pagerank" -> "damped PageRank: corpus work ends at the per-doc mention aggregate; 5 sorted-fold rounds on gazetteer-bounded rows with per-round checkpoints",
+      "entity_pagerank" -> "damped PageRank: corpus work ends at the per-doc mention aggregate; the gazetteer-bounded pairs coalesce into one task that runs all 5 sorted-fold rounds in memory — one Spark execution",
       "curriculum_assign" -> "curriculum buckets: md5 sample filter map-side, window only over the SAMPLE, bucket count against a (k-1)-row broadcast — no global sort",
       "heavy_hitters_audit" -> "MG contract row: the k-entry combinable sketch and the exact rollup in one audit join; production keeps only the sketch aggregate",
       "ann_ivf_pq_residual" -> "residual IVF-PQ: per-(query, probed-cell) ADC tables ride one broadcast; codes and cells equi-join (cells + residuals pinned once, not re-derived per training round, r20); full vectors only in the re-rank",
-      "entity_communities" -> "sync LPA: per-round gazetteer-bounded join + min_by argmax over checkpointed labels; integer weights, no doubles",
+      "entity_communities" -> "sync LPA: the gazetteer-bounded pairs coalesce into one task that runs all 5 argmax rounds in memory — one Spark execution; integer weights, no doubles",
       "semantic_probe_pq" -> "PQ-compressed probe: 16 B/doc index rows off ONE zero-shuffle fused-encode projection (r20) equi-join delta cells, native ADC + law-of-cosines recovery map-side, corpus vectors never load",
       "bloom_filter_audit" -> "bloom contract row: one checkpointed split feeds the driver-built filter and the probe aggregate; booleans pinned from the exact side",
       "semantic_probe_pq_persisted" -> "the persisted PQ seam: codebooks/centroids/codes READ from tables (no retraining in the probe half), delta cells equi-join the bucketed 16 B/doc index, ADC + law-of-cosines map-side",

@@ -105,8 +105,8 @@ case class SortedFoldSum(
 }
 
 /** [[SortedFoldSum]]'s STRING-keyed twin — the fold convention for
-  * groups keyed by text (charlm's per-doc trigram fold, PageRank's
-  * per-node neighbor fold). Keys are compared as unsigned UTF-8
+  * groups keyed by text (charlm's per-doc trigram fold; PageRank's
+  * in-task neighbour fold follows the same key order). Keys are compared as unsigned UTF-8
   * bytes, which is exactly both Spark's `UTF8String.compareTo` (what
   * the declarative `array_sort(struct(key, value))` used) and
   * DuckDB's binary collation `ORDER BY key` — so the replacement is

@@ -1472,24 +1472,32 @@ object Dedup {
     * drift, A~B~C~... with no short-cut pairs) would make label
     * propagation run diameter rounds or cut off.
     *
-    * Each round is two self-contained aggregate+join jobs over the
-    * canonical (larger, smaller) edge list:
-    *   - large-star: every node points its LARGER neighbors at the
-    *     minimum of its closed neighborhood — long tails fold in half;
-    *   - small-star: every node rewires its smaller neighbors and
-    *     itself onto that minimum — stars flatten.
-    * Edges stay canonically oriented (u > v) by construction, so no
-    * orientation normalization job is needed between rounds.
-    * Convergence is screened with a 1-row (count, hash-sum) signature
-    * of the checkpointed edge list — two scalar aggregates per round —
-    * and then CONFIRMED with an exact `exceptAll` on the candidate
-    * final round only (signature equality alone could be a hash-sum
-    * collision, which would silently return wrong cluster ids; counts
-    * already match, so one except direction proves multiset equality).
-    * Exhausting `maxIters` without convergence throws rather than
-    * returning whatever labeling the last edge list implies.
-    * `localCheckpoint` per round cuts lineage exactly as in
-    * [[clusterPairs]]. */
+    * The state between rounds is the symmetric adjacency `(a, b)` of
+    * the current edge set, each row carrying `mn` = the minimum
+    * neighbour of `a`. Round 1 builds it straight from the pairs;
+    * every round is then ONE checkpoint job:
+    *   - large-star: every node points its LARGER neighbours at the
+    *     minimum of its closed neighbourhood, `least(a, mn)` — long
+    *     tails fold in half;
+    *   - small-star: every node rewires its smaller neighbours and
+    *     itself onto its minimum neighbour — stars flatten;
+    *   - the rewired edges' symmetric adjacency is deduplicated and
+    *     windowed over `partitionBy(a)` for each node's degree and
+    *     `mn`, and checkpointed as the next round's state.
+    *
+    * Convergence is an EXACT integer test observed inside that same
+    * job: `observe` counts the adjacency rows of nodes that have a
+    * smaller neighbour (`mn < a`) and more than one neighbour. At 0
+    * every node is either a root (no smaller neighbour) or a leaf
+    * (its only neighbour is smaller), so every edge joins a leaf to a
+    * root and the edge set is a forest of stars, each centred on its
+    * minimum. Star rounds preserve components, so that centre is the
+    * component's minimum and the labels `least(a, mn)` are exact; a
+    * star forest is also the rounds' fixpoint, so no confirmation
+    * round follows. Exhausting `maxIters` without reaching it throws
+    * rather than returning a non-fixpoint labeling. `localCheckpoint`
+    * per round cuts lineage exactly as in [[clusterPairs]]; a run of R
+    * rounds is R + 1 Spark executions with the final read. */
   def clusterPairsStar(pairs: DataFrame, maxIters: Int = 30): DataFrame =
     clusterPairsStarInstrumented(pairs, maxIters)._1
 
@@ -1499,93 +1507,62 @@ object Dedup {
   private[graft] def clusterPairsStarInstrumented(pairs: DataFrame,
                                                   maxIters: Int = 30): (DataFrame, Int) = {
     require(maxIters >= 1)
-    val p = pairs.select(col("doc_id_1"), col("doc_id_2")).persist()
-    try {
-      var edges = p
-        .select(greatest(col("doc_id_1"), col("doc_id_2")).as("u"),
-          least(col("doc_id_1"), col("doc_id_2")).as("v"))
-        .filter(col("u") =!= col("v"))
+    import org.apache.spark.sql.expressions.Window
+    // canonical edges (u > v) -> deduplicated symmetric adjacency
+    // (a, b) with each node's minimum neighbour `mn` and degree. The
+    // explicit repartition on `a` is the ONE exchange: the distinct
+    // (keys a, b) and the window (key a) both run on it.
+    def adjacency(edges: DataFrame): DataFrame = {
+      val byA = Window.partitionBy(col("a"))
+      edges
+        .select(explode(array(
+          struct(col("u").as("a"), col("v").as("b")),
+          struct(col("v").as("a"), col("u").as("b")))).as("e"))
+        .select(col("e.a").as("a"), col("e.b").as("b"))
+        .repartition(col("a"))
         .distinct()
+        .withColumn("mn", min(col("b")).over(byA))
+        .withColumn("deg", count(lit(1)).over(byA))
+    }
+    var adj = adjacency(pairs
+      .select(greatest(col("doc_id_1"), col("doc_id_2")).as("u"),
+        least(col("doc_id_1"), col("doc_id_2")).as("v"))
+      .filter(col("u") =!= col("v")))
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIters) {
+      // large-star: larger neighbours b > a re-point at least(a, mn);
+      // b > a >= least(a, mn), so the orientation is canonical. Not
+      // distinct'd: the adjacency's distinct cleans duplicates up.
+      val large = adj.filter(col("b") > col("a"))
+        .select(col("b").as("u"), least(col("a"), col("mn")).as("v"))
+      // small-star: center u rewires its smaller neighbours and itself
+      // onto m = min(v) per u; x is a neighbour >= m or the center
+      // u > m, so (x, m) is canonical after dropping x = m
+      val rewired = large
+        .withColumn("m", min(col("v")).over(Window.partitionBy(col("u"))))
+        .select(explode(array(
+          struct(col("v").as("x"), col("m")),
+          struct(col("u").as("x"), col("m")))).as("p"))
+        .select(col("p.x").as("u"), col("p.m").as("v"))
+        .filter(col("u") =!= col("v"))
+      val obs = org.apache.spark.sql.Observation()
+      adj = adjacency(rewired)
+        .observe(obs, coalesce(sum(when(col("mn") < col("a") && col("deg") > 1L, 1L)
+          .otherwise(0L)), lit(0L)).as("unstarred"))
+        .select(col("a"), col("b"), col("mn"))
         .localCheckpoint()
-      def signature(e: DataFrame): (Long, Long) = {
-        val r = e.agg(count(lit(1)).as("c"),
-          coalesce(sum(hash(col("u"), col("v")).cast("long")), lit(0L)).as("h")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      var sig = signature(edges)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIters) {
-        import org.apache.spark.sql.expressions.Window
-        // large-star: center a sees ALL neighbors (symmetric adjacency),
-        // larger neighbors b > a re-point at min(closed neighborhood).
-        // The per-center minimum rides a WINDOW over the adjacency
-        // (r21): the r20 shape paid a groupBy(a) aggregate PLUS a
-        // join back onto adj — the adjacency crossed an exchange
-        // twice per half-round and `large` needed its own eager
-        // checkpoint job because it fed two consumers. Here each
-        // half-round is ONE (key)-partitioned pass, `large` has ONE
-        // consumer, and the whole round collapses into the single
-        // checkpoint job below — half the per-round exchanges of the
-        // adjacency and one driver round-trip per round instead of
-        // two. Values are identical: min() over partitionBy(a) is
-        // row-for-row the joined-back groupBy min.
-        val adj = edges.select(col("u").as("a"), col("v").as("b"))
-          .union(edges.select(col("v").as("a"), col("u").as("b")))
-        val large = adj
-          .withColumn("mn", min(col("b")).over(Window.partitionBy(col("a"))))
-          .filter(col("b") > col("a"))
-          // b > a >= least(a, mn): canonical orientation is free.
-          // NOT distinct'd: two centers can emit the same (b, m) —
-          // the round's final distinct cleans it up; deduping here
-          // would cost an extra full-edge shuffle per round for
-          // nothing.
-          .select(col("b").as("u"), least(col("a"), col("mn")).as("v"))
-        // small-star: center u (the larger endpoint) rewires its smaller
-        // neighbors and itself onto its minimum neighbor. Same window
-        // trick: `m` = min(v) per u rides the rows, and the center's
-        // own (u, m) row is emitted by a 2-way explode of each large
-        // row instead of a join against a separate per-u aggregate —
-        // the duplicate (u, m) copies collapse in the final distinct,
-        // which the r20 shape already paid.
-        // the round signature rides the SAME job as the checkpoint via
-        // `observe` (r20) — the separate per-round signature aggregate
-        // job is gone; the metrics are the identical count + hash-sum
-        // pair over the identical distinct'd row set
-        val obs = org.apache.spark.sql.Observation()
-        val rewired = large
-          .withColumn("m", min(col("v")).over(Window.partitionBy(col("u"))))
-          .select(explode(array(
-            struct(col("v").as("x"), col("m")),
-            struct(col("u").as("x"), col("m")))).as("p"))
-          .select(col("p.x").as("x"), col("p.m").as("m"))
-          .filter(col("x") =!= col("m"))
-          // x is either a neighbor >= m or the center u > m: canonical
-          .select(col("x").as("u"), col("m").as("v"))
-          .distinct()
-          .observe(obs, count(lit(1)).as("c"),
-            coalesce(sum(hash(col("u"), col("v")).cast("long")), lit(0L)).as("h"))
-          .localCheckpoint()
-        val m = obs.get
-        val nextSig = (m("c").asInstanceOf[Long], m("h").asInstanceOf[Long])
-        // exact confirmation runs ONLY when the cheap signature already
-        // matches — once per query in the common case
-        converged = nextSig == sig && edges.exceptAll(rewired).isEmpty
-        sig = nextSig
-        edges = rewired
-        iter += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"clusterPairsStar did not converge within $maxIters rounds — " +
-            "raise maxIters; returning a non-fixpoint labeling would be silently wrong")
-      // converged edge list is a union of stars rooted at component
-      // minima: children label from their edge, roots label themselves
-      (edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
-        .union(edges.select(col("v").as("doc_id"), col("v").as("cluster_id")))
-        .groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id")),
-        iter)
-    } finally p.unpersist()
+      converged = obs.get.apply("unstarred").asInstanceOf[Long] == 0L
+      iter += 1
+    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"clusterPairsStar did not converge within $maxIters rounds — " +
+          "raise maxIters; returning a non-fixpoint labeling would be silently wrong")
+    // one row per node: the row that holds its minimum neighbour
+    (adj.filter(col("b") === col("mn"))
+      .select(col("a").as("doc_id"), least(col("a"), col("mn")).as("cluster_id")),
+      iter)
   }
 
   /** Deduplicate a corpus with a cluster assignment: keep every doc

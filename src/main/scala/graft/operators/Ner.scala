@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Entity extraction + aggregation pipeline, following the reference's
   * NER post-processing semantics (`/root/reference/processor/ner.py:96-229`):
@@ -258,17 +261,16 @@ object Ner {
       .select(col("u").as("entity"), col("degree"), col("centrality"))
   }
 
-  /** The symmetric weighted entity co-occurrence graph `(u, v, w)`:
+  /** The entity co-occurrence pairs `(e1, e2, w)` with `e1 < e2`:
     * per-doc DISTINCT mentions paired within the doc (sorted-array
-    * slice pairing — no self-join on the corpus), weights = number of
-    * docs where the two entities co-occur, both edge directions
-    * materialized. Gazetteer-bounded: at most |dict|² edges no matter
-    * the corpus size — the shared base of [[entityCentrality]] and
-    * [[entityPagerank]]. */
-  private def cooccurrenceAdj(spark: SparkSession, documents: DataFrame): DataFrame = {
+    * slice pairing — no self-join on the corpus), `w` = number of docs
+    * where the two entities co-occur. Gazetteer-bounded: at most
+    * |dict|·(|dict|-1)/2 pairs no matter the corpus size (the built-in
+    * gazetteer leaves 6 valid words, so at most 15 pairs over 6 nodes). */
+  private def cooccurrencePairs(spark: SparkSession, documents: DataFrame): DataFrame = {
     val ents = mentions(spark, documents)
       .select(col("doc_id"), col("word")).distinct()
-    val pairs = ents
+    ents
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("word"))).as("es"))
       .filter(size(col("es")) >= 2)
@@ -277,8 +279,51 @@ object Ner {
           b => struct(a.as("e1"), b.as("e2")))))).as("p"))
       .groupBy(col("p.e1").as("e1"), col("p.e2").as("e2"))
       .agg(count(lit(1)).as("w"))
+  }
+
+  /** [[cooccurrencePairs]] as the symmetric graph `(u, v, w)`, both
+    * edge directions materialized — the base of [[entityCentrality]]. */
+  private def cooccurrenceAdj(spark: SparkSession, documents: DataFrame): DataFrame = {
+    val pairs = cooccurrencePairs(spark, documents)
     pairs.select(col("e1").as("u"), col("e2").as("v"), col("w"))
       .union(pairs.select(col("e2").as("u"), col("e1").as("v"), col("w")))
+  }
+
+  /** The co-occurrence graph held in one task: node names in ascending
+    * unsigned-UTF-8 order (Spark's string order, and the key order of
+    * `graft_sorted_fold_sum_str`), so comparing two node indices
+    * compares their names; `adj(i)` is node i's (neighbour, weight)
+    * list, neighbours ascending. */
+  private final class EntityGraph(edges: Iterator[(String, String, Long)]) {
+    private val es = edges.toArray
+    val names: Array[String] =
+      es.flatMap(e => Array(e._1, e._2)).distinct.sortBy(UTF8String.fromString)
+    val adj: Array[Array[(Int, Long)]] = {
+      val ix = names.zipWithIndex.toMap
+      val byNode = es
+        .flatMap { case (a, b, w) => Array((ix(a), (ix(b), w)), (ix(b), (ix(a), w))) }
+        .groupMap(_._1)(_._2)
+      Array.tabulate(names.length)(i => byNode(i).sortBy(_._1))
+    }
+
+    /** `iters` synchronous rounds: every node's next state is
+      * `step(previous states, node)`, so update order cannot matter. */
+    def rounds[S: ClassTag](iters: Int, init: Array[S])(step: (Array[S], Int) => S): Array[S] =
+      (0 until iters).foldLeft(init)((prev, _) => Array.tabulate(names.length)(step(prev, _)))
+  }
+
+  /** Runs `kernel` over the whole co-occurrence graph in ONE task of
+    * ONE Spark execution: the corpus-sized mention aggregate stays
+    * distributed, the gazetteer-bounded pair rows (see
+    * [[cooccurrencePairs]]) coalesce into a single partition, and the
+    * fixpoint rounds run in memory — no checkpoint, broadcast or Spark
+    * job per round. Lazy: nothing runs until the result is read. */
+  private def onEntityGraph[T: Encoder](spark: SparkSession, documents: DataFrame)(
+      kernel: EntityGraph => Iterator[T]): Dataset[T] = {
+    import spark.implicits._
+    cooccurrencePairs(spark, documents).as[(String, String, Long)]
+      .coalesce(1)
+      .mapPartitions(edges => kernel(new EntityGraph(edges)))
   }
 
   /** Damped weighted PageRank over the entity co-occurrence graph —
@@ -293,47 +338,30 @@ object Ner {
     *
     * Fixed `iters` rounds (reproducibility over epsilon-convergence,
     * the [[Ann.kmeansCentroids]] rule) of
-    * `pr' = (1-d)/N + d · Σ_in pr(v) · w / outw(v)`. The graph is
-    * symmetric so every node has out-edges — no dangling-mass term.
+    * `pr' = (1-d)/N + d · Σ_in pr(u) · w / outw(u)`, starting from
+    * `1/N`: each contribution is `pr * w / outw` in doubles, and each
+    * node's contributions fold from 0.0 in ascending unsigned-UTF-8
+    * order of `u` (the `graft_sorted_fold_sum_str` rule, which the
+    * DuckDB oracle replays). The graph is symmetric so every node has
+    * out-edges — no dangling-mass term.
     *
     * Scale shape: corpus-sized work ends at the per-doc mention
-    * aggregate inside [[cooccurrenceAdj]]; the rank table and every
-    * per-round join/aggregate live on gazetteer-bounded rows
-    * (broadcast scale), with `localCheckpoint` cutting per-round
-    * lineage exactly like the CC fixpoint. */
+    * aggregate; the graph is gazetteer-bounded (at most |dict|² edges,
+    * 6 nodes with the built-in gazetteer), so all `iters` rounds run
+    * in one task of ONE Spark execution ([[onEntityGraph]]). */
   def entityPagerank(spark: SparkSession, documents: DataFrame,
                      iters: Int = 5, damping: Double = 0.85): DataFrame = {
     require(iters >= 0)
-    graft.GraftExtensions.register(spark) // graft_sorted_fold_sum_str
-    // checkpoint the graph ONCE: every eagerly-materialized round
-    // below re-reads it, and without this the corpus-scale mention
-    // aggregate would re-run per round (the clusterPairsStar
-    // persist convention)
-    val adj = cooccurrenceAdj(spark, documents).localCheckpoint()
-    val outw = adj.groupBy(col("u")).agg(sum(col("w")).as("outw"))
-      .localCheckpoint()
-    val n = outw.count()
-    var pr = outw.select(col("u"), lit(1.0 / n).as("pr")).localCheckpoint()
-    var it = 0
-    while (it < iters) {
-      val contribs = adj
-        .join(pr, Seq("u"))
-        .join(outw, Seq("u"))
-        .select(col("v"), col("u"), (col("pr") * col("w") / col("outw")).as("contrib"))
-      pr = contribs.groupBy(col("v"))
-        .agg(call_function("graft_sorted_fold_sum_str",
-          col("u"), col("contrib")).as("s"))
-        .select(col("v").as("u"),
-          (lit((1 - damping) / n) + lit(damping) * col("s")).as("pr"))
-        // LAZY (r20): no convergence check reads a round eagerly, so
-        // the rounds chain into ONE materializing job (each round's
-        // blocks persist as the next computes) — iters fewer driver
-        // round-trips on a driver-latency-bound row, lineage cut
-        // unchanged
-        .localCheckpoint(false)
-      it += 1
-    }
-    pr.select(col("u").as("entity"), col("pr").as("pagerank"))
+    import spark.implicits._
+    onEntityGraph(spark, documents) { g =>
+      val n = g.names.length
+      val outw = g.adj.map(_.map(_._2).sum.toDouble)
+      val pr = g.rounds(iters, Array.fill(n)(1.0 / n)) { (pr, v) =>
+        val s = g.adj(v).foldLeft(0.0) { case (acc, (u, w)) => acc + pr(u) * w / outw(u) }
+        (1 - damping) / n + damping * s
+      }
+      g.names.iterator.zip(pr.iterator)
+    }.toDF("entity", "pagerank")
   }
 
   /** Community detection on the entity co-occurrence graph by
@@ -358,42 +386,20 @@ object Ner {
     * replay in the graph family.
     *
     * Scale shape: identical to [[entityPagerank]] — corpus work ends
-    * at the mention aggregate, each round is one gazetteer-bounded
-    * join + argmax aggregate over checkpointed labels (the
-    * self-vote union adds one node-count-bounded row set per
-    * round). */
+    * at the mention aggregate, and the gazetteer-bounded graph runs
+    * all `iters` rounds in one task of ONE Spark execution. */
   def entityCommunities(spark: SparkSession, documents: DataFrame,
                         iters: Int = 5): DataFrame = {
     require(iters >= 0)
-    // same one-checkpoint rule as entityPagerank: the rounds below
-    // must not re-derive the graph from the corpus
-    val adj = cooccurrenceAdj(spark, documents).localCheckpoint()
-    val selfW = adj.groupBy(col("u")).agg(max(col("w")).as("sw"))
-      .localCheckpoint()
-    var labels = adj.select(col("u")).distinct()
-      .select(col("u"), col("u").as("label")).localCheckpoint()
-    var it = 0
-    while (it < iters) {
-      labels = adj
-        .join(labels.withColumnRenamed("u", "v"), Seq("v"))
-        .select(col("u"), col("label"), col("w"))
-        .unionByName(labels.join(selfW, Seq("u"))
-          .select(col("u"), col("label"), col("sw").as("w")))
-        .groupBy(col("u"), col("label"))
-        .agg(sum(col("w")).as("lw"))
-        .groupBy(col("u"))
-        .agg(min_by(struct(col("label"), col("lw")),
-          struct((-col("lw")).as("nw"), col("label"))).as("pick"))
-        .select(col("u"), col("pick.label").as("label"))
-        // EAGER on purpose (r20 measured): each round consumes the
-        // previous labels TWICE (the neighbor join and the self-vote
-        // union) — lazy checkpointing raced the two consuming stages
-        // into partial double-compute across all five rounds
-        // (entity_communities 1.27 → 1.52 s); pagerank's rounds stay
-        // lazy because `pr` has exactly ONE consumer per round
-        .localCheckpoint()
-      it += 1
-    }
-    labels.select(col("u").as("entity"), col("label").as("community"))
+    import spark.implicits._
+    onEntityGraph(spark, documents) { g =>
+      val self = g.adj.map(_.map(_._2).max)
+      val labels = g.rounds(iters, g.names.indices.toArray) { (label, u) =>
+        val votes = scala.collection.mutable.Map(label(u) -> self(u))
+        g.adj(u).foreach { case (v, w) => votes(label(v)) = votes.getOrElse(label(v), 0L) + w }
+        votes.minBy { case (l, lw) => (-lw, l) }._1
+      }
+      g.names.iterator.zip(labels.iterator.map(g.names(_)))
+    }.toDF("entity", "community")
   }
 }

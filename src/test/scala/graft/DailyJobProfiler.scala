@@ -20,12 +20,12 @@ import org.apache.spark.sql.functions._
 object DailyJobProfiler {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("daily")
+    val temp = TempRoot.deletedAtExit("graft_prof")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_prof_wh").toString)
+      .config("spark.sql.warehouse.dir", temp.dir("graft_prof_wh"))
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .appName("graft-prof").getOrCreate()
@@ -100,11 +100,11 @@ object DailyJobProfiler {
             Some(corpusEmbs.join(corpusDocs.select("doc_id"), Seq("doc_id"), "left_semi")),
           charlmTable = Some(charlm),
           bloomShards = 16)
-        val base = java.nio.file.Files.createTempDirectory("graft_prof_inc")
+        val base = temp.dir("graft_prof_inc")
         val days = Seq(("00", "04"), ("04", "08"), ("08", "0c")).zipWithIndex.map {
           case ((lo, hi), i) =>
             val dayDocs = docs.filter(col("__h") >= lo && col("__h") < hi).drop("__h")
-            val dir = base.resolve(s"day$i").toString
+            val dir = s"$base/day$i"
             dayDocs.write.parquet(s"$dir/documents.parquet")
             (dir, embs.join(dayDocs.select("doc_id"), Seq("doc_id"), "left_semi"), i)
         }
@@ -114,7 +114,7 @@ object DailyJobProfiler {
         days.foreach { case (dir, dayEmbs, i) =>
           captureT0 = System.nanoTime; capture = true
           val t0 = System.nanoTime
-          val sm = Pipeline.runIncremental(spark, dir, base.resolve(s"out$i").toString,
+          val sm = Pipeline.runIncremental(spark, dir, s"$base/out$i",
             post, hash, chunkTable = Some(chunk), semanticTable = Some(sem),
             deltaEmbeddings = Some(dayEmbs),
             charlmTable = Some(charlm), charlmRareFracMax = Some(0.5))

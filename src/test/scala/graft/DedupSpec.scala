@@ -97,8 +97,9 @@ class DedupSpec extends SparkSpec {
     assert(out.size === n + 1)
     assert(out.values.forall(_ == 0L), "every chain node must label to the min id 0")
     // the O(log^2 n) claim as a regression contract, not just a
-    // measured curve: ~7 folding rounds + the no-change confirmation
-    // round; 12 leaves slack without ever admitting linear behavior
+    // measured curve: 7 folding rounds, the last of which already
+    // outputs the star forest; 12 leaves slack without ever admitting
+    // linear behavior
     assert(rounds <= 12, s"120-hop chain took $rounds star rounds — expected O(log^2 n)")
   }
 
@@ -131,6 +132,69 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.clusterPairsStar(pairs.toDF("doc_id_1", "doc_id_2", "jaccard"))
       .as[(Long, Long)].collect().toMap
     assert(got === expected)
+  }
+
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    pairs.flatMap(p => Seq(p._1, p._2)).distinct.map(n => n -> find(n)).toMap
+  }
+
+  private def pairDf(pairs: Seq[(Long, Long)]) =
+    pairs.map { case (a, b) => (a, b, 0.9) }.toDF("doc_id_1", "doc_id_2", "jaccard")
+
+  // seeded random graphs from sparse forests to dense tangles, both
+  // pair orientations and repeated pairs included
+  private val randomGraphs: Seq[Seq[(Long, Long)]] = (1 to 10).map { seed =>
+    val rnd = new scala.util.Random(seed)
+    val n = 20 + 15 * seed
+    Seq.fill(n * (2 + seed % 4) / 3)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      .filter { case (a, b) => a != b }
+  }
+  private val starPairs = Seq((5L, 9L), (5L, 7L), (6L, 5L), (30L, 31L), (30L, 40L))
+  private val chainPairs = (0 until 120).map(i => (i + 1L, i.toLong))
+
+  test("clusterPairsStar runs at most rounds + 1 SQL executions") {
+    for (pairs <- Seq(chainPairs, randomGraphs(3), Seq.empty[(Long, Long)])) {
+      val ((labels, rounds), execs) = sqlExecutions {
+        val (l, r) = Dedup.clusterPairsStarInstrumented(pairDf(pairs))
+        (l.as[(Long, Long)].collect().toMap, r)
+      }
+      assert(labels === unionFind(pairs))
+      // one checkpoint execution per round, one for the final read
+      assert(execs <= rounds + 1, s"$execs SQL executions for $rounds rounds")
+    }
+  }
+
+  test("clusterPairsStar: an input that is already a star forest converges in 1 round") {
+    val ((labels, rounds), execs) = sqlExecutions {
+      val (l, r) = Dedup.clusterPairsStarInstrumented(pairDf(starPairs))
+      (l.as[(Long, Long)].collect().toMap, r)
+    }
+    assert(rounds === 1)
+    assert(execs <= 2, s"$execs SQL executions")
+    assert(labels === Map(5L -> 5L, 6L -> 5L, 7L -> 5L, 9L -> 5L,
+      30L -> 30L, 31L -> 30L, 40L -> 30L))
+  }
+
+  test("clusterPairsStar matches union-find on seeded random graphs, a star and a chain, " +
+    "under any partitioning") {
+    for ((pairs, i) <- (randomGraphs :+ starPairs :+ chainPairs).zipWithIndex) {
+      val expected = unionFind(pairs)
+      val one = Dedup.clusterPairsStar(pairDf(pairs).repartition(1))
+        .as[(Long, Long)].collect().toMap
+      assert(one === expected, s"graph $i under repartition(1)")
+      val seven = Dedup.clusterPairsStar(pairDf(pairs).repartition(7))
+        .as[(Long, Long)].collect().toMap
+      assert(seven === one, s"graph $i under repartition(7)")
+    }
   }
 
   test("applyClusters keeps representatives and untouched docs, drops the rest") {

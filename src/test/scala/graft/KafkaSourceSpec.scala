@@ -115,7 +115,7 @@ class KafkaSourceSpec extends SparkSpec {
     val payloadSchema = new StructType()
       .add("doc_id", LongType).add("text", StringType)
       .add("lang", StringType).add("source", StringType).add("n_chars", LongType)
-    val dir = java.nio.file.Files.createTempDirectory("wire_upsert").toString
+    val dir = tempDir("wire_upsert")
     val input = MemoryStream[(Array[Byte], Array[Byte], String, Int, Long, Timestamp, Int)]
     val wire = input.toDF()
       .toDF("key", "value", "topic", "partition", "offset", "timestamp", "timestampType")

@@ -38,7 +38,7 @@ class NerSpec extends SparkSpec {
   }
 
   test("a parquet-loaded gazetteer drives extraction; built-in dict stays the default") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gazetteer").toString
+    val dir = tempDir("graft_gazetteer")
     // a domain dictionary the built-in fixture knows nothing about
     Seq(("jakarta", "NOR", 0.9), ("airlangga", "PER", 0.8), ("komnas", "ORG", 0.75))
       .toDF("word", "entity_type", "confidence")
@@ -117,6 +117,17 @@ class NerSpec extends SparkSpec {
       .as[(String, Double)].collect().toMap
     // exact double equality — the sorted-fold convention's contract
     assert(a === b)
+  }
+
+  test("entityPagerank and entityCommunities each run exactly one SQL execution") {
+    // every round runs inside the one task that holds the graph: no
+    // checkpoint, broadcast or count execution per round
+    val (pr, prExecs) = sqlExecutions(Ner.entityPagerank(spark, prDocs).collect())
+    assert(pr.length === 4)
+    assert(prExecs === 1, s"entityPagerank ran $prExecs SQL executions")
+    val (cm, cmExecs) = sqlExecutions(Ner.entityCommunities(spark, prDocs).collect())
+    assert(cm.length === 4)
+    assert(cmExecs === 1, s"entityCommunities ran $cmExecs SQL executions")
   }
 
   test("entityCommunities groups two cliques, the weak bridge stays home") {

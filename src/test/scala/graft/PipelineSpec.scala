@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.{Cleaning, Enrichment, Ner}
 import org.apache.spark.graft.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -14,7 +12,7 @@ class PipelineSpec extends SparkSpec {
 
   test("runBatch writes all layers with operator-consistent counts") {
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft_pipeline").toString
+    val out = tempDir("graft_pipeline")
     val summary = Pipeline.runBatch(spark, dir, out)
 
     val raw = Tables.documents(spark, dir)
@@ -46,7 +44,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("runBatch stays within its job budget: no count or schema-inference jobs") {
-    val out = Files.createTempDirectory("graft_pipeline_jobs").toString
+    val out = tempDir("graft_pipeline_jobs")
     val sc = spark.sparkContext
     val key = "graft.spec.jobBudget"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -71,8 +69,8 @@ class PipelineSpec extends SparkSpec {
 
   test("runBatch over an empty corpus writes every layer empty and counts zero") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_pipe_empty").toString
-    val out = Files.createTempDirectory("graft_pipe_empty_out").toString
+    val src = tempDir("graft_pipe_empty")
+    val out = tempDir("graft_pipe_empty_out")
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$src/documents.parquet")
@@ -83,8 +81,8 @@ class PipelineSpec extends SparkSpec {
 
   test("runBatch with every doc below the gold gate writes empty gold and views") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_pipe_gate").toString
-    val out = Files.createTempDirectory("graft_pipe_gate_out").toString
+    val src = tempDir("graft_pipe_gate")
+    val out = tempDir("graft_pipe_gate_out")
     Seq((1L, "short text one"), (2L, "short text two")) // content_length <= 50
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -97,8 +95,8 @@ class PipelineSpec extends SparkSpec {
 
   test("runTrainingPrep: the curation funnel drops, redacts and splits as composed") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_prep").toString
-    val out = Files.createTempDirectory("graft_prep_out").toString
+    val src = tempDir("graft_prep")
+    val out = tempDir("graft_prep_out")
     val filler = (1 to 40).map(i => s"tok$i").mkString(" ")
     val nearDup = ((1 to 39).map(i => s"tok$i") :+ "changed").mkString(" ")
     Seq(
@@ -127,7 +125,7 @@ class PipelineSpec extends SparkSpec {
     assert(s1("train_bpe_bins") === 0L) // the optional BPE map is off
     // with the BPE arm on, the second packing map lands next to the
     // whitespace one and covers the same train docs
-    val outB = Files.createTempDirectory("graft_prep_outB").toString
+    val outB = tempDir("graft_prep_outB")
     val sB = Pipeline.runTrainingPrep(spark, src, outB, bpePackingMerges = Some(1))
     assert(sB("train_bpe_bins") >= 1L)
     assert(spark.read.parquet(s"$outB/train_packing_bpe")
@@ -173,7 +171,7 @@ class PipelineSpec extends SparkSpec {
     assert(testIds === expected)
     // re-running is byte-deterministic on the funnel counts
     val s2 = Pipeline.runTrainingPrep(spark, src,
-      Files.createTempDirectory("graft_prep_out2").toString)
+      tempDir("graft_prep_out2"))
     assert(s2 === s1)
   }
 
@@ -188,7 +186,7 @@ class PipelineSpec extends SparkSpec {
       "graft_inc_post", "graft_inc_hash")
 
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_inc_delta").toString
+      val dir = tempDir("graft_inc_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -200,7 +198,7 @@ class PipelineSpec extends SparkSpec {
       (12L, fresh),                                                     // fresh
       (13L, fresh + " extra reach admin@example.com"),                  // near-dup of 12, LONGER, carries PII
       (14L, "too short"))                                               // quality gate
-    val out1 = Files.createTempDirectory("graft_inc_out1").toString
+    val out1 = tempDir("graft_inc_out1")
     val s1 = Pipeline.runIncremental(spark, day1, out1, "graft_inc_post", "graft_inc_hash")
     assert(s1("input") === 5L)
     assert(s1("quality") === 4L)              // 14 out
@@ -239,7 +237,7 @@ class PipelineSpec extends SparkSpec {
     // corpus — proof the append actually extended the index
     val day2 = writeDelta(
       (20L, fresh + " changed"))              // near-dup of accepted 13
-    val out2 = Files.createTempDirectory("graft_inc_out2").toString
+    val out2 = tempDir("graft_inc_out2")
     val s2 = Pipeline.runIncremental(spark, day2, out2, "graft_inc_post", "graft_inc_hash")
     assert(s2("neardup_vs_corpus_dropped") === 1L)
     assert(s2("accepted") === 0L)
@@ -249,7 +247,7 @@ class PipelineSpec extends SparkSpec {
     // write a second, conflicting set of postings/hashes for id 13
     val day3 = writeDelta(
       (13L, (1 to 40).map(i => s"edit$i").mkString(" ")))
-    val out3 = Files.createTempDirectory("graft_inc_out3").toString
+    val out3 = tempDir("graft_inc_out3")
     val s3 = Pipeline.runIncremental(spark, day3, out3, "graft_inc_post", "graft_inc_hash")
     assert(s3("id_collision_dropped") === 1L)
     assert(s3("accepted") === 0L)
@@ -261,7 +259,7 @@ class PipelineSpec extends SparkSpec {
     val day4 = writeDelta(
       (41L, (1 to 120).map(i => s"dd$i").mkString(" ") + " " + passage),
       (42L, (1 to 40).map(i => s"clean$i").mkString(" ")))
-    val out4 = Files.createTempDirectory("graft_inc_out4").toString
+    val out4 = tempDir("graft_inc_out4")
     val s4 = Pipeline.runIncremental(spark, day4, out4, "graft_inc_post", "graft_inc_hash",
       holdout = Some(Seq((9000L, (1 to 120).map(i => s"hh$i").mkString(" ") + " " + passage))
         .toDF("doc_id", "text")))
@@ -354,7 +352,7 @@ class PipelineSpec extends SparkSpec {
     // the daily merge maintains the key space: an accepted day's ids
     // enter the bloom (items grew past the bootstrap's 2)
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_idb_delta").toString
+      val dir = tempDir("graft_idb_delta")
       rows.map { case (id, tx) => (id, tx, "en", "s", tx.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -363,7 +361,7 @@ class PipelineSpec extends SparkSpec {
     val fresh = (1 to 40).map(i => s"idn$i").mkString(" ")
     val s1 = Pipeline.runIncremental(spark,
       writeDelta((10L, fresh)),
-      Files.createTempDirectory("graft_idb_out").toString,
+      tempDir("graft_idb_out"),
       "graft_idb_post", "graft_idb_hash")
     assert(s1("accepted") === 1L)
     assert(spark.table("graft_idb_post__ids__bloom")
@@ -373,7 +371,7 @@ class PipelineSpec extends SparkSpec {
     // bloom path (maybe -> exact confirm -> drop)
     val s2 = Pipeline.runIncremental(spark,
       writeDelta((10L, (1 to 40).map(i => s"ed$i").mkString(" "))),
-      Files.createTempDirectory("graft_idb_out2").toString,
+      tempDir("graft_idb_out2"),
       "graft_idb_post", "graft_idb_hash")
     assert(s2("id_collision_dropped") === 1L && s2("accepted") === 0L)
   }
@@ -398,12 +396,12 @@ class PipelineSpec extends SparkSpec {
       .agg(max(col("qerr"))).first().getDouble(0)
     assert(stamped.contains(maxQerr), s"stamp $stamped != index max $maxQerr")
     def day(id: Long, vec: Seq[Float], tag: String): Pipeline.Summary = {
-      val dir = Files.createTempDirectory(s"graft_qbar_$tag").toString
+      val dir = tempDir(s"graft_qbar_$tag")
       Seq((id, (1 to 40).map(i => s"$tag$i").mkString(" "), "en", "s", 40L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
       Pipeline.runIncremental(spark, dir,
-        Files.createTempDirectory(s"graft_qbar_out_$tag").toString,
+        tempDir(s"graft_qbar_out_$tag"),
         "graft_qbar_post", "graft_qbar_hash",
         semanticTable = Some("graft_qbar_cells"),
         deltaEmbeddings = Some(Seq((id, vec)).toDF("doc_id", "embedding")))
@@ -491,7 +489,7 @@ class PipelineSpec extends SparkSpec {
       Seq((1L, base)).toDF("doc_id", "text"),
       "graft_bloomday_post", "graft_bloomday_hash")
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_bloomday_delta").toString
+      val dir = tempDir("graft_bloomday_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -500,7 +498,7 @@ class PipelineSpec extends SparkSpec {
     val fresh = (1 to 40).map(i => s"bn$i").mkString(" ")
     val s1 = Pipeline.runIncremental(spark,
       writeDelta((10L, fresh)),
-      Files.createTempDirectory("graft_bloomday_out1").toString,
+      tempDir("graft_bloomday_out1"),
       "graft_bloomday_post", "graft_bloomday_hash")
     assert(s1("accepted") === 1L)
     // the accepted day's hash was merged into the persisted bloom —
@@ -510,7 +508,7 @@ class PipelineSpec extends SparkSpec {
       .select("items").as[Long].head() === 2L)
     val s2 = Pipeline.runIncremental(spark,
       writeDelta((20L, fresh)),
-      Files.createTempDirectory("graft_bloomday_out2").toString,
+      tempDir("graft_bloomday_out2"),
       "graft_bloomday_post", "graft_bloomday_hash")
     assert(s2("exact_new") === 0L, s"bloom lost day 1's hashes: $s2")
     assert(s2("accepted") === 0L)
@@ -523,7 +521,7 @@ class PipelineSpec extends SparkSpec {
       Seq((1L, filler)).toDF("doc_id", "text"), "graft_crash_post", "graft_crash_hash")
 
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_crash_delta").toString
+      val dir = tempDir("graft_crash_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -537,7 +535,7 @@ class PipelineSpec extends SparkSpec {
     // collision, and overwrites the day's output with an empty set.
     val newText = (1 to 40).map(i => s"crnew$i").mkString(" ")
     val day = writeDelta((21L, newText))
-    val out = Files.createTempDirectory("graft_crash_out").toString
+    val out = tempDir("graft_crash_out")
     val acceptedText = Seq((21L, newText)).toDF("doc_id", "text")
     acceptedText.select(col("doc_id"), col("text").as("content"), lit("en").as("lang"))
       .write.partitionBy("lang").parquet(s"$out/accepted")
@@ -587,7 +585,7 @@ class PipelineSpec extends SparkSpec {
       .write.mode("overwrite").format("parquet")
       .saveAsTable("graft_crash_post__pending")
     val dayB = writeDelta((30L, dayBText))
-    val outB = Files.createTempDirectory("graft_crash_outB").toString
+    val outB = tempDir("graft_crash_outB")
     val sB = Pipeline.runIncremental(spark, dayB, outB, "graft_crash_post", "graft_crash_hash")
     assert(sB("accepted") === 1L) // day B processed, not short-circuited
     assert(sB.contains("input"))  // the full summary, not the recovered stub
@@ -608,7 +606,7 @@ class PipelineSpec extends SparkSpec {
       "graft_chk_post", "graft_chk_hash", chunkTable = Some("graft_chk_chunks"))
 
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_chk_delta").toString
+      val dir = tempDir("graft_chk_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -621,7 +619,7 @@ class PipelineSpec extends SparkSpec {
     val day = writeDelta(
       (50L, (1 to 200).map(i => s"dd$i").mkString(" ") + " " + passage),
       (51L, cleanDoc))
-    val out = Files.createTempDirectory("graft_chk_out").toString
+    val out = tempDir("graft_chk_out")
     val s = Pipeline.runIncremental(spark, day, out, "graft_chk_post", "graft_chk_hash",
       chunkTable = Some("graft_chk_chunks"))
     assert(s("neardup_vs_corpus_dropped") === 0L, "banded probe must be blind to the passage")
@@ -633,7 +631,7 @@ class PipelineSpec extends SparkSpec {
     // OF THE ACCEPTED DOC must now drop too
     val day2 = writeDelta(
       (60L, (1 to 200).map(i => s"ee$i").mkString(" ") + " " + cleanDoc))
-    val out2 = Files.createTempDirectory("graft_chk_out2").toString
+    val out2 = tempDir("graft_chk_out2")
     val s2 = Pipeline.runIncremental(spark, day2, out2, "graft_chk_post", "graft_chk_hash",
       chunkTable = Some("graft_chk_chunks"))
     assert(s2("substring_vs_corpus_dropped") === 1L)
@@ -675,7 +673,7 @@ class PipelineSpec extends SparkSpec {
       === Seq("cell", "codes", "doc_id", "nrm", "qerr", "qerrs"))
 
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_sem_delta").toString
+      val dir = tempDir("graft_sem_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -687,7 +685,7 @@ class PipelineSpec extends SparkSpec {
     val day1 = writeDelta(
       (80L, (1 to 40).map(i => s"para$i").mkString(" ")),
       (81L, (1 to 40).map(i => s"novel$i").mkString(" ")))
-    val out1 = Files.createTempDirectory("graft_sem_out1").toString
+    val out1 = tempDir("graft_sem_out1")
     val s1 = Pipeline.runIncremental(spark, day1, out1, "graft_sem_post", "graft_sem_hash",
       semanticTable = Some("graft_sem_cells"),
       deltaEmbeddings = Some(Seq(
@@ -714,7 +712,7 @@ class PipelineSpec extends SparkSpec {
     // day 2: a paraphrase of DAY 1's accepted doc must now drop — the
     // semantic index grew by exactly the accepted vectors
     val day2 = writeDelta((90L, (1 to 40).map(i => s"alt$i").mkString(" ")))
-    val out2 = Files.createTempDirectory("graft_sem_out2").toString
+    val out2 = tempDir("graft_sem_out2")
     val s2 = Pipeline.runIncremental(spark, day2, out2, "graft_sem_post", "graft_sem_hash",
       semanticTable = Some("graft_sem_cells"),
       deltaEmbeddings = Some(Seq(
@@ -761,7 +759,7 @@ class PipelineSpec extends SparkSpec {
       .select("append_id").distinct().as[String].collect().toSeq === Seq("bootstrap"))
 
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_lm_delta").toString
+      val dir = tempDir("graft_lm_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -774,7 +772,7 @@ class PipelineSpec extends SparkSpec {
     val natural = Seq.fill(8)("data runs today the pipeline quietly the number data").mkString(" ")
     val garbled = (1 to 14).map(i => s"zq${i}x w${i}v7 k${i}j").mkString(" ")
     val day1 = writeDelta((80L, natural), (81L, garbled))
-    val out1 = Files.createTempDirectory("graft_lm_out1").toString
+    val out1 = tempDir("graft_lm_out1")
     val s1 = Pipeline.runIncremental(spark, day1, out1, "graft_lm_post", "graft_lm_hash",
       charlmTable = Some("graft_lm_model"),
       charlmRareFracMax = Some(0.5), charlmRareBelow = 0.1)
@@ -842,7 +840,7 @@ class PipelineSpec extends SparkSpec {
       "graft_recap_post", "graft_recap_hash", chunkTable = Some("graft_recap_chunks"))
 
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_recap_delta").toString
+      val dir = tempDir("graft_recap_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -852,7 +850,7 @@ class PipelineSpec extends SparkSpec {
     // bars); its chunk append pushes the passage chunks to df=3 > 2 —
     // the breach check must fire and the staged recap must drop them
     val day1 = writeDelta((70L, doc("cc")))
-    val out1 = Files.createTempDirectory("graft_recap_out1").toString
+    val out1 = tempDir("graft_recap_out1")
     val s1 = Pipeline.runIncremental(spark, day1, out1,
       "graft_recap_post", "graft_recap_hash",
       chunkTable = Some("graft_recap_chunks"), chunkMaxDocFreq = 2L)
@@ -883,7 +881,7 @@ class PipelineSpec extends SparkSpec {
     // away as boilerplate, so they carry no dedup evidence (df restarts
     // at 1) and no new breach fires
     val day2 = writeDelta((71L, doc("dd")))
-    val out2 = Files.createTempDirectory("graft_recap_out2").toString
+    val out2 = tempDir("graft_recap_out2")
     val s2 = Pipeline.runIncremental(spark, day2, out2,
       "graft_recap_post", "graft_recap_hash",
       chunkTable = Some("graft_recap_chunks"), chunkMaxDocFreq = 2L)
@@ -894,9 +892,9 @@ class PipelineSpec extends SparkSpec {
 
   test("runTrainingPrep charlm arm drops the garbled doc the rule gate passes") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_prep_lm").toString
-    val outOff = Files.createTempDirectory("graft_prep_lm_off").toString
-    val outOn = Files.createTempDirectory("graft_prep_lm_on").toString
+    val src = tempDir("graft_prep_lm")
+    val outOff = tempDir("graft_prep_lm_off")
+    val outOn = tempDir("graft_prep_lm_on")
     // natural docs share trigram mass; the garbled doc is long enough
     // to pass the length rule but its trigrams are near-unique — high
     // rare-position fraction under the corpus-trained model
@@ -935,8 +933,8 @@ class PipelineSpec extends SparkSpec {
 
   test("runTrainingPrep persists the cross-run postings index a later delta can probe") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_prep_idx").toString
-    val out = Files.createTempDirectory("graft_prep_idx_out").toString
+    val src = tempDir("graft_prep_idx")
+    val out = tempDir("graft_prep_idx_out")
     val filler = (1 to 40).map(i => s"tok$i").mkString(" ")
     Seq((1L, filler, "en"), (6L, (1 to 40).map(i => s"other$i").mkString(" "), "id"))
       .map { case (id, t, l) => (id, t, l, "s", t.length.toLong) }
@@ -976,8 +974,8 @@ class PipelineSpec extends SparkSpec {
       .as[(Long, String)].collect().toMap
     val testId = assign.collectFirst { case (id, "test") => id }.get
     val trainId = assign.collectFirst { case (id, "train") => id }.get
-    val src = Files.createTempDirectory("graft_prep_leak").toString
-    val out = Files.createTempDirectory("graft_prep_leak_out").toString
+    val src = tempDir("graft_prep_leak")
+    val out = tempDir("graft_prep_leak_out")
     val passage = (1 to 48).map(i => s"leak$i").mkString(" ")
     Seq(
       // long distinct prefixes keep whole-doc Jaccard ~0.16 (no ngram
@@ -1006,8 +1004,8 @@ class PipelineSpec extends SparkSpec {
 
   test("bronze dedup keeps every null-text doc (content hash is per-doc for nulls)") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_pipe_null").toString
-    val out = Files.createTempDirectory("graft_pipe_null_out").toString
+    val src = tempDir("graft_pipe_null")
+    val out = tempDir("graft_pipe_null_out")
     Seq(
       (1L, Option("same text"), "en", "s", 9L),
       (2L, Option("same text"), "en", "s", 9L), // true content dup -> collapses
@@ -1040,12 +1038,12 @@ class PipelineSpec extends SparkSpec {
     spark.sql("DROP TABLE graft_pqrep_cells__pq")
     assert(spark.catalog.tableExists("graft_pqrep_cells__pq__codebooks"))
 
-    val dir = Files.createTempDirectory("graft_pqrep_delta").toString
+    val dir = tempDir("graft_pqrep_delta")
     Seq((50L, (1 to 40).map(i => s"fresh$i").mkString(" ")))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val out = Files.createTempDirectory("graft_pqrep_out").toString
+    val out = tempDir("graft_pqrep_out")
     val s1 = Pipeline.runIncremental(spark, dir, out, "graft_pqrep_post", "graft_pqrep_hash",
       semanticTable = Some("graft_pqrep_cells"),
       deltaEmbeddings = Some(Seq((50L, Seq(0f, 0f, 1f, 0f))).toDF("doc_id", "embedding")))
@@ -1062,12 +1060,12 @@ class PipelineSpec extends SparkSpec {
     // the repaired tier is LIVE again: a paraphrase of the corpus doc
     // drops via the two-tier probe on the very next day, and a healthy
     // run reports no repair
-    val dir2 = Files.createTempDirectory("graft_pqrep_delta2").toString
+    val dir2 = tempDir("graft_pqrep_delta2")
     Seq((60L, (1 to 40).map(i => s"para$i").mkString(" ")))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir2/documents.parquet")
-    val out2 = Files.createTempDirectory("graft_pqrep_out2").toString
+    val out2 = tempDir("graft_pqrep_out2")
     val s2 = Pipeline.runIncremental(spark, dir2, out2, "graft_pqrep_post", "graft_pqrep_hash",
       semanticTable = Some("graft_pqrep_cells"),
       deltaEmbeddings = Some(Seq((60L, Seq(0.97f, 0.24f, 0f, 0f))).toDF("doc_id", "embedding")))
@@ -1115,14 +1113,14 @@ class PipelineSpec extends SparkSpec {
     // sharded path and KEEPS the sharded shape; a re-delivery of the
     // accepted day drops tomorrow
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_shardarm_delta").toString
+      val dir = tempDir("graft_shardarm_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
       dir
     }
     val s1 = Pipeline.runIncremental(spark, writeDelta((20L, freshText)),
-      Files.createTempDirectory("graft_shardarm_out1").toString,
+      tempDir("graft_shardarm_out1"),
       "graft_shardarm_post", "graft_shardarm_hash")
     assert(s1("accepted") === 1L)
     val merged = spark.table("graft_shardarm_hash__bloom")
@@ -1130,7 +1128,7 @@ class PipelineSpec extends SparkSpec {
     assert(merged.agg(org.apache.spark.sql.functions.sum(col("items")))
       .as[Long].head() === 3L)
     val s2 = Pipeline.runIncremental(spark, writeDelta((30L, freshText)),
-      Files.createTempDirectory("graft_shardarm_out2").toString,
+      tempDir("graft_shardarm_out2"),
       "graft_shardarm_post", "graft_shardarm_hash")
     assert(s2("exact_new") === 0L, s"sharded bloom lost day 1's hash: $s2")
     assert(s2("accepted") === 0L)
@@ -1187,14 +1185,14 @@ class PipelineSpec extends SparkSpec {
     // bloom, so a near-dup of the ACCEPTED doc still drops tomorrow
     // (false negatives here would silently skip the corpus probe)
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_bandarm_delta").toString
+      val dir = tempDir("graft_bandarm_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
       dir
     }
     val s1 = Pipeline.runIncremental(spark, writeDelta((20L, fresh)),
-      Files.createTempDirectory("graft_bandarm_out1").toString,
+      tempDir("graft_bandarm_out1"),
       "graft_bandarm_post", "graft_bandarm_hash")
     assert(s1("accepted") === 1L)
     val grown = spark.table("graft_bandarm_post")
@@ -1205,7 +1203,7 @@ class PipelineSpec extends SparkSpec {
       "daily merge under-counts the band bloom")
     val s2 = Pipeline.runIncremental(spark,
       writeDelta((30L, ((1 to 39).map(i => s"bd$i") :+ "tweaked").mkString(" "))),
-      Files.createTempDirectory("graft_bandarm_out2").toString,
+      tempDir("graft_bandarm_out2"),
       "graft_bandarm_post", "graft_bandarm_hash")
     assert(s2("neardup_vs_corpus_dropped") === 1L, s"band bloom lost day 1's bands: $s2")
     assert(s2("accepted") === 0L)
@@ -1228,7 +1226,7 @@ class PipelineSpec extends SparkSpec {
       spark.table("graft_pqup_cells__pq").drop("qerrs"),
       "graft_pqup_cells__pq", Seq("cell"))
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_pqup_delta").toString
+      val dir = tempDir("graft_pqup_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -1240,7 +1238,7 @@ class PipelineSpec extends SparkSpec {
     // old schema on append
     val s1 = Pipeline.runIncremental(spark,
       writeDelta((90L, (1 to 40).map(i => s"pqnew$i").mkString(" "))),
-      Files.createTempDirectory("graft_pqup_out1").toString,
+      tempDir("graft_pqup_out1"),
       "graft_pqup_post", "graft_pqup_hash",
       semanticTable = Some("graft_pqup_cells"),
       deltaEmbeddings = Some(Seq((90L, Seq(0f, 1f, 0f, 0f))).toDF("doc_id", "embedding")),
@@ -1254,7 +1252,7 @@ class PipelineSpec extends SparkSpec {
     // APPENDED doc drops through the scalar-bound two-tier probe
     val s2 = Pipeline.runIncremental(spark,
       writeDelta((91L, (1 to 40).map(i => s"pqpara$i").mkString(" "))),
-      Files.createTempDirectory("graft_pqup_out2").toString,
+      tempDir("graft_pqup_out2"),
       "graft_pqup_post", "graft_pqup_hash",
       semanticTable = Some("graft_pqup_cells"),
       deltaEmbeddings = Some(Seq((91L, Seq(0.05f, 0.95f, 0f, 0f))).toDF("doc_id", "embedding")),
@@ -1297,7 +1295,7 @@ class PipelineSpec extends SparkSpec {
       Seq((1L, (1 to 40).map(i => s"cf$i").mkString(" "))).toDF("doc_id", "text"),
       post, hash)
     def writeDelta(rows: (Long, String)*): String = {
-      val dir = Files.createTempDirectory("graft_cmpidx_delta").toString
+      val dir = tempDir("graft_cmpidx_delta")
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -1308,7 +1306,7 @@ class PipelineSpec extends SparkSpec {
     // compact at end of run, AFTER the day's appends
     val fresh = (1 to 40).map(i => s"cg$i").mkString(" ")
     val s1 = Pipeline.runIncremental(spark, writeDelta((10L, fresh)),
-      Files.createTempDirectory("graft_cmpidx_out1").toString, post, hash,
+      tempDir("graft_cmpidx_out1"), post, hash,
       compactFilesPerBucket = 0)
     assert(s1("accepted") === 1L)
     assert(s1("compacted_indexes") === 3L,
@@ -1321,7 +1319,7 @@ class PipelineSpec extends SparkSpec {
     // the compacted indexes still answer: an exact re-delivery of the
     // accepted day-1 doc drops against the rewritten hash set
     val s2 = Pipeline.runIncremental(spark, writeDelta((20L, fresh)),
-      Files.createTempDirectory("graft_cmpidx_out2").toString, post, hash,
+      tempDir("graft_cmpidx_out2"), post, hash,
       compactFilesPerBucket = 0)
     assert(s2("exact_new") === 0L && s2("accepted") === 0L, s"$s2")
     // crash between the compaction swap's DROP and RENAME: the hash
@@ -1329,7 +1327,7 @@ class PipelineSpec extends SparkSpec {
     // must promote it before anything probes
     spark.sql(s"ALTER TABLE $hash RENAME TO ${hash}__staging")
     val s3 = Pipeline.runIncremental(spark, writeDelta((30L, fresh)),
-      Files.createTempDirectory("graft_cmpidx_out3").toString, post, hash)
+      tempDir("graft_cmpidx_out3"), post, hash)
     assert(s3("exact_new") === 0L, s"recovered hash table lost members: $s3")
     assert(s3("accepted") === 0L)
     // PER-TABLE cadence (r15 VERDICT #4): every index fragments at
@@ -1340,7 +1338,7 @@ class PipelineSpec extends SparkSpec {
     // compacts this run
     val s4 = Pipeline.runIncremental(spark,
       writeDelta((40L, (1 to 40).map(i => s"ch$i").mkString(" "))),
-      Files.createTempDirectory("graft_cmpidx_out4").toString, post, hash,
+      tempDir("graft_cmpidx_out4"), post, hash,
       compactFilesPerBucket = 10000,
       compactFilesPerBucketByTable = Map(post -> 0))
     assert(s4("accepted") === 1L)
@@ -1360,12 +1358,12 @@ class PipelineSpec extends SparkSpec {
     Pipeline.bootstrapIncremental(
       Seq((1L, toks("fa", 40)), (2L, toks("fb", 40))).toDF("doc_id", "text"),
       post, hash, chunkTable = Some(chunk), buckets = 16)
-    val dir = Files.createTempDirectory("graft_fan_delta").toString
+    val dir = tempDir("graft_fan_delta")
     Seq((10L, toks("fc", 60)), (11L, toks("fa", 40)))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val out = Files.createTempDirectory("graft_fan_out").toString
+    val out = tempDir("graft_fan_out")
     val s1 = Pipeline.runIncremental(spark, dir, out, post, hash,
       chunkTable = Some(chunk))
     assert(s1("accepted") === 1L && s1("exact_new") === 1L)

@@ -12,7 +12,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("Tables.load rejects a table missing required columns") {
-    val dir = Files.createTempDirectory("graft_tables").toString
+    val dir = tempDir("graft_tables")
     Seq((1L, "x")).toDF("event_id", "wrong").write.parquet(s"$dir/events.parquet")
     val e = intercept[IllegalArgumentException] {
       Tables.load(spark, dir, "events")
@@ -85,10 +85,10 @@ class SourcesSpec extends SparkSpec {
     val rows = instants.zipWithIndex.map { case (t, i) =>
       (i.toLong, epochMicros(t) * 1000L, 10L + i, "click", 1.0, "{}")
     }
-    val nanosDir = Files.createTempDirectory("graft_ev_nanos").toString
+    val nanosDir = tempDir("graft_ev_nanos")
     writeNanosEvents(s"$nanosDir/events.parquet", rows)
 
-    val microsDir = Files.createTempDirectory("graft_ev_micros").toString
+    val microsDir = tempDir("graft_ev_micros")
     instants.zipWithIndex
       .map { case (t, i) => (i.toLong, t, 10L + i, "click", 1.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -107,7 +107,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("Tables.events fails fast on a drifted ts type instead of coercing to nulls") {
-    val dir = Files.createTempDirectory("graft_ev_drift").toString
+    val dir = tempDir("graft_ev_drift")
     Seq((1L, "2024-03-01", 10L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
@@ -136,7 +136,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("JsonSource.readJson reads JSON lines with an explicit schema") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("graft_json")
     Files.writeString(java.nio.file.Paths.get(s"$dir/a.json"), """{"id": 7}""" + "\n")
     val schema = new StructType().add("id", LongType)
     val out = JsonSource.readJson(spark, dir, schema).as[Long].collect()
@@ -144,7 +144,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("Sinks.writeParquet produces a partition-pruned layout") {
-    val dir = Files.createTempDirectory("graft_sink").toString + "/out"
+    val dir = tempDir("graft_sink") + "/out"
     val df = Seq((1L, "en"), (2L, "de"), (3L, "en")).toDF("id", "lang")
     Sinks.writeParquet(df, dir, Seq("lang"))
     assert(new java.io.File(s"$dir/lang=en").exists())
@@ -206,7 +206,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CsvSource reads declared-schema CSV incl. quoted newlines; quarantine splits bad rows") {
-    val dir = Files.createTempDirectory("csv").toString
+    val dir = tempDir("csv")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/in.csv"),
       "id,v\n1,\"line one\nstill row one\"\n2,plain\nnot_a_number,boom\n")
     val schema = new StructType().add("id", LongType).add("v", "string")
@@ -217,7 +217,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves schema and values (second columnar format)") {
-    val dir = Files.createTempDirectory("orc").toString + "/t"
+    val dir = tempDir("orc") + "/t"
     val df = Seq((1L, "a", 1.5), (2L, "b", -2.25)).toDF("id", "s", "x")
     df.write.format("orc").option("compression", "zstd").save(dir)
     val back = spark.read.orc(dir)
@@ -229,7 +229,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("JsonSource.readJsonQuarantine splits malformed lines from parsed rows") {
-    val dir = Files.createTempDirectory("jsonq").toString
+    val dir = tempDir("jsonq")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/in.json"),
       """{"id": 1, "v": "ok"}
         |{broken json
@@ -242,7 +242,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("Sinks.backfillParquet rewrites only the partitions in the batch") {
-    val dir = Files.createTempDirectory("backfill").toString + "/t"
+    val dir = tempDir("backfill") + "/t"
     val day1 = Seq((1L, "2024-01-01", "a"), (2L, "2024-01-01", "b"))
       .toDF("id", "day", "v")
     val day2 = Seq((3L, "2024-01-02", "c")).toDF("id", "day", "v")
@@ -257,7 +257,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("Sinks.compact collapses a many-small-files layer, data intact") {
-    val dir = Files.createTempDirectory("compact").toString + "/layer"
+    val dir = tempDir("compact") + "/layer"
     val df = (1L to 2000L).map(i => (i, s"row $i")).toDF("id", "v")
     df.repartition(40).write.parquet(dir)
     def parquetFiles = new java.io.File(dir).listFiles()
@@ -346,7 +346,7 @@ class SourcesSpec extends SparkSpec {
     // the micro-batch alone as the merged layer and then DELETES the
     // recovery copy), and the swap must clean up both aside dirs.
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("upsert_crash").toString
+    val dir = tempDir("upsert_crash")
     val layer = s"$dir/layer"
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     def sink() = Sinks.streamingUpsertSink(
@@ -366,7 +366,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("Sinks.compact recovers a crash-mid-swap layer instead of compacting nothing") {
-    val dir = Files.createTempDirectory("compact_crash").toString + "/layer"
+    val dir = tempDir("compact_crash") + "/layer"
     (1L to 100L).map(i => (i, s"row $i")).toDF("id", "v").repartition(4).write.parquet(dir)
     assert(new java.io.File(dir).renameTo(new java.io.File(dir + "__old")))
     val n = Sinks.compact(spark, dir, targetFileBytes = 1L << 30)
@@ -426,7 +426,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("Sinks.writeShards lays out one dir per shard with rows in shuffle order") {
-    val dir = Files.createTempDirectory("shards").toString + "/corpus"
+    val dir = tempDir("shards") + "/corpus"
     val docs = (1L to 300L).map(i => (i, s"doc $i", "en", "s", 6L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val assigned = graft.operators.Corpus.shuffleShards(docs, numShards = 4)

@@ -302,7 +302,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streamingUpsertSink: later micro-batches replace same-key rows in the layer") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("upsert").toString
+    val dir = tempDir("upsert")
     val input = MemoryStream[(Long, String)]
     val q = graft.sources.Sinks.streamingUpsertSink(
       input.toDF().toDF("doc_id", "text"),
@@ -340,7 +340,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("end-to-end: JSON stream -> silver clean -> parquet sink -> read back") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     val inDir = s"$dir/in"; val outDir = s"$dir/out"; val ckpt = s"$dir/ckpt"
     new java.io.File(inDir).mkdirs()
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$inDir/batch1.json"),
@@ -362,7 +362,7 @@ class StreamingSpec extends SparkSpec {
 
   test("microBatchIngest: append-only bronze + dedup-on-read upsert semantics") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val dir = tempDir("graft_ingest")
     val input = MemoryStream[(Long, String)]
     val q = Streams.microBatchIngest(
       input.toDF().toDF("id", "payload"), s"$dir/bronze", s"$dir/ckpt")
@@ -461,7 +461,7 @@ class StreamingSpec extends SparkSpec {
     // distinct terms per source, so both sides are exact counts and
     // the comparison is order-independent)
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("hh_snap").toString
+    val dir = tempDir("hh_snap")
     val path = s"$dir/snapshot"
     val input = MemoryStream[(String, String)]
     val df = input.toDF().toDF("source", "text")
@@ -507,7 +507,7 @@ class StreamingSpec extends SparkSpec {
     // equal Corpus.curriculumMixBySource of everything delivered,
     // against the same FIXED bounds.
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("cmix").toString
+    val dir = tempDir("cmix")
     val path = s"$dir/snapshot"
     // two boundaries -> three buckets; bid tiebreakers irrelevant here
     val bounds = Seq((0.45, 0L), (0.75, 0L))
@@ -562,7 +562,7 @@ class StreamingSpec extends SparkSpec {
     // must not be silently read with the new schema — forced
     // null-fill would make the latest-wins max misread legacy rows
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("hh_drift").toString
+    val dir = tempDir("hh_drift")
     val path = s"$dir/snapshot"
     Seq(("s1", "a", 2L)).toDF("source", "term", "est").write.parquet(path)
     val input = MemoryStream[(String, String)]
@@ -595,7 +595,7 @@ class StreamingSpec extends SparkSpec {
       hash, Seq("content_md5"))
     graft.operators.Dedup.writeHashBloom(spark, hash)
     val input = MemoryStream[(Long, String)]
-    val dir = java.nio.file.Files.createTempDirectory("graft_guard").toString
+    val dir = tempDir("graft_guard")
     val q = graft.sources.Sinks.streamingCorpusGuardSink(
       input.toDF().toDF("doc_id", "content"), hash, s"$dir/out", s"$dir/chk").start()
     try {
@@ -658,7 +658,7 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.graft.BusDrain(sc)
       bloomJobs.get() - before
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_guard_memo").toString
+    val dir = tempDir("graft_guard_memo")
     def start(input: MemoryStream[(Long, String)], name: String) =
       graft.sources.Sinks.streamingCorpusGuardSink(
         input.toDF().toDF("doc_id", "content"), hash, s"$dir/$name", s"$dir/${name}_chk").start()
@@ -707,7 +707,7 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Dedup.writeHashBloom(spark, post,
       hashCol = graft.operators.Dedup.bandKeySql)
     val input = MemoryStream[(Long, String)]
-    val dir = java.nio.file.Files.createTempDirectory("graft_guard_nd").toString
+    val dir = tempDir("graft_guard_nd")
     val q = graft.sources.Sinks.streamingNearDupGuardSink(
       input.toDF().toDF("doc_id", "text"), post, s"$dir/out", s"$dir/chk").start()
     try {
@@ -770,7 +770,7 @@ class StreamingSpec extends SparkSpec {
     graft.sources.Sinks.writeBucketed(hashesOf("swap corpus doc"), hash, Seq("content_md5"))
     graft.operators.Dedup.writeHashBloom(spark, hash)
     val input = MemoryStream[(Long, String)]
-    val dir = java.nio.file.Files.createTempDirectory("graft_guard_swap").toString
+    val dir = tempDir("graft_guard_swap")
     val q = graft.sources.Sinks.streamingCorpusGuardSink(
       input.toDF().toDF("doc_id", "content"), hash, s"$dir/out", s"$dir/chk").start()
     try {
@@ -809,7 +809,7 @@ class StreamingSpec extends SparkSpec {
     graft.sources.Sinks.writeBucketed(hashesOf("race corpus doc"), hash, Seq("content_md5"))
     graft.operators.Dedup.writeHashBloom(spark, hash)
     val input = MemoryStream[(Long, String)]
-    val dir = java.nio.file.Files.createTempDirectory("graft_guard_race").toString
+    val dir = tempDir("graft_guard_race")
     val q = graft.sources.Sinks.streamingCorpusGuardSink(
       input.toDF().toDF("doc_id", "content"), hash, s"$dir/out", s"$dir/chk").start()
     @volatile var maintErr: Option[Throwable] = None
@@ -862,7 +862,7 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Dedup.writeChunkPostings(corpus, chunkT)
     graft.operators.Dedup.writeHashBloom(spark, chunkT, hashCol = "chunk_hash")
     val input = MemoryStream[(Long, String)]
-    val dir = java.nio.file.Files.createTempDirectory("graft_guard_sub").toString
+    val dir = tempDir("graft_guard_sub")
     val q = graft.sources.Sinks.streamingSubstringGuardSink(
       input.toDF().toDF("doc_id", "text"), chunkT, s"$dir/out", s"$dir/chk",
       minSharedTokens = 16L).start()
@@ -952,7 +952,7 @@ class StreamingSpec extends SparkSpec {
       Seq((200L, toks("rb", 30) + " " + passage)).toDF("doc_id", "text"), chunk)
     graft.operators.Dedup.writeHashBloom(spark, chunk, hashCol = "chunk_hash")
     val ndIn = MemoryStream[(Long, String)]; val subIn = MemoryStream[(Long, String)]
-    val dir = java.nio.file.Files.createTempDirectory("graft_race_g2").toString
+    val dir = tempDir("graft_race_g2")
     val ndQ = graft.sources.Sinks.streamingNearDupGuardSink(
       ndIn.toDF().toDF("doc_id", "text"), post, s"$dir/nd_out", s"$dir/nd_chk").start()
     val subQ = graft.sources.Sinks.streamingSubstringGuardSink(
@@ -1023,7 +1023,7 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(expected.nonEmpty, "fixture must produce semantic hits")
     val input = MemoryStream[(Long, Seq[Float])]
-    val dir = java.nio.file.Files.createTempDirectory("graft_race_sem").toString
+    val dir = tempDir("graft_race_sem")
     val q = graft.sources.Sinks.streamingSemanticGuardSink(
       input.toDF().toDF("doc_id", "embedding"), t, s"$dir/out", s"$dir/chk").start()
     @volatile var maintErr: Option[Throwable] = None
@@ -1094,7 +1094,7 @@ class StreamingSpec extends SparkSpec {
     def rows(day: Seq[(Long, String, Int)]) = day.map { case (id, t, k) =>
       (id, t, "en", "s", t.length.toLong, if (k >= 0) e(k) else e(7)) }
     val input = MemoryStream[(Long, String, String, String, Long, Seq[Float])]
-    val dir = java.nio.file.Files.createTempDirectory("graft_prev").toString
+    val dir = tempDir("graft_prev")
     val q = graft.sources.Sinks.streamingAcceptPreviewSink(
       input.toDF().toDF("doc_id", "text", "lang", "source", "n_chars", "embedding"),
       post, hash, s"$dir/out", s"$dir/chk",
@@ -1118,13 +1118,13 @@ class StreamingSpec extends SparkSpec {
       // state lands exactly the previewed verdicts — same accepted
       // set, same per-gate drop counts (the categories are disjoint
       // on this delta by construction)
-      val srcDir = java.nio.file.Files.createTempDirectory("graft_prev_src").toString
+      val srcDir = tempDir("graft_prev_src")
       rows(day1).map { case (id, t, l, s, n, _) => (id, t, l, s, n) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$srcDir/documents.parquet")
       val embs1 = rows(day1).map { case (id, _, _, _, _, v) => (id, v) }
         .toDF("doc_id", "embedding")
-      val outDir = java.nio.file.Files.createTempDirectory("graft_prev_out").toString
+      val outDir = tempDir("graft_prev_out")
       val s1 = graft.Pipeline.runIncremental(spark, srcDir, outDir, post, hash,
         holdout = Some(holdout), chunkTable = Some(chunk),
         semanticTable = Some(sem), deltaEmbeddings = Some(embs1))
@@ -1163,7 +1163,7 @@ class StreamingSpec extends SparkSpec {
     val natural = Seq.fill(8)("data runs today the pipeline quietly the number data").mkString(" ")
     val garbled = (1 to 14).map(i => s"zq${i}x w${i}v7 k${i}j").mkString(" ")
     val input = MemoryStream[(Long, String, String, String, Long)]
-    val dir = java.nio.file.Files.createTempDirectory("graft_prevlm").toString
+    val dir = tempDir("graft_prevlm")
     val q = graft.sources.Sinks.streamingAcceptPreviewSink(
       input.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       post, hash, s"$dir/out", s"$dir/chk",
@@ -1217,7 +1217,7 @@ class StreamingSpec extends SparkSpec {
       Seq((201L, toks("ka", 40)), (202L, toks("kb", 40))).toDF("doc_id", "text"),
       post, hash)
     val input = MemoryStream[(Long, String, String, String, Long)]
-    val dir = java.nio.file.Files.createTempDirectory("graft_prevkr").toString
+    val dir = tempDir("graft_prevkr")
     def start() = graft.sources.Sinks.streamingAcceptPreviewSink(
       input.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       post, hash, s"$dir/out", s"$dir/chk").start()
@@ -1283,7 +1283,7 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Pq.writeSemanticIndexPq(corpus, t + "__pq", deterministic = true,
       sharedCentroids = Some(spark.table(t + "__centroids")))
     val input = MemoryStream[(Long, Seq[Float])]
-    val dir = java.nio.file.Files.createTempDirectory("graft_guard_semx").toString
+    val dir = tempDir("graft_guard_semx")
     val q = graft.sources.Sinks.streamingSemanticGuardSink(
       input.toDF().toDF("doc_id", "embedding"), t, s"$dir/out", s"$dir/chk").start()
     def landed = spark.read.parquet(s"$dir/out")

@@ -373,7 +373,7 @@ class TextOpsSpec extends SparkSpec {
     // parquet round-trip: a local Seq would fold to a LocalRelation
     // and evaluate the scorer at OPTIMIZATION time, hiding the plan
     // shape the single-evaluation pin below exists to check
-    val dfDir = java.nio.file.Files.createTempDirectory("graft_lm_drop").toString + "/docs"
+    val dfDir = tempDir("graft_lm_drop") + "/docs"
     Seq(
       (1L, natural), (2L, garbled), (3L, "ab"), // <3 chars: never dropped
       (4L, natural + " tail"), (5L, garbled.reverse),
