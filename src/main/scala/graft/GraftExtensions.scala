@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{AdcDist, BloomMightContain, BoundedCollect, CdcChunks, CharlmDocCounts, CharlmDocScore, CharlmUnpack, FoldSumArr, FreqItemsAgg, PairCombos, PqEncode, SortedFoldSum, SortedFoldSumArr, SortedFoldSumStr, CharNgrams, CleanContent, DotProduct, IvfArgmin, L2Norm, MinHashAgg, MinHashSig, MinHashSigMd5, QuantizeInt8, ScrubTokens, Shingles, SimHashAgg, SimHashSig, SimHashSigMd5, SrpBuckets, SrpBucketsMd5}
+import graft.functions.{AdcDist, BloomMightContain, BoundedCollect, CdcChunks, CharlmDocCounts, CharlmDocScore, CharlmUnpack, FoldSumArr, FreqItemsAgg, PairCombos, PqEncode, SortedFoldSum, SortedFoldSumArr, SortedFoldSumStr, CharNgrams, CleanContent, DotProduct, IvfArgmin, L2Norm, MinHashAgg, MinHashSig, MinHashSigMd5, QuantizeInt8, ScrubTokens, Shingles, SimHashAgg, SimHashSig, SimHashSigMd5, SrpBucketsMd5}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -58,16 +58,6 @@ object GraftExtensions {
         case Seq(text, Literal(k: Int, _)) => CharNgrams(text, k)
         case Seq(_, other) => notLiteral("graft_char_ngrams", "k", other)
         case other => badSignature("graft_char_ngrams", "(text, k: int literal)", other)
-      }),
-    ("graft_srp_buckets",
-      new ExpressionInfo(classOf[SrpBuckets].getName, "graft_srp_buckets"),
-      (args: Seq[Expression]) => args match {
-        case Seq(vec, Literal(t: Int, _), Literal(b: Int, _)) => SrpBuckets(vec, t, b)
-        case Seq(_, t, b) =>
-          notLiteral("graft_srp_buckets", "tables/bits",
-            Seq(t, b).find { case Literal(_: Int, _) => false; case _ => true }.getOrElse(t))
-        case other => badSignature(
-          "graft_srp_buckets", "(vector, tables: int literal, bits: int literal)", other)
       }),
     ("graft_simhash",
       new ExpressionInfo(classOf[SimHashAgg].getName, "graft_simhash"),

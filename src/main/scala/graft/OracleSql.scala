@@ -242,7 +242,7 @@ object OracleSql {
       |           GROUP BY 1, 2),
       |sx_pairs AS (SELECT doc_id_1, doc_id_2, hamming FROM sx_ham WHERE hamming <= 3)""".stripMargin
 
-  /** Mirrors [[graft.operators.Ann.lshTopK]] at the registered
+  /** Mirrors [[graft.operators.Ann.topK]] (LSH × float) at the registered
     * production parameters (4 tables × 8 bits, 5 queries, top-3) as a
     * CTE chain ending in `al_top(query_id, vec_id, cosine, rank)` — a
     * bit-for-bit replay of [[graft.functions.SrpBucketsMd5]]:
@@ -508,7 +508,7 @@ object OracleSql {
     (seed +: rounds).mkString(",\n")
   }
 
-  /** Mirrors [[graft.operators.Ann.ivfTopKTrained]] (deterministic
+  /** Mirrors [[graft.operators.Ann.topK]] (trained IVF × float, deterministic
     * training) end-to-end: replayed Lloyd's centroids, argmin cell
     * assignment, nprobe query probe, exact cosine re-rank — the same
     * shape as the green `ann_ivf` oracle with `cents0` swapped for
@@ -585,7 +585,7 @@ object OracleSql {
       val lo = j * subDims + 1
       val hi = (j + 1) * subDims
       val seedCte = if (rankSeed)
-        // [[graft.operators.Pq.codebook]] rankSeed: the ksub lowest
+        // [[graft.operators.Pq.trainCodebooks]]' seed: the ksub lowest
         // ids become cells 0..ksub-1 in id order (sparse id spaces)
         s"""p$tag${j}c0 AS (SELECT rn - 1 AS cell, semb AS cemb FROM (
            |  SELECT semb, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM s$tag$j) WHERE rn <= $ksub)""".stripMargin
@@ -692,7 +692,7 @@ object OracleSql {
     * per-query per-subspace distance tables `dt`, and the
     * subspace-ordered fold `adist` over a candidate set named
     * `cand(query_id, vec_id)`. The exact-cosine re-rank mirrors
-    * [[graft.operators.Pq.pqTopK]]'s rerank. */
+    * [[graft.operators.Ann.topK]]'s PQ re-rank. */
   private def adcQueryCtes(m: Int, subDims: Int, iters: Int,
                            numQueries: Int, adcCand: Int, topK: Int,
                            dims: Int): String = {
@@ -729,7 +729,7 @@ object OracleSql {
        |  FROM rr) WHERE rank <= $topK)""".stripMargin
   }
 
-  /** Mirrors [[graft.operators.Pq.pqTopK]] (deterministic training)
+  /** Mirrors [[graft.operators.Ann.topK]] (flat × PQ, deterministic training)
     * end-to-end: replayed codebooks and codes, a flat ADC scan as
     * the candidate set (every coded vector, self excluded), then
     * the exact-cosine re-rank of the top-`adcCand` survivors. */
@@ -743,7 +743,7 @@ object OracleSql {
        |${adcQueryCtes(m, subDims, iters, numQueries, adcCand, topK, dims)}
        |SELECT query_id, vec_id, adist, cos AS cosine, rank FROM pqtop""".stripMargin
 
-  /** Mirrors `Ann.recallAtK(Pq.pqTopK, Ann.bruteForceTopK)` as a
+  /** Mirrors `Ann.recallAtK(flat × PQ topK, flat × float topK)` as a
     * FULL replay — unlike `ann_lsh_recall`, PQ at the registered
     * parameters does NOT reach full recall (quantization loses real
     * neighbors), so the oracle cannot pin `hits = exact_k` from the
@@ -775,7 +775,7 @@ object OracleSql {
        |GROUP BY x.query_id""".stripMargin
   }
 
-  /** Mirrors [[graft.operators.Pq.ivfPqTopK]]: the trained COSINE
+  /** Mirrors [[graft.operators.Ann.topK]] (trained IVF × PQ): the trained COSINE
     * coarse quantizer ([[kmeansCentroidsCtes]], identical to
     * `ann_ivf_trained`'s) prunes candidates to each query's
     * `nprobe` cells, and the PQ chain ADC-ranks only those — the
@@ -795,7 +795,7 @@ object OracleSql {
        |${adcQueryCtes(m, subDims, iters, numQueries, adcCand, topK, dims)}
        |SELECT query_id, vec_id, adist, cos AS cosine, rank FROM pqtop""".stripMargin
 
-  /** Mirrors [[graft.operators.Pq.ivfPqResidualTopK]] — FAISS
+  /** Mirrors [[graft.operators.Ann.topK]] (trained IVF × residual PQ) — FAISS
     * IndexIVFPQ with by_residual=true: the coarse chain assigns
     * cells, a residual projection re-roots the PQ chain on
     * `x − c(cell)` (`pqCtes(src = "res")`), the query side computes a

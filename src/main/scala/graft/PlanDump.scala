@@ -25,8 +25,8 @@ object PlanDump {
       "dedup_minhash" -> "banded LSH: map-only scalar signatures + bucket self-join",
       "dedup_ngram_jaccard" -> "df cap fused into a bounded-collect aggregate: one explode, one shuffle, native pair combos (r20), no broadcast, no sorts",
       "publishing_patterns" -> "share-of-total window over the <=24-row post-aggregation rollup (one scan + one shuffle)",
-      "ann_bruteforce" -> "broadcast query set + native codegen'd graft_dot",
-      "ann_ivf" -> "fixed-k centroids aggregated to one broadcast row; map-side array-argmin cell assignment",
+      "ann_bruteforce" -> "topK flat x float: broadcast query set + native codegen'd graft_dot; one query_id exchange feeds the rank window",
+      "ann_ivf" -> "topK IVF x float: fixed-k centroids aggregated to one broadcast row; map-side array-argmin cell assignment; probe rows broadcast; dense_rank ranks each pair once inside the window's own exchange",
       "fuzzy_search" -> "edit-budget token scoring map-side; TakeOrderedAndProject bounds the sort",
       "sessionize_batch" -> "two window passes over ONE (user_id) shuffle",
       "ner_backlog" -> "incremental work queue: left-anti join + TakeOrderedAndProject",
@@ -37,7 +37,7 @@ object PlanDump {
       "stratified_sample" -> "deterministic md5 stratified sample: single map-side filter, zero shuffle",
       "group_topk" -> "per-group exemplars: WindowGroupLimit keeps the exchange at O(groups x k)",
       "bigram_counts" -> "corpus bigram stats: zip_with explode + map-side combine + TakeOrdered(topN)",
-      "entity_pair_lift" -> "PMI-lift: bounded per-doc pair explode; singles + N broadcast, no corpus SMJ",
+      "entity_pair_lift" -> "PMI-lift: the shared cooccurrencePairs bounded per-doc pair explode; singles + N broadcast, no corpus SMJ",
       "length_percentiles" -> "exact type-1 quantiles: window over the bounded distinct-value rollup",
       "char_budget_sample" -> "budget mixing: source totals broadcast onto the scan, map-side md5 keep rule",
       "scrub_boilerplate" -> "native one-pass token scrub: corpus bigram agg to ONE broadcast row, then a zero-shuffle projection",
@@ -45,7 +45,7 @@ object PlanDump {
       "entity_centrality" -> "integer power iterates: corpus work ends at the gazetteer-bounded mention agg; graph math on broadcast-scale rows",
       "interval_join" -> "attribution pairs: equi-key SMJ with the time window as a join residual, no time-bucket expansion",
       "z_value" -> "Morton key: generated masked-shift arithmetic in the scan projection, zero shuffle",
-      "ann_quantized" -> "int8 quantized scan: broadcast queries, native exact dot on integer-valued doubles",
+      "ann_quantized" -> "topK flat x int8: broadcast queries, native exact dot on integer-valued doubles",
       "chunk_documents" -> "overlapping token windows: per-row explode, zero shuffle",
       "pack_sequences" -> "concat-and-split packing: ONE domain-keyed exchange feeds the cumulative window",
       "token_rarity" -> "term-keyed df rollup join co-partitioned with the df aggregate",
@@ -53,7 +53,7 @@ object PlanDump {
       "dedup_canonical" -> "cluster keep decision: pair-graph-sized cluster table broadcast into the corpus scan; one member-sized groupBy, the whole pick a single max_by struct",
       "apply_mix" -> "materialized mixing plan: source-cardinality factor aggregate broadcast back onto the scan, per-row sequence explode — zero corpus shuffle",
       "substring_pair_confirm" -> "confirm-or-drop: candidate pairs broadcast into two shingle-carrying corpus scans, Jaccard a map-side array_intersect/union — corpus scanned twice, shuffled never",
-      "ann_lsh_recall" -> "recall report: two O(queries x k) inputs joined + aggregated; corpus touched only by the two top-k producers",
+      "ann_lsh_recall" -> "recall report: two O(queries x k) topK outputs joined + aggregated; the LSH side ranks its narrow scored pairs through one exchange",
       "ranked_search_analyzed" -> "analyzer chain: lower() fused into the same scan-side scoring projection as the raw path",
       "decontam_substring" -> "chunk-overlap decontamination: df cap fused into the bounded collect; unhinted semi-join (AQE broadcasts small benchmarks, shuffles corpus-scale holdouts)",
       "sliding_counts" -> "hopping windows: one scan, the window explode and combinable agg both inside the exchange",
@@ -64,7 +64,7 @@ object PlanDump {
       "q_big_orders" -> "TPC-H Q18: combinable orderkey fact aggregate, HAVING survivors joined back declaratively (AQE broadcasts when small), TakeOrderedAndProject",
       "decontam_semantic" -> "cross-set SemDeDup blocking: cell-keyed train x holdout join, per-vector max-of-struct aggregate — no corpus window",
       "bpe_pair_stats" -> "BPE merge candidates: substr pair explode on the vocab-bounded word rollup, map-side combine, TakeOrdered(topN)",
-      "ann_ivf_quantized" -> "IVF-SQ8: full-precision argmin cells against the 1-row broadcast centroids, int8 exact-integer dots inside probed cells only",
+      "ann_ivf_quantized" -> "topK IVF x int8 (IVF-SQ8): full-precision argmin cells against the 1-row broadcast centroids, int8 exact-integer dots inside probed cells only",
       "q_forecast_revenue" -> "TPC-H Q6: every predicate in PushedFilters, 4-column pruned scan, one combinable global aggregate — the scan-efficiency yardstick",
       "q_returned_items" -> "TPC-H Q10: both fact filters pushed, per-customer rollup BEFORE the dim join, broadcast nation, TakeOrderedAndProject top-20",
       "q_top_supplier" -> "TPC-H Q15: rollup and its max on one reused exchange (scan-once), max as a 1-row broadcast equi-join — no global window",
@@ -76,7 +76,7 @@ object PlanDump {
       "embedding_covariance" -> "int8 moments: upper-triangle slice explode, long sums combined map-side into 2080 constant groups",
       "decontam_report" -> "combined contamination verdict: both arms' bounded outputs full-outer-joined; corpus work stays inside the arms",
       "q_waiting_orders" -> "TPC-H Q21 rewritten: ONE lineitem scan feeds the per-order lateness profile (the semi+anti pair as two stacked aggregates); supplier x nation broadcast after the sole-late decision",
-      "ann_ivf_trained" -> "trained IVF: each Lloyd round is a broadcast argmin + ONE-exchange deterministic re-center (native elementwise sorted fold of whole vectors, r20 — bit-identical to the per-dim fold it replaced); query path identical to ann_ivf against the refined 1-row centroid broadcast",
+      "ann_ivf_trained" -> "topK trained IVF x float: each Lloyd round is a broadcast argmin + ONE-exchange deterministic re-center (native elementwise sorted fold of whole vectors, r20 — bit-identical to the per-dim fold it replaced); query path identical to ann_ivf against the refined 1-row centroid broadcast",
       "dedup_semantic_trained" -> "trained SemDeDup: Lloyd's-refined centroids slot into the same broadcast-argmin cell assignment + within-cell equi-join pairing as dedup_semantic",
       "sketch_distinct_audit" -> "HLL++ contract row: exact distinct (expand-based) and the sketch in ONE source-keyed aggregate pass over the token explode",
       "sketch_quantile_audit" -> "GK contract row: bounded per-source value rollup + 3 probe rows joined back; the corpus contributes one combinable count pass",
@@ -85,18 +85,18 @@ object PlanDump {
       "dedup_semantic_scaled_trained" -> "the composed production path: sqrt(N) fan-out derived by one count action, then Lloyd rounds at that k (broadcast argmin + deterministic re-center), within-cell pairing unchanged",
       "multimodal_meta" -> "decode-free metadata + md5-seeded stub decode: ONE map-side projection over the binarized scan — no shuffle, no codec; every column replays in the oracle",
       "dedup_simhash" -> "md5-vote simhash: map-only scalar fingerprints, 4x16-bit band explode, bucket self-join, bit_count(xor) re-rank — the whole chain oracle-replayable since round 12",
-      "ann_lsh" -> "md5-hyperplane SRP buckets: constant sign matrix cached per executor, (table, bucket) equi-join bounds candidates, exact cosine re-rank — bucket membership itself oracle-checked",
+      "ann_lsh" -> "topK LSH x float: md5-hyperplane SRP buckets, constant sign matrix cached per executor, (table, bucket) equi-join against the broadcast query buckets bounds candidates; narrow scored pairs ranked once through ONE exchange (no array-carrying dedup aggregate)",
       "semantic_probe" -> "daily-ingest probe: rank-seeded corpus-only Lloyd training, corpus cell index from one argmin projection, delta x corpus joined WITHIN cells — the corpus never self-joins",
       "charlm_score" -> "char-LM filter: |alphabet|^3-bounded model trained by ONE packed-trigram aggregate, collected driver-side, scored per doc by ONE map-side expression (model as a foldable plan literal, elided below) — zero scoring shuffle, no log anywhere",
       "bpe_train" -> "BPE training: vocab-bounded word rollup, per-round pair-count aggregate + 1-row winner collect, map-only fold re-segmentation — corpus rows touched once at tokenization",
       "q_market_share" -> "TPC-H Q8: share-within-group over the six-table snowflake — ONE conditional aggregate pass (no per-nation self-join), pushed date/type filters, constant dims broadcast, big dims left to AQE",
       "pq_codes" -> "PQ encoding: all m subspaces in ONE fused native scan expression (graft_pq_encode vs a 1-row packed-codebook broadcast, r20), zero corpus shuffles; training re-centers whole subvectors through one exchange per round",
-      "ann_pq" -> "ADC scan: per-query m x ksub distance table broadcast onto fused-encode code arrays (no reassembly shuffle, r20), native graft_adc_dist per candidate, exact-cosine re-rank only for the top-64 survivors",
-      "ann_ivf_pq" -> "two-level serving shape: trained cosine cells prune to nprobe cells, ADC ranks in-cell codes (fused native encode + native ADC fold, r20), full vectors fetched for the re-rank only",
+      "ann_pq" -> "topK flat x PQ: per-query m x ksub distance table broadcast onto fused-encode code arrays, native graft_adc_dist per candidate, exact-cosine re-rank only for the top-64 survivors",
+      "ann_ivf_pq" -> "topK trained IVF x PQ: cell argmin and fused encode in ONE scan projection (no vec_id re-join), per-(query, cell) ADC tables broadcast, full vectors fetched for the re-rank only",
       "entity_pagerank" -> "damped PageRank: corpus work ends at the per-doc mention aggregate; the gazetteer-bounded pairs coalesce into one task that runs all 5 sorted-fold rounds in memory — one Spark execution",
       "curriculum_assign" -> "curriculum buckets: md5 sample filter map-side, window only over the SAMPLE, bucket count against a (k-1)-row broadcast — no global sort",
       "heavy_hitters_audit" -> "MG contract row: the k-entry combinable sketch and the exact rollup in one audit join; production keeps only the sketch aggregate",
-      "ann_ivf_pq_residual" -> "residual IVF-PQ: per-(query, probed-cell) ADC tables ride one broadcast; codes and cells equi-join (cells + residuals pinned once, not re-derived per training round, r20); full vectors only in the re-rank",
+      "ann_ivf_pq_residual" -> "topK trained IVF x residual PQ: residuals carry their cell and are pinned once (every training round and the encode read them); per-(query, probed-cell) ADC tables ride one broadcast; full vectors only in the re-rank",
       "entity_communities" -> "sync LPA: the gazetteer-bounded pairs coalesce into one task that runs all 5 argmax rounds in memory — one Spark execution; integer weights, no doubles",
       "semantic_probe_pq" -> "PQ-compressed probe: 16 B/doc index rows off ONE zero-shuffle fused-encode projection (r20) equi-join delta cells, native ADC + law-of-cosines recovery map-side, corpus vectors never load",
       "bloom_filter_audit" -> "bloom contract row: one checkpointed split feeds the driver-built filter and the probe aggregate; booleans pinned from the exact side",

@@ -25,6 +25,10 @@ object SparkEntry {
   private def silverDf(s: SparkSession, d: String) = Cleaning.silver(docs(s, d))
   private def goldDf(s: SparkSession, d: String) = Enrichment.gold(silverDf(s, d))
 
+  /** The oracle-replayable trained IVF quantizer of the `ann_ivf_*`
+    * rows: 64 cells, nprobe 4, 3 deterministic Lloyd rounds. */
+  private val trainedIvf = Ann.Coarse.Ivf(trainIters = 3, deterministic = true)
+
   private val goldCols = Seq("id", "doc_id", "content_length", "lang", "topic",
     "content_category", "topic_category", "word_count", "sentence_count",
     "has_substantial_content")
@@ -1910,7 +1914,7 @@ object SparkEntry {
              |FROM n GROUP BY 1""".stripMargin)),
 
     ("ann_bruteforce",
-      (s: SparkSession, d: String) => Ann.bruteForceTopK(Tables.embeddings(s, d)),
+      (s: SparkSession, d: String) => Ann.topK(Tables.embeddings(s, d)),
       Some("""WITH e AS (SELECT vec_id,
              |            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
              |          FROM embeddings),
@@ -2025,7 +2029,8 @@ object SparkEntry {
       // int8 quantization is exact floor arithmetic and quantized dots
       // are integer-valued doubles ≤ 127²·64 — the whole quantized ANN
       // path verifies row-for-row, unlike most quantized-ANN code
-      (s: SparkSession, d: String) => Ann.quantizedTopK(Tables.embeddings(s, d)),
+      (s: SparkSession, d: String) =>
+        Ann.topK(Tables.embeddings(s, d), codec = Ann.Codec.Int8),
       Some("""WITH e0 AS (SELECT vec_id,
              |            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
              |          FROM embeddings),
@@ -2058,7 +2063,8 @@ object SparkEntry {
       // — which cells exist, who meets whom, and the exact-cosine
       // re-rank (OracleSql.annLshCtes); `ann_lsh_recall` remains the
       // semantic recall contract on top
-      (s: SparkSession, d: String) => Ann.lshTopK(Tables.embeddings(s, d)),
+      (s: SparkSession, d: String) =>
+        Ann.topK(Tables.embeddings(s, d), coarse = Ann.Coarse.Lsh()),
       Some(s"""WITH $annLshCtes
               |SELECT query_id, vec_id, cosine, rank FROM al_top""".stripMargin)),
 
@@ -2069,7 +2075,8 @@ object SparkEntry {
       // cosine re-rank) with no JVM hash anywhere, and the folds are
       // sequential on both engines — so DuckDB reproduces the whole
       // index bit-for-bit, including which cells each query probes
-      (s: SparkSession, d: String) => Ann.ivfTopK(Tables.embeddings(s, d)),
+      (s: SparkSession, d: String) =>
+        Ann.topK(Tables.embeddings(s, d), coarse = Ann.Coarse.Ivf()),
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
              |          FROM embeddings),
              |n AS (SELECT vec_id, emb,
@@ -2108,8 +2115,8 @@ object SparkEntry {
       // L-vs-recall trade the row exists to document).
       (s: SparkSession, d: String) => {
         val emb = Tables.embeddings(s, d)
-        Ann.recallAtK(Ann.lshTopK(emb, tables = 64, numBits = 4),
-          Ann.bruteForceTopK(emb))
+        Ann.recallAtK(Ann.topK(emb, coarse = Ann.Coarse.Lsh(tables = 64, bits = 4)),
+          Ann.topK(emb))
       },
       Some("""WITH e AS (SELECT vec_id,
              |            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
@@ -2136,7 +2143,7 @@ object SparkEntry {
       // reruns the whole 3-round training loop bit-for-bit
       // (OracleSql.kmeansQuerySql unrolls the iterations as CTEs)
       (s: SparkSession, d: String) =>
-        Ann.ivfTopKTrained(Tables.embeddings(s, d), deterministic = true),
+        Ann.topK(Tables.embeddings(s, d), coarse = trainedIvf),
       Some(OracleSql.kmeansQuerySql())),
 
     ("pq_codes",
@@ -2159,7 +2166,7 @@ object SparkEntry {
       // exact-cosine re-rank. At 100 TB the codes (8 B/vector) fit
       // in cluster memory where the raw vectors (256 B) cannot
       (s: SparkSession, d: String) =>
-        Pq.pqTopK(Tables.embeddings(s, d), deterministic = true),
+        Ann.topK(Tables.embeddings(s, d), codec = Ann.Codec.Pq(deterministic = true)),
       Some(OracleSql.pqQuerySql())),
 
     ("ann_pq_recall",
@@ -2170,8 +2177,8 @@ object SparkEntry {
       // recall knob the same way ann_lsh_recall documents L-vs-recall
       (s: SparkSession, d: String) => {
         val emb = Tables.embeddings(s, d)
-        Ann.recallAtK(Pq.pqTopK(emb, deterministic = true),
-          Ann.bruteForceTopK(emb))
+        Ann.recallAtK(Ann.topK(emb, codec = Ann.Codec.Pq(deterministic = true)),
+          Ann.topK(emb))
       },
       Some(OracleSql.pqRecallSql())),
 
@@ -2183,7 +2190,8 @@ object SparkEntry {
       // last — the standard billion-scale serving shape, replayed
       // end-to-end by composing the two proven oracle chains
       (s: SparkSession, d: String) =>
-        Pq.ivfPqTopK(Tables.embeddings(s, d), deterministic = true),
+        Ann.topK(Tables.embeddings(s, d), coarse = trainedIvf,
+          codec = Ann.Codec.Pq(deterministic = true)),
       Some(OracleSql.ivfPqQuerySql())),
 
     ("ann_ivf_pq_residual",
@@ -2194,7 +2202,8 @@ object SparkEntry {
       // ksub doubles, still broadcast-scale); oracle composes the
       // coarse chain + a residual projection + the PQ chain
       (s: SparkSession, d: String) =>
-        Pq.ivfPqResidualTopK(Tables.embeddings(s, d), deterministic = true),
+        Ann.topK(Tables.embeddings(s, d), coarse = trainedIvf,
+          codec = Ann.Codec.Pq(residual = true, deterministic = true)),
       Some(OracleSql.ivfPqResidualQuerySql())),
 
     ("token_count",
@@ -2978,7 +2987,8 @@ object SparkEntry {
       // are deterministic arithmetic, so the composed index replays
       // bit-for-bit — full-precision argmin cells, floor-quantized
       // values, exact integer dots
-      (s: SparkSession, d: String) => Ann.ivfQuantizedTopK(Tables.embeddings(s, d)),
+      (s: SparkSession, d: String) => Ann.topK(Tables.embeddings(s, d),
+        coarse = Ann.Coarse.Ivf(), codec = Ann.Codec.Int8),
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
              |          FROM embeddings),
              |n AS (SELECT vec_id, emb,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   *
   * This is the per-row IVF indexing cost — at corpus scale it runs
   * once per vector per write, the same argument that made
-  * [[SrpBuckets]] native. The declarative twin
+  * [[SrpBucketsMd5]] native. The declarative twin
   * (`array_min(transform(cents, struct(-cos, cell)))`, kept in
   * [[graft.operators.Ann.nearestCells]] for the top-nprobe query path
   * and spec-pinned equal) pays an interpreted lambda bind plus a

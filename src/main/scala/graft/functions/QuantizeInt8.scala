@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * form walks the vector three times interpreted (cast pass, max-abs
   * pass, quantize pass); this is one JVM loop for the max and one for
   * the emit — the per-vector indexing cost of the quantized-ANN scan,
-  * the same hot-path argument as [[SrpBuckets]].
+  * the same hot-path argument as [[SrpBucketsMd5]].
   *
   * NULL contract: a null ELEMENT poisons the whole result to NULL (a
   * vector with holes has no meaningful scale). The HOF twin

@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * 1-row crossJoin, so every row carries the same ~topN-element array;
   * rebuilding a 20-entry hash set per row would be acceptable, reusing
   * it is free. @volatile pairs (array, set) in one write for the same
-  * JMM reason as [[SrpBuckets]].
+  * JMM reason as [[SrpBucketsMd5]].
   */
 case class ScrubTokens(left: Expression, right: Expression)
   extends BinaryExpression with CodegenFallback {

@@ -27,11 +27,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * fingerprint would otherwise collide with every other empty doc).
   */
 private[functions] object SigHash {
-  /** Golden-ratio odd constant for per-permutation / per-plane seeds. */
+  /** Golden-ratio odd constant for per-permutation seeds. */
   val Golden = 0x9e3779b97f4a7c15L
 
   /** Murmur3 finalizer — THE mixing function of the signature family.
-    * [[MinHashAgg]] and [[SrpBuckets]] delegate here: the scalar and
+    * [[MinHashAgg]] and [[MinHashSig]] delegate here: the scalar and
     * aggregate fingerprints are contractually bit-identical, so there
     * must be exactly one copy of this function to diverge from. */
   def mix(x: Long): Long = {

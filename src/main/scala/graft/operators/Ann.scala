@@ -4,9 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the embedding column (SURVEY §2 #30-32):
-  * brute-force cosine top-k as the exactness baseline, sign-random-
-  * projection LSH as the scale path, and embedding-cosine near-dup
-  * pairs with a blocking key.
+  * one cosine top-k operator, [[Ann.topK]], parameterized by a coarse
+  * candidate step (flat, sign-random-projection LSH, IVF cells) and a
+  * codec (float, int8, product quantization) — the FAISS
+  * index-factory shape — plus embedding-cosine near-dup pairs and the
+  * semantic dedup/probe index on the same coarse quantizer.
   *
   * Vector math on the hot path uses graft's native codegen'd Catalyst
   * expressions ([[graft.functions.DotProduct]]/[[graft.functions.L2Norm]]
@@ -36,89 +38,206 @@ object Ann {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Exact cosine top-k: broadcast the (small) query set against the
-    * corpus scan — the corpus is touched once, never shuffled; the
-    * only shuffle is the per-query top-k window over scored rows,
-    * bounded by |queries| × |corpus| rows of (id, id, double). Norms
-    * are computed ONCE per vector in the pre-join projections (the
-    * higher-order folds are interpreted, not codegen'd — recomputing a
-    * norm per PAIR would triple the fold work for identical results:
-    * sqrt(Σx²)·sqrt(Σy²) is the same double either way). */
-  def bruteForceTopK(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3): DataFrame = {
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    import org.apache.spark.sql.expressions.Window
-    val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    val q = e.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("qemb"), col("nrm").as("qnrm"))
-    e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")))
-      .withColumn("rank",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos").as("cosine"), col("rank"))
-  }
-
-  /** Sign-random-projection buckets for ALL hash tables in one native
-    * pass ([[graft.functions.SrpBuckets]]): deterministic ±1
-    * hyperplanes, one packed sign-pattern long per table — the per-row
-    * LSH indexing cost, computed inside the scan projection. */
-  def srpBuckets(emb: Column, tables: Int, numBits: Int): Column =
-    call_function("graft_srp_buckets", emb, lit(tables), lit(numBits))
-
-  /** Portable twin ([[graft.functions.SrpBucketsMd5]]): md5-derived
-    * ±1 hyperplanes a SQL engine replays verbatim — the family the
-    * registered `ann_lsh` rows ride so bucket membership itself is
-    * oracle-checkable; same per-row cost (the constant weight matrix
-    * is cached per executor). */
+  /** Sign-random-projection buckets for ALL `tables` hash tables in one
+    * native pass ([[graft.functions.SrpBucketsMd5]]): md5-derived ±1
+    * hyperplanes a SQL engine replays verbatim, so bucket membership
+    * itself is oracle-checkable; the constant weight matrix is cached
+    * per executor, so the per-row LSH indexing cost is one projection
+    * inside the scan. */
   def srpBucketsMd5(emb: Column, tables: Int, numBits: Int): Column =
     call_function("graft_srp_buckets_md5", emb, lit(tables), lit(numBits))
 
-  /** LSH-bucketed ANN: L hash tables of `numBits` sign bits; queries
-    * meet only same-bucket candidates (the join key is (table,
-    * bucket)), then exact cosine re-ranks the candidate set. Recall
-    * grows with L at constant per-table cost — the knob a 100 TB
-    * deployment tunes instead of ever falling back to brute force. */
-  def lshTopK(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3,
-              tables: Int = 4, numBits: Int = 8): DataFrame = {
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    import org.apache.spark.sql.expressions.Window
-    val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    val banded = e.select(col("vec_id"), col("emb"), col("nrm"),
-      posexplode(srpBucketsMd5(col("emb"), tables, numBits)).as(Seq("table", "bucket")))
-    val q = banded.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("qemb"), col("nrm").as("qnrm"),
-        col("table"), col("bucket"))
-    banded.join(q, Seq("table", "bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("qemb"), col("emb"), col("qnrm"), col("nrm"))
-      .dropDuplicates("query_id", "vec_id")
-      .withColumn("cos", dot(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")))
-      .withColumn("rank",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos").as("cosine"), col("rank"))
+  /** The candidate step of [[topK]]: which (query, vector) pairs are
+    * scored at all. */
+  sealed trait Coarse
+  object Coarse {
+    /** Every pair — the exactness baseline the indexes are checked
+      * against. */
+    case object Flat extends Coarse
+    /** Pairs sharing a [[srpBucketsMd5]] bucket in any of `tables`
+      * hash tables of `bits` sign bits: recall grows with `tables` at
+      * constant per-table cost. */
+    final case class Lsh(tables: Int = 4, bits: Int = 8) extends Coarse
+    /** Pairs inside one of the query's `nprobe` nearest cells of the
+      * [[kmeansCentroids]] quantizer: `numCentroids` cells seeded by
+      * the lowest vec_ids, refined by `trainIters` Lloyd rounds
+      * (`deterministic`: oracle-replayable re-center folds). */
+    final case class Ivf(numCentroids: Int = 64, nprobe: Int = 4, trainIters: Int = 0,
+                         deterministic: Boolean = false) extends Coarse
   }
 
-  /** Fixed-size IVF coarse-centroid set, aggregated to ONE row: the
-    * `numCentroids` lowest vec_ids stand in for trained k-means
-    * centroids (deterministic; a trained set slots in unchanged).
-    * |centroids| is a constant independent of corpus size — the
-    * broadcast stays k vectors at 100 TB, unlike an every-Nth-vector
-    * sample whose broadcast (and pair expansion) grows with N. */
-  private[graft] def ivfCentroids(e: DataFrame, numCentroids: Int): DataFrame =
-    e.filter(col("vec_id") < numCentroids)
-      .agg(collect_list(struct(col("vec_id").as("cell"), col("emb").as("cemb"),
-        col("nrm").as("cnrm"))).as("cents"))
+  /** The scoring step of [[topK]]: what a candidate's score is
+    * computed from. */
+  sealed trait Codec
+  object Codec {
+    /** Exact cosine of the float vectors; output column `cosine`. */
+    case object Float extends Codec
+    /** Exact cosine of the int8-quantized vectors ([[quantize]]);
+      * output column `cosine_q`. Zero-norm quantized vectors (cosine
+      * undefined) are dropped. */
+    case object Int8 extends Codec
+    /** Product-quantization codes ([[graft.operators.Pq]]): `m`
+      * subspaces of `subDims` dims, `ksub`-cell codebooks trained by
+      * `iters` Lloyd rounds (`deterministic` as for [[Coarse.Ivf]]).
+      * Candidates are ranked by ADC distance, the `adcCand` nearest
+      * re-ranked by exact cosine; output columns `adist, cosine`.
+      * `residual` (IVF only) codes each vector's offset from its cell
+      * centroid — FAISS `IndexIVFPQ(by_residual = true)` — with one
+      * ADC table per (query, probed cell). */
+    final case class Pq(m: Int = 8, subDims: Int = 8, ksub: Int = 16, iters: Int = 2,
+                        adcCand: Int = 64, residual: Boolean = false,
+                        deterministic: Boolean = false) extends Codec
+  }
 
-  /** Lloyd's k-means refinement of the IVF coarse quantizer: start
-    * from the deterministic [[ivfCentroids]] seed and run `iters`
-    * assign/re-center rounds. Better-centered cells mean fewer
-    * same-cell misses at a fixed nprobe — the recall knob that costs
-    * training time instead of query time.
+  /** Cosine top-k of the `numQueries` lowest vec_ids against the rest
+    * of the corpus: one row per (query, rank ≤ k), ranked by
+    * (score desc, vec_id). Every registered ANN row is one
+    * `coarse` × `codec` point (`ann_ivf_pq` = IVF × PQ, …).
+    *
+    * Scale shape: the query side (numQueries × tables or nprobe rows)
+    * is broadcast, so the corpus is scanned once and never shuffled
+    * for the candidate join; LSH buckets, IVF cells and PQ codes are
+    * computed in the scan projection against 1-row broadcasts (the
+    * corpus side of the IVF join is plan-spec-pinned shuffle-free).
+    * Norms are computed once per vector, not per pair. Scoring needs
+    * one shuffle, the per-query rank window over the narrow
+    * (query_id, vec_id, score) rows. Pairs are deduplicated only where
+    * the coarse step can emit one twice (LSH, IVF with nprobe > 1):
+    * after scoring, inside that same window. PQ adds the codebook
+    * training; it scores candidates by m table lookups each
+    * ([[graft.functions.AdcDist]]) and joins full vectors only to
+    * the queries × adcCand survivors of the exact re-rank (the join
+    * input itself is a corpus scan). */
+  def topK(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3,
+           coarse: Coarse = Coarse.Flat, codec: Codec = Codec.Float): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    graft.GraftExtensions.register(embeddings.sparkSession)
+    val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
+      .withColumn("nrm", norm(col("emb")))
+    val queries = e.filter(col("vec_id") < numQueries)
+    // coarse step: corpus and query rows, each tagged with the join key
+    val (corpus, probes, key, centroids) = coarse match {
+      case Coarse.Flat => (e, queries, Nil, None)
+      case Coarse.Lsh(tables, bits) =>
+        def banded(df: DataFrame) = df.select(col("*"),
+          posexplode(srpBucketsMd5(col("emb"), tables, bits)).as(Seq("table", "bucket")))
+        (banded(e), banded(queries), Seq("table", "bucket"), None)
+      case Coarse.Ivf(numCentroids, nprobe, trainIters, deterministic) =>
+        val cents = kmeansCentroids(e, numCentroids, trainIters, deterministic)
+        (nearestCells(e, cents, "emb", "nrm", keep = 1),
+          nearestCells(queries, cents, "emb", "nrm", keep = nprobe), Seq("cell"), Some(cents))
+    }
+    val dedup = coarse match {
+      case Coarse.Flat => false
+      case _: Coarse.Lsh => true
+      case ivf: Coarse.Ivf => ivf.nprobe > 1
+    }
+    // query columns renamed: vec_id -> query_id, emb -> qemb, nrm -> qnrm
+    val q = probes.select(probes.columns.toSeq.map(c =>
+      if (key.contains(c)) col(c) else col(c).as(if (c == "vec_id") "query_id" else "q" + c)): _*)
+    def scored(c: DataFrame, q: DataFrame, score: Column): DataFrame =
+      (if (key.isEmpty) c.crossJoin(broadcast(q)) else c.join(broadcast(q), key))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("vec_id"), col("query_id"), score.as("score"))
+    // The n best per query. Copies of a pair share its score (it is
+    // deterministic per pair), hence its dense_rank: ranking distinct
+    // pairs needs no exchange beyond the window's own, and `distinct`
+    // drops the surviving copies on the window's query_id partitioning.
+    def top(s: DataFrame, n: Int, dedup: Boolean, order: Column*): DataFrame = {
+      val rank = if (dedup) dense_rank() else row_number()
+      val ranked = s.withColumn("rank",
+        rank.over(Window.partitionBy(col("query_id")).orderBy(order: _*)).cast("long"))
+        .filter(col("rank") <= n)
+      if (dedup) ranked.distinct() else ranked
+    }
+    def exactTop(s: DataFrame, dedup: Boolean, cols: Column*): DataFrame =
+      top(s, k, dedup, col("score").desc, col("vec_id"))
+        .select(Seq(col("query_id"), col("vec_id")) ++ cols :+ col("rank"): _*)
+    codec match {
+      case Codec.Float =>
+        exactTop(scored(corpus, q, dot(col("qemb"), col("emb")) / (col("qnrm") * col("nrm"))),
+          dedup, col("score").as("cosine"))
+      case Codec.Int8 =>
+        def int8(df: DataFrame, p: String) = df.withColumn(p + "q", quantize(col(p + "emb")))
+          .withColumn(p + "nq", dot(col(p + "q"), col(p + "q")))
+          .filter(col(p + "nq") > 0.0)
+        exactTop(scored(int8(corpus, ""), int8(q, "q"),
+          dot(col("qq"), col("q")) / (sqrt(col("qnq")) * sqrt(col("nq")))),
+          dedup, col("score").as("cosine_q"))
+      case Codec.Pq(m, subDims, ksub, iters, adcCand, residual, deterministic) =>
+        require(!residual || centroids.isDefined, "residual PQ codes need the IVF coarse step")
+        // residual: both sides replace the vector by its offset from
+        // its (probed) cell's centroid. The corpus residuals are pinned
+        // once: every training round and the encode pass read them.
+        val (c, qv) = centroids match {
+          case Some(cents) if residual =>
+            val centRows = broadcast(unpackCentroids(cents).select(col("cell"), col("cemb").as("c")))
+            def offset(df: DataFrame, embCol: String) = df.join(centRows, Seq("cell"))
+              .withColumn(embCol, zip_with(asDouble(col(embCol)), col("c"), (x, y) => x - y))
+              .drop("c")
+            (offset(corpus.select(col("vec_id"), col("cell"), col("emb")), "emb")
+              .localCheckpoint(false), offset(q, "qemb"))
+          case _ => (corpus, q)
+        }
+        val cb = Pq.trainCodebooks(if (residual) c else e.select(col("vec_id"), col("emb")),
+          m, subDims, ksub, iters, deterministic, cacheTrain = !residual)
+        val adc = top(scored(Pq.encodedRows(c, cb).withColumn("codes", col("enc.codes")),
+          Pq.queryTables(qv, cb, subDims), Pq.adcDist), adcCand, dedup, col("score"), col("vec_id"))
+          .select(col("query_id"), col("vec_id"), col("score").as("adist"))
+        // exact-cosine re-rank of the ≤ queries × adcCand survivors
+        exactTop(adc.join(e.select(col("vec_id"), col("emb")), Seq("vec_id"))
+          .join(broadcast(queries.select(col("vec_id").as("query_id"), col("emb").as("qemb"))),
+            Seq("query_id"))
+          .select(col("query_id"), col("vec_id"), col("adist"),
+            (dot(col("qemb"), col("emb")) / (norm(col("qemb")) * norm(col("emb")))).as("score")),
+          false, col("adist"), col("score").as("cosine"))
+    }
+  }
+
+  /** Fixed-size IVF coarse-centroid seed, packed to ONE row
+    * ([[packCentroids]]): the `numCentroids` lowest vec_ids stand in
+    * for trained centroids (deterministic). |centroids| is a constant
+    * independent of corpus size — the broadcast stays k vectors at
+    * 100 TB, unlike an every-Nth-vector sample whose broadcast (and
+    * pair expansion) grows with N. */
+  private[graft] def ivfCentroids(e: DataFrame, numCentroids: Int): DataFrame =
+    packCentroids(e.filter(col("vec_id") < numCentroids)
+      .select(col("vec_id").as("cell"), col("emb").as("cemb"), col("nrm").as("cnrm")))
+
+  /** Rank-seeded centroid row for corpora with ARBITRARY ids: the k
+    * lowest doc_ids become cells 0..k-1 (in id order). [[ivfCentroids]]
+    * seeds by `vec_id < k`, which requires the dense 0..N id space of
+    * the embeddings table; a real accepted corpus keys by whatever
+    * doc_ids survived curation. TakeOrdered-k bounds the seed scan
+    * (no global sort materializes); the rank window runs over k rows. */
+  private[graft] def seedCentroidsByRank(e: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    packCentroids(e.orderBy(col("vec_id")).limit(k)
+      .select((row_number().over(Window.orderBy(col("vec_id"))) - 1)
+        .cast("long").as("cell"),
+        asDouble(col("emb")).as("cemb"), col("nrm").as("cnrm")))
+  }
+
+  /** Centroid rows `(cell, cemb, cnrm)` packed to the ONE-row
+    * `cents: array<struct<cell, cemb, cnrm>>` every quantizer consumer
+    * broadcasts ([[nearestCells]], [[graft.functions.IvfArgmin]]). */
+  private[graft] def packCentroids(rows: DataFrame): DataFrame =
+    rows.agg(collect_list(struct(col("cell"), col("cemb"), col("cnrm"))).as("cents"))
+
+  /** [[packCentroids]]' inverse: one `(cell, cemb, cnrm)` row per
+    * cell — the persisted `__centroids` table layout. */
+  private[graft] def unpackCentroids(cents: DataFrame): DataFrame =
+    cents.select(explode(col("cents")).as("c"))
+      .select(col("c.cell").as("cell"), col("c.cemb").as("cemb"), col("c.cnrm").as("cnrm"))
+
+  /** The ONE coarse-centroid step of every IVF cell build (the top-k,
+    * the semantic dedup/decontam blocking, the persisted semantic
+    * indexes): the packed seed — [[ivfCentroids]], or
+    * [[seedCentroidsByRank]] where ids are sparse (`rankSeed`) — as
+    * is when `iters = 0`, else refined by `iters` rounds of Lloyd's
+    * k-means. Better-centered cells mean fewer same-cell misses at a
+    * fixed nprobe — the recall knob that costs training time instead
+    * of query time.
     *
     * Scale shape per round (r20): assignment is the same map-side
     * broadcast argmin the query path uses (no shuffle); re-centering
@@ -143,7 +262,7 @@ object Ann {
     * A spec pins both modes to the same top-k at gate SF. */
   private[graft] def kmeansCentroids(e: DataFrame, k: Int, iters: Int,
                                      deterministic: Boolean = false,
-                                     seed: Option[DataFrame] = None): DataFrame = {
+                                     rankSeed: Boolean = false): DataFrame = {
     require(iters >= 0)
     graft.GraftExtensions.register(e.sparkSession) // graft_sorted_fold_sum
     // Pin the training frame for the fixed round count (guide §5:
@@ -157,12 +276,13 @@ object Ann {
     // die with the RDD — nothing survives the call, every invocation
     // still computes from the parquet inputs.
     val train = if (iters >= 1) e.localCheckpoint(false) else e
+    val seed = if (rankSeed) seedCentroidsByRank(e, k) else ivfCentroids(train, k)
     // LAZY checkpoints throughout the fixpoint (r20): lineage is cut
     // identically, but each round's k-row centroid frame materializes
     // inside the NEXT job that reads it (the assign broadcast build)
     // instead of paying its own eager driver round-trip — one job per
-    // round saved, values untouched.
-    var cents = seed.getOrElse(ivfCentroids(train, k)).localCheckpoint(false)
+    // round saved, values untouched. No rounds: the bare seed.
+    var cents = if (iters == 0) seed else seed.localCheckpoint(false)
     var it = 0
     while (it < iters) {
       val assigned = nearestCells(train, cents, "emb", "nrm", keep = 1)
@@ -182,50 +302,17 @@ object Ann {
         .select(col("cell"),
           transform(col("sx"), x => x / col("c")).as("cemb"))
         .withColumn("cnrm", norm(col("cemb")))
-      val prev = cents.select(explode(col("cents")).as("p"))
-        .select(col("p.cell").as("cell"), col("p.cemb").as("pemb"),
-          col("p.cnrm").as("pnrm"))
-      cents = prev.join(means, Seq("cell"), "left")
+      val prev = unpackCentroids(cents)
+        .select(col("cell"), col("cemb").as("pemb"), col("cnrm").as("pnrm"))
+      cents = packCentroids(prev.join(means, Seq("cell"), "left")
         .select(col("cell"),
           coalesce(col("cemb"), asDouble(col("pemb"))).as("cemb"),
-          coalesce(col("cnrm"), col("pnrm")).as("cnrm"))
-        .agg(collect_list(struct(col("cell"), col("cemb"), col("cnrm"))).as("cents"))
+          coalesce(col("cnrm"), col("pnrm")).as("cnrm")))
         .localCheckpoint(false)
       it += 1
     }
     cents
   }
-
-  /** [[ivfTopK]] with a TRAINED coarse quantizer: same query path,
-    * centroids refined by [[kmeansCentroids]] first. The registry
-    * runs `deterministic = true` so the DuckDB oracle can replay the
-    * whole training loop bit-for-bit
-    * ([[graft.OracleSql.kmeansQuerySql]]). */
-  def ivfTopKTrained(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3,
-                     numCentroids: Int = 64, nprobe: Int = 4,
-                     trainIters: Int = 3, deterministic: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    val centroids = kmeansCentroids(e, numCentroids, trainIters, deterministic)
-    val cells = nearestCells(e, centroids, "emb", "nrm", keep = 1)
-    val q = nearestCells(
-      e.filter(col("vec_id") < numQueries)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"), col("nrm").as("qnrm")),
-      centroids, "qemb", "qnrm", keep = nprobe)
-    cells.join(q, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")))
-      .select(col("query_id"), col("vec_id"), col("cos"))
-      .dropDuplicates("query_id", "vec_id")
-      .withColumn("rank",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos").as("cosine"), col("rank"))
-  }
-
   /** Map-side nearest-cell assignment: each row scores the broadcast
     * one-row centroid array with array HOFs and explodes its `keep`
     * best cells — no per-pair row expansion, no window, no shuffle on
@@ -267,45 +354,6 @@ object Ann {
     assigned.drop("cents")
   }
 
-  /** IVF (inverted-file) ANN: a fixed-size deterministic subset of the
-    * corpus serves as coarse centroids; every vector is assigned to
-    * its nearest centroid cell map-side ([[nearestCells]]), queries
-    * probe their `nprobe` nearest cells and rank exact cosine only
-    * inside them. At 100 TB the cell assignment is a scan-side
-    * projection against a constant-size broadcast, the probe join
-    * shuffles on cell id, and recall/cost is tuned with `nprobe` —
-    * the classic IVF trade, no training step (real k-means centroids
-    * would slot into [[ivfCentroids]] unchanged). */
-  def ivfTopK(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3,
-              numCentroids: Int = 64, nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    val centroids = ivfCentroids(e, numCentroids)
-    val cells = nearestCells(e, centroids, "emb", "nrm", keep = 1)
-    val q = nearestCells(
-      e.filter(col("vec_id") < numQueries)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"), col("nrm").as("qnrm")),
-      centroids, "qemb", "qnrm", keep = nprobe)
-    cells.join(q, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      // score BEFORE deduping so the dedup aggregate sees only three
-      // narrow columns: with the embedding arrays still aboard,
-      // dropDuplicates plans as first(array<double>) which cannot
-      // hash-aggregate and falls back to Sort + SortAggregate ×2; the
-      // narrow form is a plain hash aggregate (cos is deterministic
-      // per pair, so deduping after scoring is value-identical)
-      .withColumn("cos", dot(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")))
-      .select(col("query_id"), col("vec_id"), col("cos"))
-      .dropDuplicates("query_id", "vec_id")
-      .withColumn("rank",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos").as("cosine"), col("rank"))
-  }
-
   /** Symmetric int8 quantization of an embedding: each component maps
     * to floor(x·127/max|x| + 0.5) ∈ [-127, 127]. `floor` rather than
     * `round` because floor is exactly specified on every engine while
@@ -332,35 +380,6 @@ object Ann {
     when(exists(d, x => x.isNull), lit(null).cast("array<double>"))
       .when(maxabs === 0.0, d)
       .otherwise(transform(d, x => floor(x * 127.0 / maxabs + 0.5)))
-  }
-
-  /** Brute-force cosine top-k over int8-QUANTIZED embeddings — the
-    * memory-bandwidth path of ANN at 100 TB: int8 storage is 4× (vs
-    * float32) to 8× (vs float64) smaller, which at corpus scale is the
-    * difference between vectors living in page cache or on disk; real
-    * deployments run the integer scan first and re-rank survivors at
-    * full precision. Same broadcast-queries/no-corpus-shuffle shape as
-    * [[bruteForceTopK]], and because the quantization and the dot are
-    * exact arithmetic (see [[quantize]]) the whole query — unlike most
-    * quantized-ANN code — verifies row-for-row against a SQL oracle.
-    * Zero-norm (all-zero) quantized vectors are excluded: their cosine
-    * is undefined, and rows dropped beat NaN ordering surprises. */
-  def quantizedTopK(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embeddings.select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .withColumn("nq", dot(col("q"), col("q")))
-      .filter(col("nq") > 0.0)
-    val queries = e.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("nq").as("qnq"))
-    e.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos_q", dot(col("qq"), col("q")) / (sqrt(col("qnq")) * sqrt(col("nq"))))
-      .withColumn("rank",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_q").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_q").as("cosine_q"), col("rank"))
   }
 
   /** Second-moment table of the int8-quantized embeddings — the
@@ -416,55 +435,6 @@ object Ann {
           .as("cov"))
   }
 
-  /** IVF cells × int8 scan — [[ivfTopK]]'s probe structure with
-    * [[quantizedTopK]]'s integer scoring: the composition production
-    * ANN systems actually deploy (FAISS IVF-SQ8 shape: a coarse
-    * quantizer bounds WHICH vectors are scored, scalar quantization
-    * bounds what each score COSTS — at 100 TB the first keeps the
-    * probe off most of the corpus, the second keeps the probed slice
-    * in page cache at 4-8× density). Cell assignment runs at full
-    * precision (the cheap side — one argmin per vector at build time)
-    * and the per-candidate work is the exact integer dot.
-    *
-    * Both stages are deterministic arithmetic — double argmin cells,
-    * floor-quantized values, integer-valued dots — so the ENTIRE
-    * composed index replays bit-for-bit in the SQL oracle, like its
-    * two parents and unlike virtually any deployed IVF-SQ8. Zero-norm
-    * quantized vectors are excluded from scoring (undefined cosine),
-    * matching [[quantizedTopK]]. */
-  def ivfQuantizedTopK(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3,
-                       numCentroids: Int = 64, nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    val centroids = ivfCentroids(e, numCentroids)
-    val cells = nearestCells(e, centroids, "emb", "nrm", keep = 1)
-      .withColumn("q", quantize(col("emb")))
-      .withColumn("nq", dot(col("q"), col("q")))
-      .filter(col("nq") > 0.0)
-      .select(col("vec_id"), col("cell"), col("q"), col("nq"))
-    val probes = nearestCells(
-      e.filter(col("vec_id") < numQueries)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"), col("nrm").as("qnrm")),
-      centroids, "qemb", "qnrm", keep = nprobe)
-      .withColumn("qq", quantize(col("qemb")))
-      .withColumn("qnq", dot(col("qq"), col("qq")))
-      .filter(col("qnq") > 0.0)
-      .select(col("query_id"), col("cell"), col("qq"), col("qnq"))
-    cells.join(probes, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      // narrow before the dedup aggregate, same reasoning as ivfTopK
-      .withColumn("cos_q", dot(col("qq"), col("q")) / (sqrt(col("qnq")) * sqrt(col("nq"))))
-      .select(col("query_id"), col("vec_id"), col("cos_q"))
-      .dropDuplicates("query_id", "vec_id")
-      .withColumn("rank",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_q").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_q").as("cosine_q"), col("rank"))
-  }
-
   /** Recall@k report of an approximate top-k against the exact
     * brute-force top-k: per query, the exact hit-set size, how many of
     * those hits the approximate index returned, and the k-th exact
@@ -493,7 +463,7 @@ object Ann {
     * Work is Σ |block|² — the blocking key MUST bound block size
     * (IVF-style cells do; free-form labels may not). For blocks too
     * large to pair exactly, switch to the sub-quadratic candidates of
-    * [[lshTopK]]'s SRP buckets or [[graft.operators.Dedup.minhashPairs]]
+    * [[topK]]'s LSH buckets or [[graft.operators.Dedup.minhashPairs]]
     * — accepting their recall contract instead of exactness. */
   def embeddingDedupPairs(embeddings: DataFrame, threshold: Double = 0.4): DataFrame = {
     graft.GraftExtensions.register(embeddings.sparkSession)
@@ -510,7 +480,7 @@ object Ann {
   /** SemDeDup-shaped semantic dedup (Abbas et al. 2023: cluster the
     * embeddings coarsely, then pair exactly ONLY within a cluster):
     * the blocking key is the nearest cell of the SAME deterministic
-    * IVF coarse quantizer [[ivfTopK]] uses — so unlike
+    * IVF coarse quantizer [[topK]] uses — so unlike
     * [[embeddingDedupPairs]] (which trusts a given label column) this
     * needs no labels and the block sizes are bounded by the quantizer
     * fan-out, not by whatever a free-form label happens to contain.
@@ -537,10 +507,8 @@ object Ann {
     graft.GraftExtensions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
       .withColumn("nrm", norm(col("emb")))
-    val centroids =
-      if (trainIters > 0) kmeansCentroids(e, numCentroids, trainIters, deterministic)
-      else ivfCentroids(e, numCentroids)
-    val cells = nearestCells(e, centroids, "emb", "nrm", keep = 1)
+    val cells = nearestCells(e, kmeansCentroids(e, numCentroids, trainIters, deterministic),
+      "emb", "nrm", keep = 1)
     cells.as("a")
       .join(cells.as("b"), col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos", dot(col("a.emb"), col("b.emb")) / (col("a.nrm") * col("b.nrm")))
@@ -575,7 +543,7 @@ object Ann {
     graft.GraftExtensions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
       .withColumn("nrm", norm(col("emb")))
-    val cells = nearestCells(e, ivfCentroids(e, numCentroids), "emb", "nrm", keep = 1)
+    val cells = nearestCells(e, kmeansCentroids(e, numCentroids, iters = 0), "emb", "nrm", keep = 1)
     val sub = cells.withColumn("subcell",
       expr(s"(row_number() OVER (PARTITION BY cell ORDER BY vec_id) - 1) div $cap"))
     sub.as("a")
@@ -624,7 +592,7 @@ object Ann {
     * with its source; its EMBEDDING still sits next to it. This is
     * the semantic arm of the same guard: flag every train vector
     * whose cosine to ANY holdout vector reaches `threshold`, blocked
-    * on the deterministic IVF cells of [[ivfTopK]]'s quantizer (the
+    * on the deterministic IVF cells of [[topK]]'s quantizer (the
     * SemDeDup blocking of [[semanticDedupPairs]], applied CROSS-SET:
     * train×holdout inside a cell, never train×train).
     *
@@ -651,10 +619,8 @@ object Ann {
     graft.GraftExtensions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
       .withColumn("nrm", norm(col("emb")))
-    val centroids =
-      if (trainIters > 0) kmeansCentroids(e, numCentroids, trainIters, deterministic)
-      else ivfCentroids(e, numCentroids)
-    val cells = nearestCells(e, centroids, "emb", "nrm", keep = 1)
+    val cells = nearestCells(e, kmeansCentroids(e, numCentroids, trainIters, deterministic),
+      "emb", "nrm", keep = 1)
       .withColumn("is_holdout",
         substring(md5(col("vec_id").cast("string")), 1, 4) < holdoutHex)
     val train = cells.filter(!col("is_holdout"))
@@ -671,21 +637,6 @@ object Ann {
         count(lit(1)).as("matches"))
       .select(col("vec_id"), col("best.h_id").as("holdout_id"),
         col("best.cos").as("cosine"), col("matches"))
-  }
-
-  /** Rank-seeded centroid row for corpora with ARBITRARY ids: the k
-    * lowest doc_ids become cells 0..k-1 (in id order). [[ivfCentroids]]
-    * seeds by `vec_id < k`, which requires the dense 0..N id space of
-    * the embeddings table; a real accepted corpus keys by whatever
-    * doc_ids survived curation. TakeOrdered-k bounds the seed scan
-    * (no global sort materializes); the rank window runs over k rows. */
-  private[graft] def seedCentroidsByRank(e: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    e.orderBy(col("vec_id")).limit(k)
-      .select((row_number().over(Window.orderBy(col("vec_id"))) - 1)
-        .cast("long").as("cell"),
-        asDouble(col("emb")).as("cemb"), col("nrm").as("cnrm"))
-      .agg(collect_list(struct(col("cell"), col("cemb"), col("cnrm"))).as("cents"))
   }
 
   /** Train + persist the cross-run SEMANTIC dedup index over an
@@ -715,11 +666,8 @@ object Ann {
     // re-center means fold members in vec_id order, so a DuckDB
     // oracle replays the trained quantizer bit-for-bit — same knob,
     // same price as every other oracle-checked training path
-    val cents = kmeansCentroids(e, numCentroids, trainIters, deterministic,
-      seed = Some(seedCentroidsByRank(e, numCentroids)))
-    cents.select(explode(col("cents")).as("c"))
-      .select(col("c.cell").as("cell"), col("c.cemb").as("cemb"),
-        col("c.cnrm").as("cnrm"))
+    unpackCentroids(kmeansCentroids(e, numCentroids, trainIters, deterministic,
+      rankSeed = true))
       .write.mode("overwrite").format("parquet")
       .saveAsTable(table + "__centroids")
     graft.sources.Sinks.writeBucketed(
@@ -734,11 +682,9 @@ object Ann {
     * the same map-side broadcast argmin as every quantizer consumer. */
   def semanticIndexRows(vectors: DataFrame, centroids: DataFrame): DataFrame = {
     graft.GraftExtensions.register(vectors.sparkSession)
-    val cents = centroids
-      .agg(collect_list(struct(col("cell"), col("cemb"), col("cnrm"))).as("cents"))
     val e = vectors.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
       .withColumn("nrm", norm(col("emb")))
-    nearestCells(e, cents, "emb", "nrm", keep = 1)
+    nearestCells(e, packCentroids(centroids), "emb", "nrm", keep = 1)
       .select(col("vec_id").as("doc_id"), col("cell"),
         asDouble(col("emb")).as("emb"), col("nrm"))
   }
@@ -774,11 +720,9 @@ object Ann {
                                        threshold: Double,
                                        nprobe: Int): DataFrame = {
     graft.GraftExtensions.register(newVecs.sparkSession)
-    val cents = centroids
-      .agg(collect_list(struct(col("cell"), col("cemb"), col("cnrm"))).as("cents"))
     val d = newVecs.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
       .withColumn("nrm", norm(col("emb")))
-    nearestCells(d, cents, "emb", "nrm", keep = nprobe)
+    nearestCells(d, packCentroids(centroids), "emb", "nrm", keep = nprobe)
       .select(col("vec_id").as("delta_doc"), col("emb"), col("nrm"), col("cell"))
       .join(cellIndex.select(col("doc_id").as("corpus_doc"), col("cell"),
         col("emb").as("c_emb"), col("nrm").as("c_nrm")), Seq("cell"))
@@ -822,11 +766,8 @@ object Ann {
       .select(col("vec_id").as("doc_id"), col("embedding"))
     val e = corpus.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
       .withColumn("nrm", norm(col("emb")))
-    val cents = kmeansCentroids(e, numCentroids, trainIters, deterministic,
-      seed = Some(seedCentroidsByRank(e, numCentroids)))
-    val centroids = cents.select(explode(col("cents")).as("c"))
-      .select(col("c.cell").as("cell"), col("c.cemb").as("cemb"),
-        col("c.cnrm").as("cnrm"))
+    val centroids = unpackCentroids(
+      kmeansCentroids(e, numCentroids, trainIters, deterministic, rankSeed = true))
     incrementalSemanticMatches(delta, semanticIndexRows(corpus, centroids),
       centroids, threshold, nprobe = 1)
   }

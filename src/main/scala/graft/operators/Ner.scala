@@ -204,17 +204,9 @@ object Ner {
     * ever joined or sorted. */
   def entityPairLift(spark: SparkSession, documents: DataFrame,
                      minPairDocs: Long = 2L): DataFrame = {
-    val ents = mentions(spark, documents)
-      .select(col("doc_id"), col("word")).distinct()
-    val pairs = ents
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("word"))).as("es"))
-      .filter(size(col("es")) >= 2)
-      .select(explode(flatten(transform(col("es"), (a, i) =>
-        transform(slice(col("es"), i + 2, size(col("es"))),
-          b => struct(a.as("e1"), b.as("e2")))))).as("p"))
-      .groupBy(col("p.e1").as("entity_1"), col("p.e2").as("entity_2"))
-      .agg(count(lit(1)).as("pair_docs"))
+    val ents = entityDocs(spark, documents)
+    val pairs = cooccurrencePairs(ents)
+      .select(col("e1").as("entity_1"), col("e2").as("entity_2"), col("w").as("pair_docs"))
     val singles = ents.groupBy(col("word"))
       .agg(count(lit(1)).as("c")) // ents is distinct -> doc frequency
     val n = documents.agg(count(lit(1)).cast("double").as("nd"))
@@ -261,15 +253,19 @@ object Ner {
       .select(col("u").as("entity"), col("degree"), col("centrality"))
   }
 
-  /** The entity co-occurrence pairs `(e1, e2, w)` with `e1 < e2`:
-    * per-doc DISTINCT mentions paired within the doc (sorted-array
-    * slice pairing — no self-join on the corpus), `w` = number of docs
-    * where the two entities co-occur. Gazetteer-bounded: at most
-    * |dict|·(|dict|-1)/2 pairs no matter the corpus size (the built-in
-    * gazetteer leaves 6 valid words, so at most 15 pairs over 6 nodes). */
-  private def cooccurrencePairs(spark: SparkSession, documents: DataFrame): DataFrame = {
-    val ents = mentions(spark, documents)
-      .select(col("doc_id"), col("word")).distinct()
+  /** The distinct `(doc_id, word)` entity mentions — one row per
+    * entity per document it appears in. */
+  private def entityDocs(spark: SparkSession, documents: DataFrame): DataFrame =
+    mentions(spark, documents).select(col("doc_id"), col("word")).distinct()
+
+  /** The entity co-occurrence pairs `(e1, e2, w)` with `e1 < e2` over
+    * [[entityDocs]]' rows: each doc's entities paired within the doc
+    * (sorted-array slice pairing — no self-join on the corpus), `w` =
+    * number of docs where the two entities co-occur. Gazetteer-bounded:
+    * at most |dict|·(|dict|-1)/2 pairs no matter the corpus size (the
+    * built-in gazetteer leaves 6 valid words, so at most 15 pairs over
+    * 6 nodes). */
+  private def cooccurrencePairs(ents: DataFrame): DataFrame =
     ents
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("word"))).as("es"))
@@ -279,12 +275,11 @@ object Ner {
           b => struct(a.as("e1"), b.as("e2")))))).as("p"))
       .groupBy(col("p.e1").as("e1"), col("p.e2").as("e2"))
       .agg(count(lit(1)).as("w"))
-  }
 
   /** [[cooccurrencePairs]] as the symmetric graph `(u, v, w)`, both
     * edge directions materialized — the base of [[entityCentrality]]. */
   private def cooccurrenceAdj(spark: SparkSession, documents: DataFrame): DataFrame = {
-    val pairs = cooccurrencePairs(spark, documents)
+    val pairs = cooccurrencePairs(entityDocs(spark, documents))
     pairs.select(col("e1").as("u"), col("e2").as("v"), col("w"))
       .union(pairs.select(col("e2").as("u"), col("e1").as("v"), col("w")))
   }
@@ -321,7 +316,7 @@ object Ner {
   private def onEntityGraph[T: Encoder](spark: SparkSession, documents: DataFrame)(
       kernel: EntityGraph => Iterator[T]): Dataset[T] = {
     import spark.implicits._
-    cooccurrencePairs(spark, documents).as[(String, String, Long)]
+    cooccurrencePairs(entityDocs(spark, documents)).as[(String, String, Long)]
       .coalesce(1)
       .mapPartitions(edges => kernel(new EntityGraph(edges)))
   }

@@ -22,6 +22,9 @@ import org.apache.spark.sql.functions._
   * m × ksub table of subspace distances ONCE, then every candidate
   * costs m array lookups — no per-candidate float math at all. Full
   * vectors are touched only to re-rank the top-R ADC survivors.
+  * The PQ top-k itself is [[Ann.topK]] with `Codec.Pq`; this object
+  * holds the codebook training, the encode, the ADC tables and the
+  * persisted PQ semantic index.
   *
   * Every stage is engine-portable by the same conventions the
   * trained-IVF family proved (Ann.kmeansCentroids): float→double
@@ -66,13 +69,19 @@ object Pq {
     cb.agg(transform(array_sort(collect_list(struct(col("sub"), col("cents")))),
       p => p.getField("cents")).as("subcents"))
 
+  /** Codebook rows `(sub, cell, cemb)` packed to the (sub, cents) layout the
+    * assignment/ADC internals consume. */
+  private def packCodebooks(codebooks: DataFrame): DataFrame =
+    codebooks.groupBy(col("sub"))
+      .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
+
   /** Fused per-vector PQ encode against the packed codebooks: one
     * native expression per row emits (codes, per-subspace d²s, Σd²) —
     * all m subspace argmins with the exact l2sq fold and (d², cell)
     * tie order of the declarative chain it replaces, zero shuffle,
     * zero joins (r20; the corpus-side groupBy(vec_id) that used to
     * reassemble code arrays is gone with it). */
-  private def encodedRows(e: DataFrame, cb: DataFrame): DataFrame =
+  private[graft] def encodedRows(e: DataFrame, cb: DataFrame): DataFrame =
     e.crossJoin(broadcast(subcentsRow(cb)))
       .withColumn("enc", call_function("graft_pq_encode", col("emb"), col("subcents")))
       .drop("subcents")
@@ -80,16 +89,10 @@ object Pq {
   /** All `m` trained codebooks, one row per subspace
     * `(sub, cents: array<struct<cell, cemb>>)`: seed = the `ksub`
     * lowest vec_ids' subvectors, RANKED to dense cells 0..ksub-1
-    * (the Ann.seedCentroidsByRank rule — the default, because the
-    * ADC code→array-index contract REQUIRES dense cells: on a dense
-    * 0-based id space it coincides with the legacy cell = vec_id
-    * rule, and on sparse/non-zero-based ids it is the only correct
-    * one; `rankSeed = false` keeps the raw cell = vec_id seeding for
-    * callers that replay the legacy oracle on dense ids and is
-    * guarded by a loud failure when the ids are not 0..ksub-1 —
-    * silent wrong distances were the r13 ADVICE hazard), then `iters` Lloyd
-    * assign/re-center rounds under squared L2, ALL subspaces in one
-    * plan per round.
+    * (the Ann.seedCentroidsByRank rule: the ADC code→array-index
+    * contract REQUIRES dense cells, whatever the id space), then
+    * `iters` Lloyd assign/re-center rounds under squared L2, ALL
+    * subspaces in one plan per round.
     *
     * Scale shape per round (r20): assignment is the fused native
     * encode against a 1-row broadcast (no shuffle, no explode, no
@@ -109,7 +112,6 @@ object Pq {
   private[graft] def trainCodebooks(e: DataFrame, m: Int, subDims: Int,
                                     ksub: Int, iters: Int,
                                     deterministic: Boolean,
-                                    rankSeed: Boolean = true,
                                     cacheTrain: Boolean = true): DataFrame = {
     require(iters >= 0 && ksub > 0)
     graft.GraftExtensions.register(e.sparkSession) // graft_sorted_fold_sum
@@ -127,36 +129,16 @@ object Pq {
     // is ALREADY a materialized localCheckpoint (the residual path)
     // — re-pinning checkpoint blocks would only copy them.
     val train = if (cacheTrain && iters >= 1) e.localCheckpoint(false) else e
-    val sv = subRows(train, m, subDims)
-    val seedRows = if (rankSeed) {
-      import org.apache.spark.sql.expressions.Window
-      val ids = train.orderBy(col("vec_id")).limit(ksub)
-        .select(col("vec_id"),
-          (row_number().over(Window.orderBy(col("vec_id"))) - 1)
-            .cast("long").as("cell"))
-      sv.join(broadcast(ids), Seq("vec_id"))
-        .select(col("sub"), col("cell"), col("semb").as("cemb"))
-    } else
-      sv.filter(col("vec_id") < ksub)
-        .select(col("sub"), col("vec_id").as("cell"), col("semb").as("cemb"))
+    val ids = train.orderBy(col("vec_id")).limit(ksub)
+      .select(col("vec_id"),
+        (row_number().over(org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
+          .cast("long").as("cell"))
     // lazy checkpoints per round — same rationale as
     // [[Ann.kmeansCentroids]]'s (r20): lineage cut identically, the
     // m-row codebook frame materializes inside the next consuming job
-    var cents = seedRows.groupBy(col("sub"))
-      .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
+    var cents = packCodebooks(subRows(train, m, subDims).join(broadcast(ids), Seq("vec_id"))
+      .select(col("sub"), col("cell"), col("semb").as("cemb")))
       .localCheckpoint(false)
-    if (!rankSeed) {
-      // legacy cell = vec_id seeding only holds the ADC contract
-      // (cells dense 0..ksub-1) on a dense 0-based id space — fail
-      // loudly on any other, instead of element_at reading the wrong
-      // dtab slot and returning silently-wrong distances (r13 ADVICE).
-      // One tiny read of the already-checkpointed m-row codebook set.
-      val seeded = cents.select(explode(col("cents")).as("c"))
-        .select(col("c.cell")).distinct()
-        .orderBy(col("cell")).collect().map(_.getLong(0)).toSeq
-      require(seeded == (0L until ksub.toLong),
-        s"rankSeed=false requires vec_ids dense from 0: seeded cells $seeded != 0..${ksub - 1}")
-    }
     var it = 0
     while (it < iters) {
       // Assignment is the fused native encode (r20): one expression
@@ -186,11 +168,9 @@ object Pq {
           transform(col("sx"), x => x / col("c")).as("cemb"))
       val prev = cents.select(col("sub"), explode(col("cents")).as("p"))
         .select(col("sub"), col("p.cell").as("cell"), col("p.cemb").as("pemb"))
-      cents = prev.join(means, Seq("sub", "cell"), "left")
+      cents = packCodebooks(prev.join(means, Seq("sub", "cell"), "left")
         .select(col("sub"), col("cell"),
-          coalesce(col("cemb"), col("pemb")).as("cemb"))
-        .groupBy(col("sub"))
-        .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
+          coalesce(col("cemb"), col("pemb")).as("cemb")))
         // lazy per round (r20): the pinned training frame's blocks
         // live as long as this chain's RDDs do, so the rounds can
         // keep materializing inside the caller's first consuming job
@@ -223,13 +203,6 @@ object Pq {
         posexplode_outer(col("enc.codes")).as(Seq("sub", "code")))
       .filter(col("sub").isNotNull)
 
-  /** One row per vector with its subspace-ordered code ARRAY — the
-    * scan-side layout ADC consumes, straight off the fused encode
-    * (r20: previously a corpus-wide groupBy(vec_id) reassembly
-    * shuffle of the relational codes). */
-  private def codesArrOf(e: DataFrame, cb: DataFrame): DataFrame =
-    encodedRows(e, cb).select(col("vec_id"), col("enc.codes").as("codes"))
-
   private def embCol(embeddings: DataFrame): DataFrame =
     embeddings.select(col("vec_id"), col("embedding").as("emb"))
 
@@ -249,16 +222,13 @@ object Pq {
     * `dtab[j][cell+1]` = ‖q_j − c_{j,cell}‖². Codebook cells are
     * always 0..ksub-1 (seed rule + empty-cell keep), so sorting a
     * codebook by cell makes the array index the cell id. */
-  private def queryTables(q: DataFrame, cb: DataFrame, subDims: Int): DataFrame = {
-    val cbRow = cb.agg(transform(array_sort(collect_list(struct(col("sub"), col("cents")))),
-      p => p.getField("cents")).as("subcents"))
-    q.crossJoin(broadcast(cbRow))
+  private[graft] def queryTables(q: DataFrame, cb: DataFrame, subDims: Int): DataFrame =
+    q.crossJoin(broadcast(subcentsRow(cb)))
       .withColumn("dtab", transform(col("subcents"), (cents, j) =>
         transform(array_sort(cents), c =>
           l2sq(Ann.asDouble(slice(col("qemb"), j * subDims + 1, lit(subDims))),
             c.getField("cemb")))))
       .drop("subcents")
-  }
 
   /** ADC approximate distance of one coded row against a query's
     * table: m lookups folded in subspace order — per-row, fixed
@@ -266,168 +236,8 @@ object Pq {
     * ([[graft.functions.AdcDist]], r20): this is the per-candidate
     * cost of every ADC scan; the interpreted zip_with/aggregate HOF
     * twin it replaces folds in the identical order. */
-  private def adcDist: Column =
+  private[graft] def adcDist: Column =
     call_function("graft_adc_dist", col("dtab"), col("codes"))
-
-  /** PQ top-k: train codebooks, encode the corpus, ADC-scan the
-    * codes for each query's `adcCand` best candidates, then re-rank
-    * those few by EXACT cosine on the full vectors. The corpus-wide
-    * work touches only codes (memory-resident at any scale); full
-    * vectors are read for queries × adcCand rows. Output one row per
-    * (query, rank ≤ k): approximate distance, exact cosine, rank. */
-  def pqTopK(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3,
-             m: Int = 8, subDims: Int = 8, ksub: Int = 16,
-             iters: Int = 2, adcCand: Int = 64,
-             deterministic: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embCol(embeddings)
-    val cb = trainCodebooks(e, m, subDims, ksub, iters, deterministic)
-    val q = queryTables(
-      e.filter(col("vec_id") < numQueries)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb")),
-      cb, subDims)
-    val adc = codesArrOf(e, cb)
-      .crossJoin(broadcast(q.select(col("query_id"), col("dtab"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adist", adcDist)
-      .withColumn("arn", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("adist"), col("vec_id"))))
-      .filter(col("arn") <= adcCand)
-      .select(col("query_id"), col("vec_id"), col("adist"))
-    rerank(adc, e, q.select(col("query_id"), col("qemb")), k)
-  }
-
-  /** Exact-cosine re-rank of ADC survivors: only queries × adcCand
-    * full vectors are fetched — at scale a join against the vector
-    * store keyed on vec_id, never a corpus scan. */
-  private def rerank(adc: DataFrame, e: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    adc.join(e, Seq("vec_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cos", Ann.dot(col("qemb"), col("emb")) /
-        (Ann.norm(col("qemb")) * Ann.norm(col("emb"))))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("adist"),
-        col("cos").as("cosine"), col("rank"))
-  }
-
-  /** IVF-PQ: the trained coarse quantizer ([[Ann.kmeansCentroids]],
-    * cosine cells — identical to `ann_ivf_trained`'s) prunes the
-    * corpus to `nprobe` cells per query, and PQ codes ADC-rank the
-    * survivors (codes on the RAW vectors — FAISS's
-    * `IndexIVFPQ(by_residual=false)` layout; residual encoding
-    * would buy finer codes at the cost of cell-coupled codebooks).
-    * The two prune levels compose: cells cut the candidate set to
-    * ~nprobe/k_coarse of the corpus, codes make scanning those
-    * candidates m lookups each, and full vectors surface only for
-    * the top-`adcCand` re-rank — the standard billion-scale ANN
-    * serving shape. */
-  def ivfPqTopK(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3,
-                numCentroids: Int = 64, nprobe: Int = 4, trainIters: Int = 3,
-                m: Int = 8, subDims: Int = 8, ksub: Int = 16,
-                iters: Int = 2, adcCand: Int = 64,
-                deterministic: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embCol(embeddings).withColumn("nrm", Ann.norm(col("emb")))
-    val coarse = Ann.kmeansCentroids(e, numCentroids, trainIters, deterministic)
-    val cells = Ann.nearestCells(e, coarse, "emb", "nrm", keep = 1)
-      .select(col("vec_id"), col("cell"))
-    val cb = trainCodebooks(e.select(col("vec_id"), col("emb")),
-      m, subDims, ksub, iters, deterministic)
-    val qRows = Ann.nearestCells(
-      e.filter(col("vec_id") < numQueries)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
-          col("nrm").as("qnrm")),
-      coarse, "qemb", "qnrm", keep = nprobe)
-    val qTabs = queryTables(
-      qRows.select(col("query_id"), col("qemb")).dropDuplicates("query_id"),
-      cb, subDims)
-    val adc = codesArrOf(e.select(col("vec_id"), col("emb")), cb)
-      .join(cells, Seq("vec_id"))
-      .join(broadcast(qRows.select(col("query_id"), col("cell"))), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(qTabs.select(col("query_id"), col("dtab"))), Seq("query_id"))
-      .withColumn("adist", adcDist)
-      .withColumn("arn", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("adist"), col("vec_id"))))
-      .filter(col("arn") <= adcCand)
-      .select(col("query_id"), col("vec_id"), col("adist"))
-    rerank(adc, e.select(col("vec_id"), col("emb")),
-      qTabs.select(col("query_id"), col("qemb")), k)
-  }
-
-  /** RESIDUAL-encoded IVF-PQ — the full FAISS `IndexIVFPQ`
-    * (by_residual=true) semantics: codes quantize `x − c(cell)`, the
-    * vector's offset from its coarse centroid, not the raw vector.
-    * Residuals concentrate near the origin, so the same m × ksub
-    * codebook budget spends its cells on the distribution that
-    * actually remains after coarse assignment — finer codes at
-    * identical code size, the standard recall-per-byte win. The cost:
-    * a query's ADC table is per PROBED CELL (its residual differs per
-    * cell), so the broadcast grows nprobe-fold — still
-    * queries × nprobe × m × ksub doubles, broadcast-scale forever.
-    *
-    * Same replay conventions as the whole family; the oracle
-    * ([[graft.OracleSql.ivfPqResidualQuerySql]]) composes the coarse
-    * chain, a residual projection, and the PQ chain re-rooted on the
-    * residual relation. */
-  def ivfPqResidualTopK(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3,
-                        numCentroids: Int = 64, nprobe: Int = 4, trainIters: Int = 3,
-                        m: Int = 8, subDims: Int = 8, ksub: Int = 16,
-                        iters: Int = 2, adcCand: Int = 64,
-                        deterministic: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embCol(embeddings).withColumn("nrm", Ann.norm(col("emb")))
-    val coarse = Ann.kmeansCentroids(e, numCentroids, trainIters, deterministic)
-    val centRows = coarse.select(explode(col("cents")).as("c"))
-      .select(col("c.cell").as("cell"), col("c.cemb").as("cemb"))
-    val cells = Ann.nearestCells(e, coarse, "emb", "nrm", keep = 1)
-      .select(col("vec_id"), col("emb"), col("cell"))
-      // consumed by the residual projection AND the ADC cell join —
-      // lazy checkpoint materializes it once inside the first
-      // consuming job instead of re-running the coarse argmin (r20)
-      .localCheckpoint(false)
-    val residuals = cells.join(broadcast(centRows), Seq("cell"))
-      .select(col("vec_id"),
-        zip_with(Ann.asDouble(col("emb")), col("cemb"), (x, c) => x - c).as("emb"))
-      // consumed per training round + the encode pass: without the
-      // pin every Lloyd round re-runs the argmin + residual
-      // projection over the corpus (r20; guide §5 — reuse beats
-      // recompute here because the recompute is a full corpus pass)
-      .localCheckpoint(false)
-    // cacheTrain = false: residuals IS already a materialized-once
-    // checkpoint — re-caching its blocks would only copy them (r21)
-    val cb = trainCodebooks(residuals, m, subDims, ksub, iters, deterministic,
-      cacheTrain = false)
-    val qRows = Ann.nearestCells(
-      e.filter(col("vec_id") < numQueries)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
-          col("nrm").as("qnrm")),
-      coarse, "qemb", "qnrm", keep = nprobe)
-    // per (query, probed cell): the query's residual IN THAT CELL
-    val qres = qRows.join(broadcast(centRows), Seq("cell"))
-      .select(col("query_id"), col("cell"),
-        zip_with(Ann.asDouble(col("qemb")), col("cemb"), (x, c) => x - c).as("qemb"))
-    val qTabs = queryTables(qres, cb, subDims)
-    val adc = codesArrOf(residuals, cb)
-      .join(cells.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      .join(broadcast(qTabs.select(col("query_id"), col("cell"), col("dtab"))),
-        Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adist", adcDist)
-      .withColumn("arn", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("adist"), col("vec_id"))))
-      .filter(col("arn") <= adcCand)
-      .select(col("query_id"), col("vec_id"), col("adist"))
-    rerank(adc, e.select(col("vec_id"), col("emb")),
-      e.filter(col("vec_id") < numQueries)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb")), k)
-  }
 
   /** (m, subDims) recovered from a persisted codebook table — one
     * tiny aggregate over the m × ksub codebook rows, so probe/append
@@ -438,33 +248,6 @@ object Pq {
     (r.getInt(0), r.getInt(1))
   }
 
-  /** Persisted codebook rows re-packed to the (sub, cents) layout the
-    * assignment/ADC internals consume. */
-  private def packCodebooks(codebooks: DataFrame): DataFrame =
-    codebooks.groupBy(col("sub"))
-      .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
-
-  /** Train + persist the PQ-compressed cross-run semantic index — the
-    * production form of what [[semanticProbePq]] proves as a
-    * registered query: three tables, trained ONCE at bootstrap, only
-    * probed and appended-to by daily ingests:
-    *
-    *   - `<table>__centroids` — the coarse quantizer's k cells
-    *     (rank-seeded [[Ann.kmeansCentroids]], identical to
-    *     [[Ann.writeSemanticIndex]]'s, so the full-vector index and
-    *     the PQ index agree on cell membership);
-    *   - `<table>__codebooks` — the m × ksub PQ codebooks
-    *     `(sub, cell, cemb)`, the broadcast-scale training product
-    *     whose per-probe RETRAINING the registered query pays by
-    *     design and production must not;
-    *   - `<table>` — one row per corpus doc `(doc_id, cell, codes,
-    *     nrm, qerr)`, BUCKETED on `cell`: the 24 B/doc payload (m
-    *     code bytes + the stored norm that lets a probe recover
-    *     cosine from ADC distance by the law of cosines + the
-    *     stored reconstruction error that makes the candidate set
-    *     certified — see [[semanticIndexRowsPq]]) that stays
-    *     holdable in cluster memory at any corpus size the
-    *     full-vector index has long outgrown. */
   /** Train-once seam over [[writeSemanticIndexPq]] for the PERSISTED
     * registry rows (r20, the acceptPreviewAudit stamp pattern):
     * rebuild only when `table` is missing or stamped with a different
@@ -497,6 +280,27 @@ object Pq {
     }
   }
 
+  /** Train + persist the PQ-compressed cross-run semantic index — the
+    * production form of what [[semanticProbePq]] proves as a
+    * registered query: three tables, trained ONCE at bootstrap, only
+    * probed and appended-to by daily ingests:
+    *
+    *   - `<table>__centroids` — the coarse quantizer's k cells
+    *     (rank-seeded [[Ann.kmeansCentroids]], identical to
+    *     [[Ann.writeSemanticIndex]]'s, so the full-vector index and
+    *     the PQ index agree on cell membership);
+    *   - `<table>__codebooks` — the m × ksub PQ codebooks
+    *     `(sub, cell, cemb)`, the broadcast-scale training product
+    *     whose per-probe RETRAINING the registered query pays by
+    *     design and production must not;
+    *   - `<table>` — one row per corpus doc `(doc_id, cell, codes,
+    *     nrm, qerr)`, BUCKETED on `cell`: the 24 B/doc payload (m
+    *     code bytes + the stored norm that lets a probe recover
+    *     cosine from ADC distance by the law of cosines + the
+    *     stored reconstruction error that makes the candidate set
+    *     certified — see [[semanticIndexRowsPq]]) that stays
+    *     holdable in cluster memory at any corpus size the
+    *     full-vector index has long outgrown. */
   def writeSemanticIndexPq(vectors: DataFrame, table: String,
                            numCentroids: Int = 64, trainIters: Int = 3,
                            m: Int = 8, subDims: Int = 8, ksub: Int = 16,
@@ -533,11 +337,9 @@ object Pq {
     // and the prune would read the wrong cells.
     if (sharedCentroids.isEmpty) {
       val cents = Ann.kmeansCentroids(e, numCentroids, trainIters, deterministic,
-        seed = Some(Ann.seedCentroidsByRank(e, numCentroids)))
+        rankSeed = true)
       recovering(table + "__centroids") {
-        cents.select(explode(col("cents")).as("c"))
-          .select(col("c.cell").as("cell"), col("c.cemb").as("cemb"),
-            col("c.cnrm").as("cnrm"))
+        Ann.unpackCentroids(cents)
           .write.mode("overwrite").format("parquet").saveAsTable(table + "__centroids")
       }
     }
@@ -604,37 +406,27 @@ object Pq {
   def semanticIndexRowsPq(vectors: DataFrame, centroids: DataFrame,
                           codebooks: DataFrame): DataFrame = {
     graft.GraftExtensions.register(vectors.sparkSession)
-    val cents = centroids
-      .agg(collect_list(struct(col("cell"), col("cemb"), col("cnrm"))).as("cents"))
-    // ONE zero-shuffle pass (r20): the coarse argmin and the fused PQ
-    // encode ride the same scan projection against two 1-row
-    // broadcasts — the subspace explode + codebook join + corpus-wide
-    // groupBy(vec_id) reassembly + cells re-join are all gone. `qerr`
-    // is the same subspace-ordered fold (now inside the native
-    // encode); `qerrs` the same per-subspace d² array. Stored as
-    // exact doubles so the certified bound replays bit-for-bit in the
-    // oracle; a production deployment past memory pressure quantizes
-    // each √e_j UP to one byte against a per-table scale (any stored
-    // s_j ≥ √e_j keeps the bound certified), putting the index at
-    // 24+m = 32 B/doc.
-    vectors.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", Ann.norm(col("emb")))
-      .crossJoin(broadcast(cents))
-      .withColumn("cell",
-        // coalesce(argmin, -1): cell feeds inner equi-joins, so the
-        // bare (nullable) argmin gets an inferred isnotnull pushed
-        // back into this projection's broadcast-join condition — the
-        // full argmin evaluated twice per row (see Ann.nearestCells,
-        // r21). Non-nullable sentinel, value-identical: -1 matches no
-        // codebook cell, exactly like the null row it replaces.
-        coalesce(call_function("graft_ivf_argmin", col("emb"), col("cents")), lit(-1L)))
-      .drop("cents")
-      .crossJoin(broadcast(subcentsRow(packCodebooks(codebooks))))
-      .withColumn("enc", call_function("graft_pq_encode", col("emb"), col("subcents")))
-      .select(col("vec_id").as("doc_id"), col("cell"),
-        col("enc.codes").as("codes"), col("nrm"),
-        col("enc.qerr").as("qerr"), col("enc.d2s").as("qerrs"))
+    pqIndexRows(vectors.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
+        .withColumn("nrm", Ann.norm(col("emb"))),
+      Ann.packCentroids(centroids), packCodebooks(codebooks))
+      .withColumnRenamed("vec_id", "doc_id")
   }
+
+  /** [[semanticIndexRowsPq]]'s rows `(vec_id, cell, codes, nrm, qerr,
+    * qerrs)` over packed centroids and codebooks, in ONE zero-shuffle
+    * pass (r20): the coarse argmin ([[Ann.nearestCells]]) and the
+    * fused PQ encode ride the same scan projection against two 1-row
+    * broadcasts. `qerr` is the subspace-ordered fold inside the native
+    * encode, `qerrs` the per-subspace d² array. Stored as exact
+    * doubles so the certified bound replays bit-for-bit in the
+    * oracle; a production deployment past memory pressure quantizes
+    * each √e_j UP to one byte against a per-table scale (any stored
+    * s_j ≥ √e_j keeps the bound certified), putting the index at
+    * 24+m = 32 B/doc. */
+  private def pqIndexRows(e: DataFrame, cents: DataFrame, cb: DataFrame): DataFrame =
+    encodedRows(Ann.nearestCells(e, cents, "emb", "nrm", keep = 1), cb)
+      .select(col("vec_id"), col("cell"), col("enc.codes").as("codes"), col("nrm"),
+        col("enc.qerr").as("qerr"), col("enc.d2s").as("qerrs"))
 
   /** The OPQ DECISION REPORT — connects the measured embedding
     * covariance ([[Ann.quantizedMoments]], the registered
@@ -890,11 +682,9 @@ object Pq {
                                    tight: Boolean = false): DataFrame = {
     graft.GraftExtensions.register(newVecs.sparkSession)
     val (_, subDims) = codebookShape(codebooks)
-    val cents = centroids
-      .agg(collect_list(struct(col("cell"), col("cemb"), col("cnrm"))).as("cents"))
     val d = newVecs.select(col("doc_id").as("query_id"), col("embedding").as("qemb"))
       .withColumn("qnrm", Ann.norm(col("qemb")))
-    val q = Ann.nearestCells(d, cents, "qemb", "qnrm", keep = nprobe)
+    val q = Ann.nearestCells(d, Ann.packCentroids(centroids), "qemb", "qnrm", keep = nprobe)
     val qt = queryTables(q, packCodebooks(codebooks), subDims)
     val idxCols = Seq(col("doc_id").as("corpus_doc"), col("cell"),
       col("codes"), col("nrm"), col("qerr")) ++
@@ -959,28 +749,11 @@ object Pq {
       .select(col("vec_id"), col("embedding").as("emb"))
       .withColumn("nrm", Ann.norm(col("emb")))
     val cents = Ann.kmeansCentroids(e, numCentroids, trainIters, deterministic,
-      seed = Some(Ann.seedCentroidsByRank(e, numCentroids)))
+      rankSeed = true)
     val cb = trainCodebooks(e.select(col("vec_id"), col("emb")),
-      m, subDims, ksub, iters, deterministic, rankSeed = true)
+      m, subDims, ksub, iters, deterministic)
     // the persisted index SHAPE: one row per corpus doc, 16 B payload
-    // — cell, codes and norm off ONE zero-shuffle scan projection
-    // against two 1-row broadcasts (r20: previously a corpus-wide
-    // groupBy(vec_id) code reassembly plus two vec_id re-joins)
-    val index = e.crossJoin(broadcast(cents))
-      .withColumn("cell",
-        // coalesce(argmin, -1): cell feeds inner equi-joins, so the
-        // bare (nullable) argmin gets an inferred isnotnull pushed
-        // back into this projection's broadcast-join condition — the
-        // full argmin evaluated twice per row (see Ann.nearestCells,
-        // r21). Non-nullable sentinel, value-identical: -1 matches no
-        // codebook cell, exactly like the null row it replaces.
-        coalesce(call_function("graft_ivf_argmin", col("emb"), col("cents")), lit(-1L)))
-      .drop("cents")
-      .crossJoin(broadcast(subcentsRow(cb)))
-      .select(col("vec_id"),
-        call_function("graft_pq_encode", col("emb"), col("subcents"))
-          .getField("codes").as("codes"),
-        col("cell"), col("nrm"))
+    val index = pqIndexRows(e, cents, cb).select(col("vec_id"), col("codes"), col("cell"), col("nrm"))
     val delta = flagged.filter(col("is_delta"))
       .select(col("vec_id").as("query_id"), col("embedding").as("qemb"))
       .withColumn("qnrm", Ann.norm(col("qemb")))

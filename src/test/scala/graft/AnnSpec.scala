@@ -54,7 +54,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("bruteForceTopK ranks the closest vector first, excludes self") {
-    val out = Ann.bruteForceTopK(
+    val out = Ann.topK(
       embs((0L, e1, 0), (10L, e1close, 0), (11L, e2, 0), (12L, e3, 0)),
       numQueries = 1, k = 2)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect()
@@ -104,9 +104,9 @@ class AnnSpec extends SparkSpec {
   test("quantizedTopK agrees with exact brute force on separated vectors, drops zero vectors") {
     val df = embs((0L, e1, 0), (10L, e1close, 0), (11L, e2, 0), (12L, e3, 0),
       (13L, Seq(0f, 0f, 0f, 0f), 0))
-    val qTop = Ann.quantizedTopK(df, numQueries = 1, k = 2)
+    val qTop = Ann.topK(df, numQueries = 1, k = 2, codec = Ann.Codec.Int8)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect()
-    val exact = Ann.bruteForceTopK(df.filter(col("vec_id") =!= 13L), numQueries = 1, k = 2)
+    val exact = Ann.topK(df.filter(col("vec_id") =!= 13L), numQueries = 1, k = 2)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect()
     assert(qTop.toSet === exact.toSet)
     assert(!qTop.exists(_._2 == 13L), "zero vector must be excluded, not NaN-ranked")
@@ -114,9 +114,9 @@ class AnnSpec extends SparkSpec {
 
   test("lshTopK returns same-bucket candidates ranked by exact cosine") {
     // identical vectors always share every bucket -> guaranteed recall
-    val out = Ann.lshTopK(
+    val out = Ann.topK(
       embs((0L, e1, 0), (10L, e1, 0), (11L, e2, 0)),
-      numQueries = 1, k = 3)
+      numQueries = 1, k = 3, coarse = Ann.Coarse.Lsh())
       .select("vec_id", "rank").as[(Long, Long)].collect()
     assert(out.nonEmpty)
     assert(out.find(_._2 == 1L).get._1 === 10L)
@@ -126,12 +126,52 @@ class AnnSpec extends SparkSpec {
     // numCentroids=100 makes every vector a centroid; vec 10 (≈ e1)
     // sits in its own cell, which query 0 probes at nprobe=2 (its
     // second-nearest centroid after its own cell 0)
-    val out = Ann.ivfTopK(
+    val out = Ann.topK(
       embs((0L, e1, 0), (10L, e1close, 0), (11L, e2, 0), (12L, e3, 0)),
-      numQueries = 1, k = 2, numCentroids = 100, nprobe = 2)
+      numQueries = 1, k = 2, coarse = Ann.Coarse.Ivf(numCentroids = 100, nprobe = 2))
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect()
     assert(out.nonEmpty)
     assert(out.find(_._3 == 1L).get._2 === 10L)
+  }
+
+  /** `topK`'s rows as a sorted sequence, after checking the output
+    * contract: each (query, vector) pair once, ranks 1..n per query. */
+  private def topRows(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] = {
+    val rows = df.collect().toSeq
+    val pairs = rows.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id")))
+    assert(pairs.distinct.length === rows.length, "a (query, vector) pair came out twice")
+    rows.groupBy(_.getAs[Long]("query_id")).values.foreach { q =>
+      assert(q.map(_.getAs[Long]("rank")).sorted === (1L to q.length.toLong))
+    }
+    rows.sortBy(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")))
+  }
+
+  test("topK: IVF probing every cell returns flat's rows, float and int8 codecs") {
+    val emb = randomEmbeddings(400)
+    for (codec <- Seq(Ann.Codec.Float, Ann.Codec.Int8);
+         ivf <- Seq(Ann.Coarse.Ivf(numCentroids = 8, nprobe = 8),
+           Ann.Coarse.Ivf(numCentroids = 8, nprobe = 8, trainIters = 2, deterministic = true))) {
+      val flat = topRows(Ann.topK(emb, codec = codec))
+      assert(flat.length === 15)
+      assert(topRows(Ann.topK(emb, coarse = ivf, codec = codec)) === flat, s"$ivf x $codec")
+    }
+  }
+
+  test("topK: the float and int8 parameterizations return identical rows under any partitioning") {
+    val emb = randomEmbeddings(400)
+    val trained = Ann.Coarse.Ivf(trainIters = 3, deterministic = true)
+    for ((coarse, codec) <- Seq[(Ann.Coarse, Ann.Codec)](
+        (Ann.Coarse.Flat, Ann.Codec.Float), (Ann.Coarse.Lsh(), Ann.Codec.Float),
+        // 64 tables of 4 bits: near neighbours share many buckets, so
+        // the candidate join emits each of them several times
+        (Ann.Coarse.Lsh(tables = 64, bits = 4), Ann.Codec.Float),
+        (Ann.Coarse.Ivf(), Ann.Codec.Float), (trained, Ann.Codec.Float),
+        (Ann.Coarse.Flat, Ann.Codec.Int8), (Ann.Coarse.Ivf(), Ann.Codec.Int8))) {
+      def run(n: Int) = topRows(Ann.topK(emb.repartition(n), coarse = coarse, codec = codec))
+      val one = run(1)
+      assert(one.nonEmpty)
+      assert(run(7) === one, s"$coarse x $codec")
+    }
   }
 
   test("kmeansCentroids pulls seeds onto well-separated cluster means; trained IVF finds the nearest") {
@@ -150,8 +190,8 @@ class AnnSpec extends SparkSpec {
     assert(cents(0L).head > 0.9 && cents(0L)(2) < 0.1)
     assert(cents(1L)(2) > 0.9 && cents(1L).head < 0.1)
     // trained IVF: query 0 (in A) must rank another A member first
-    val top = Ann.ivfTopKTrained(df, numQueries = 1, k = 1,
-      numCentroids = 2, nprobe = 1, trainIters = 3)
+    val top = Ann.topK(df, numQueries = 1, k = 1,
+      coarse = Ann.Coarse.Ivf(numCentroids = 2, nprobe = 1, trainIters = 3))
       .select("query_id", "vec_id").as[(Long, Long)].collect()
     assert(top.length === 1 && top.head._2 % 2 === 0L,
       s"query 0's nearest must come from cluster A, got ${top.toSeq}")
@@ -164,7 +204,7 @@ class AnnSpec extends SparkSpec {
     // double rounding, so the trained top-k must agree on real data.
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     def run(det: Boolean) =
-      Ann.ivfTopKTrained(emb, deterministic = det)
+      Ann.topK(emb, coarse = Ann.Coarse.Ivf(trainIters = 3, deterministic = det))
         .select("query_id", "vec_id", "rank").as[(Long, Long, Long)]
         .collect().toSet
     assert(run(det = true) === run(det = false))
@@ -270,29 +310,6 @@ class AnnSpec extends SparkSpec {
     assert(r.getDouble(1) === 5.0)
   }
 
-  test("graft_srp_buckets sign cache keyed by dims: mixed-length vectors stay correct") {
-    GraftExtensions.register(spark)
-    // ONE expression instance evaluates consecutive rows of DIFFERENT
-    // dimension (single partition forces same instance) — the per-task
-    // hyperplane cache must rebuild on each dim change, not silently
-    // reuse the previous matrix
-    import spark.implicits._
-    val mixed = Seq(
-      (1, Seq(1.0, -2.0)),
-      (2, Seq(1.0, -2.0, 0.5, 3.0)),
-      (3, Seq(1.0, -2.0))) // back to 2 dims: second rebuild
-      .toDF("i", "v").coalesce(1)
-      .selectExpr("i", "graft_srp_buckets(v, 2, 8) AS b")
-      .orderBy("i").collect().map(_.getSeq[Long](1))
-    val fresh2 = spark.sql(
-      "SELECT graft_srp_buckets(array(1.0D, -2.0D), 2, 8) AS b").head().getSeq[Long](0)
-    val fresh4 = spark.sql(
-      "SELECT graft_srp_buckets(array(1.0D, -2.0D, 0.5D, 3.0D), 2, 8) AS b").head().getSeq[Long](0)
-    assert(mixed(0) === fresh2)
-    assert(mixed(1) === fresh4)
-    assert(mixed(2) === fresh2)
-  }
-
   test("graft_srp_buckets_md5 matches an independent hex-string sign reference") {
     GraftExtensions.register(spark)
     // Replayability contract (what the ann_lsh oracle relies on): the
@@ -322,7 +339,7 @@ class AnnSpec extends SparkSpec {
       assert(got.toSeq === refBuckets(v, 4, 8))
     }
     // identical vectors share every bucket (the recall guarantee the
-    // lshTopK spec uses) holds for the md5 family by determinism
+    // LSH top-k spec uses) holds for the md5 family by determinism
     val a = spark.sql("SELECT graft_srp_buckets_md5(array(1.0D, 2.0D), 3, 5) AS b")
       .head().getSeq[Long](0)
     val b = spark.sql("SELECT graft_srp_buckets_md5(array(1.0D, 2.0D), 3, 5) AS b")
@@ -384,13 +401,14 @@ class AnnSpec extends SparkSpec {
 
   test("ivfQuantizedTopK: cell probing bounds candidates, quantized dots score them exactly") {
     // numCentroids=2 -> centroids vec 0 (x-axis) and vec 1 (y-axis)
-    val out = Ann.ivfQuantizedTopK(embs(
+    val out = Ann.topK(embs(
       (0L, Seq(1f, 0f, 0f, 0f), 9),       // query+centroid, cell 0
       (1L, Seq(0f, 1f, 0f, 0f), 9),       // query+centroid, cell 1
       (2L, Seq(0.5f, 0f, 0f, 0f), 9),     // cell 0; quantizes to (127,0,0,0)
       (3L, Seq(0f, 0f, 0f, 0f), 9),       // zero vector -> excluded from scoring
       (4L, Seq(0f, 0.5f, 0.5f, 0f), 9)),  // cell 1; quantizes to (0,127,127,0)
-      numQueries = 2, k = 2, numCentroids = 2, nprobe = 1)
+      numQueries = 2, k = 2, coarse = Ann.Coarse.Ivf(numCentroids = 2, nprobe = 1),
+      codec = Ann.Codec.Int8)
       .select("query_id", "vec_id", "cosine_q", "rank")
       .as[(Long, Long, Double, Long)].collect().toSet
     // query 0 probes only cell 0: candidate 2 at quantized cos 1.0

@@ -48,9 +48,9 @@ class CrossValidationSpec extends SparkSpec {
       df.filter(col("rank") === 1).select("query_id", "vec_id")
         .as[(Long, Long)].collect().toMap
     val expected = (0L until 5L).map(q => q -> (q + 9000L)).toMap
-    assert(rank1(Ann.bruteForceTopK(corpus, numQueries = 5, k = 1)) === expected)
-    assert(rank1(Ann.lshTopK(corpus, numQueries = 5, k = 1)) === expected)
-    assert(rank1(Ann.ivfTopK(corpus, numQueries = 5, k = 1)) === expected)
+    assert(rank1(Ann.topK(corpus, numQueries = 5, k = 1)) === expected)
+    assert(rank1(Ann.topK(corpus, numQueries = 5, k = 1, coarse = Ann.Coarse.Lsh())) === expected)
+    assert(rank1(Ann.topK(corpus, numQueries = 5, k = 1, coarse = Ann.Coarse.Ivf())) === expected)
   }
 
   test("capped semantic pairs are a refinement of uncapped on the real corpus") {

@@ -43,7 +43,7 @@ object JobCountProbe {
         if (sys.env.contains("JOBPROBE_STAGES")) {
           val m = s.stageInfo.taskMetrics
           println(f"  STAGE ${s.stageInfo.stageId}%4d tasks ${s.stageInfo.numTasks}%4d " +
-            f"shufW ${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.2f MB " +
+            f"shufW ${m.shuffleWriteMetrics.bytesWritten}%9d B " +
             f"shufWrecs ${m.shuffleWriteMetrics.recordsWritten}%9d " +
             f"shufR ${m.shuffleReadMetrics.totalBytesRead / 1e6}%8.2f MB " +
             f"in ${m.inputMetrics.bytesRead / 1e6}%7.2f MB  ${s.stageInfo.name.take(60)}")
@@ -61,7 +61,7 @@ object JobCountProbe {
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(400) // let the async listener bus drain
       println(f"JOBPROBE $name%-34s ${sec}%6.3f s  jobs ${jobs.get()}%4d  stages ${stages.get()}%4d  " +
-        f"tasks ${tasks.sum()}%5d  input ${inputBytes.sum() / 1e6}%9.1f MB  shufW ${shuffleWrite.sum() / 1e6}%8.1f MB")
+        f"tasks ${tasks.sum()}%5d  input ${inputBytes.sum() / 1e6}%9.1f MB  shufW ${shuffleWrite.sum() / 1e3}%9.1f KB")
     }
     spark.stop()
   }

@@ -58,18 +58,18 @@ class PqSpec extends SparkSpec {
   }
 
   test("deterministic and combinable training agree on the top-k (same data, both modes)") {
-    val det = Pq.pqTopK(clustered(), numQueries = 3, k = 3, m = 2,
-      subDims = 4, ksub = 4, iters = 2, adcCand = 8, deterministic = true)
+    val det = Ann.topK(clustered(), numQueries = 3, k = 3, codec = Ann.Codec.Pq(m = 2,
+      subDims = 4, ksub = 4, iters = 2, adcCand = 8, deterministic = true))
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect().toSet
-    val comb = Pq.pqTopK(clustered(), numQueries = 3, k = 3, m = 2,
-      subDims = 4, ksub = 4, iters = 2, adcCand = 8, deterministic = false)
+    val comb = Ann.topK(clustered(), numQueries = 3, k = 3, codec = Ann.Codec.Pq(m = 2,
+      subDims = 4, ksub = 4, iters = 2, adcCand = 8, deterministic = false))
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect().toSet
     assert(det === comb)
   }
 
   test("pqTopK re-rank returns exact cosines: top hit for an even query is an even vector") {
-    val out = Pq.pqTopK(clustered(), numQueries = 2, k = 3, m = 2,
-      subDims = 4, ksub = 4, iters = 2, adcCand = 8, deterministic = true)
+    val out = Ann.topK(clustered(), numQueries = 2, k = 3, codec = Ann.Codec.Pq(m = 2,
+      subDims = 4, ksub = 4, iters = 2, adcCand = 8, deterministic = true))
       .select("query_id", "vec_id", "cosine", "rank")
       .as[(Long, Long, Double, Long)].collect()
     assert(out.length === 6)
@@ -87,8 +87,8 @@ class PqSpec extends SparkSpec {
     // after 0 iters (n <= ksub), ADC degenerates to exact L2 between
     // subvectors — adist must equal the true squared L2 distance.
     val df = clustered(8)
-    val out = Pq.pqTopK(df, numQueries = 1, k = 3, m = 2, subDims = 4,
-      ksub = 8, iters = 0, adcCand = 7, deterministic = true)
+    val out = Ann.topK(df, numQueries = 1, k = 3, codec = Ann.Codec.Pq(m = 2, subDims = 4,
+      ksub = 8, iters = 0, adcCand = 7, deterministic = true))
       .select("vec_id", "adist").as[(Long, Double)].collect().toMap
     val e = df.select(col("vec_id"), Ann.asDouble(col("embedding")).as("emb"))
     val q = e.filter(col("vec_id") === 0).select(col("emb").as("qemb"))
@@ -104,14 +104,42 @@ class PqSpec extends SparkSpec {
   test("ivfPqTopK matches pqTopK's hit set when every cell is probed") {
     // nprobe = numCentroids means coarse pruning removes nothing —
     // the composed index must return the same (query, vec) hits.
-    val flat = Pq.pqTopK(clustered(), numQueries = 2, k = 3, m = 2,
-      subDims = 4, ksub = 4, iters = 2, adcCand = 40, deterministic = true)
+    val flat = Ann.topK(clustered(), numQueries = 2, k = 3, codec = Ann.Codec.Pq(m = 2,
+      subDims = 4, ksub = 4, iters = 2, adcCand = 40, deterministic = true))
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val ivf = Pq.ivfPqTopK(clustered(), numQueries = 2, k = 3,
-      numCentroids = 4, nprobe = 4, trainIters = 1, m = 2, subDims = 4,
-      ksub = 4, iters = 2, adcCand = 40, deterministic = true)
+    val ivf = Ann.topK(clustered(), numQueries = 2, k = 3,
+      coarse = Ann.Coarse.Ivf(numCentroids = 4, nprobe = 4, trainIters = 1, deterministic = true),
+      codec = Ann.Codec.Pq(m = 2, subDims = 4, ksub = 4, iters = 2, adcCand = 40,
+        deterministic = true))
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     assert(flat === ivf)
+  }
+
+  test("IVF-PQ probing every cell returns flat PQ's rows") {
+    // every vector is a candidate either way and the codes are the
+    // same raw-vector codes, so ADC survivors and re-rank coincide
+    val embs = randomEmbeddings(400)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
+    val pq = Ann.Codec.Pq(deterministic = true)
+    val flat = rows(Ann.topK(embs, codec = pq))
+    assert(flat.size === 15)
+    assert(rows(Ann.topK(embs, coarse = Ann.Coarse.Ivf(numCentroids = 8, nprobe = 8,
+      trainIters = 2, deterministic = true), codec = pq)) === flat)
+  }
+
+  test("the PQ parameterizations return identical rows under any partitioning") {
+    val embs = randomEmbeddings(400)
+    val ivf = Ann.Coarse.Ivf(trainIters = 3, deterministic = true)
+    for ((coarse, codec) <- Seq[(Ann.Coarse, Ann.Codec)](
+        (Ann.Coarse.Flat, Ann.Codec.Pq(deterministic = true)),
+        (ivf, Ann.Codec.Pq(deterministic = true)),
+        (ivf, Ann.Codec.Pq(residual = true, deterministic = true)))) {
+      def run(n: Int) = Ann.topK(embs.repartition(n), coarse = coarse, codec = codec)
+        .collect().sortBy(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"))).toSeq
+      val one = run(1)
+      assert(one.length === 15)
+      assert(run(7) === one, s"$coarse x $codec")
+    }
   }
 
   test("pq recall on the gate corpus: ADC top-64 + re-rank recovers the exact top-3") {
@@ -120,8 +148,8 @@ class PqSpec extends SparkSpec {
     // pins; a codes/ADC regression drops hits below exact_k.
     val embs = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val recall = Ann.recallAtK(
-      Pq.pqTopK(embs, deterministic = true),
-      Ann.bruteForceTopK(embs))
+      Ann.topK(embs, codec = Ann.Codec.Pq(deterministic = true)),
+      Ann.topK(embs))
       .select("query_id", "exact_k", "hits").as[(Long, Long, Long)].collect()
     assert(recall.length === 5)
     val total = recall.map(_._2).sum
@@ -136,11 +164,12 @@ class PqSpec extends SparkSpec {
     // probing every cell with a full rerank budget must then return
     // the brute-force top-k
     val df = clustered(8)
-    val out = Pq.ivfPqResidualTopK(df, numQueries = 2, k = 3,
-      numCentroids = 4, nprobe = 4, trainIters = 1, m = 2, subDims = 4,
-      ksub = 8, iters = 0, adcCand = 8, deterministic = true)
+    val out = Ann.topK(df, numQueries = 2, k = 3,
+      coarse = Ann.Coarse.Ivf(numCentroids = 4, nprobe = 4, trainIters = 1, deterministic = true),
+      codec = Ann.Codec.Pq(m = 2, subDims = 4, ksub = 8, iters = 0, adcCand = 8,
+        residual = true, deterministic = true))
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect().toSet
-    val exact = Ann.bruteForceTopK(df, numQueries = 2, k = 3)
+    val exact = Ann.topK(df, numQueries = 2, k = 3)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect().toSet
     assert(out === exact)
   }
@@ -148,8 +177,9 @@ class PqSpec extends SparkSpec {
   test("residual IVF-PQ recall on the gate corpus stays above the family floor") {
     val embs = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val recall = Ann.recallAtK(
-      Pq.ivfPqResidualTopK(embs, deterministic = true),
-      Ann.bruteForceTopK(embs))
+      Ann.topK(embs, coarse = Ann.Coarse.Ivf(trainIters = 3, deterministic = true),
+        codec = Ann.Codec.Pq(residual = true, deterministic = true)),
+      Ann.topK(embs))
       .select("exact_k", "hits").as[(Long, Long)].collect()
     val (total, hit) = (recall.map(_._1).sum, recall.map(_._2).sum)
     assert(hit >= (total * 2) / 3,

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.graft.BusDrain
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
@@ -23,6 +23,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override protected def afterAll(): Unit =
     try super.afterAll() finally temp.delete()
+
+  /** `n` seeded Gaussian `dims`-float embeddings in the embeddings
+    * table's shape `(vec_id, embedding, label)`, vec_ids 0..n-1. */
+  protected def randomEmbeddings(n: Int, dims: Int = 64, seed: Long = 7L): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    spark.createDataFrame((0 until n).map(i =>
+      (i.toLong, Seq.fill(dims)(rnd.nextGaussian().toFloat), 0)))
+      .toDF("vec_id", "embedding", "label")
+  }
 
   /** `f`'s result and the number of SQL executions it ran (successful
     * or failed), counted by a QueryExecutionListener once the listener
