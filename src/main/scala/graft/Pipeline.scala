@@ -666,16 +666,15 @@ object Pipeline {
       survivors, deduped, contaminated, accepted, broadcastIdFrames)
   }
 
-  /** [[acceptPreviewAudit]]'s per-(session, stateKey) steady-caller
-    * state — everything that is a pure function of the input and NOT
-    * part of the decision being priced: the planted delta frames
+  /** [[acceptPreviewAudit]]'s steady-caller state per input —
+    * everything that is a pure function of the input and NOT part of
+    * the decision being priced: the planted delta frames
     * (checkpointed — the synthetic slice construction is audit
     * scaffolding, not decision work), the four bloom probes and the
     * collected charlm model bytes (the streaming preview sink's
     * re-read-only-on-change discipline, applied here because the
-    * audit's tables are immutable for a given key). Values are
-    * identical with or without a hit. Bounded retention:
-    * [[SessionCache]], capped at 4 entries. */
+    * audit's tables are immutable for a given input). Values are
+    * identical with or without a hit. */
   private final case class AuditState(
       delta: org.apache.spark.sql.DataFrame,
       deltaVecs: org.apache.spark.sql.DataFrame,
@@ -683,7 +682,7 @@ object Pipeline {
       probes: Map[String, Option[org.apache.spark.sql.Column =>
         org.apache.spark.sql.Column]],
       charlmBytes: Option[Array[Byte]])
-  private val auditStateCache = new SessionCache[String, AuditState](cap = 4)
+  private val auditMemo = new InputMemo[AuditState](cap = 4)
 
   /** The daily accept decision as a GATE ROW (SURVEY §2 row 37m):
     * split the documents table into a standing corpus and a delta by
@@ -724,15 +723,16 @@ object Pipeline {
     * certified bound + margin, and its cost is priced by its own
     * seven gate rows.
     *
-    * `stateKey`: identifies the input (the sf dir). When set and the
-    * session already holds this audit's bootstrap stamped with the
-    * same key, the corpus-side build (indexes, blooms, charlm
-    * counts, Lloyd training) is REUSED and the row prices the
-    * decision — the r18-asked trim. Values are identical either way;
-    * the first call of any session still builds. */
+    * The corpus-side bootstrap (indexes, blooms, charlm counts,
+    * Lloyd training) and the planted frames are memoized
+    * ([[InputMemo]]) on the session and the fingerprints of both
+    * inputs' plans and files; a hit also needs the checkpointed delta
+    * frames to still read and every audit table to still hold every
+    * file the bootstrap wrote. A hit prices the decision — the r18
+    * trim; any other input (a rewritten file, an in-memory frame)
+    * bootstraps afresh. Values are identical either way. */
   def acceptPreviewAudit(documents: org.apache.spark.sql.DataFrame,
-                         embeddings: org.apache.spark.sql.DataFrame,
-                         stateKey: Option[String] = None): org.apache.spark.sql.DataFrame = {
+                         embeddings: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = documents.sparkSession
     val post = "graft_audit_apv_post"; val hash = "graft_audit_apv_hash"
     val chunk = "graft_audit_apv_chunk"; val sem = "graft_audit_apv_sem"
@@ -740,46 +740,21 @@ object Pipeline {
     // PERSISTED bootstrap (r18 VERDICT #3): the audit's corpus-side
     // state — postings + hash + chunk indexes with blooms, the
     // corpus-trained charlm counts, the deterministic-Lloyd semantic
-    // index — is a pure function of `stateKey`'s input, so a repeat
-    // call in the SAME session (the bench's warm-up → timed pair, a
-    // stream of spec assertions) reuses it and prices the DECISION,
-    // exactly the semantic_probe_pq_persisted seam. The key is
-    // stamped on the postings table and checked before reuse: a
-    // different input (another SF dir) rebuilds from scratch, and a
-    // fresh session always rebuilds (in-memory catalog — the stamp
-    // dies with the session, and dropIncrementalState sweeps any
-    // stale warehouse files). Verdict values are unchanged by
-    // construction: the reused tables are byte-identical to what
-    // this call would have written.
-    val reuse = stateKey.exists { k =>
-      spark.catalog.tableExists(post) &&
-        (try spark.sessionState.catalog.getTableMetadata(
-            spark.sessionState.sqlParser.parseTableIdentifier(post))
-          .properties.get("graft.audit_state").contains(k)
-        catch { case _: Exception => false })
-    }
-    // r20: a validated-reuse call also reuses the CACHED per-key
-    // state (planted frames, bloom probes, model bytes) so the timed
-    // row prices [[decideDelta]] alone; a stamp without a cache entry
-    // (never the bench path) rebuilds the frames but not the tables.
-    // The cached frames are non-reliable localCheckpoints — on a
-    // cluster an executor loss between calls invalidates their
-    // blocks, so a hit is VALIDATED with one tiny read and falls
-    // back to a frame rebuild on failure (the frame-side twin of the
-    // stamp-after-complete-build rule; local-mode blocks can't die,
-    // so the probe costs two ~ms jobs there)
-    val st = stateKey.flatMap(k =>
-        if (reuse) auditStateCache.get(spark, k) else None)
-      .filter(s =>
-        try { s.delta.take(1); s.deltaVecs.take(1); true }
-        catch { case _: Exception => false })
-      .getOrElse {
-    // audit-owned fixed names: the shared harness cleanup is safe
-    // here by construction (a crashed prior audit's leftovers,
-    // nothing else)
-    if (!reuse)
-      dropIncrementalState(spark, post, hash, chunkTable = Some(chunk),
-        semanticTable = Some(sem), charlmTable = Some(charlm))
+    // index — and the planted frames are pure functions of the input,
+    // so a repeat call on the same input in the SAME session (the
+    // bench's warm-up → timed pair, a stream of spec assertions)
+    // reuses them and prices [[decideDelta]] alone, exactly the
+    // semantic_probe_pq_persisted seam. Verdict values are unchanged
+    // by construction: the reused tables are byte-identical to what
+    // this call would have written. The tables are the audit's own
+    // fixed names, so a miss first drops a crashed prior audit's
+    // leftovers.
+    val owned = Seq(post, hash, chunk).flatMap(t => Seq(t, t + "__bloom")) ++
+      Seq(post + "__ids__bloom", sem, sem + "__centroids", charlm)
+    val st = auditMemo((), Seq(documents, embeddings), owned)(
+        s => Seq(s.delta, s.deltaVecs)) {
+    dropIncrementalState(spark, post, hash, chunkTable = Some(chunk),
+      semanticTable = Some(sem), charlmTable = Some(charlm))
     // deterministic 50% subset (an md5 position INDEPENDENT of the
     // split/slice rules below): the audit value-checks machinery, not
     // corpus statistics — a half corpus exercises every branch at
@@ -867,48 +842,37 @@ object Pipeline {
       .drop("__delta")
     // 16 buckets for the audit's own tables: the gate row prices the
     // DECISION, not a 64-wide production layout's file overhead
-    if (!reuse) {
-      bootstrapIncremental(corpus, post, hash, chunkTable = Some(chunk),
-        charlmTable = Some(charlm), buckets = 16)
-      // semantic index over the corpus docs that HAVE embeddings
-      // (vec_id ≡ doc_id in the test tables; coverage is partial at
-      // sf0.1 — production reality). Deterministic training so the
-      // oracle replays the quantizer bit-for-bit.
-      val corpusVecs = embeddings.select(col("vec_id").as("doc_id"), col("embedding"))
-        .join(broadcast(corpus.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-      // ONE Lloyd round (r18, gate-cost trim): the paraphrase slice
-      // carries the SOURCE's embedding verbatim, so its cell equals its
-      // source's under ANY shared centroid set — every verdict is
-      // invariant to training depth, and one round still value-checks
-      // the Lloyd machinery end to end (the 3-round depth stays priced
-      // by ann_ivf_trained / dedup_semantic_trained / semantic_probe's
-      // own oracles). The oracle below replays iters = 1 to match.
-      graft.operators.Ann.writeSemanticIndex(corpusVecs, sem, buckets = 16,
-        trainIters = 1, deterministic = true)
-      // stamp LAST — a crash anywhere above leaves no stamp, so the
-      // next call rebuilds instead of trusting half-built state.
-      // Key single-quotes SQL-escaped (keys are caller-supplied
-      // paths); the stored property value round-trips to the raw
-      // key, so the reuse compare above needs no unescape.
-      stateKey.foreach(k => spark.sql(
-        s"ALTER TABLE $post SET TBLPROPERTIES ('graft.audit_state' = '${k.replace("'", "''")}')"))
-    }
+    bootstrapIncremental(corpus, post, hash, chunkTable = Some(chunk),
+      charlmTable = Some(charlm), buckets = 16)
+    // semantic index over the corpus docs that HAVE embeddings
+    // (vec_id ≡ doc_id in the test tables; coverage is partial at
+    // sf0.1 — production reality). Deterministic training so the
+    // oracle replays the quantizer bit-for-bit.
+    val corpusVecs = embeddings.select(col("vec_id").as("doc_id"), col("embedding"))
+      .join(broadcast(corpus.select(col("doc_id"))), Seq("doc_id"), "left_semi")
+    // ONE Lloyd round (r18, gate-cost trim): the paraphrase slice
+    // carries the SOURCE's embedding verbatim, so its cell equals its
+    // source's under ANY shared centroid set — every verdict is
+    // invariant to training depth, and one round still value-checks
+    // the Lloyd machinery end to end (the 3-round depth stays priced
+    // by ann_ivf_trained / dedup_semantic_trained / semantic_probe's
+    // own oracles). The oracle below replays iters = 1 to match.
+    graft.operators.Ann.writeSemanticIndex(corpusVecs, sem, buckets = 16,
+      trainIters = 1, deterministic = true)
     // the paraphrase slice's delta vectors: the SOURCE's embedding
     // under the shifted id
     val deltaVecs = embeddings
       .select((col("vec_id") + lit(30000000L)).as("doc_id"), col("embedding"))
       .join(broadcast(paraphrased.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-    // steady-caller caches keyed on this call's immutable state: the
-    // four bloom probes and the collected charlm model bytes (the
-    // streaming sink discipline); delta/deltaVecs checkpoint so a
-    // reuse call never re-derives the synthetic slices
+    // memoized with the tables they read: the four bloom probes and
+    // the collected charlm model bytes (the streaming sink
+    // discipline); delta/deltaVecs checkpoint so a hit never
+    // re-derives the synthetic slices
     val probes = Dedup.probeMapFor(spark, post, hash, Some(chunk))
     val modelBytes = TextOps.charlmCollectModel(
       spark.table(charlm).groupBy(col("tri")).agg(sum(col("n")).as("c3")))
-    val built = AuditState(delta.localCheckpoint(), deltaVecs.localCheckpoint(),
+    AuditState(delta.localCheckpoint(), deltaVecs.localCheckpoint(),
       holdoutSrc.select(col("doc_id"), col("text")), probes, modelBytes)
-    stateKey.foreach(k => auditStateCache.put(spark, k, built))
-    built
       }
     decideDelta(spark, st.delta, post, hash,
         holdout = Some(st.holdout),

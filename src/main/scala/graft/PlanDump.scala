@@ -6,7 +6,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Writes PLANS.md: AQE-final formatted physical plans of the
   * representative queries, as checked-in evidence of the plan audit
-  * (pushdown, broadcast shape, codegen spans, shuffle counts). */
+  * (pushdown, broadcast shape, codegen spans, shuffle counts).
+  *
+  * Usage: `runMain graft.PlanDump [row ...]`. With no arguments it
+  * rewrites the whole file; with row names it regenerates only those
+  * sections and splices each in place of its old section, leaving the
+  * rest of the file as it was. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
@@ -109,25 +114,38 @@ object PlanDump {
       "curriculum_mix_by_source" -> "per-feed curriculum mix: bootstrap-trained bounds folded map-side as a (k-1)-value literal, ONE sources x k aggregate, zero joins at any corpus size",
       "bloom_filter_audit_merge_batched" -> "batched daily merge contract: the audit aggregate probes BOTH key spaces through the production dispatch after ONE mergeHashBlooms call — the plan shows the broadcast shard-probe per row, no per-table merge pipelines",
       "accept_preview_audit" -> "the armed accept decision: every gate stage checkpointed delta-sized (plan leaves are RDD scans), verdict attribution ALL-BROADCAST flag joins over the input ids — no sort-merge join anywhere; the corpus-side probes (id bloom, exact bypass, banded minhash, chunk, quantizer cells) ran inside the checkpointed stages behind their bloom prefilters")
-    val out = new StringBuilder
-    out ++= "# PLANS — AQE-final formatted physical plans (sf0.01)\n\n"
-    out ++= "Generated by `sbt \"runMain graft.PlanDump\"`. Regenerate after plan-affecting changes.\n"
-    picks.foreach { case (name, note) =>
+    val notes = picks.toMap
+    val unknown = args.filterNot(notes.contains)
+    require(unknown.isEmpty, s"not a PlanDump row: ${unknown.mkString(", ")}")
+    def section(name: String): String = {
       val df = SparkEntry.queries(name)(spark, dir)
       df.collect() // drive AQE to the final plan
-      out ++= s"\n## $name — $note\n\n```\n"
       // elide driver-built binary plan literals (charlm model bytes —
       // KBs of hex that would bury the plan shape the dump exists
       // for) BEFORE truncating: a truncate-first would let one large
       // literal swallow every plan node after it
-      out ++= "0x[0-9A-F]{64,}".r.replaceAllIn(
+      val plan = "0x[0-9A-F]{64,}".r.replaceAllIn(
         df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode),
         m => s"0x<${(m.matched.length - 2) / 2} bytes elided>").take(8000)
-      out ++= "\n```\n"
+      s"\n## $name — ${notes(name)}\n\n```\n$plan\n```\n"
     }
-    Files.writeString(Paths.get("PLANS.md"), out.toString)
-    println(s"wrote PLANS.md (${out.length} chars)")
+    val path = Paths.get("PLANS.md")
+    val text =
+      if (args.isEmpty)
+        "# PLANS — AQE-final formatted physical plans (sf0.01)\n\n" +
+          "Generated by `sbt \"runMain graft.PlanDump\"`. Regenerate after plan-affecting changes.\n" +
+          picks.map(p => section(p._1)).mkString
+      else args.foldLeft(Files.readString(path)) { (old, name) =>
+        // a section runs from its heading to the next one (or the end)
+        val start = old.indexOf(s"\n## $name — ")
+        require(start >= 0, s"PLANS.md has no $name section; run with no arguments to rewrite it")
+        val next = old.indexOf("\n## ", start + 1)
+        old.substring(0, start) + section(name) + (if (next < 0) "" else old.substring(next))
+      }
+    Files.writeString(path, text)
+    println(s"wrote PLANS.md (${text.length} chars; " +
+      s"${if (args.isEmpty) "all sections" else args.mkString(", ")})")
     spark.stop()
   }
 }

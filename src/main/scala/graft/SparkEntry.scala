@@ -1204,12 +1204,13 @@ object SparkEntry {
       // exact-side (distinct md5 text hashes; distinct CDC chunk
       // hashes), so a merge that loses an arm's day keys fails the
       // boolean and a chunking/hashing drift fails the count
-      // stateKey = the sf dir (r20): a repeat call in one session
-      // reuses the deterministic corpus-side tables/blooms and prices
-      // the batched merge + append + audit — the acceptPreviewAudit
-      // seam; a fresh session or another SF rebuilds from scratch
+      // a repeat call in one session on the same documents file (plan
+      // and (path, size, mtime) fingerprint, tables still holding the
+      // bootstrap's files) reuses the corpus-side tables/blooms and
+      // prices the batched merge + append + audit; a fresh session or
+      // a changed file rebuilds from scratch
       (s: SparkSession, d: String) =>
-        Corpus.bloomFilterAuditMergeBatched(docs(s, d), stateKey = Some(d)),
+        Corpus.bloomFilterAuditMergeBatched(docs(s, d)),
       Some(s"""WITH $cdcChunksCtes
               |SELECT 'chunk' AS arm, CAST(COUNT(DISTINCT h) AS BIGINT) AS n_keys,
               |  TRUE AS no_false_negatives, TRUE AS fp_ok FROM uch
@@ -1243,13 +1244,12 @@ object SparkEntry {
       // decontamination — per-verdict counts value-check every gate.
       // Bloom prefilters run in the engine and are result-neutral by
       // the no-false-negatives contract the bloom audit rows pin.
-      // stateKey = the sf dir: a repeat run in the same session (the
-      // bench's warm-up → timed pair) reuses the persisted bootstrap
-      // and prices the DECISION — the r18 trim; a different dir or a
-      // fresh session rebuilds
+      // a repeat run in the same session on the same two files (the
+      // bench's warm-up → timed pair) reuses the bootstrap memoized on
+      // their plan and file fingerprints and prices the DECISION — the
+      // r18 trim; a changed file or a fresh session rebuilds
       (s: SparkSession, d: String) =>
-        graft.Pipeline.acceptPreviewAudit(docs(s, d), Tables.embeddings(s, d),
-          stateKey = Some(d)),
+        graft.Pipeline.acceptPreviewAudit(docs(s, d), Tables.embeddings(s, d)),
       Some(s"""WITH RECURSIVE
               |fl AS (SELECT *, substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '14' AS is_delta
               |       FROM documents
@@ -2016,13 +2016,13 @@ object SparkEntry {
       // tolerance; a false opq_wins is the documented negative
       // result (this corpus is already contiguity-balanced). The
       // oracle replays variances, ranking, permutation and both
-      // full training chains. stateKey = the sf dir: a repeat call in
-      // one session reuses the two trained codebook sets (pure
-      // functions of the input) so the bench's timed runs price both
-      // encodings + the win count, not the re-training (r19 VERDICT
-      // #5 — the acceptPreviewAudit seam)
+      // full training chains. A repeat call in one session on the
+      // same embeddings file reuses the two trained codebook sets
+      // (pure functions of the input, memoized on its plan and file
+      // fingerprint) so the bench's timed runs price both encodings +
+      // the win count, not the re-training (r19 VERDICT #5)
       (s: SparkSession, d: String) => Pq.opqGain(
-        Tables.embeddings(s, d), deterministic = true, stateKey = Some(d)),
+        Tables.embeddings(s, d), deterministic = true),
       Some(OracleSql.opqGainSql())),
 
     ("ann_quantized",
@@ -2924,15 +2924,16 @@ object SparkEntry {
       (s: SparkSession, d: String) => {
         // fresh-session stale warehouse locations are swept inside
         // writeSemanticIndexPq itself (its crash-consistency block).
-        // Train ONCE per (session, sf dir) via the stamp seam (r20):
-        // repeat calls price the probe — the production read path —
-        // exactly what this row's own description promises
+        // Train ONCE per session and input (the corpus slice's plan
+        // and file fingerprint, tables still holding the build's
+        // files): repeat calls price the probe — the production read
+        // path — exactly what this row's own description promises
         val flagged = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
           (substring(md5(col("vec_id").cast("string")), 1, 4) < "0ccd").as("is_delta"))
         Pq.writeSemanticIndexPqOnce(
           flagged.filter(!col("is_delta"))
             .select(col("vec_id").as("doc_id"), col("embedding")),
-          "graft_reg_sem_pq", stateKey = d)
+          "graft_reg_sem_pq")
         Pq.incrementalSemanticMatchesPq(
           flagged.filter(col("is_delta"))
             .select(col("vec_id").as("doc_id"), col("embedding")),
@@ -2959,7 +2960,7 @@ object SparkEntry {
         Pq.writeSemanticIndexPqOnce(
           flagged.filter(!col("is_delta"))
             .select(col("vec_id").as("doc_id"), col("embedding")),
-          "graft_reg_sem_pq_tight", stateKey = d)
+          "graft_reg_sem_pq_tight")
         Pq.incrementalSemanticMatchesPq(
           flagged.filter(col("is_delta"))
             .select(col("vec_id").as("doc_id"), col("embedding")),

@@ -249,36 +249,27 @@ object Pq {
   }
 
   /** Train-once seam over [[writeSemanticIndexPq]] for the PERSISTED
-    * registry rows (r20, the acceptPreviewAudit stamp pattern):
-    * rebuild only when `table` is missing or stamped with a different
-    * input key. The stamp lands AFTER a complete build, so a crash
-    * anywhere inside the build leaves no stamp and the next call
-    * rebuilds instead of trusting half-built state; a fresh session
-    * always rebuilds (in-memory catalog). Repeat calls in one session
-    * — the bench's warm-up → timed pair — then price the PROBE, which
-    * is the production read path (`runIncremental` never retrains
-    * codebooks on an ordinary day). Values identical either way:
-    * deterministic training writes byte-identical tables.
+    * registry rows: the build runs only when its [[graft.InputMemo]] misses —
+    * keyed on the session, `(table, deterministic)` and the
+    * fingerprint of `vectors`' plan and files, and a hit only while
+    * the three tables still hold every file the build wrote, so
+    * another writer's rewrite, a rewritten input file or a fresh
+    * session rebuilds. Repeat calls in one session — the bench's
+    * warm-up → timed pair — then price the PROBE, which is the
+    * production read path (`runIncremental` never retrains codebooks
+    * on an ordinary day). Values identical either way: deterministic
+    * training writes byte-identical tables.
     *
     * NOT for production writers: the daily drift retrain MUST rewrite
-    * regardless of key — it calls [[writeSemanticIndexPq]] directly. */
-  def writeSemanticIndexPqOnce(vectors: DataFrame, table: String, stateKey: String,
-                               deterministic: Boolean = true): Unit = {
-    val spark = vectors.sparkSession
-    val reuse = spark.catalog.tableExists(table) &&
-      (try spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        .properties.get("graft.trained_state").contains(stateKey)
-      catch { case _: Exception => false })
-    if (!reuse) {
+    * regardless — it calls [[writeSemanticIndexPq]] directly. */
+  def writeSemanticIndexPqOnce(vectors: DataFrame, table: String,
+                               deterministic: Boolean = true): Unit =
+    pqOnceMemo((table, deterministic), Seq(vectors),
+        owned = Seq(table, table + "__centroids", table + "__codebooks"))(_ => Nil) {
       writeSemanticIndexPq(vectors, table, deterministic = deterministic)
-      // key single-quotes SQL-escaped (keys are caller-supplied
-      // paths); the stored value round-trips to the raw key, so the
-      // reuse compare above needs no unescape
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-        s"('graft.trained_state' = '${stateKey.replace("'", "''")}')")
     }
-  }
+
+  private val pqOnceMemo = new graft.InputMemo[Unit](cap = 8)
 
   /** Train + persist the PQ-compressed cross-run semantic index — the
     * production form of what [[semanticProbePq]] proves as a
@@ -566,15 +557,9 @@ object Pq {
     posToDim
   }
 
-  /** [[opqGain]]'s per-(session, stateKey, hyperparams) trained-state
-    * cache: the balanced-variance permutation + both checkpointed
-    * codebook sets, in a [[graft.SessionCache]] capped at 8 entries.
-    * A hit is validated with one tiny read of each m-row codebook
-    * frame (non-reliable checkpoints — a lost executor invalidates
-    * them) and rebuilds on failure. */
-  private val opqCbCache =
-    new graft.SessionCache[(String, Int, Int, Int, Int, Boolean),
-      (Array[Int], DataFrame, DataFrame)](cap = 8)
+  /** [[opqGain]]'s trained state per input and hyperparameters: the
+    * balanced-variance permutation + both checkpointed codebook sets. */
+  private val opqMemo = new graft.InputMemo[(Array[Int], DataFrame, DataFrame)](cap = 8)
 
   /** The OPQ GAIN REPORT — does the balanced-variance permutation
     * actually encode THIS corpus better? Train codebooks twice
@@ -589,37 +574,33 @@ object Pq {
     * already contiguity-balanced, keep identity layout.
     * [[subspaceCoherence]] answers the covariance half of the
     * rotate-before-PQ question; this row answers the variance half
-    * with the permutation actually applied. */
+    * with the permutation actually applied.
+    *
+    * The trained state is memoized ([[graft.InputMemo]]) on the
+    * session, the hyperparameters and the fingerprint of
+    * `embeddings`' plan and files; a hit also needs both checkpointed
+    * codebook frames to still read. Any other input — a filtered
+    * frame, a rewritten file, an in-memory frame — trains afresh. */
   def opqGain(embeddings: DataFrame, m: Int = 8, subDims: Int = 8,
               ksub: Int = 16, iters: Int = 2,
-              deterministic: Boolean = false,
-              stateKey: Option[String] = None): DataFrame = {
+              deterministic: Boolean = false): DataFrame = {
     graft.GraftExtensions.register(embeddings.sparkSession)
     val e = embCol(embeddings)
     def permute(posToDim: Array[Int]) = e.select(col("vec_id"),
       transform(lit(posToDim), d => element_at(col("emb"), d)).as("emb"))
     // The permutation ranking and BOTH training chains are pure
-    // functions of the input — with `stateKey` set they cache per
-    // (session, key, hyperparams) so a repeat call in one session
-    // (the bench's warm-up → timed pair) prices the DECISION — both
-    // full-corpus encodings + the win count — not the re-training
-    // (r19 VERDICT #5, the acceptPreviewAudit seam). trainCodebooks
-    // returns a localCheckpointed m-row frame, safely reusable;
-    // values identical either way (training is deterministic given
-    // the flag, and the oracle replays both chains in full).
-    val spark = embeddings.sparkSession
-    val key = stateKey.map(k => (k, m, subDims, ksub, iters, deterministic))
-    val (posToDim, cbIdent, cbPerm) = key.flatMap(opqCbCache.get(spark, _))
-      .filter { case (_, ci, cp) =>
-        try { ci.take(1); cp.take(1); true } catch { case _: Exception => false }
-      }
-      .getOrElse {
+    // functions of the input, so they are memoized on its fingerprint:
+    // a repeat call on the same files (the bench's warm-up → timed
+    // pair) prices the DECISION — both full-corpus encodings + the
+    // win count — not the re-training. Values identical either way
+    // (training is deterministic given the flag, and the oracle
+    // replays both chains in full).
+    val (posToDim, cbIdent, cbPerm) =
+      opqMemo((m, subDims, ksub, iters, deterministic), Seq(embeddings))(
+          t => Seq(t._2, t._3)) {
         val p2d = opqPosToDim(embeddings, m, subDims)
-        val trained = (p2d,
-          trainCodebooks(e, m, subDims, ksub, iters, deterministic),
+        (p2d, trainCodebooks(e, m, subDims, ksub, iters, deterministic),
           trainCodebooks(permute(p2d), m, subDims, ksub, iters, deterministic))
-        key.foreach(opqCbCache.put(spark, _, trained))
-        trained
       }
     val pe = permute(posToDim)
     def cbRows(cb: DataFrame) = cb.select(col("sub"), explode(col("cents")).as("c"))

@@ -691,7 +691,7 @@ object Sinks {
     * `absent`), taken right after refreshing each table's relation
     * cache. The body needs no refresh of its own, and whatever it
     * derives from a table's contents keys on that listing
-    * ([[FileSetMemo]]) — a change after the listing reads as an
+    * ([[graft.InputMemo]]) — a change after the listing reads as an
     * unstable bracket and re-runs the body against the new one.
     * Bodies re-run whole; every guard writes its batch directory
     * idempotently, so a re-run converges. */
@@ -722,13 +722,8 @@ object Sinks {
       try recoverTableSwap(spark, t)
       catch { case _: Exception => () } // lost a heal race — retry decides
     }
-    def listSig(): Map[String, String] = tables.map { t =>
-      if (!spark.catalog.tableExists(t)) t -> "absent"
-      else {
-        spark.catalog.refreshTable(t)
-        t -> spark.table(t).inputFiles.sorted.mkString(",")
-      }
-    }.toMap
+    def listSig(): Map[String, String] = tables.map(t =>
+      t -> graft.InputMemo.tableFiles(spark, t).fold("absent")(_.mkString(","))).toMap
     def attempt(delayMs: Long): Unit = {
       val unstable: Set[String] =
         try {
@@ -813,28 +808,11 @@ object Sinks {
   /** A bloom probe as the dedup arms take it; `None` = no bloom kept. */
   private type BloomProbe = Option[Column => Column]
 
-  /** A per-query memo of values derived from watched tables: the
-    * value for a table is rebuilt only when that table's file set in
-    * the bracket's listing differs from the one it was built against.
-    * Any merge, rebuild or append lands new files, so the key changes
-    * exactly when the value can. A query's triggers run one at a
-    * time, so the memo takes no lock. */
-  private final class FileSetMemo[V] {
-    private var built = Map.empty[String, (String, V)]
-    def apply(listing: Map[String, String], table: String)(build: => V): V =
-      built.get(table).collect { case (sig, v) if sig == listing(table) => v }
-        .getOrElse {
-          val v = build
-          built += table -> (listing(table) -> v)
-          v
-        }
-  }
-
   /** `table`'s bloom probe, rebuilt only when its `__bloom` table's
     * file set changed. */
-  private def memoProbe(probes: FileSetMemo[BloomProbe], spark: SparkSession,
+  private def memoProbe(probes: graft.InputMemo[BloomProbe], spark: SparkSession,
                         listing: Map[String, String], table: String): BloomProbe =
-    probes(listing, table + "__bloom")(graft.operators.Dedup.bloomProbeFor(spark, table))
+    probes(spark, table + "__bloom", listing)(graft.operators.Dedup.bloomProbeFor(spark, table))
 
   /** The one body of every streaming guard sink: per micro-batch,
     * inside [[retryAcrossTableSwap]] over the `watched` tables, run
@@ -869,11 +847,15 @@ object Sinks {
     *    daily ingest while triggers can be seconds apart; rebuilding a
     *    probe per trigger would collect every filter byte off the
     *    executors and (sharded form) re-broadcast gigabytes for an
-    *    unchanged filter. The text guards and the accept-preview hold a
-    *    [[FileSetMemo]] keyed on the bracket's listing, so a probe
-    *    rebuilds exactly when its bloom's files change; the superseded
-    *    broadcast is reclaimed by the ContextCleaner, one per
-    *    maintenance event.
+    *    unchanged filter. The text guards and the accept-preview hold
+    *    an [[graft.InputMemo]] with one entry per memoized table, keyed
+    *    on the session, the table and the bracket's listing of it —
+    *    the sorted (path, size, mtime) of its files, so an overwrite
+    *    under old names changes it too — and no second listing is
+    *    taken. A probe rebuilds exactly when its bloom's files change;
+    *    the superseded entry is the least recently used one, evicted
+    *    at that put, and its broadcast is reclaimed by the
+    *    ContextCleaner, one per maintenance event.
     *  - IDEMPOTENT, READ-ONLY. `batch_id=N/` is overwritten, so an
     *    at-least-once replay rewrites the same directory — against a
     *    possibly grown corpus: fewer rows, never appended duplicates —
@@ -906,7 +888,7 @@ object Sinks {
     * batch arm hashes. Shared rules: [[guardSink]]. */
   def streamingCorpusGuardSink(stream: DataFrame, hashTable: String,
                                path: String, checkpoint: String): DataStreamWriter[Row] = {
-    val probes = new FileSetMemo[BloomProbe]
+    val probes = new graft.InputMemo[BloomProbe](cap = 1)
     guardSink(stream, path, checkpoint)(_ => Seq(hashTable, hashTable + "__bloom")) {
       (batch, listing) =>
         graft.Pipeline.exactNewVsCorpus(batch.sparkSession, batch, hashTable,
@@ -929,7 +911,7 @@ object Sinks {
                                 path: String, checkpoint: String,
                                 threshold: Double = 0.5,
                                 bands: Int = 16, rowsPerBand: Int = 4): DataStreamWriter[Row] = {
-    val probes = new FileSetMemo[BloomProbe]
+    val probes = new graft.InputMemo[BloomProbe](cap = 1)
     guardSink(stream, path, checkpoint)(spark =>
         Seq(postingsTable, postingsTable + "__bloom") ++
           Seq(postingsTable + "__sigs").filter(spark.catalog.tableExists)) {
@@ -956,7 +938,7 @@ object Sinks {
   def streamingSubstringGuardSink(stream: DataFrame, chunkTable: String,
                                   path: String, checkpoint: String,
                                   minSharedTokens: Long = 64L): DataStreamWriter[Row] = {
-    val probes = new FileSetMemo[BloomProbe]
+    val probes = new graft.InputMemo[BloomProbe](cap = 1)
     guardSink(stream, path, checkpoint)(_ => Seq(chunkTable, chunkTable + "__bloom")) {
       (batch, listing) =>
         graft.operators.Dedup.incrementalSubstringMatches(
@@ -1072,11 +1054,11 @@ object Sinks {
     // model table is read only when the gate is armed
     val semantic = semanticTable.filter(_ => stream.columns.contains("embedding"))
     val charlm = charlmTable.filter(_ => charlmRareFracMax.isDefined)
-    val probes = new FileSetMemo[BloomProbe]
+    val probes = new graft.InputMemo[BloomProbe](cap = bloomed.size + 1)
     // the collected charlm model, so a micro-batch pays only the
     // map-side scoring, not the table aggregate + collect; None inside
     // = model over the row cap -> decideDelta's join-path fallback
-    val charlmModels = new FileSetMemo[Option[Array[Byte]]]
+    val charlmModels = new graft.InputMemo[Option[Array[Byte]]](cap = 1)
     guardSink(stream, path, checkpoint)(spark =>
         bloomed.flatMap(t => Seq(t, t + "__bloom")) ++ Seq(idsSpace + "__bloom") ++
           Seq(postingsTable + "__sigs").filter(spark.catalog.tableExists) ++
@@ -1089,7 +1071,7 @@ object Sinks {
             charlmTable, charlmRareFracMax, charlmRareBelow,
             probeOverrides = (bloomed :+ idsSpace)
               .map(t => t -> memoProbe(probes, spark, listing, t)).toMap,
-            charlmModelOverride = charlm.map(t => charlmModels(listing, t)(
+            charlmModelOverride = charlm.map(t => charlmModels(spark, t, listing)(
               graft.operators.TextOps.charlmCollectModel(
                 spark.table(t).groupBy(col("tri")).agg(sum(col("n")).as("c3"))))))
           .verdicts

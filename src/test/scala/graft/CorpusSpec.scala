@@ -10,26 +10,28 @@ class CorpusSpec extends SparkSpec {
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
 
-  test("bloomFilterAuditMergeBatched stateKey: a cache hit returns the rows of a miss and of an unkeyed call") {
-    // a keyed repeat reuses the built tables and the day key frames
-    // (a hit keeps the first build's files and only appends); the
-    // rows must not tell a hit from a rebuild
-    val documents = (1L to 300L).map(i =>
+  test("bloomFilterAuditMergeBatched memo: a cache hit returns the rows of a miss and of an in-memory call") {
+    // a repeat on the same parquet input reuses the built tables and
+    // the day key frames (a hit keeps the first build's files and only
+    // appends); the rows must not tell a hit from a rebuild
+    val inMemory = (1L to 300L).map(i =>
         (i, (1 to 80).map(j => s"w${(i * 7 + j * j) % 211}").mkString(" ")))
       .toDF("doc_id", "text")
-    def run(key: Option[String]) = Corpus.bloomFilterAuditMergeBatched(documents, stateKey = key)
-      .orderBy("arm").collect().toSeq
+    val path = tempDir("bmb_docs") + "/documents.parquet"
+    inMemory.write.parquet(path)
+    def run(documents: org.apache.spark.sql.DataFrame) =
+      Corpus.bloomFilterAuditMergeBatched(documents).orderBy("arm").collect().toSeq
     def hashFiles = spark.table("graft_audit_bmb_hash").inputFiles.toSet
-    val miss = run(Some("bmb-spec-key"))
+    val miss = run(spark.read.parquet(path))
     val built = hashFiles
-    val hit = run(Some("bmb-spec-key"))
-    assert(built.subsetOf(hashFiles), "the keyed repeat rebuilt instead of hitting")
+    val hit = run(spark.read.parquet(path))
+    assert(built.subsetOf(hashFiles), "the repeat on the same input rebuilt instead of hitting")
     val afterHit = hashFiles
-    val plain = run(None)
-    assert(!afterHit.subsetOf(hashFiles), "the unkeyed call must rebuild")
+    val plain = run(inMemory)
+    assert(!afterHit.subsetOf(hashFiles), "the in-memory input must rebuild")
     assert(miss.nonEmpty)
     assert(hit === miss, "a cache hit changed the rows")
-    assert(plain === miss, "stateKey changed the rows")
+    assert(plain === miss, "the memo changed the rows")
   }
 
   test("bpeTrain: hand-computed merge sequence, greedy non-overlap, early stop") {

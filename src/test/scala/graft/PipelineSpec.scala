@@ -459,27 +459,30 @@ class PipelineSpec extends SparkSpec {
     assert(out("semantic_dup_corpus") >= 16L, s"got $out")
   }
 
-  test("acceptPreviewAudit reuses its persisted bootstrap on a matching stateKey, rebuilds otherwise") {
+  test("acceptPreviewAudit reuses its persisted bootstrap on a matching input, rebuilds otherwise") {
     // r18 VERDICT #3: the gate row re-trained its corpus state every
-    // call. With a stateKey, a repeat call in the same session must
+    // call. A repeat call on the same input in the same session must
     // REUSE the bootstrap (observable: the postings table's files are
-    // untouched) and emit identical verdicts; a different key — a
-    // different input — must rebuild; and values are key-invariant.
+    // untouched) and emit identical verdicts; a different input — a
+    // copy of the same files under another directory — must rebuild;
+    // and values depend only on the rows.
     val dir = "/root/testdata/sf0.001"
-    def run(key: String) = Pipeline.acceptPreviewAudit(
-        Tables.documents(spark, dir), Tables.embeddings(spark, dir),
-        stateKey = Some(key))
+    val other = tempDir("apv_input")
+    Seq("documents", "embeddings").foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$dir/$t.parquet"), java.nio.file.Paths.get(s"$other/$t.parquet")))
+    def run(d: String) = Pipeline.acceptPreviewAudit(
+        Tables.documents(spark, d), Tables.embeddings(spark, d))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val out1 = run(dir)
     val files1 = spark.table("graft_audit_apv_post").inputFiles.toSet
     val out2 = run(dir)
     val files2 = spark.table("graft_audit_apv_post").inputFiles.toSet
     assert(out2 === out1, "reused bootstrap changed the verdicts")
-    assert(files2 === files1, "a matching stateKey must not rebuild the index")
-    val out3 = run(dir + "#other")
+    assert(files2 === files1, "a matching input must not rebuild the index")
+    val out3 = run(other)
     val files3 = spark.table("graft_audit_apv_post").inputFiles.toSet
-    assert(files3 !== files2, "a different stateKey must rebuild")
-    assert(out3 === out1, "same input under a different key changed the verdicts")
+    assert(files3 !== files2, "a different input must rebuild")
+    assert(out3 === out1, "the same rows under another directory changed the verdicts")
   }
 
   test("runIncremental maintains the bloom across days: accepted hashes probe true next run") {

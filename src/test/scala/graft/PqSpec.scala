@@ -282,33 +282,34 @@ class PqSpec extends SparkSpec {
     assert(r2 === r, s"not partition-stable: $r vs $r2")
   }
 
-  test("opqGain stateKey: cached training chains reproduce the uncached row bit-for-bit") {
-    // r19 VERDICT #5: with a stateKey the permutation + both trained
-    // codebook sets persist per session key, so repeat calls price
-    // encoding + win counting. Three pins: keyed == unkeyed (the
-    // cache changes cost, never values), a repeat keyed call ==
-    // itself (the cached frames survive reuse), and distinct keys
-    // stay independent (no cross-input bleed).
+  test("opqGain memo: cached training chains reproduce the uncached row bit-for-bit") {
+    // r19 VERDICT #5: the permutation + both trained codebook sets
+    // are memoized on the input's fingerprint, so repeat calls price
+    // encoding + win counting. Three pins: a memoized call == an
+    // uncached one (the cache changes cost, never values), a second hit == itself (the
+    // cached frames survive reuse), and a different input stays
+    // independent (no cross-input bleed).
     val embs = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val plain = Pq.opqGain(embs, deterministic = true).head()
-    val keyed1 = Pq.opqGain(embs, deterministic = true,
-      stateKey = Some("opq-spec-key")).head()
-    val keyed2 = Pq.opqGain(embs, deterministic = true,
-      stateKey = Some("opq-spec-key")).head()
-    assert(keyed1 === plain, "stateKey changed the row values")
+    // a checkpointed copy has no file fingerprint: never memoized
+    val plain = Pq.opqGain(embs.localCheckpoint(), deterministic = true).head()
+    val keyed1 = Pq.opqGain(embs, deterministic = true).head()
+    val keyed2 = Pq.opqGain(embs, deterministic = true).head()
+    assert(keyed1 === plain, "a cache hit changed the row values")
     assert(keyed2 === plain, "cached training chains drifted on reuse")
-    // a different key over a DIFFERENT input must not see the cache
+    // a DIFFERENT input over the same files must not see the cache
     val other = Pq.opqGain(embs.filter(col("vec_id") % 2 === 0),
-      deterministic = true, stateKey = Some("opq-spec-key-other")).head()
+      deterministic = true).head()
     assert(other.getAs[Long]("docs") < plain.getAs[Long]("docs"),
-      "distinct keys must train on their own input")
+      "distinct inputs must train on their own input")
   }
 
   test("writeSemanticIndexPqOnce: matching key reuses the persisted index, different key rebuilds") {
-    // r20 train-once seam for the persisted registry rows: the stamp
-    // lands after a complete build, a matching key must leave the
-    // tables untouched, a different key must rebuild, and the probe
-    // reads the same values in every state (deterministic training).
+    // train-once seam for the persisted registry rows, keyed on the
+    // input's fingerprint: the same input must leave the tables
+    // untouched, a different input must rebuild, the first input
+    // again must rebuild over the other input's tables, and the probe
+    // reads the same values for the same input (deterministic
+    // training).
     Seq("graft_pq_once", "graft_pq_once__centroids", "graft_pq_once__codebooks")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     val embs = Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -320,17 +321,19 @@ class PqSpec extends SparkSpec {
         spark.table("graft_pq_once"), spark.table("graft_pq_once__centroids"),
         spark.table("graft_pq_once__codebooks"))
       .collect().map(_.toString).sorted.toSeq
-    Pq.writeSemanticIndexPqOnce(corpus, "graft_pq_once", stateKey = "k1")
+    def files = spark.table("graft_pq_once").inputFiles.toSet
+    Pq.writeSemanticIndexPqOnce(corpus, "graft_pq_once")
     val out1 = probe()
-    val files1 = spark.table("graft_pq_once").inputFiles.toSet
-    Pq.writeSemanticIndexPqOnce(corpus, "graft_pq_once", stateKey = "k1")
-    assert(spark.table("graft_pq_once").inputFiles.toSet === files1,
-      "a matching stateKey must not rebuild the index")
+    val files1 = files
+    Pq.writeSemanticIndexPqOnce(corpus, "graft_pq_once")
+    assert(files === files1, "a matching input must not rebuild the index")
     assert(probe() === out1)
-    Pq.writeSemanticIndexPqOnce(corpus, "graft_pq_once", stateKey = "k2")
-    assert(spark.table("graft_pq_once").inputFiles.toSet !== files1,
-      "a different stateKey must rebuild")
-    assert(probe() === out1, "same input under a new key must reproduce the probe")
+    Pq.writeSemanticIndexPqOnce(corpus.filter(col("doc_id") % 5 =!= 0), "graft_pq_once")
+    val files2 = files
+    assert(files2 !== files1, "a different input must rebuild")
+    Pq.writeSemanticIndexPqOnce(corpus, "graft_pq_once")
+    assert(files !== files2, "the first input must rebuild over the other input's tables")
+    assert(probe() === out1, "the same input must reproduce the probe")
   }
 
   test("persisted PQ probe: certified candidates ⊇ exact hits ⊇ nothing lost, values replay") {
