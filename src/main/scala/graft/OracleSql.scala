@@ -375,8 +375,9 @@ object OracleSql {
     * float→double widening is exact, every dot/norm folds dims
     * left-to-right, and the re-center mean folds cell members in
     * ascending `vec_id` order on BOTH engines (`list(x ORDER BY
-    * vec_id)` here, sorted-collect `aggregate` there). Empty cells
-    * keep their previous centroid via the same LEFT JOIN + COALESCE.
+    * vec_id)` here, the sorted array fold there). Empty cells keep
+    * their previous centroid (LEFT JOIN + COALESCE here, the
+    * driver-side centre map of [[graft.operators.Ann.lloyd]] there).
     * Ends at relation `cents$iters(cell, cemb, cnrm)`. */
   /** The ONE rendering of graft's sequential-fold dot product —
     * every trained-quantizer oracle builds on this single definition
@@ -472,7 +473,7 @@ object OracleSql {
       case (None, false) =>
         s"cents0 AS (SELECT vec_id AS cell, emb AS cemb, nrm AS cnrm FROM n WHERE vec_id < $k)"
       case (None, true) =>
-        // [[graft.operators.Ann.seedCentroidsByRank]]: the k LOWEST
+        // [[graft.operators.Ann.kmeansCentroids]]' rank seed: the k LOWEST
         // ids become cells 0..k-1 in id order — the seed rule for
         // corpora with arbitrary (sparse) id spaces
         s"""cents0 AS (SELECT rn - 1 AS cell, emb AS cemb, nrm AS cnrm FROM (

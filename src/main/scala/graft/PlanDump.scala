@@ -81,13 +81,13 @@ object PlanDump {
       "embedding_covariance" -> "int8 moments: upper-triangle slice explode, long sums combined map-side into 2080 constant groups",
       "decontam_report" -> "combined contamination verdict: both arms' bounded outputs full-outer-joined; corpus work stays inside the arms",
       "q_waiting_orders" -> "TPC-H Q21 rewritten: ONE lineitem scan feeds the per-order lateness profile (the semi+anti pair as two stacked aggregates); supplier x nation broadcast after the sole-late decision",
-      "ann_ivf_trained" -> "topK trained IVF x float: each Lloyd round is a broadcast argmin + ONE-exchange deterministic re-center (native elementwise sorted fold of whole vectors, r20 — bit-identical to the per-dim fold it replaced); query path identical to ann_ivf against the refined 1-row centroid broadcast",
+      "ann_ivf_trained" -> "topK trained IVF x float: the Lloyd rounds ran before this plan, one Spark job each (native argmin against the centre literal + deterministic sorted-fold re-center); the refined centroids arrive as a driver-built 1-row local relation; query path identical to ann_ivf",
       "dedup_semantic_trained" -> "trained SemDeDup: Lloyd's-refined centroids slot into the same broadcast-argmin cell assignment + within-cell equi-join pairing as dedup_semantic",
       "sketch_distinct_audit" -> "HLL++ contract row: exact distinct (expand-based) and the sketch in ONE source-keyed aggregate pass over the token explode",
       "sketch_quantile_audit" -> "GK contract row: bounded per-source value rollup + 3 probe rows joined back; the corpus contributes one combinable count pass",
       "dedup_semantic_scaled" -> "SemDeDup with k = ceil(sqrt(N)) fan-out: same broadcast-argmin + within-cell pairing shape as dedup_semantic — only the centroid count scales",
       "dedup_semantic_capped" -> "viral-cell guard: cell sizes ride a k-row broadcast, rank-within-cell subdivision lands in the join key — pair work per cell linear in its population",
-      "dedup_semantic_scaled_trained" -> "the composed production path: sqrt(N) fan-out derived by one count action, then Lloyd rounds at that k (broadcast argmin + deterministic re-center), within-cell pairing unchanged",
+      "dedup_semantic_scaled_trained" -> "the composed production path: sqrt(N) fan-out derived by one count action, then driver-side Lloyd rounds at that k (one Spark job each), within-cell pairing unchanged",
       "multimodal_meta" -> "decode-free metadata + md5-seeded stub decode: ONE map-side projection over the binarized scan — no shuffle, no codec; every column replays in the oracle",
       "dedup_simhash" -> "md5-vote simhash: map-only scalar fingerprints, 4x16-bit band explode, bucket self-join, bit_count(xor) re-rank — the whole chain oracle-replayable since round 12",
       "ann_lsh" -> "topK LSH x float: md5-hyperplane SRP buckets, constant sign matrix cached per executor, (table, bucket) equi-join against the broadcast query buckets bounds candidates; narrow scored pairs ranked once through ONE exchange (no array-carrying dedup aggregate)",
@@ -95,7 +95,7 @@ object PlanDump {
       "charlm_score" -> "char-LM filter: |alphabet|^3-bounded model trained by ONE packed-trigram aggregate, collected driver-side, scored per doc by ONE map-side expression (model as a foldable plan literal, elided below) — zero scoring shuffle, no log anywhere",
       "bpe_train" -> "BPE training: vocab-bounded word rollup, per-round pair-count aggregate + 1-row winner collect, map-only fold re-segmentation — corpus rows touched once at tokenization",
       "q_market_share" -> "TPC-H Q8: share-within-group over the six-table snowflake — ONE conditional aggregate pass (no per-nation self-join), pushed date/type filters, constant dims broadcast, big dims left to AQE",
-      "pq_codes" -> "PQ encoding: all m subspaces in ONE fused native scan expression (graft_pq_encode vs a 1-row packed-codebook broadcast, r20), zero corpus shuffles; training re-centers whole subvectors through one exchange per round",
+      "pq_codes" -> "PQ encoding: all m subspaces in ONE fused native scan expression (graft_pq_encode vs a 1-row packed-codebook broadcast, r20), zero corpus shuffles; the codebooks arrive as a driver-built local relation (training ran one Spark job per Lloyd round, outside this plan)",
       "ann_pq" -> "topK flat x PQ: per-query m x ksub distance table broadcast onto fused-encode code arrays, native graft_adc_dist per candidate, exact-cosine re-rank only for the top-64 survivors",
       "ann_ivf_pq" -> "topK trained IVF x PQ: cell argmin and fused encode in ONE scan projection (no vec_id re-join), per-(query, cell) ADC tables broadcast, full vectors fetched for the re-rank only",
       "entity_pagerank" -> "damped PageRank: corpus work ends at the per-doc mention aggregate; the gazetteer-bounded pairs coalesce into one task that runs all 5 sorted-fold rounds in memory — one Spark execution",
@@ -108,7 +108,7 @@ object PlanDump {
       "semantic_probe_pq_persisted" -> "the persisted PQ seam: codebooks/centroids/codes READ from tables (no retraining in the probe half), delta cells equi-join the bucketed 16 B/doc index, ADC + law-of-cosines map-side",
       "pack_sequences_bpe" -> "BPE-budget packing: vocab-bounded token-count table joins the exploded words, then the same ONE domain-keyed exchange feeds the cumulative window",
       "pq_opq_check" -> "OPQ verdict: one corpus moments pass (shared shape with embedding_covariance), then constant-size (2016-row) correlation arithmetic with sorted-fold means",
-      "pq_opq_gain" -> "OPQ applied: variance ranking (diagonal moments), 64-element permutation as a plan literal, two broadcast-argmin training/encode chains, win counts as order-free integer sums",
+      "pq_opq_gain" -> "OPQ applied: variance ranking (diagonal moments) and both layouts' codebooks trained in the same Lloyd rounds before this plan; ONE scan encodes both layouts (two graft_pq_encode calls against the codebook literals, which fill the 8000-char dump), win counts as order-free integer sums",
       "bloom_filter_audit_sharded" -> "sharded bloom contract: filters built DISTRIBUTED (one distinct-hash shuffle, mapGroups assembles each shard executor-side), probed through the torrent-broadcast handle — one shard lookup per row, no multi-GB plan literal",
       "semantic_probe_pq_tight" -> "tight certified probe: the same bucketed ADC equi-join as the persisted seam; the per-subspace floor adds m subtract/max ops on the already-loaded lookup rows — candidates shrink, plan shape unchanged",
       "curriculum_mix_by_source" -> "per-feed curriculum mix: bootstrap-trained bounds folded map-side as a (k-1)-value literal, ONE sources x k aggregate, zero joins at any corpus size",
@@ -123,11 +123,14 @@ object PlanDump {
       // elide driver-built binary plan literals (charlm model bytes —
       // KBs of hex that would bury the plan shape the dump exists
       // for) BEFORE truncating: a truncate-first would let one large
-      // literal swallow every plan node after it
+      // literal swallow every plan node after it. RDD call sites lose
+      // their line numbers (`localCheckpoint at Pq.scala:197` ->
+      // `at Pq.scala`), so a section changes only when its plan does.
       val plan = "0x[0-9A-F]{64,}".r.replaceAllIn(
         df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode),
-        m => s"0x<${(m.matched.length - 2) / 2} bytes elided>").take(8000)
+        m => s"0x<${(m.matched.length - 2) / 2} bytes elided>")
+        .replaceAll("""(at \w+\.scala):\d+""", "$1").take(8000)
       s"\n## $name — ${notes(name)}\n\n```\n$plan\n```\n"
     }
     val path = Paths.get("PLANS.md")

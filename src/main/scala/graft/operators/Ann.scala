@@ -179,8 +179,7 @@ object Ann {
               .localCheckpoint(false), offset(q, "qemb"))
           case _ => (corpus, q)
         }
-        val cb = Pq.trainCodebooks(if (residual) c else e.select(col("vec_id"), col("emb")),
-          m, subDims, ksub, iters, deterministic, cacheTrain = !residual)
+        val cb = Pq.trainCodebooks(if (residual) c else e, m, subDims, ksub, iters, deterministic)
         val adc = top(scored(Pq.encodedRows(c, cb).withColumn("codes", col("enc.codes")),
           Pq.queryTables(qv, cb, subDims), Pq.adcDist), adcCand, dedup, col("score"), col("vec_id"))
           .select(col("query_id"), col("vec_id"), col("score").as("adist"))
@@ -194,29 +193,25 @@ object Ann {
     }
   }
 
-  /** Fixed-size IVF coarse-centroid seed, packed to ONE row
-    * ([[packCentroids]]): the `numCentroids` lowest vec_ids stand in
-    * for trained centroids (deterministic). |centroids| is a constant
-    * independent of corpus size — the broadcast stays k vectors at
-    * 100 TB, unlike an every-Nth-vector sample whose broadcast (and
-    * pair expansion) grows with N. */
-  private[graft] def ivfCentroids(e: DataFrame, numCentroids: Int): DataFrame =
-    packCentroids(e.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").as("cell"), col("emb").as("cemb"), col("nrm").as("cnrm")))
-
-  /** Rank-seeded centroid row for corpora with ARBITRARY ids: the k
-    * lowest doc_ids become cells 0..k-1 (in id order). [[ivfCentroids]]
-    * seeds by `vec_id < k`, which requires the dense 0..N id space of
-    * the embeddings table; a real accepted corpus keys by whatever
-    * doc_ids survived curation. TakeOrdered-k bounds the seed scan
-    * (no global sort materializes); the rank window runs over k rows. */
-  private[graft] def seedCentroidsByRank(e: DataFrame, k: Int): DataFrame = {
+  /** The `k`-cell seed as unpacked `(cell, cemb, cnrm)` rows: the
+    * `vec_id < k` vectors as cells keyed by their ids, or, where ids
+    * are sparse (`rankSeed`), the k lowest ids ranked to cells 0..k-1
+    * (TakeOrdered-k bounds the seed scan; the rank window runs over k
+    * rows). Either way |seed| is a constant independent of corpus
+    * size — the broadcast stays k vectors at 100 TB. */
+  private def seedRows(e: DataFrame, k: Int, rankSeed: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    packCentroids(e.orderBy(col("vec_id")).limit(k)
-      .select((row_number().over(Window.orderBy(col("vec_id"))) - 1)
-        .cast("long").as("cell"),
-        asDouble(col("emb")).as("cemb"), col("nrm").as("cnrm")))
+    if (rankSeed) e.orderBy(col("vec_id")).limit(k)
+      .select((row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("long").as("cell"),
+        asDouble(col("emb")).as("cemb"), col("nrm").as("cnrm"))
+    else e.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cell"), col("emb").as("cemb"), col("nrm").as("cnrm"))
   }
+
+  /** The `vec_id < numCentroids` seed packed to ONE row
+    * ([[packCentroids]]) — the untrained IVF quantizer. */
+  private[graft] def ivfCentroids(e: DataFrame, numCentroids: Int): DataFrame =
+    packCentroids(seedRows(e, numCentroids, rankSeed = false))
 
   /** Centroid rows `(cell, cemb, cnrm)` packed to the ONE-row
     * `cents: array<struct<cell, cemb, cnrm>>` every quantizer consumer
@@ -230,89 +225,127 @@ object Ann {
     cents.select(explode(col("cents")).as("c"))
       .select(col("c.cell").as("cell"), col("c.cemb").as("cemb"), col("c.cnrm").as("cnrm"))
 
+  /** Lloyd centres on the driver, keyed by `(set, key)`: `set` names a
+    * layout trained in the same rounds, `key` a centre within it. */
+  private[graft] type Centres = Map[(Int, Long), Array[Double]]
+
+  /** One IVF cell as the plan literal [[graft.functions.IvfArgmin]] reads. */
+  private[graft] final case class IvfCell(cell: Long, cemb: Seq[Double], cnrm: Double)
+
+  /** The ONE Lloyd loop of every trained quantizer (IVF cells, PQ
+    * codebooks) — the Spark MLlib KMeans shape: the centres live on
+    * the driver, and each of the `iters` rounds is ONE Spark job.
+    * `members(centres)` is the round's assignment, a map-only frame of
+    * `(set: int, key: long, vec_id: long, x: array<double>)` that sees
+    * the centres as a plan literal (it ships inside the stage's task
+    * binary — the bytes a broadcast would ship, without the job that
+    * builds one). Each map task folds its members per `(set, key)`,
+    * the `(set, key)`-keyed exchange carries the serialized partials
+    * (the aggregate's own `serialize`, the bytes a SQL exchange of it
+    * carries), the reduce side merges them and divides by the member
+    * count, and the driver collects the new means. An RDD exchange,
+    * not a DataFrame `groupBy`: under adaptive execution a SQL
+    * exchange is a job of its own, two per round. Centres whose cell
+    * attracted no member keep their previous vector (the standard
+    * empty-cell rule), and so do centres whose fold is null (the
+    * combinable fold's sum over zero-length subvectors, where an
+    * embedding is shorter than m × subDims); keys outside the current
+    * set (a malformed row's `-1` cell) are dropped.
+    *
+    * `deterministic = true` (the oracle-checked registry path) folds
+    * each group's members elementwise in ascending `vec_id` order
+    * ([[graft.functions.SortedFoldSumArr]]), which any engine replays
+    * bit-for-bit — the shuffle carries the member vectors, the price
+    * of byte-level reproducibility under any partitioning.
+    * `deterministic = false` (production) sums them map-side
+    * combinable ([[graft.functions.FoldSumArr]]): the shuffle carries
+    * one partial per group and map task, but double addition is
+    * partition-order-dependent, so means are not bit-stable across
+    * layouts. Both folds run their own update/merge/eval/serialize
+    * code, so the per-dimension IEEE additions are the aggregates'.
+    * A FIXED round count keeps runs reproducible (vs a
+    * convergence epsilon on floats). */
+  private[graft] def lloyd(seed: Centres, iters: Int, deterministic: Boolean)(
+      members: Centres => DataFrame): Centres = {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+    def round[B](fold: TypedImperativeAggregate[B])(cents: Centres): Centres = {
+      val means = members(cents).queryExecution.toRdd.mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[(Int, Long), (B, Long)]
+        rows.foreach { r =>
+          val k = (r.getInt(0), r.getLong(1))
+          val (b, n) = acc.getOrElse(k, (fold.createAggregationBuffer(), 0L))
+          acc(k) = (fold.update(b, r), n + 1)
+        }
+        acc.iterator.map { case (k, (b, n)) => (k, (fold.serialize(b), n)) }
+      }.groupByKey().flatMap { case (k, parts) =>
+        val sum = fold.eval(parts.map(p => fold.deserialize(p._1)).reduce[B](fold.merge(_, _)))
+        val n = parts.map(_._2).sum
+        Option(sum).map(s => (k, s.asInstanceOf[ArrayData].toDoubleArray().map(_ / n)))
+      }.collect()
+      cents ++ means.filter(m => cents.contains(m._1))
+    }
+    val x = BoundReference(3, ArrayType(DoubleType), nullable = false)
+    val step: Centres => Centres =
+      if (deterministic) round(graft.functions.SortedFoldSumArr(
+        BoundReference(2, LongType, nullable = false), x))
+      else round(graft.functions.FoldSumArr(x))
+    (1 to iters).foldLeft(seed)((c, _) => step(c))
+  }
+
   /** The ONE coarse-centroid step of every IVF cell build (the top-k,
     * the semantic dedup/decontam blocking, the persisted semantic
-    * indexes): the packed seed — [[ivfCentroids]], or
-    * [[seedCentroidsByRank]] where ids are sparse (`rankSeed`) — as
-    * is when `iters = 0`, else refined by `iters` rounds of Lloyd's
-    * k-means. Better-centered cells mean fewer same-cell misses at a
+    * indexes): the packed seed ([[seedRows]]) as is when `iters = 0`,
+    * else refined by `iters` rounds of Lloyd's k-means ([[lloyd]]):
+    * assignment is the native argmin ([[graft.functions.IvfArgmin]])
+    * against the centre literal, re-centering folds whole vectors per
+    * cell. Better-centered cells mean fewer same-cell misses at a
     * fixed nprobe — the recall knob that costs training time instead
-    * of query time.
-    *
-    * Scale shape per round (r20): assignment is the same map-side
-    * broadcast argmin the query path uses (no shuffle); re-centering
-    * folds WHOLE vectors elementwise per cell through ONE exchange —
-    * no posexplode, no per-(cell, dim) level. Cells that attract no
-    * vectors keep their previous centroid (the standard empty-cell
-    * rule). The fixpoint is driver-coordinated with `localCheckpoint`
-    * cutting per-round lineage, exactly like [[Dedup.clusterPairs]];
-    * a FIXED iteration count keeps runs reproducible (vs
-    * convergence-epsilon on floats).
-    *
-    * `deterministic = false` (production): the running-array partials
-    * ([[graft.functions.FoldSumArr]]) are map-side combinable — the
-    * shuffle carries k dims-length partials per map task, but double
-    * addition is partition-order-dependent, so means are not
-    * bit-stable across layouts. `deterministic = true` (the
-    * oracle-checked registry path): each cell folds its member
-    * vectors elementwise in ascending `vec_id` order
-    * ([[graft.functions.SortedFoldSumArr]]), which any engine can
-    * replay bit-for-bit — the shuffle carries the member vectors
-    * instead of partials, the price of byte-level reproducibility.
-    * A spec pins both modes to the same top-k at gate SF. */
+    * of query time. A trained call runs `iters + 1` jobs: the seed
+    * collect, then one per round; its result is the packed centroid
+    * row built on the driver, so consumers read it without a job of
+    * their own to compute it. A spec pins both `deterministic` modes
+    * to the same top-k at gate SF. */
   private[graft] def kmeansCentroids(e: DataFrame, k: Int, iters: Int,
                                      deterministic: Boolean = false,
                                      rankSeed: Boolean = false): DataFrame = {
     require(iters >= 0)
-    graft.GraftExtensions.register(e.sparkSession) // graft_sorted_fold_sum
-    // Pin the training frame for the fixed round count (guide §5:
-    // reuse beats recompute — every Lloyd round's assignment pass
-    // re-scanned the corpus projection from parquet). A LAZY
-    // localCheckpoint, not persist(): raw row blocks materialized
-    // once inside the first consuming job, read by every later
-    // round; persist()'s columnar re-encode of the embedding arrays
-    // was measured costing more than the scans it saves. IN-PLAN and
-    // per-call: the pin is a fresh frame per invocation, its blocks
-    // die with the RDD — nothing survives the call, every invocation
-    // still computes from the parquet inputs.
-    val train = if (iters >= 1) e.localCheckpoint(false) else e
-    val seed = if (rankSeed) seedCentroidsByRank(e, k) else ivfCentroids(train, k)
-    // LAZY checkpoints throughout the fixpoint (r20): lineage is cut
-    // identically, but each round's k-row centroid frame materializes
-    // inside the NEXT job that reads it (the assign broadcast build)
-    // instead of paying its own eager driver round-trip — one job per
-    // round saved, values untouched. No rounds: the bare seed.
-    var cents = if (iters == 0) seed else seed.localCheckpoint(false)
-    var it = 0
-    while (it < iters) {
-      val assigned = nearestCells(train, cents, "emb", "nrm", keep = 1)
-      // Re-centering through ONE cell-keyed exchange (r20): whole
-      // vectors fold elementwise per cell — the (cell, pos) partial
-      // level, its posexplode (dims× the rows) and the collect_list/
-      // array_sort reassembly are gone. The array fold performs the
-      // identical per-dimension IEEE additions in the identical
-      // vec_id order, so means are bit-identical (guide §2.3/§2.4).
-      val sums = assigned.groupBy(col("cell"))
-      val means = (if (deterministic)
-        sums.agg(call_function("graft_sorted_fold_sum_arr",
-          col("vec_id"), asDouble(col("emb"))).as("sx"), count(lit(1)).as("c"))
-      else
-        sums.agg(call_function("graft_fold_sum_arr", asDouble(col("emb"))).as("sx"),
-          count(lit(1)).as("c")))
-        .select(col("cell"),
-          transform(col("sx"), x => x / col("c")).as("cemb"))
-        .withColumn("cnrm", norm(col("cemb")))
-      val prev = unpackCentroids(cents)
-        .select(col("cell"), col("cemb").as("pemb"), col("cnrm").as("pnrm"))
-      cents = packCentroids(prev.join(means, Seq("cell"), "left")
-        .select(col("cell"),
-          coalesce(col("cemb"), asDouble(col("pemb"))).as("cemb"),
-          coalesce(col("cnrm"), col("pnrm")).as("cnrm")))
-        .localCheckpoint(false)
-      it += 1
+    if (iters == 0) packCentroids(seedRows(e, k, rankSeed))
+    else {
+      graft.GraftExtensions.register(e.sparkSession) // graft_ivf_argmin
+      val train = pin(e)
+      val seed = seedRows(train, k, rankSeed).collect()
+        .map(r => (0, r.getLong(0)) -> r.getSeq[Number](1).map(_.doubleValue).toArray).toMap
+      val cents = lloyd(seed, iters, deterministic) { c =>
+        train.select(lit(0).as("set"),
+          coalesce(call_function("graft_ivf_argmin", col("emb"), typedLit(ivfCells(c))),
+            lit(-1L)).as("key"),
+          col("vec_id"), asDouble(col("emb")).as("x"))
+      }
+      e.sparkSession.createDataFrame(Seq(Tuple1(ivfCells(cents)))).toDF("cents")
     }
-    cents
   }
+
+  /** A Lloyd training frame pinned for the fixed round count: a LAZY
+    * localCheckpoint, its raw row blocks materialized by the seed job
+    * and read by every round (measured faster than re-reading the scan
+    * each round; persist()'s columnar re-encode of the embedding arrays
+    * was measured costing more than the scans it saves). Per call: its
+    * blocks die with the RDD. A frame that already is a checkpoint (the
+    * residual PQ path pins its offsets for training and encode alike)
+    * is used as it is — re-pinning blocks would only copy them. */
+  private[graft] def pin(e: DataFrame): DataFrame =
+    if (e.queryExecution.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) e
+    else e.localCheckpoint(false)
+
+  /** The centres as IVF cells, ascending; `cnrm` is [[norm]]'s fold. */
+  private def ivfCells(c: Centres): Seq[IvfCell] =
+    c.toSeq.sortBy(_._1).map { case ((_, cell), v) =>
+      IvfCell(cell, v.toSeq, math.sqrt(v.foldLeft(0.0)((s, x) => s + x * x)))
+    }
+
   /** Map-side nearest-cell assignment: each row scores the broadcast
     * one-row centroid array with array HOFs and explodes its `keep`
     * best cells — no per-pair row expansion, no window, no shuffle on
@@ -341,8 +374,9 @@ object Ann {
     // are identical in every consumer: argmin is null only for
     // malformed inputs (impossible by construction, spec-pinned), and
     // if one ever occurred, cell −1 — an id no codebook contains —
-    // drops in the equi-joins and in the re-center's prev-side left
-    // join exactly where the null row dropped before.
+    // drops in the equi-joins exactly where the null row dropped
+    // before (the Lloyd loop's assignment applies the same coalesce,
+    // and [[lloyd]] drops keys outside its centre set).
     val assigned =
       if (keep == 1) joined.withColumn("cell",
         coalesce(call_function("graft_ivf_argmin", col(embCol), col("cents")),
@@ -737,7 +771,7 @@ object Ann {
     * `substr(md5(vec_id), 1, 4) < deltaHex` ≈ 5%), train the
     * quantizer on the REMAINING corpus only (rank-seeded, because the
     * corpus ids are sparse after the split — exactly the situation
-    * [[seedCentroidsByRank]] exists for and what
+    * [[kmeansCentroids]]' `rankSeed` exists for and what
     * [[graft.Pipeline.bootstrapIncremental]] does), build the cell
     * index from the corpus, and probe it with the delta through the
     * LITERAL production function ([[incrementalSemanticMatches]],

@@ -36,11 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
-  /** Subspace `sub`'s slice of an embedding, widened to double —
-    * dims [sub*subDims, (sub+1)*subDims) 0-based. */
-  private[graft] def subvec(emb: Column, sub: Int, subDims: Int): Column =
-    Ann.asDouble(slice(emb, sub * subDims + 1, subDims))
-
   /** Sequential-fold squared L2 distance between two equal-length
     * double arrays: 0.0 + (a1-b1)² + (a2-b2)² + … left-to-right —
     * the one fold convention every PQ oracle replays
@@ -48,16 +43,6 @@ object Pq {
   private[graft] def l2sq(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, v) => acc + v)
-
-  /** All vectors' subvectors for all `m` subspaces in ONE relation
-    * `(vec_id, sub, semb)` — the SEED pass of training only (r20: the
-    * per-round assignment and every encode pass run the fused native
-    * [[graft.functions.PqEncode]] instead — no explode, no codebook
-    * join, no per-cell interpreted folds). */
-  private def subRows(e: DataFrame, m: Int, subDims: Int): DataFrame =
-    e.select(col("vec_id"), explode(array((0 until m).map(j =>
-      struct(lit(j).as("sub"), subvec(col("emb"), j, subDims).as("semb"))): _*)).as("s"))
-      .select(col("vec_id"), col("s.sub").as("sub"), col("s.semb").as("semb"))
 
   /** The full codebook set packed to ONE row `subcents[j]` = subspace
     * j's `array<struct<cell, cemb>>` (subspaces ascending) — what
@@ -86,99 +71,64 @@ object Pq {
       .withColumn("enc", call_function("graft_pq_encode", col("emb"), col("subcents")))
       .drop("subcents")
 
-  /** All `m` trained codebooks, one row per subspace
-    * `(sub, cents: array<struct<cell, cemb>>)`: seed = the `ksub`
-    * lowest vec_ids' subvectors, RANKED to dense cells 0..ksub-1
-    * (the Ann.seedCentroidsByRank rule: the ADC code→array-index
-    * contract REQUIRES dense cells, whatever the id space), then
-    * `iters` Lloyd assign/re-center rounds under squared L2, ALL
-    * subspaces in one plan per round.
+  /** One trained PQ codebook set in the packed layout
+    * [[graft.functions.PqEncode]] reads: subspaces ascending, each its
+    * cells ascending. */
+  private[graft] type Subcents = Seq[Seq[PqCell]]
+
+  /** One codebook cell as the plan literal [[graft.functions.PqEncode]] reads. */
+  private[graft] final case class PqCell(cell: Long, cemb: Seq[Double])
+
+  /** Codebook sets for several LAYOUTS of the same vectors, trained in
+    * the same rounds: layout `s` is the embedding expression
+    * `layouts(s)` over `e`'s rows, and its result is the `s`-th set.
+    * Seed = the `ksub` lowest vec_ids' subvectors, RANKED to dense cells
+    * 0..ksub-1 (the ADC code→array-index contract REQUIRES dense cells,
+    * whatever the id space) — one collect; then `iters` rounds of
+    * [[Ann.lloyd]] under squared L2, ALL subspaces and layouts in one
+    * job per round. A round's assignment is the fused native encode
+    * against each layout's codebook literal (no explode before it, no
+    * codebook join); its members are the whole subvectors keyed by
+    * (layout, subspace × ksub + cell). Each layout's sets are bitwise
+    * the ones it trains alone: the groups never mix layouts.
     *
-    * Scale shape per round (r20): assignment is the fused native
-    * encode against a 1-row broadcast (no shuffle, no explode, no
-    * codebook join); re-centering groups whole subvectors per
-    * (sub, cell) through ONE exchange — `deterministic = false`
-    * (production) sums them elementwise map-side COMBINABLE
-    * ([[graft.functions.FoldSumArr]]: the shuffle carries m × ksub
-    * dims-length partials per map task, not the corpus);
-    * `deterministic = true` (the oracle-checked registry path) folds
-    * each (sub, cell)'s member subvectors elementwise in ascending
-    * vec_id order ([[graft.functions.SortedFoldSumArr]] — the
-    * identical per-dimension IEEE additions the per-(pos) scalar fold
-    * performed), the byte-reproducibility trade, same as
-    * [[Ann.kmeansCentroids]]. Empty cells keep their previous
-    * centroid. The codebook set is m × ksub × subDims doubles — a
-    * constant broadcast at any corpus size. */
+    * The training frame is pinned for the rounds ([[Ann.pin]]). */
+  private[graft] def trainLayouts(e: DataFrame, layouts: Seq[Column], m: Int, subDims: Int,
+                                  ksub: Int, iters: Int, deterministic: Boolean): Seq[Subcents] = {
+    require(iters >= 0 && ksub > 0)
+    graft.GraftExtensions.register(e.sparkSession) // graft_pq_encode
+    val train = (if (iters >= 1) Ann.pin(e) else e)
+      .select(col("vec_id") +: layouts.zipWithIndex.map { case (l, s) => l.as(s"l$s") }: _*)
+    val rows = train.orderBy(col("vec_id")).limit(ksub).collect()
+    val seed: Ann.Centres = (for ((r, cell) <- rows.toSeq.zipWithIndex; s <- layouts.indices;
+        j <- 0 until m) yield (s, j.toLong * ksub + cell) ->
+      r.getSeq[Number](s + 1).slice(j * subDims, (j + 1) * subDims).map(_.doubleValue).toArray).toMap
+    def subcents(c: Ann.Centres, s: Int): Subcents =
+      Seq.tabulate(m, rows.length)((j, cell) => PqCell(cell, c((s, j.toLong * ksub + cell)).toSeq))
+    val cents = Ann.lloyd(seed, iters, deterministic) { c =>
+      train.select(col("vec_id"), explode(concat(layouts.indices.map { s =>
+        val l = col(s"l$s")
+        transform(call_function("graft_pq_encode", l, typedLit(subcents(c, s))).getField("codes"),
+          (code, j) => struct(lit(s).as("set"), (j.cast("long") * ksub + code).as("key"),
+            Ann.asDouble(slice(l, j * lit(subDims) + 1, lit(subDims))).as("x")))
+      }: _*)).as("a"))
+        .select(col("a.set"), col("a.key"), col("vec_id"), col("a.x"))
+    }
+    layouts.indices.map(subcents(cents, _))
+  }
+
+  /** All `m` trained codebooks of `e`'s `emb` ([[trainLayouts]] with the
+    * identity layout), one row per subspace `(sub, cents:
+    * array<struct<cell, cemb>>)` — one driver-built row exploded, so a
+    * consumer reads it without a job to compute it and in one
+    * partition. `iters + 1` jobs: the seed, then one per round. The set
+    * is m × ksub × subDims doubles — a constant at any corpus size. */
   private[graft] def trainCodebooks(e: DataFrame, m: Int, subDims: Int,
                                     ksub: Int, iters: Int,
-                                    deterministic: Boolean,
-                                    cacheTrain: Boolean = true): DataFrame = {
-    require(iters >= 0 && ksub > 0)
-    graft.GraftExtensions.register(e.sparkSession) // graft_sorted_fold_sum
-    // Pin the training frame for the fixed round count (guide §5:
-    // reuse beats recompute — every Lloyd round's assignment pass
-    // re-scanned the corpus projection from parquet). A LAZY
-    // localCheckpoint, not persist(): raw row blocks materialized
-    // once inside the first consuming job, read by every later round
-    // — persist()'s columnar re-encode of the embedding arrays was
-    // measured COSTING more than the scans it saves (retrain face
-    // 2.18 vs 1.98 s). IN-PLAN and per-call: the pin is a fresh frame
-    // per invocation, its blocks die with the RDD — nothing survives
-    // the call, every invocation still computes from the parquet
-    // inputs. `cacheTrain = false` for callers whose training frame
-    // is ALREADY a materialized localCheckpoint (the residual path)
-    // — re-pinning checkpoint blocks would only copy them.
-    val train = if (cacheTrain && iters >= 1) e.localCheckpoint(false) else e
-    val ids = train.orderBy(col("vec_id")).limit(ksub)
-      .select(col("vec_id"),
-        (row_number().over(org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
-          .cast("long").as("cell"))
-    // lazy checkpoints per round — same rationale as
-    // [[Ann.kmeansCentroids]]'s (r20): lineage cut identically, the
-    // m-row codebook frame materializes inside the next consuming job
-    var cents = packCodebooks(subRows(train, m, subDims).join(broadcast(ids), Seq("vec_id"))
-      .select(col("sub"), col("cell"), col("semb").as("cemb")))
-      .localCheckpoint(false)
-    var it = 0
-    while (it < iters) {
-      // Assignment is the fused native encode (r20): one expression
-      // over the raw vector replaces the m-row explode + codebook
-      // join + per-cell interpreted folds; re-centering groups WHOLE
-      // subvectors per (sub, cell) through ONE exchange — the
-      // (sub, cell, pos) partial level and its reassembly shuffle are
-      // gone, the shuffle carries subDims× fewer rows (guide §2.3/
-      // §2.4). The array fold sums elementwise in ascending vec_id
-      // order, performing the identical IEEE additions per dimension
-      // the scalar per-(pos) fold performed — bit-identical means.
-      val assigned = encodedRows(train, cents)
-        .select(col("vec_id"), explode(transform(col("enc.codes"),
-          (c, j) => struct(j.as("sub"), c.as("cell"),
-            Ann.asDouble(slice(col("emb"), j * lit(subDims) + 1, lit(subDims)))
-              .as("semb")))).as("a"))
-        .select(col("vec_id"), col("a.sub").as("sub"), col("a.cell").as("cell"),
-          col("a.semb").as("semb"))
-      val sums = assigned.groupBy(col("sub"), col("cell"))
-      val means = (if (deterministic)
-        sums.agg(call_function("graft_sorted_fold_sum_arr",
-          col("vec_id"), col("semb")).as("sx"), count(lit(1)).as("c"))
-      else
-        sums.agg(call_function("graft_fold_sum_arr", col("semb")).as("sx"),
-          count(lit(1)).as("c")))
-        .select(col("sub"), col("cell"),
-          transform(col("sx"), x => x / col("c")).as("cemb"))
-      val prev = cents.select(col("sub"), explode(col("cents")).as("p"))
-        .select(col("sub"), col("p.cell").as("cell"), col("p.cemb").as("pemb"))
-      cents = packCodebooks(prev.join(means, Seq("sub", "cell"), "left")
-        .select(col("sub"), col("cell"),
-          coalesce(col("cemb"), col("pemb")).as("cemb")))
-        // lazy per round (r20): the pinned training frame's blocks
-        // live as long as this chain's RDDs do, so the rounds can
-        // keep materializing inside the caller's first consuming job
-        .localCheckpoint(false)
-      it += 1
-    }
-    cents
-  }
+                                    deterministic: Boolean): DataFrame =
+    e.sparkSession.createDataFrame(Seq(Tuple1(trainLayouts(e, Seq(col("emb")), m, subDims,
+      ksub, iters, deterministic).head)))
+      .select(posexplode(col("_1")).as(Seq("sub", "cents")))
 
   /** PQ codes for every vector and subspace against a trained
     * codebook set — the fused native encode, posexploded to the
@@ -335,8 +285,7 @@ object Pq {
       }
     }
     val centroidRows = sharedCentroids.getOrElse(spark.table(table + "__centroids"))
-    val cb = trainCodebooks(e.select(col("vec_id"), col("emb")),
-      m, subDims, ksub, iters, deterministic)
+    val cb = trainCodebooks(e, m, subDims, ksub, iters, deterministic)
     recovering(table + "__codebooks") {
       cb.select(col("sub"), explode(col("cents")).as("c"))
         .select(col("sub"), col("c.cell").as("cell"), col("c.cemb").as("cemb"))
@@ -558,12 +507,14 @@ object Pq {
   }
 
   /** [[opqGain]]'s trained state per input and hyperparameters: the
-    * balanced-variance permutation + both checkpointed codebook sets. */
-  private val opqMemo = new graft.InputMemo[(Array[Int], DataFrame, DataFrame)](cap = 8)
+    * balanced-variance permutation and both codebook sets (identity,
+    * permuted), as driver values — a hit reads nothing. */
+  private val opqMemo = new graft.InputMemo[(Array[Int], Seq[Subcents])](cap = 8)
 
   /** The OPQ GAIN REPORT — does the balanced-variance permutation
-    * actually encode THIS corpus better? Train codebooks twice
-    * (identity layout vs permuted), quantize every vector with both,
+    * actually encode THIS corpus better? Train codebooks for both
+    * layouts (identity vs permuted) in the same Lloyd rounds
+    * ([[trainLayouts]]), quantize every vector with both in ONE scan,
     * and count per-vector self-quantization-error wins: one row
     * `(docs, improved_docs, regressed_docs, tied_docs,
     * improved_frac, opq_wins)`. Counts of strict double comparisons
@@ -576,40 +527,29 @@ object Pq {
     * rotate-before-PQ question; this row answers the variance half
     * with the permutation actually applied.
     *
-    * The trained state is memoized ([[graft.InputMemo]]) on the
-    * session, the hyperparameters and the fingerprint of
-    * `embeddings`' plan and files; a hit also needs both checkpointed
-    * codebook frames to still read. Any other input — a filtered
-    * frame, a rewritten file, an in-memory frame — trains afresh. */
+    * The permutation and both codebook sets are pure functions of the
+    * input, memoized ([[graft.InputMemo]]) on the session, the
+    * hyperparameters and the fingerprint of `embeddings`' plan and
+    * files: a repeat call on the same files prices the DECISION (the
+    * one encode scan and the win count), not the training. Any other
+    * input — a filtered frame, a rewritten file, an in-memory frame —
+    * trains afresh. Values are identical either way. */
   def opqGain(embeddings: DataFrame, m: Int = 8, subDims: Int = 8,
               ksub: Int = 16, iters: Int = 2,
               deterministic: Boolean = false): DataFrame = {
     graft.GraftExtensions.register(embeddings.sparkSession)
     val e = embCol(embeddings)
-    def permute(posToDim: Array[Int]) = e.select(col("vec_id"),
-      transform(lit(posToDim), d => element_at(col("emb"), d)).as("emb"))
-    // The permutation ranking and BOTH training chains are pure
-    // functions of the input, so they are memoized on its fingerprint:
-    // a repeat call on the same files (the bench's warm-up → timed
-    // pair) prices the DECISION — both full-corpus encodings + the
-    // win count — not the re-training. Values identical either way
-    // (training is deterministic given the flag, and the oracle
-    // replays both chains in full).
-    val (posToDim, cbIdent, cbPerm) =
-      opqMemo((m, subDims, ksub, iters, deterministic), Seq(embeddings))(
-          t => Seq(t._2, t._3)) {
+    def permuted(posToDim: Array[Int]) =
+      transform(lit(posToDim), d => element_at(col("emb"), d))
+    val (posToDim, Seq(ident, perm)) =
+      opqMemo((m, subDims, ksub, iters, deterministic), Seq(embeddings))(_ => Nil) {
         val p2d = opqPosToDim(embeddings, m, subDims)
-        (p2d, trainCodebooks(e, m, subDims, ksub, iters, deterministic),
-          trainCodebooks(permute(p2d), m, subDims, ksub, iters, deterministic))
+        (p2d, trainLayouts(e, Seq(col("emb"), permuted(p2d)), m, subDims, ksub, iters,
+          deterministic))
       }
-    val pe = permute(posToDim)
-    def cbRows(cb: DataFrame) = cb.select(col("sub"), explode(col("cents")).as("c"))
-      .select(col("sub"), col("c.cell").as("cell"), col("c.cemb").as("cemb"))
-    def qerrOf(src: DataFrame, cb: DataFrame) = quantizationError(
-      src.select(col("vec_id").as("doc_id"), col("emb").as("embedding")),
-      cbRows(cb))
-    qerrOf(e, cbIdent).select(col("doc_id"), col("qerr").as("qp"))
-      .join(qerrOf(pe, cbPerm).select(col("doc_id"), col("qerr").as("qo")), Seq("doc_id"))
+    def qerr(emb: Column, cb: Subcents) =
+      call_function("graft_pq_encode", emb, typedLit(cb)).getField("qerr")
+    e.select(qerr(col("emb"), ident).as("qp"), qerr(permuted(posToDim), perm).as("qo"))
       .agg(count(lit(1)).as("docs"),
         sum(when(col("qo") < col("qp"), 1L).otherwise(0L)).as("improved_docs"),
         sum(when(col("qo") > col("qp"), 1L).otherwise(0L)).as("regressed_docs"),
@@ -731,8 +671,7 @@ object Pq {
       .withColumn("nrm", Ann.norm(col("emb")))
     val cents = Ann.kmeansCentroids(e, numCentroids, trainIters, deterministic,
       rankSeed = true)
-    val cb = trainCodebooks(e.select(col("vec_id"), col("emb")),
-      m, subDims, ksub, iters, deterministic)
+    val cb = trainCodebooks(e, m, subDims, ksub, iters, deterministic)
     // the persisted index SHAPE: one row per corpus doc, 16 B payload
     val index = pqIndexRows(e, cents, cb).select(col("vec_id"), col("codes"), col("cell"), col("nrm"))
     val delta = flagged.filter(col("is_delta"))

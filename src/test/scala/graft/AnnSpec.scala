@@ -456,4 +456,27 @@ class AnnSpec extends SparkSpec {
     assert(out((1, 2))._5 === (-8001.0 - 254.0 * (-63.0) / 3) / 3)
     assert(out((1, 1))._5 === (32258.0 - 254.0 * 254.0 / 3) / 3)
   }
+
+  test("deterministic Lloyd training is bitwise identical under any partitioning") {
+    // full-mantissa doubles: sums of widened floats are exact in any
+    // order, so only these can expose a partition-order-dependent fold
+    val e = randomEmbeddings(400)
+      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double") / 3).as("emb"))
+      .withColumn("nrm", Ann.norm(col("emb")))
+    def raw(x: Any): Any = x match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v: scala.collection.Seq[_] => v.map(raw)
+      case o => o
+    }
+    def bits(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(raw)).sortBy(_.toString).toSeq
+    def ivf(n: Int, rank: Boolean) = bits(Ann.unpackCentroids(
+      Ann.kmeansCentroids(e.repartition(n), 16, 3, deterministic = true, rankSeed = rank)))
+    def pq(n: Int) = bits(graft.operators.Pq.trainCodebooks(e.repartition(n)
+      .select(col("vec_id"), col("emb")), 8, 8, 16, 3, deterministic = true)
+      .select(col("sub"), explode(col("cents")).as("c"))
+      .select(col("sub"), col("c.cell"), col("c.cemb")))
+    for (rank <- Seq(false, true)) assert(ivf(1, rank) === ivf(7, rank), s"IVF rankSeed=$rank")
+    assert(pq(1) === pq(7), "PQ codebooks")
+  }
 }

@@ -439,4 +439,36 @@ class PqSpec extends SparkSpec {
     assert(run(tight = true) === Set.empty,
       "per-subspace floor should prune the planted pair")
   }
+
+  /** A codebook set as raw double bits, so equality is bitwise. */
+  private def bits(cb: Pq.Subcents): Seq[Seq[(Long, Seq[Long])]] =
+    cb.map(_.map(c => (c.cell, c.cemb.map(java.lang.Double.doubleToRawLongBits))))
+
+  test("Lloyd training runs the seed job plus one job per round, PQ and IVF") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(col("vec_id"), col("embedding").as("emb"))
+    val en = e.withColumn("nrm", Ann.norm(col("emb")))
+    for (r <- Seq(0, 1, 3); det <- Seq(true, false)) {
+      val (_, pq) = sparkJobs(Pq.trainCodebooks(e, 8, 8, 16, r, det))
+      val (_, ivf) = sparkJobs(Ann.kmeansCentroids(en, 16, r, det, rankSeed = true))
+      for ((what, n) <- Seq("trainCodebooks" -> pq, "kmeansCentroids" -> ivf))
+        assert(n <= r + 1 && n >= r, s"$what iters=$r deterministic=$det: $n jobs")
+    }
+  }
+
+  test("two layouts trained in one loop equal each layout trained alone, bitwise") {
+    // full-mantissa doubles: sums of widened floats are exact in any
+    // order, so only these can expose a partition-order-dependent fold
+    val e = randomEmbeddings(300, dims = 16)
+      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double") / 3).as("emb"))
+    val rev = reverse(col("emb"))
+    def train(df: org.apache.spark.sql.DataFrame, layouts: Seq[org.apache.spark.sql.Column]) =
+      Pq.trainLayouts(df, layouts, m = 4, subDims = 4, ksub = 8, iters = 3,
+        deterministic = true).map(bits)
+    // the pair trains on another partitioning than the singles, so a
+    // partition-order-dependent fold cannot pass by coincidence
+    val both = train(e.repartition(7), Seq(col("emb"), rev))
+    assert(both === train(e, Seq(col("emb"))) ++ train(e.repartition(3), Seq(rev)))
+    assert(both(0) !== both(1), "the two layouts must train different codebooks")
+  }
 }

@@ -33,6 +33,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding", "label")
   }
 
+  /** `f`'s result and the number of Spark jobs it launched, counted by
+    * a listener on jobs tagged with a local property of this thread
+    * once the listener bus has delivered every event. */
+  protected def sparkJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) != null)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "counted")
+      val r = try f finally sc.setLocalProperty(key, null)
+      BusDrain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** `f`'s result and the number of SQL executions it ran (successful
     * or failed), counted by a QueryExecutionListener once the listener
     * bus has delivered every event. */
