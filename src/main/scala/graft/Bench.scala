@@ -377,16 +377,9 @@ object Bench {
     // mixes into the oracle-replay totals the guardrail tracks.
     val steady = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     if (only.isEmpty) try {
-      import org.apache.spark.sql.functions.{col, md5, substring}
-      val flagged = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding"),
-          (substring(md5(col("vec_id").cast("string")), 1, 4) < "0ccd").as("is_delta"))
-      graft.operators.Pq.writeSemanticIndexPq(
-        flagged.filter(!col("is_delta"))
-          .select(col("vec_id").as("doc_id"), col("embedding")),
+      val (corpus, delta) = graft.operators.Ann.deltaSplit(Tables.embeddings(spark, sfDir))
+      graft.operators.Pq.writeSemanticIndexPq(corpus,
         "graft_bench_sem_pq") // untimed: the once-per-corpus build
-      val delta = flagged.filter(col("is_delta"))
-        .select(col("vec_id").as("doc_id"), col("embedding"))
       def probe() = graft.operators.Pq.incrementalSemanticMatchesPq(
         delta, spark.table("graft_bench_sem_pq"),
         spark.table("graft_bench_sem_pq__centroids"),

@@ -457,8 +457,9 @@ object OracleSql {
        |           AND ${dotExpr(dims)("d.emb", "c.emb")} / (d.nrm * c.nrm) >= $threshold)""".stripMargin
 
   /** `kSql`: when set, the seed fan-out is DERIVED from the data by
-    * this scalar expression over `e` (e.g. the √N rule of
-    * [[graft.operators.Ann.semanticDedupPairsScaled]]) instead of the
+    * this scalar expression over `e` (e.g. the √N rule the
+    * `dedup_semantic_scaled*` rows pass to
+    * [[graft.operators.Ann.semanticDedupPairs]]) instead of the
     * literal `k` — the same derive-then-seed order the Scala side
     * runs, so the scaled+trained composition replays bit-for-bit. */
   def kmeansCentroidsCtes(k: Int = 64, iters: Int = 3, dims: Int = 64,

@@ -942,14 +942,15 @@ object Pipeline {
           .localCheckpoint()
         val cells = cand.select(col("cell")).distinct()
           .collect().map(_.getLong(0)).toSeq
-        spark.table(t).filter(col("cell").isin(cells: _*))
-          .select(col("doc_id").as("corpus_doc"), col("emb").as("c_emb"),
-            col("nrm").as("c_nrm"))
-          .join(cand.select(col("delta_doc"), col("corpus_doc")), Seq("corpus_doc"))
-          .join(deltaVecs.select(col("doc_id").as("delta_doc"),
-            col("embedding")), Seq("delta_doc"))
-          .filter(graft.operators.Ann.dot(col("embedding"), col("c_emb")) /
-            (graft.operators.Ann.norm(col("embedding")) * col("c_nrm")) >= threshold)
+        // the exact confirm: the cosine join keyed on the candidate
+        // pairs themselves, over the touched cells' index rows
+        graft.operators.Ann.cosineJoin(
+          graft.operators.Ann.vectorRows(deltaVecs, "doc_id")
+            .join(cand.select(col("delta_doc").as("vec_id"), col("corpus_doc")), Seq("vec_id")),
+          spark.table(t).filter(col("cell").isin(cells: _*))
+            .select(col("doc_id").as("vec_id"), col("emb"), col("nrm")),
+          Nil, threshold, col("b.vec_id") === col("a.corpus_doc"))
+          .select(col("a.vec_id").as("delta_doc"), col("b.vec_id").as("corpus_doc"))
       } else
         graft.operators.Ann.incrementalSemanticMatches(
           deltaVecs, spark.table(t), spark.table(t + "__centroids"),

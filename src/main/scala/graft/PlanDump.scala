@@ -108,7 +108,7 @@ object PlanDump {
       "semantic_probe_pq_persisted" -> "the persisted PQ seam: codebooks/centroids/codes READ from tables (no retraining in the probe half), delta cells equi-join the bucketed 16 B/doc index, ADC + law-of-cosines map-side",
       "pack_sequences_bpe" -> "BPE-budget packing: vocab-bounded token-count table joins the exploded words, then the same ONE domain-keyed exchange feeds the cumulative window",
       "pq_opq_check" -> "OPQ verdict: one corpus moments pass (shared shape with embedding_covariance), then constant-size (2016-row) correlation arithmetic with sorted-fold means",
-      "pq_opq_gain" -> "OPQ applied: variance ranking (diagonal moments) and both layouts' codebooks trained in the same Lloyd rounds before this plan; ONE scan encodes both layouts (two graft_pq_encode calls against the codebook literals, which fill the 8000-char dump), win counts as order-free integer sums",
+      "pq_opq_gain" -> "OPQ applied: variance ranking (diagonal moments) and both layouts' codebooks trained in the same Lloyd rounds before this plan; ONE scan encodes both layouts (two graft_pq_encode calls against the codebook literals, elided below), win counts as order-free integer sums",
       "bloom_filter_audit_sharded" -> "sharded bloom contract: filters built DISTRIBUTED (one distinct-hash shuffle, mapGroups assembles each shard executor-side), probed through the torrent-broadcast handle — one shard lookup per row, no multi-GB plan literal",
       "semantic_probe_pq_tight" -> "tight certified probe: the same bucketed ADC equi-join as the persisted seam; the per-subspace floor adds m subtract/max ops on the already-loaded lookup rows — candidates shrink, plan shape unchanged",
       "curriculum_mix_by_source" -> "per-feed curriculum mix: bootstrap-trained bounds folded map-side as a (k-1)-value literal, ONE sources x k aggregate, zero joins at any corpus size",
@@ -120,16 +120,21 @@ object PlanDump {
     def section(name: String): String = {
       val df = SparkEntry.queries(name)(spark, dir)
       df.collect() // drive AQE to the final plan
-      // elide driver-built binary plan literals (charlm model bytes —
-      // KBs of hex that would bury the plan shape the dump exists
-      // for) BEFORE truncating: a truncate-first would let one large
-      // literal swallow every plan node after it. RDD call sites lose
-      // their line numbers (`localCheckpoint at Pq.scala:197` ->
-      // `at Pq.scala`), so a section changes only when its plan does.
-      val plan = "0x[0-9A-F]{64,}".r.replaceAllIn(
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode),
+      // elide driver-built plan literals — binary ones (charlm model
+      // bytes as hex) and numeric arrays (codebook and centroid
+      // literals, nested arrays of doubles) — KBs that would bury the
+      // plan shape the dump exists for, BEFORE truncating: a
+      // truncate-first would let one large literal swallow every plan
+      // node after it. RDD call sites lose their line numbers
+      // (`localCheckpoint at Pq.scala:197` -> `at Pq.scala`), so a
+      // section changes only when its plan does.
+      val explained = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val hexElided = "0x[0-9A-F]{64,}".r.replaceAllIn(explained,
         m => s"0x<${(m.matched.length - 2) / 2} bytes elided>")
+      val number = """-?\d[\d.E+-]*""".r
+      val plan = """\[[\[\]\d.,E+\- ]{64,}\]""".r.replaceAllIn(hexElided,
+        m => s"[<${number.findAllIn(m.matched).size} numbers elided>]")
         .replaceAll("""(at \w+\.scala):\d+""", "$1").take(8000)
       s"\n## $name — ${notes(name)}\n\n```\n$plan\n```\n"
     }

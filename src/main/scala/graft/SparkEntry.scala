@@ -29,6 +29,30 @@ object SparkEntry {
     * rows: 64 cells, nprobe 4, 3 deterministic Lloyd rounds. */
   private val trainedIvf = Ann.Coarse.Ivf(trainIters = 3, deterministic = true)
 
+  /** The `dedup_semantic_scaled*` fan-out: k = max(16, ceil(√N)), the
+    * balanced IVF choice, from one count (the oracle's scalar
+    * subquery). */
+  private def sqrtFanout(e: DataFrame): Int =
+    math.max(16, math.ceil(math.sqrt(e.count().toDouble)).toInt)
+
+  /** The `semantic_probe_pq_persisted` / `_tight` body: the 4-hex md5
+    * pseudo-delta ([[Ann.deltaSplit]]) probes a PQ index of the
+    * remaining corpus through the literal daily-ingest functions at
+    * margin 0. The index is trained ONCE per session and input
+    * ([[Pq.writeSemanticIndexPqOnce]]: the corpus slice's plan and file
+    * fingerprint, tables still holding the build's files), so repeat
+    * calls price the probe — the production read path. Fresh-session
+    * stale warehouse locations are swept inside writeSemanticIndexPq
+    * itself (its crash-consistency block). */
+  private def persistedPqProbe(s: SparkSession, d: String, table: String,
+                               tight: Boolean): DataFrame = {
+    val (corpus, delta) = Ann.deltaSplit(Tables.embeddings(s, d))
+    Pq.writeSemanticIndexPqOnce(corpus, table)
+    Pq.incrementalSemanticMatchesPq(delta, s.table(table), s.table(table + "__centroids"),
+      s.table(table + "__codebooks"), margin = 0.0, tight = tight)
+      .drop("cell")
+  }
+
   private val goldCols = Seq("id", "doc_id", "content_length", "lang", "topic",
     "content_category", "topic_category", "word_count", "sentence_count",
     "has_substantial_content")
@@ -2567,8 +2591,10 @@ object SparkEntry {
       // pair work at N^1.5 instead of N^2/k-fixed; the oracle derives
       // the SAME k from a scalar subquery, so cell choice and pairs
       // replay bit-for-bit at any corpus size
-      (s: SparkSession, d: String) =>
-        Ann.semanticDedupPairsScaled(Tables.embeddings(s, d)),
+      (s: SparkSession, d: String) => {
+        val e = Tables.embeddings(s, d)
+        Ann.semanticDedupPairs(e, numCentroids = sqrtFanout(e))
+      },
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
              |          FROM embeddings),
              |n AS (SELECT vec_id, emb,
@@ -2596,7 +2622,7 @@ object SparkEntry {
       // cell bounded LINEAR in its population; rank-within-cell
       // subcells (balanced for ANY id distribution) replay bit-for-bit
       (s: SparkSession, d: String) =>
-        Ann.semanticDedupPairsCapped(Tables.embeddings(s, d)),
+        Ann.semanticDedupPairs(Tables.embeddings(s, d), cap = Some(16)),
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
              |          FROM embeddings),
              |n AS (SELECT vec_id, emb,
@@ -2639,8 +2665,11 @@ object SparkEntry {
       // The oracle derives the SAME k from a scalar subquery and
       // replays the same unrolled training — cell choice, refinement
       // and within-cell cosine all bit-for-bit
-      (s: SparkSession, d: String) => Ann.semanticDedupPairsScaled(
-        Tables.embeddings(s, d), trainIters = 3, deterministic = true),
+      (s: SparkSession, d: String) => {
+        val e = Tables.embeddings(s, d)
+        Ann.semanticDedupPairs(e, numCentroids = sqrtFanout(e), trainIters = 3,
+          deterministic = true)
+      },
       Some(OracleSql.semanticPairsTrainedSql(
         kSql = Some("GREATEST(16, CAST(ceil(sqrt(COUNT(*))) AS BIGINT))")))),
 
@@ -2923,26 +2952,7 @@ object SparkEntry {
       // seam (parquet round-trips, collect_list orders, the bucketed
       // cell layout) perturbs nothing, licensing runIncremental's
       // codebooks-never-retrain path
-      (s: SparkSession, d: String) => {
-        // fresh-session stale warehouse locations are swept inside
-        // writeSemanticIndexPq itself (its crash-consistency block).
-        // Train ONCE per session and input (the corpus slice's plan
-        // and file fingerprint, tables still holding the build's
-        // files): repeat calls price the probe — the production read
-        // path — exactly what this row's own description promises
-        val flagged = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
-          (substring(md5(col("vec_id").cast("string")), 1, 4) < "0ccd").as("is_delta"))
-        Pq.writeSemanticIndexPqOnce(
-          flagged.filter(!col("is_delta"))
-            .select(col("vec_id").as("doc_id"), col("embedding")),
-          "graft_reg_sem_pq")
-        Pq.incrementalSemanticMatchesPq(
-          flagged.filter(col("is_delta"))
-            .select(col("vec_id").as("doc_id"), col("embedding")),
-          s.table("graft_reg_sem_pq"), s.table("graft_reg_sem_pq__centroids"),
-          s.table("graft_reg_sem_pq__codebooks"), margin = 0.0)
-          .drop("cell")
-      },
+      (s: SparkSession, d: String) => persistedPqProbe(s, d, "graft_reg_sem_pq", tight = false),
       Some(OracleSql.semanticProbePqPersistedSql())),
 
     ("semantic_probe_pq_tight",
@@ -2956,22 +2966,7 @@ object SparkEntry {
       // directions); the exact confirm downstream pays for fewer
       // candidates at the same m table lookups. Fully
       // oracle-replayed including the per-subspace floor fold
-      (s: SparkSession, d: String) => {
-        val flagged = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
-          (substring(md5(col("vec_id").cast("string")), 1, 4) < "0ccd").as("is_delta"))
-        Pq.writeSemanticIndexPqOnce(
-          flagged.filter(!col("is_delta"))
-            .select(col("vec_id").as("doc_id"), col("embedding")),
-          "graft_reg_sem_pq_tight")
-        Pq.incrementalSemanticMatchesPq(
-          flagged.filter(col("is_delta"))
-            .select(col("vec_id").as("doc_id"), col("embedding")),
-          s.table("graft_reg_sem_pq_tight"),
-          s.table("graft_reg_sem_pq_tight__centroids"),
-          s.table("graft_reg_sem_pq_tight__codebooks"),
-          margin = 0.0, tight = true)
-          .drop("cell")
-      },
+      (s: SparkSession, d: String) => persistedPqProbe(s, d, "graft_reg_sem_pq_tight", tight = true),
       Some(OracleSql.semanticProbePqTightSql())),
 
     ("bpe_pair_stats",

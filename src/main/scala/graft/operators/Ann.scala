@@ -111,9 +111,7 @@ object Ann {
   def topK(embeddings: DataFrame, numQueries: Int = 5, k: Int = 3,
            coarse: Coarse = Coarse.Flat, codec: Codec = Codec.Float): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
+    val e = vectorRows(embeddings)
     val queries = e.filter(col("vec_id") < numQueries)
     // coarse step: corpus and query rows, each tagged with the join key
     val (corpus, probes, key, centroids) = coarse match {
@@ -490,6 +488,59 @@ object Ann {
         sum(coalesce(col("hit"), lit(0L))).as("hits"),
         min(col("cosine")).as("kth_cosine"))
 
+  /** The ONE vector projection of the similarity operators: `(vec_id,
+    * emb, nrm)` from a frame's `id` and `embedding` columns, plus the
+    * `keep` columns as they are. `emb` stays the raw embedding (the
+    * native expressions widen it exactly); `nrm` is [[norm]]'s fold,
+    * computed once per vector, never per pair. It registers graft's
+    * native expressions, so the operators that start from it need not. */
+  private[graft] def vectorRows(df: DataFrame, id: String = "vec_id",
+                                keep: Seq[String] = Nil): DataFrame = {
+    graft.GraftExtensions.register(df.sparkSession)
+    df.select(col(id).as("vec_id") +: col("embedding").as("emb") +: keep.map(col): _*)
+      .withColumn("nrm", norm(col("emb")))
+  }
+
+  /** The engine-portable 4-hex md5 split of the semantic rows (the
+    * `hash_split` convention of [[graft.operators.TextOps.hashSplit]]):
+    * `(rest, slice)`, where the slice holds the rows whose
+    * `substr(md5(id), 1, 4) < hex` — ~hex/0x10000 of the ids, stable
+    * under re-runs and corpus growth, and replayed verbatim by the SQL
+    * oracle. The decontam holdout and the probes' pseudo-delta. */
+  private[graft] def md5Split(df: DataFrame, id: String, hex: String): (DataFrame, DataFrame) = {
+    val inSlice = substring(md5(col(id).cast("string")), 1, 4) < hex
+    (df.filter(!inSlice), df.filter(inSlice))
+  }
+
+  /** [[md5Split]] of an embeddings table into the probes' `(corpus,
+    * delta)`, each as `(doc_id, embedding)` — the daily-ingest vector
+    * shape. */
+  private[graft] def deltaSplit(embeddings: DataFrame, hex: String = "0ccd"): (DataFrame, DataFrame) =
+    md5Split(embeddings.select(col("vec_id").as("doc_id"), col("embedding")), "doc_id", hex)
+
+  /** The ONE exact within-block cosine join of the semantic arm: the
+    * rows of `a` and `b` ([[vectorRows]] projections, aliased `a` and
+    * `b`) that agree on every `key` column and pass `pair`, a condition
+    * over those aliases, scored `cos` = exact cosine and kept at
+    * `threshold`. Serves the self-pairs (`a < b`: SemDeDup cells, label
+    * blocks, capped subcells), train × holdout (decontam), delta ×
+    * index (the probes) and the PQ candidates' exact confirm
+    * ([[graft.Pipeline.semanticCorpusHits]]). Work is Σ |a-block|·|b-block|
+    * — the key must bound block size (IVF cells do; free-form labels
+    * may not), never all-pairs across the corpus. */
+  private[graft] def cosineJoin(a: DataFrame, b: DataFrame, key: Seq[String],
+                                threshold: Double, pair: Column = lit(true)): DataFrame =
+    a.as("a").join(b.as("b"), (key.map(k => col(s"a.$k") === col(s"b.$k")) :+ pair).reduce(_ && _))
+      .withColumn("cos", dot(col("a.emb"), col("b.emb")) / (col("a.nrm") * col("b.nrm")))
+      .filter(col("cos") >= threshold)
+
+  /** Near-dup pairs `(vec_id_1 < vec_id_2, <key.head>, cosine)` within
+    * the blocks of `key` ([[cosineJoin]] of `e` with itself). */
+  private def pairsWithin(e: DataFrame, key: Seq[String], threshold: Double): DataFrame =
+    cosineJoin(e, e, key, threshold, col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("vec_id_1"), col("b.vec_id").as("vec_id_2"),
+        col(s"a.${key.head}").as(key.head), col("cos").as("cosine"))
+
   /** Embedding-cosine near-dup pairs, blocked on a key (here the
     * `label` column — in production a coarse quantization cell): exact
     * within the block, never all-pairs across the corpus.
@@ -499,17 +550,8 @@ object Ann {
     * large to pair exactly, switch to the sub-quadratic candidates of
     * [[topK]]'s LSH buckets or [[graft.operators.Dedup.minhashPairs]]
     * — accepting their recall contract instead of exactness. */
-  def embeddingDedupPairs(embeddings: DataFrame, threshold: Double = 0.4): DataFrame = {
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embeddings.select(col("vec_id"), col("label"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    e.as("a")
-      .join(e.as("b"), col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cos", dot(col("a.emb"), col("b.emb")) / (col("a.nrm") * col("b.nrm")))
-      .filter(col("cos") >= threshold)
-      .select(col("a.vec_id").as("vec_id_1"), col("b.vec_id").as("vec_id_2"),
-        col("a.label").as("label"), col("cos").as("cosine"))
-  }
+  def embeddingDedupPairs(embeddings: DataFrame, threshold: Double = 0.4): DataFrame =
+    pairsWithin(vectorRows(embeddings, keep = Seq("label")), Seq("label"), threshold)
 
   /** SemDeDup-shaped semantic dedup (Abbas et al. 2023: cluster the
     * embeddings coarsely, then pair exactly ONLY within a cluster):
@@ -529,95 +571,51 @@ object Ann {
     * choice included — replays bit-for-bit in the SQL oracle, which
     * almost no semantic-dedup implementation can claim.
     *
+    * `numCentroids` scaled to the corpus — `k = max(16, ceil(√N))`,
+    * the classic balanced IVF choice, derived by the caller from one
+    * count — holds both the assignment cost (N·k dots) and the pair
+    * cost (≈ N²/k) at N^1.5, where a fixed k lets the pair work grow
+    * as N²/k (the measured 100× ScaleCheck gap between
+    * `dedup_semantic` at 64 and `dedup_semantic_scaled`).
+    *
     * `trainIters > 0` swaps the seed quantizer for Lloyd's-refined
     * centroids ([[kmeansCentroids]]): better-centered cells put true
     * neighbors in the SAME cell more often, so fewer near-dup pairs
     * are missed at the same fan-out — training time buys recall
     * without touching the pairing cost model. With `deterministic`
-    * the trained path stays fully oracle-replayable. */
+    * the trained path stays fully oracle-replayable.
+    *
+    * `cap` is the viral-cell guard: one dense cluster (boilerplate
+    * embeddings, a template family) otherwise concentrates the corpus
+    * in one cell and its \|cell\|² pair term dominates the job. Members
+    * subdivide by rank-within-cell: subcell = (row_number over (cell,
+    * vec_id) − 1) div cap, so every subcell holds EXACTLY `cap`
+    * members (last one partial) for ANY id distribution, and
+    * worst-case pair work per cell is ≈ \|cell\|·cap/2 — LINEAR in the
+    * viral cell's population. (An id-modulo split collapses to one
+    * subcell when ids arrive strided or sparse — post-dedup gaps,
+    * sharded allocators — the production shape.) The rank window rides
+    * the same cell-keyed shuffle the pair join needs anyway, and both
+    * engines replay ROW_NUMBER over (cell, vec_id) bit-for-bit.
+    * Cross-subcell pairs inside a subdivided cell are deliberately not
+    * generated — the recall-for-boundedness trade of the posting-list
+    * df cap ([[graft.functions.BoundedCollect]]), in exactly the cells
+    * where near-everything pairs with near-everything anyway (the
+    * canonical-keep stage needs ONE surviving representative). */
   def semanticDedupPairs(embeddings: DataFrame, numCentroids: Int = 64,
                          threshold: Double = 0.35, trainIters: Int = 0,
-                         deterministic: Boolean = false): DataFrame = {
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
+                         deterministic: Boolean = false,
+                         cap: Option[Int] = None): DataFrame = {
+    require(cap.forall(_ >= 1))
+    val e = vectorRows(embeddings)
     val cells = nearestCells(e, kmeansCentroids(e, numCentroids, trainIters, deterministic),
       "emb", "nrm", keep = 1)
-    cells.as("a")
-      .join(cells.as("b"), col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cos", dot(col("a.emb"), col("b.emb")) / (col("a.nrm") * col("b.nrm")))
-      .filter(col("cos") >= threshold)
-      .select(col("a.vec_id").as("vec_id_1"), col("b.vec_id").as("vec_id_2"),
-        col("a.cell").as("cell"), col("cos").as("cosine"))
-  }
-
-  /** [[semanticDedupPairs]] with a HARD CAP on cell population — the
-    * viral-cell guard: one dense cluster (boilerplate embeddings, a
-    * template family) otherwise concentrates the corpus in one cell
-    * and its \|cell\|² pair term dominates the job. Members subdivide
-    * by rank-within-cell: subcell = (row_number over (cell, vec_id) −
-    * 1) div cap, so every subcell holds EXACTLY `cap` members (last
-    * one partial) for ANY id distribution, and worst-case pair work
-    * per cell is ≈ \|cell\|·cap/2 — LINEAR in the viral cell's
-    * population, not quadratic. (An id-modulo split looks balanced on
-    * contiguous ids but collapses to one subcell when ids arrive
-    * strided or sparse — post-dedup gaps, sharded allocators — which
-    * is precisely the production shape.) The rank window rides the
-    * same cell-keyed shuffle the pair join needs anyway, and both
-    * engines replay ROW_NUMBER over (cell, vec_id) bit-for-bit.
-    * Cross-subcell pairs inside a subdivided cell are deliberately
-    * not generated — the same recall-for-boundedness trade as the
-    * posting-list df cap ([[graft.functions.BoundedCollect]]), and
-    * exactly the cells where near-everything pairs with
-    * near-everything anyway (the canonical-keep stage needs ONE
-    * surviving representative, not every edge). */
-  def semanticDedupPairsCapped(embeddings: DataFrame, numCentroids: Int = 64,
-                               threshold: Double = 0.35, cap: Int = 16): DataFrame = {
-    require(cap >= 1)
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    val cells = nearestCells(e, kmeansCentroids(e, numCentroids, iters = 0), "emb", "nrm", keep = 1)
-    val sub = cells.withColumn("subcell",
-      expr(s"(row_number() OVER (PARTITION BY cell ORDER BY vec_id) - 1) div $cap"))
-    sub.as("a")
-      .join(sub.as("b"),
-        col("a.cell") === col("b.cell") && col("a.subcell") === col("b.subcell") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cos", dot(col("a.emb"), col("b.emb")) / (col("a.nrm") * col("b.nrm")))
-      .filter(col("cos") >= threshold)
-      .select(col("a.vec_id").as("vec_id_1"), col("b.vec_id").as("vec_id_2"),
-        col("a.cell").as("cell"), col("cos").as("cosine"))
-  }
-
-  /** [[semanticDedupPairs]] with the fan-out SCALED to the corpus:
-    * `k = max(minCentroids, ceil(sqrt(N)))` — the classic balanced
-    * IVF choice. At fixed k the within-cell pair work grows as
-    * N²/k (each cell's population scales with N); at k = √N both the
-    * assignment cost (N·k dots) and the pair cost (≈ N²/k) grow as
-    * N^1.5 — the measured 100× ScaleCheck gap between
-    * `dedup_semantic` (fixed 64) and this. The derivation is one
-    * metadata-cheap count action, replayed in the oracle as a scalar
-    * subquery, so the scaled path stays bit-replayable end-to-end.
-    * Beyond ~1e9 vectors the √N centroid broadcast itself gets big
-    * (≈ 32k vectors/GB at 64 dims); that regime wants the trained
-    * hierarchical quantizer ([[kmeansCentroids]] over a sampled seed)
-    * — the knob composes, the plan shape is unchanged.
-    *
-    * `trainIters > 0` composes BOTH production knobs in one path: the
-    * √N fan-out bounds pair work at N^1.5 and Lloyd's refinement
-    * centers the cells at that fan-out (training cost per round is the
-    * same broadcast argmin + k·dims-row re-center the fixed-k trained
-    * path pays, with k now √N). With `deterministic` the composition
-    * stays bit-replayable end-to-end — the oracle derives the SAME k
-    * from a scalar subquery and unrolls the same Lloyd rounds. */
-  def semanticDedupPairsScaled(embeddings: DataFrame, threshold: Double = 0.35,
-                               minCentroids: Int = 16, trainIters: Int = 0,
-                               deterministic: Boolean = false): DataFrame = {
-    val n = embeddings.count()
-    val k = math.max(minCentroids, math.ceil(math.sqrt(n.toDouble)).toInt)
-    semanticDedupPairs(embeddings, numCentroids = k, threshold = threshold,
-      trainIters = trainIters, deterministic = deterministic)
+    cap match {
+      case None => pairsWithin(cells, Seq("cell"), threshold)
+      case Some(c) => pairsWithin(cells.withColumn("subcell",
+          expr(s"(row_number() OVER (PARTITION BY cell ORDER BY vec_id) - 1) div $c")),
+        Seq("cell", "subcell"), threshold)
+    }
   }
 
   /** Embedding-space decontamination — [[graft.operators.TextOps]]'
@@ -630,14 +628,12 @@ object Ann {
     * SemDeDup blocking of [[semanticDedupPairs]], applied CROSS-SET:
     * train×holdout inside a cell, never train×train).
     *
-    * The holdout membership rule is the engine-portable md5 bucket of
-    * [[graft.operators.TextOps.hashSplit]] (4 hex chars, ~`holdoutHex`
-    * /0x10000 of vectors), so the split is stable under re-runs and
-    * corpus growth and the SQL oracle replays it verbatim. Per
-    * flagged train vector: its nearest offending holdout vector
-    * (ties to the lower id), that cosine, and how many holdout
-    * vectors it collides with — the evidence row a curation run
-    * attaches to each dropped document.
+    * The holdout is the [[md5Split]] slice under `holdoutHex` (~5%),
+    * so the split is stable under re-runs and corpus growth and the
+    * SQL oracle replays it verbatim. Per flagged train vector: its
+    * nearest offending holdout vector (ties to the lower id), that
+    * cosine, and how many holdout vectors it collides with — the
+    * evidence row a curation run attaches to each dropped document.
     *
     * Scale shape: cell assignment is the map-side broadcast argmin
     * ([[nearestCells]]); the only corpus-scale shuffle is the
@@ -650,21 +646,12 @@ object Ann {
                        holdoutHex: String = "0ccd",
                        trainIters: Int = 0,
                        deterministic: Boolean = false): DataFrame = {
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embeddings.select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    val cells = nearestCells(e, kmeansCentroids(e, numCentroids, trainIters, deterministic),
-      "emb", "nrm", keep = 1)
-      .withColumn("is_holdout",
-        substring(md5(col("vec_id").cast("string")), 1, 4) < holdoutHex)
-    val train = cells.filter(!col("is_holdout"))
-    val holdout = cells.filter(col("is_holdout"))
-      .select(col("vec_id").as("h_id"), col("emb").as("h_emb"),
-        col("nrm").as("h_nrm"), col("cell"))
-    train.join(holdout, Seq("cell"))
-      .withColumn("cos", dot(col("emb"), col("h_emb")) / (col("nrm") * col("h_nrm")))
-      .filter(col("cos") >= threshold)
-      .select(col("vec_id"), col("h_id"), col("cos"))
+    val e = vectorRows(embeddings)
+    val (train, holdout) = md5Split(nearestCells(e,
+      kmeansCentroids(e, numCentroids, trainIters, deterministic), "emb", "nrm", keep = 1),
+      "vec_id", holdoutHex)
+    cosineJoin(train, holdout, Seq("cell"), threshold)
+      .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("h_id"), col("cos"))
       .groupBy(col("vec_id"))
       .agg(
         max(struct(col("cos"), (-col("h_id")).as("neg"), col("h_id"))).as("best"),
@@ -672,6 +659,17 @@ object Ann {
       .select(col("vec_id"), col("best.h_id").as("holdout_id"),
         col("best.cos").as("cosine"), col("matches"))
   }
+
+  /** The persisted semantic indexes' coarse quantizer as `(cell, cemb,
+    * cnrm)` rows — the `__centroids` table layout: [[kmeansCentroids]]
+    * from the rank seed, because a corpus's ids are sparse after a
+    * split or a dedup. Shared by [[writeSemanticIndex]],
+    * [[graft.operators.Pq.writeSemanticIndexPq]] and [[semanticProbe]],
+    * so the full-vector and PQ indexes of one corpus agree on cells. */
+  private[graft] def rankSeededCentroids(e: DataFrame, numCentroids: Int, trainIters: Int,
+                                         deterministic: Boolean): DataFrame =
+    unpackCentroids(kmeansCentroids(e, numCentroids, trainIters, deterministic,
+      rankSeed = true))
 
   /** Train + persist the cross-run SEMANTIC dedup index over an
     * accepted corpus's vectors — the embedding arm of the incremental
@@ -685,23 +683,19 @@ object Ann {
     * Writes two tables: `<table>` — every corpus vector with its
     * assigned cell, BUCKETED on `cell` so the daily probe join reads
     * the corpus side with zero exchange — and `<table>__centroids`
-    * — the k trained centroids (constant-size; the probe broadcasts
-    * it). Training is [[kmeansCentroids]] from the rank-based seed;
-    * at 100 TB each Lloyd round is the map-side broadcast argmin plus
-    * a k×dims-row combinable re-center, and it runs ONCE at bootstrap
-    * — daily deltas never retrain, they probe. */
+    * — the k trained centroids ([[rankSeededCentroids]];
+    * constant-size, the probe broadcasts it). At 100 TB each Lloyd
+    * round is the map-side broadcast argmin plus a k×dims-row
+    * re-center, and it runs ONCE at bootstrap — daily deltas never
+    * retrain, they probe. */
   def writeSemanticIndex(vectors: DataFrame, table: String,
                          numCentroids: Int = 64, trainIters: Int = 3,
                          buckets: Int = 64, deterministic: Boolean = false): Unit = {
-    graft.GraftExtensions.register(vectors.sparkSession)
-    val e = vectors.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
     // deterministic = true (the accept-preview audit's bootstrap):
     // re-center means fold members in vec_id order, so a DuckDB
     // oracle replays the trained quantizer bit-for-bit — same knob,
     // same price as every other oracle-checked training path
-    unpackCentroids(kmeansCentroids(e, numCentroids, trainIters, deterministic,
-      rankSeed = true))
+    rankSeededCentroids(vectorRows(vectors, "doc_id"), numCentroids, trainIters, deterministic)
       .write.mode("overwrite").format("parquet")
       .saveAsTable(table + "__centroids")
     graft.sources.Sinks.writeBucketed(
@@ -715,10 +709,7 @@ object Ann {
     * incremental append adds: (doc_id, cell, emb, nrm), assignment by
     * the same map-side broadcast argmin as every quantizer consumer. */
   def semanticIndexRows(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(vectors.sparkSession)
-    val e = vectors.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    nearestCells(e, packCentroids(centroids), "emb", "nrm", keep = 1)
+    nearestCells(vectorRows(vectors, "doc_id"), packCentroids(centroids), "emb", "nrm", keep = 1)
       .select(col("vec_id").as("doc_id"), col("cell"),
         asDouble(col("emb")).as("emb"), col("nrm"))
   }
@@ -741,8 +732,9 @@ object Ann {
       .groupBy(col("delta_doc"), col("corpus_doc"))
       .agg(max(col("cos")).as("cosine"))
 
-  /** The probe's candidate core, SHARED between the batch arm above
-    * and [[graft.streaming.Streams.semanticProbeStream]] — cell
+  /** The probe's candidate core `(delta_doc, corpus_doc, cos)`, SHARED
+    * between the batch arm above and
+    * [[graft.streaming.Streams.semanticProbeStream]] — cell
     * assignment, index join, self-pair filter, cosine and threshold
     * live in exactly one place, so the spec-pinned stream == batch
     * contract cannot drift when a knob changes. At `nprobe = 1` the
@@ -753,25 +745,19 @@ object Ann {
                                        centroids: DataFrame,
                                        threshold: Double,
                                        nprobe: Int): DataFrame = {
-    graft.GraftExtensions.register(newVecs.sparkSession)
-    val d = newVecs.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    nearestCells(d, packCentroids(centroids), "emb", "nrm", keep = nprobe)
-      .select(col("vec_id").as("delta_doc"), col("emb"), col("nrm"), col("cell"))
-      .join(cellIndex.select(col("doc_id").as("corpus_doc"), col("cell"),
-        col("emb").as("c_emb"), col("nrm").as("c_nrm")), Seq("cell"))
-      .filter(col("corpus_doc") =!= col("delta_doc"))
-      .withColumn("cos", dot(col("emb"), col("c_emb")) / (col("nrm") * col("c_nrm")))
-      .filter(col("cos") >= threshold)
+    cosineJoin(
+      nearestCells(vectorRows(newVecs, "doc_id"), packCentroids(centroids), "emb", "nrm",
+        keep = nprobe),
+      cellIndex.select(col("doc_id").as("vec_id"), col("cell"), col("emb"), col("nrm")),
+      Seq("cell"), threshold, col("a.vec_id") =!= col("b.vec_id"))
+      .select(col("a.vec_id").as("delta_doc"), col("b.vec_id").as("corpus_doc"), col("cos"))
   }
 
   /** The DAILY-INGEST SEMANTIC PROBE as a registered, oracle-checkable
-    * query: carve a pseudo-delta out of the embeddings table with the
-    * engine-portable 4-hex md5 rule (`hash_split`'s convention —
-    * `substr(md5(vec_id), 1, 4) < deltaHex` ≈ 5%), train the
-    * quantizer on the REMAINING corpus only (rank-seeded, because the
-    * corpus ids are sparse after the split — exactly the situation
-    * [[kmeansCentroids]]' `rankSeed` exists for and what
+    * query: carve a pseudo-delta out of the embeddings table
+    * ([[deltaSplit]], ≈ 5%), train the quantizer on the REMAINING
+    * corpus only ([[rankSeededCentroids]], because the corpus ids are
+    * sparse after the split — what
     * [[graft.Pipeline.bootstrapIncremental]] does), build the cell
     * index from the corpus, and probe it with the delta through the
     * LITERAL production function ([[incrementalSemanticMatches]],
@@ -790,18 +776,9 @@ object Ann {
                     trainIters: Int = 3, threshold: Double = 0.35,
                     deltaHex: String = "0ccd",
                     deterministic: Boolean = false): DataFrame = {
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val flagged = embeddings
-      .select(col("vec_id"), col("embedding"),
-        (substring(md5(col("vec_id").cast("string")), 1, 4) < deltaHex).as("is_delta"))
-    val corpus = flagged.filter(!col("is_delta"))
-      .select(col("vec_id").as("doc_id"), col("embedding"))
-    val delta = flagged.filter(col("is_delta"))
-      .select(col("vec_id").as("doc_id"), col("embedding"))
-    val e = corpus.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-    val centroids = unpackCentroids(
-      kmeansCentroids(e, numCentroids, trainIters, deterministic, rankSeed = true))
+    val (corpus, delta) = deltaSplit(embeddings, deltaHex)
+    val centroids = rankSeededCentroids(vectorRows(corpus, "doc_id"), numCentroids, trainIters,
+      deterministic)
     incrementalSemanticMatches(delta, semanticIndexRows(corpus, centroids),
       centroids, threshold, nprobe = 1)
   }

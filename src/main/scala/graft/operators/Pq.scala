@@ -153,9 +153,6 @@ object Pq {
         posexplode_outer(col("enc.codes")).as(Seq("sub", "code")))
       .filter(col("sub").isNotNull)
 
-  private def embCol(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("vec_id"), col("embedding").as("emb"))
-
   /** PQ encoding of the corpus: one row per (vec_id, sub) with that
     * subspace's nearest trained cell — the relational form of the
     * m-byte code. `m` map-side broadcast argmins over the corpus,
@@ -163,7 +160,7 @@ object Pq {
   def pqCodes(embeddings: DataFrame, m: Int = 8, subDims: Int = 8,
               ksub: Int = 16, iters: Int = 2,
               deterministic: Boolean = false): DataFrame = {
-    val e = embCol(embeddings)
+    val e = Ann.vectorRows(embeddings)
     val cb = trainCodebooks(e, m, subDims, ksub, iters, deterministic)
     codesFor(e, cb)
   }
@@ -188,6 +185,28 @@ object Pq {
     * twin it replaces folds in the identical order. */
   private[graft] def adcDist: Column =
     call_function("graft_adc_dist", col("dtab"), col("codes"))
+
+  /** The ONE ADC scan of the PQ probes: each delta vector of `delta`
+    * ([[Ann.vectorRows]]) gets its `nprobe` nearest coarse cells of the
+    * packed `cents` and one m × ksub ADC table per (vector, cell)
+    * against the `(sub, cents)` codebooks `cb`, then scans the code
+    * rows `(corpus_doc, cell, codes, nrm, …)` of `index` in its cells,
+    * self pairs dropped: `adist` by m table lookups ([[adcDist]]) and
+    * the cosine recovered by the law of cosines, `approx_cos` =
+    * (‖q‖² + ‖x‖² − adist) / (2‖q‖‖x‖) — possible precisely because the
+    * index keeps the exact norm. Each caller applies its own filter. */
+  private def adcScan(delta: DataFrame, cents: DataFrame, cb: DataFrame, subDims: Int,
+                      nprobe: Int, index: DataFrame): DataFrame = {
+    val q = Ann.nearestCells(delta.select(col("vec_id").as("query_id"),
+      col("emb").as("qemb"), col("nrm").as("qnrm")), cents, "qemb", "qnrm", keep = nprobe)
+    queryTables(q, cb, subDims).select(col("query_id"), col("qnrm"), col("cell"), col("dtab"))
+      .join(index, Seq("cell"))
+      .filter(col("corpus_doc") =!= col("query_id"))
+      .withColumn("adist", adcDist)
+      .withColumn("approx_cos",
+        (col("qnrm") * col("qnrm") + col("nrm") * col("nrm") - col("adist"))
+          / (lit(2.0) * col("qnrm") * col("nrm")))
+  }
 
   /** (m, subDims) recovered from a persisted codebook table — one
     * tiny aggregate over the m × ksub codebook rows, so probe/append
@@ -249,7 +268,6 @@ object Pq {
                            deterministic: Boolean = false,
                            sharedCentroids: Option[DataFrame] = None): Unit = {
     val spark = vectors.sparkSession
-    graft.GraftExtensions.register(spark)
     // CRASH CONSISTENCY: the code index must never outlive a codebook
     // overwrite — old codes ADC-scanned against new codebooks are
     // silently wrong distances, the one failure mode worse than no
@@ -267,8 +285,7 @@ object Pq {
     // delete-on-catalog-absence could hit live or unrelated data.
     def recovering(t: String)(w: => Unit): Unit =
       graft.sources.Sinks.writeTableRecoveringStaleLocation(spark, t)(w)
-    val e = vectors.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", Ann.norm(col("emb")))
+    val e = Ann.vectorRows(vectors, "doc_id")
     // `sharedCentroids`: reuse an already-persisted coarse quantizer
     // (e.g. the full-vector index's `__centroids`) instead of
     // training one — REQUIRED when the PQ index lives next to a
@@ -277,11 +294,9 @@ object Pq {
     // independently-trained quantizers would disagree on membership
     // and the prune would read the wrong cells.
     if (sharedCentroids.isEmpty) {
-      val cents = Ann.kmeansCentroids(e, numCentroids, trainIters, deterministic,
-        rankSeed = true)
+      val cents = Ann.rankSeededCentroids(e, numCentroids, trainIters, deterministic)
       recovering(table + "__centroids") {
-        Ann.unpackCentroids(cents)
-          .write.mode("overwrite").format("parquet").saveAsTable(table + "__centroids")
+        cents.write.mode("overwrite").format("parquet").saveAsTable(table + "__centroids")
       }
     }
     val centroidRows = sharedCentroids.getOrElse(spark.table(table + "__centroids"))
@@ -345,10 +360,8 @@ object Pq {
     * in the body for the sizing story). */
   def semanticIndexRowsPq(vectors: DataFrame, centroids: DataFrame,
                           codebooks: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(vectors.sparkSession)
-    pqIndexRows(vectors.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-        .withColumn("nrm", Ann.norm(col("emb"))),
-      Ann.packCentroids(centroids), packCodebooks(codebooks))
+    pqIndexRows(Ann.vectorRows(vectors, "doc_id"), Ann.packCentroids(centroids),
+      packCodebooks(codebooks))
       .withColumnRenamed("vec_id", "doc_id")
   }
 
@@ -445,12 +458,11 @@ object Pq {
     * broadcast argmin as encoding, keeping the min d² instead of the
     * argmin cell. */
   def quantizationError(vectors: DataFrame, codebooks: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(vectors.sparkSession)
     // one zero-shuffle map pass (r20): the fused encode's qerr IS the
     // subspace-ordered fold the exploded groupBy used to compute —
     // per-row, fixed order, bit-stable under any partitioning (the
     // property [[opqGain]]'s row-by-row compare rests on)
-    vectors.select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
+    Ann.vectorRows(vectors, "doc_id")
       .crossJoin(broadcast(subcentsRow(packCodebooks(codebooks))))
       .select(col("vec_id").as("doc_id"),
         call_function("graft_pq_encode", col("emb"), col("subcents"))
@@ -537,8 +549,7 @@ object Pq {
   def opqGain(embeddings: DataFrame, m: Int = 8, subDims: Int = 8,
               ksub: Int = 16, iters: Int = 2,
               deterministic: Boolean = false): DataFrame = {
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val e = embCol(embeddings)
+    val e = Ann.vectorRows(embeddings)
     def permuted(posToDim: Array[Int]) =
       transform(lit(posToDim), d => element_at(col("emb"), d))
     val (posToDim, Seq(ident, perm)) =
@@ -601,22 +612,12 @@ object Pq {
                                    margin: Double = 0.0,
                                    nprobe: Int = 1,
                                    tight: Boolean = false): DataFrame = {
-    graft.GraftExtensions.register(newVecs.sparkSession)
     val (_, subDims) = codebookShape(codebooks)
-    val d = newVecs.select(col("doc_id").as("query_id"), col("embedding").as("qemb"))
-      .withColumn("qnrm", Ann.norm(col("qemb")))
-    val q = Ann.nearestCells(d, Ann.packCentroids(centroids), "qemb", "qnrm", keep = nprobe)
-    val qt = queryTables(q, packCodebooks(codebooks), subDims)
     val idxCols = Seq(col("doc_id").as("corpus_doc"), col("cell"),
       col("codes"), col("nrm"), col("qerr")) ++
       (if (tight) Seq(col("qerrs")) else Nil)
-    val scanned = qt.select(col("query_id"), col("qnrm"), col("cell"), col("dtab"))
-      .join(pqIndex.select(idxCols: _*), Seq("cell"))
-      .filter(col("corpus_doc") =!= col("query_id"))
-      .withColumn("adist", adcDist)
-      .withColumn("approx_cos",
-        (col("qnrm") * col("qnrm") + col("nrm") * col("nrm") - col("adist"))
-          / (lit(2.0) * col("qnrm") * col("nrm")))
+    val scanned = adcScan(Ann.vectorRows(newVecs, "doc_id"), Ann.packCentroids(centroids),
+      packCodebooks(codebooks), subDims, nprobe, pqIndex.select(idxCols: _*))
     val kept =
       if (tight) {
         // d_j² per subspace: the SAME m table lookups adcDist folds,
@@ -663,31 +664,16 @@ object Pq {
                       deltaHex: String = "0ccd", m: Int = 8, subDims: Int = 8,
                       ksub: Int = 16, iters: Int = 2,
                       deterministic: Boolean = false): DataFrame = {
-    graft.GraftExtensions.register(embeddings.sparkSession)
-    val flagged = embeddings.select(col("vec_id"), col("embedding"),
-      (substring(md5(col("vec_id").cast("string")), 1, 4) < deltaHex).as("is_delta"))
-    val e = flagged.filter(!col("is_delta"))
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", Ann.norm(col("emb")))
+    val (corpus, delta) = Ann.deltaSplit(embeddings, deltaHex)
+    val e = Ann.vectorRows(corpus, "doc_id")
     val cents = Ann.kmeansCentroids(e, numCentroids, trainIters, deterministic,
       rankSeed = true)
     val cb = trainCodebooks(e, m, subDims, ksub, iters, deterministic)
     // the persisted index SHAPE: one row per corpus doc, 16 B payload
-    val index = pqIndexRows(e, cents, cb).select(col("vec_id"), col("codes"), col("cell"), col("nrm"))
-    val delta = flagged.filter(col("is_delta"))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qemb"))
-      .withColumn("qnrm", Ann.norm(col("qemb")))
-    val q = Ann.nearestCells(delta, cents, "qemb", "qnrm", keep = 1)
-    val qt = queryTables(q, cb, subDims)
-    qt.select(col("query_id"), col("qnrm"), col("cell"), col("dtab"))
-      .join(index, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adist", adcDist)
-      .withColumn("approx_cos",
-        (col("qnrm") * col("qnrm") + col("nrm") * col("nrm") - col("adist"))
-          / (lit(2.0) * col("qnrm") * col("nrm")))
+    val index = pqIndexRows(e, cents, cb)
+      .select(col("vec_id").as("corpus_doc"), col("codes"), col("cell"), col("nrm"))
+    adcScan(Ann.vectorRows(delta, "doc_id"), cents, cb, subDims, nprobe = 1, index)
       .filter(col("approx_cos") >= threshold)
-      .select(col("query_id").as("delta_doc"), col("vec_id").as("corpus_doc"),
-        col("approx_cos"))
+      .select(col("query_id").as("delta_doc"), col("corpus_doc"), col("approx_cos"))
   }
 }

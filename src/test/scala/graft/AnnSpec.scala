@@ -223,8 +223,8 @@ class AnnSpec extends SparkSpec {
     def pairs(d: org.apache.spark.sql.DataFrame) =
       d.select("vec_id_1", "vec_id_2").as[(Long, Long)].collect().toSet
     val uncapped = pairs(Ann.semanticDedupPairs(df, numCentroids = 1, threshold = 0.0))
-    val capped = pairs(Ann.semanticDedupPairsCapped(df, numCentroids = 1,
-      threshold = 0.0, cap = 20))
+    val capped = pairs(Ann.semanticDedupPairs(df, numCentroids = 1,
+      threshold = 0.0, cap = Some(20)))
     assert(uncapped.size === 199 * 200 / 2)
     assert(capped.subsetOf(uncapped))
     // 10 subcells of 20 -> 10 * C(20,2) = 1900 pairs, a 10.5x cut
@@ -279,7 +279,8 @@ class AnnSpec extends SparkSpec {
     val k = math.max(16, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
     def pairs(d: org.apache.spark.sql.DataFrame) =
       d.select("vec_id_1", "vec_id_2").as[(Long, Long)].collect().toSet
-    val composed = pairs(Ann.semanticDedupPairsScaled(emb, trainIters = 3, deterministic = true))
+    val composed = pairs(SparkEntry.queries("dedup_semantic_scaled_trained")(spark,
+      "/root/testdata/sf0.001"))
     val fixed = pairs(Ann.semanticDedupPairs(emb, numCentroids = k,
       trainIters = 3, deterministic = true))
     assert(composed === fixed)
@@ -455,6 +456,47 @@ class AnnSpec extends SparkSpec {
     // covariance via the same double association the operator uses
     assert(out((1, 2))._5 === (-8001.0 - 254.0 * (-63.0) / 3) / 3)
     assert(out((1, 1))._5 === (32258.0 - 254.0 * 254.0 / 3) / 3)
+  }
+
+  test("semantic dedup, decontam and probe rows are identical under any partitioning") {
+    // every consumer of the cell-blocked cosine join and the ADC scan,
+    // at registry parameters with deterministic training: the rows of
+    // repartition(1) and repartition(7) must match bit for bit (the
+    // capped subcells rank members by (cell, vec_id), so they too)
+    import graft.operators.Pq
+    val e = randomEmbeddings(2000)
+    def raw(x: Any): Any = x match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case o => o
+    }
+    def bits(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(raw).mkString(",")).sorted.toSeq
+    def sqrtN(df: org.apache.spark.sql.DataFrame) =
+      math.max(16, math.ceil(math.sqrt(df.count().toDouble)).toInt)
+    def persisted(tight: Boolean)(df: org.apache.spark.sql.DataFrame) = {
+      val (corpus, delta) = Ann.deltaSplit(df)
+      Pq.writeSemanticIndexPq(corpus, "graft_spec_part_pq", deterministic = true)
+      Pq.incrementalSemanticMatchesPq(delta, spark.table("graft_spec_part_pq"),
+        spark.table("graft_spec_part_pq__centroids"),
+        spark.table("graft_spec_part_pq__codebooks"), margin = 0.0, tight = tight)
+    }
+    val rows: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] =
+      Seq(
+        "dedup fixed" -> (Ann.semanticDedupPairs(_, deterministic = true)),
+        "dedup trained" -> (Ann.semanticDedupPairs(_, trainIters = 3, deterministic = true)),
+        "dedup capped" -> (Ann.semanticDedupPairs(_, deterministic = true, cap = Some(16))),
+        "dedup sqrt-N" -> (df => Ann.semanticDedupPairs(df, numCentroids = sqrtN(df),
+          trainIters = 3, deterministic = true)),
+        "decontam" -> (Ann.semanticDecontam(_, trainIters = 3, deterministic = true)),
+        "semanticProbe" -> (Ann.semanticProbe(_, deterministic = true)),
+        "semanticProbePq" -> (Pq.semanticProbePq(_, deterministic = true)),
+        "persisted PQ probe, scalar" -> persisted(tight = false),
+        "persisted PQ probe, tight" -> persisted(tight = true))
+    for ((name, row) <- rows) {
+      val one = bits(row(e.repartition(1)))
+      assert(one.nonEmpty, s"$name: no rows, nothing compared")
+      assert(one === bits(row(e.repartition(7))), name)
+    }
   }
 
   test("deterministic Lloyd training is bitwise identical under any partitioning") {

@@ -59,7 +59,7 @@ class CrossValidationSpec extends SparkSpec {
     // synthetic viral cell the AnnSpec case uses
     val emb = Tables.embeddings(spark, dir)
     val uncapped = pairs(Ann.semanticDedupPairs(emb))
-    val capped = pairs(Ann.semanticDedupPairsCapped(emb, cap = 8))
+    val capped = pairs(Ann.semanticDedupPairs(emb, cap = Some(8)))
     assert(capped.nonEmpty && capped.subsetOf(uncapped))
     assert(capped.size < uncapped.size, "cap=8 must actually subdivide at this SF")
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.BusDrain
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -30,13 +31,13 @@ object RetrainProbe {
     })
     val runs = (1 to 4).map { _ =>
       System.gc()
-      Thread.sleep(400) // let the async listener bus drain
+      BusDrain(spark.sparkContext)
       jobs.set(0)
       val t0 = System.nanoTime()
       operators.Pq.writeSemanticIndexPq(e, "rp_sem__pq",
         sharedCentroids = Some(spark.table("rp_sem__centroids")))
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400)
+      BusDrain(spark.sparkContext)
       (sec, jobs.get())
     }
     println(f"RETRAINPROBE runs ${runs.map(r => f"${r._1}%.3f").mkString(" ")} " +
